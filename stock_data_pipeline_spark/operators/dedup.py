@@ -1648,6 +1648,15 @@ def near_dedup_corpus_banded(
     tests/test_dedup.py).
     """
     survivors = _exact_dedup_survivors(docs)
+    pairs = _banded_pairs(survivors, threshold=threshold)
+    return _drop_non_keepers(survivors, pairs)
+
+
+def _banded_pairs(survivors: DataFrame, *, threshold: float) -> DataFrame:
+    """The banded composition's pair stage over exact-dedup survivors:
+    MinHash band collisions as candidates, then exact Jaccard on the
+    stored ``_shingles`` arrays. Returns ``(doc_a, doc_b)`` with
+    ``doc_a < doc_b``."""
     sh = survivors.select("doc_id", F.explode("_shingles").alias("shingle"))
     aggs = [
         F.min(
@@ -1695,13 +1704,12 @@ def near_dedup_corpus_banded(
     jac = n_inter.cast("double") / (
         F.size("_sa") + F.size("_sb") - n_inter
     )
-    pairs = (
+    return (
         cand.join(sa, "doc_a")
         .join(sb, "doc_b")
         .filter(jac >= threshold)
         .select("doc_a", "doc_b")
     )
-    return _drop_non_keepers(survivors, pairs)
 
 
 @query(

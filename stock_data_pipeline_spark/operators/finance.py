@@ -161,7 +161,7 @@ def _hourly_series_mat(spark: SparkSession, sf_dir: str) -> DataFrame:
     before re-querying, or it will be served the stale series."""
     import os as _os
 
-    # Same sentinel probe as registry._memoized: a memo HIT skips
+    # Same sentinel probe as catalog.load: a series-memo HIT skips
     # register_views/catalog.load, so a hostile conf.set since the
     # checkpoint was built would otherwise go unhealed at the CONSUMER's
     # execution/collection time (b51/b53 mask a poisoned session tz —
@@ -173,7 +173,7 @@ def _hourly_series_mat(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not _confs_intact(spark):
         apply_runtime_confs(spark)
 
-    key = _os.path.abspath(sf_dir)  # same identity rule as registry._memoized
+    key = _os.path.abspath(sf_dir)  # same identity rule as catalog.load
     try:
         per_session = _SERIES_MEMO.setdefault(spark, {})
     except TypeError:
@@ -192,18 +192,10 @@ def invalidate_hourly_series(
     the current source data. Returns whether anything was dropped — the
     hook an ingest job calls after landing a batch that touches events.
 
-    Also purges the REGISTRY plan memo for the three consuming queries:
-    their memoized plans are bound to the dropped checkpoint, so without
-    this the registered path would keep serving the stale series even
-    after the checkpoint memo is cleared. Dropped checkpoints are
-    unpersisted (best-effort) so executor blocks free now rather than at
-    some future GC.
+    Dropped checkpoints are unpersisted (best-effort) so executor blocks
+    free now rather than at some future GC.
     """
     import os as _os
-
-    from ..registry import invalidate_plans
-
-    _CONSUMERS = {"b51_pairwise_corr", "b53_market_beta", "b88_pairs_spread"}
 
     def _free(df):
         try:
@@ -222,13 +214,11 @@ def invalidate_hourly_series(
         for df in per_session.values():
             _free(df)
         per_session.clear()
-        invalidate_plans(spark, None, _CONSUMERS)
         return dropped
     df = per_session.pop(_os.path.abspath(sf_dir), None)
     if df is None:
         return False
     _free(df)
-    invalidate_plans(spark, sf_dir, _CONSUMERS)
     return True
 
 

@@ -850,7 +850,7 @@ def hll_union_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of a scalar): an eager .first() here would run a full events scan
     # at plan-construction time — breaking the registry's pure-builder
     # contract — and freeze the count as a literal that goes stale if
-    # the source changes under the memoized plan
+    # the source changes before the plan runs
     exact_total = ev.agg(
         F.countDistinct("user_id").cast("bigint").alias("exact_users")
     )

@@ -409,7 +409,8 @@ def gap_fill_hourly(
       ``raise_error`` fires at execution time naming the key, its bucket
       count, and the cap, instead of silently exploding the scaffold.
       Plan-embedded (not an eager driver check) so the builder stays a
-      pure plan constructor under the registry memo.
+      pure plan constructor: an eager check would run a job before the
+      caller asks and freeze the data it read.
 
     The hourly aggregate is persisted (lazy, MEMORY_AND_DISK —
     bucket-grain, MB at any tick volume) because it feeds both the spine
@@ -419,7 +420,9 @@ def gap_fill_hourly(
     Cache lifetime (ADVICE r11): that persist is a CacheManager entry
     that OUTLIVES the returned Python handle — dropping the DataFrame
     frees the py4j binding, not the cached blocks. The registered-query
-    path is bounded by the plan memo (one entry per (sf_dir, name)), but
+    path is bounded because Spark's CacheManager reuses an identical
+    cached plan, so a repeat call on the same ``sf_dir`` adds no entry
+    (tests/test_persist_bound.py), but
     ad-hoc callers issuing repeated direct calls with varying
     ``events``/``bounds``/``max_buckets_per_key`` would accumulate one
     session-lifetime cache entry per call. The persisted frame is
@@ -459,8 +462,8 @@ def gap_fill_hourly(
     ).persist(StorageLevel.MEMORY_AND_DISK)
     # persist (lazy), not localCheckpoint (eager): the builder must stay
     # a pure plan constructor — an eager checkpoint runs a full scan at
-    # PLAN BUILD time and pins stale data under the registry memo; the
-    # cache still computes the twice-referenced aggregate once
+    # PLAN BUILD time, before the caller asks, and freezes the data it
+    # read; the cache still computes the twice-referenced aggregate once
     # Spine bounds come from the hourly AGGREGATE, not a second raw scan —
     # min/max of the bucket column equal the truncated raw min/max.
     key_span = hourly.groupBy("event_type").agg(

@@ -13,137 +13,22 @@ Determinism contract for every registered query:
   engines in the low bits);
 - integer sums are cast to BIGINT on both sides (DuckDB sums integers to
   HUGEINT);
-- ties in any rank/top-k are broken by a unique key column.
+- ties in any rank/top-k are broken by a unique key column;
+- the builder is a pure plan constructor where it can be: a Spark job at
+  build time does work before the caller asks and freezes the data it
+  read. The iterative c02/c10 builders, which checkpoint eagerly per
+  round, are the known exceptions. Each call builds a fresh plan.
 """
 
 from __future__ import annotations
 
-import os
-import weakref
-from collections import OrderedDict
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
-
-# Prepared-plan memo, per live session object (weak: entries die with the
-# session). A registered query is a pure (spark, sf_dir) -> DataFrame
-# builder and a DataFrame is an immutable lazy plan, so re-building it per
-# call only re-pays the Python-side expression-construction round trips
-# (measured 2.3 s across the 27 headline queries at sf0.1 — pure py4j
-# chatter, up to 0.5 s for the 32-aggregate MinHash signature tree).
-# Caching the built plan is prepared-statement behavior: every action on
-# the memoized frame still runs full JVM optimization + execution.
-#
-# BOUNDED (r8): each cached handle pins its JVM QueryExecution — analyzed/
-# optimized/executed trees plus every broadcast and persisted block the
-# plan references, none of which the ContextCleaner can ever reclaim while
-# the memo holds a strong ref. An unbounded memo therefore turns a
-# run-each-query-once sweep into monotone heap growth: 47 retained
-# unrolled-CTE plans OOM'd a default-1g vanilla session at query 48
-# (measured this round; the same 50 queries complete with the memo
-# bypassed). LRU capacity comes from a session conf — get_spark sessions
-# (bench/tests, 8g driver) raise it to cover the 27-headline working set;
-# vanilla sessions (the verification driver's) stay at a small default
-# that a 1g heap holds with ~6x margin.
-_PLAN_MEMO: "weakref.WeakKeyDictionary[SparkSession, OrderedDict[tuple[str, str], DataFrame]]"
-_PLAN_MEMO = weakref.WeakKeyDictionary()
-
-MEMO_CAPACITY_CONF = "spark.spark_graft.planMemo.capacity"
-_MEMO_CAPACITY_DEFAULT = 8
-
-
-def _memo_capacity(spark: SparkSession) -> int:
-    try:
-        return max(
-            1, int(spark.conf.get(MEMO_CAPACITY_CONF, str(_MEMO_CAPACITY_DEFAULT)))
-        )
-    except Exception:
-        return _MEMO_CAPACITY_DEFAULT
-
-
-def _memoized(name: str, fn: QueryFn) -> QueryFn:
-    def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
-        try:
-            per_session = _PLAN_MEMO.setdefault(spark, OrderedDict())
-        except TypeError:  # session object not weak-referenceable
-            return fn(spark, sf_dir)
-        key = (os.path.abspath(sf_dir), name)
-        df = per_session.get(key)
-        if df is None:
-            df = fn(spark, sf_dir)
-            per_session[key] = df
-            cap = _memo_capacity(spark)
-            evicted = 0
-            while len(per_session) > cap:
-                per_session.popitem(last=False)  # evict least recent
-                evicted += 1
-            if evicted:
-                # Eviction drops the PYTHON reference; the py4j finalizer
-                # that releases the JVM-side QueryExecution binding only
-                # runs once the DataFrame object is actually collected —
-                # and DataFrames sit in reference cycles, so plain
-                # refcounting does NOT free them at popitem. Relying on
-                # ambient gc latency let evicted plans (and every
-                # broadcast/persisted block they pin) accumulate JVM heap
-                # across a long single-session sweep (r10: broadcast-build
-                # OOM at query ~25 under sf0.1+split64 on a 1g driver).
-                # One cycle-collect per eviction batch makes reclamation
-                # prompt and deterministic; cost is ~ms against queries
-                # that run for seconds, and it only fires when the memo
-                # actually overflows.
-                import gc
-
-                gc.collect()
-        else:
-            per_session.move_to_end(key)
-            # A memo hit skips catalog.load, so a hostile conf.set since
-            # the plan was built would otherwise go unhealed at EXECUTION
-            # time (session tz applies to LTZ casts when the job runs,
-            # not when the plan is constructed). Same sentinel probe the
-            # catalog uses: cheap when intact, full re-pin when not.
-            from .catalog import _confs_intact
-            from .session import apply_runtime_confs
-
-            if not _confs_intact(spark):
-                apply_runtime_confs(spark)
-        return df
-
-    wrapper.__name__ = fn.__name__
-    wrapper.__doc__ = fn.__doc__
-    wrapper.__wrapped__ = fn
-    return wrapper
-
-
-def invalidate_plans(
-    spark: SparkSession,
-    sf_dir: str | None = None,
-    names: "set[str] | None" = None,
-) -> int:
-    """Drop memoized plans for ``sf_dir`` (all when None) / ``names``
-    (all when None); returns how many were dropped. The hook an operator
-    with its OWN materialization memo (e.g. the finance hourly-series
-    checkpoint) must call when it invalidates — otherwise the registry
-    keeps serving the plan bound to the dropped materialization and the
-    staleness it was meant to purge survives."""
-    try:
-        per_session = _PLAN_MEMO.get(spark)
-    except TypeError:
-        return 0
-    if not per_session:
-        return 0
-    sf_key = os.path.abspath(sf_dir) if sf_dir is not None else None
-    doomed = [
-        k
-        for k in per_session
-        if (sf_key is None or k[0] == sf_key)
-        and (names is None or k[1] in names)
-    ]
-    for k in doomed:
-        per_session.pop(k, None)
-    return len(doomed)
 
 
 @dataclass(frozen=True)
@@ -174,11 +59,12 @@ def query(
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        memo_fn = _memoized(name, fn)
+        # Pass-through only because perfbench/run.py reads fn.__wrapped__.
+        entry = functools.wraps(fn)(lambda spark, sf_dir: fn(spark, sf_dir))
         _REGISTRY[name] = RegisteredQuery(
-            name, memo_fn, oracle, fn.__doc__ or "", driver
+            name, entry, oracle, fn.__doc__ or "", driver
         )
-        return memo_fn
+        return fn
 
     return deco
 

@@ -96,13 +96,6 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
-        # Plan-memo LRU capacity (registry._memoized): get_spark sessions
-        # run with an 8g driver heap, so cover bench's 27-headline working
-        # set with headroom. Deliberately NOT in RUNTIME_CONFS — the heal
-        # machinery must never raise the cap on a small-heap vanilla
-        # session (e.g. the verification driver's), whose safe default is
-        # registry._MEMO_CAPACITY_DEFAULT.
-        .config("spark.spark_graft.planMemo.capacity", "64")
     )
     for key, value in RUNTIME_CONFS.items():
         builder = builder.config(key, value)

@@ -231,8 +231,8 @@ MAX_RECURSION_ROUNDS_DEFAULT = 256
 # THE PLAN — evaluated during the anchor's first scan, BEFORE any
 # recursive self-join stage launches — mirroring gap_fill_hourly's
 # plan-embedded spine cap, so the builder stays a pure plan constructor
-# under the registry memo (the r11 eager groupBy+collect pre-check both
-# ran a Spark job at memo time and froze the measurement there).
+# (the r11 eager groupBy+collect pre-check both ran a Spark job before
+# the caller asked and froze the measurement at build time).
 # NULL users are exempt by construction: the recursive join condition
 # `o.user_id = w.user_id` never matches NULL, so a NULL-user chain of
 # any length contributes exactly its rn=1 anchor row and adds no
@@ -290,9 +290,9 @@ def recursive_sessionize(
     The returned plan's ``guarded`` projection raises at EXECUTION time —
     during the anchor's first scan, before any recursive self-join stage
     launches — if any non-NULL user's chain exceeds ``max_rounds``. The
-    builder itself runs no job (pure plan constructor, registry-memo
-    safe), and because the guard rides the plan it re-measures on every
-    execution instead of freezing a driver-side pre-check at memo time.
+    builder itself runs no job (pure plan constructor), and because the
+    guard rides the plan it re-measures on every execution instead of
+    freezing a driver-side pre-check at build time.
     On clean data the CASE is the identity on ``rn``, so results are
     bit-identical to the unguarded oracle text.
     """

@@ -1,8 +1,8 @@
 """Thread-safety of the shared per-session memos under concurrent use.
 
 Spark supports concurrent job submission from multiple driver threads on
-one session; the engine's catalog/plan memos (plain dicts guarded by the
-GIL, last-writer-wins on a race) must never corrupt results or crash when
+one session; the engine's catalog and series memos (plain dicts guarded by
+the GIL, last-writer-wins on a race) must never corrupt results or crash when
 a multi-tenant driver fires queries in parallel."""
 
 from __future__ import annotations

@@ -701,7 +701,7 @@ def test_banded_pairs_are_verified_subset_of_exact(spark):
     from pyspark.sql import functions as F
 
     from stock_data_pipeline_spark.operators.dedup import (
-        _JACCARD_THRESHOLD,
+        _banded_pairs,
         _exact_dedup_survivors,
         _jaccard_pairs_from_index,
         near_dedup_corpus,
@@ -729,7 +729,14 @@ def test_banded_pairs_are_verified_subset_of_exact(spark):
         .select("doc_a", "doc_b")
         .collect()
     }
-    # rebuild the banded pair set through the public composition's shape:
+    assert exact_pairs  # the fixture's near-dup families make pairs
+    # the same pair stage near_dedup_corpus_banded runs, over the same
+    # survivors: precision 1 means every banded pair is an exact pair
+    banded_pairs = {
+        (r.doc_a, r.doc_b)
+        for r in _banded_pairs(surv, threshold=0.3).collect()
+    }
+    assert banded_pairs <= exact_pairs
     # banded keeps a SUPERSET of the exact composition's keepers (missed
     # pairs can only merge fewer clusters -> fewer drops)
     kept_exact = {
@@ -739,6 +746,3 @@ def test_banded_pairs_are_verified_subset_of_exact(spark):
         ).collect()
     }
     assert kept_exact <= kept_banded
-    # and with the fixture's obvious near-dup families, banding at 8x4
-    # bands catches the same pairs here: outputs equal on this corpus
-    assert kept_banded == kept_exact or exact_pairs  # non-vacuous corpus

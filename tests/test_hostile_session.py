@@ -60,12 +60,12 @@ def test_mid_run_conf_flip_heals(spark, sf_dir):
 def test_series_memo_hit_heals_conf_poisoning(spark, sf_dir):
     """The finance hourly-series localCheckpoint memo must re-probe the
     conf sentinels on a HIT: b51 warms the memo, a hostile tz lands,
-    then b88 — whose first registered call is a registry-memo MISS, so
-    its fn path reaches only `_hourly_series_mat` (memo hit, no
-    catalog.load) — must still execute and collect under re-pinned
-    UTC. Regression for the r8 hostile-sweep find: b51/b53 mask a
-    poisoned session tz (their pair-joins cancel a uniform bucket
-    shift) while b88 exposes the bucket column; 628/628 rows shifted."""
+    then b88 — whose builder reads only `_hourly_series_mat` (a
+    series-memo hit, no catalog.load) — must still execute and collect
+    under re-pinned UTC. Regression for the r8 hostile-sweep find:
+    b51/b53 mask a poisoned session tz (their pair-joins cancel a
+    uniform bucket shift) while b88 exposes the bucket column; 628/628
+    rows shifted."""
     from stock_data_pipeline_spark.operators.finance import (
         _hourly_series_mat,
         invalidate_hourly_series,
@@ -80,35 +80,3 @@ def test_series_memo_hit_heals_conf_poisoning(spark, sf_dir):
     after = _rows(get("b88_pairs_spread").fn(spark, sf_dir))
     assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
     assert after == before
-
-
-def test_plan_memo_is_bounded_on_small_heap_sessions(spark, sf_dir):
-    """The plan memo must be an LRU bounded by the session's capacity
-    conf: every cached handle pins its JVM QueryExecution (plans,
-    broadcasts, persisted blocks — ContextCleaner can't reclaim any of
-    it), so an unbounded memo turns a run-once sweep into monotone heap
-    growth (measured r8: 47 retained plans OOM'd a default-1g vanilla
-    session at query 48; the same 50 complete with the memo bypassed).
-    get_spark sessions raise the cap to 64 for bench's working set;
-    vanilla sessions default to 8."""
-    from stock_data_pipeline_spark import registry
-
-    sib = spark.newSession()  # fresh memo store, inherits get_spark confs
-    assert registry._memo_capacity(sib) == 64
-    sib.conf.set(registry.MEMO_CAPACITY_CONF, "3")
-    try:
-        names = ["b01_filter_time_range", "b04_broadcast_join",
-                 "b10_topk_orders", "b11_dedup_pairs", "b12_set_ops"]
-        for n in names:
-            registry.get(n).fn(sib, sf_dir)
-        memo = registry._PLAN_MEMO.get(sib)
-        held = [k[1] for k in memo]
-        assert len(held) == 3
-        assert held == names[-3:]  # LRU: oldest two evicted, order kept
-        # a HIT refreshes recency: b10 must survive the next insertion
-        registry.get("b10_topk_orders").fn(sib, sf_dir)
-        registry.get("b13_rollup").fn(sib, sf_dir)
-        held = [k[1] for k in registry._PLAN_MEMO.get(sib)]
-        assert "b10_topk_orders" in held and "b11_dedup_pairs" not in held
-    finally:
-        sib.conf.set(registry.MEMO_CAPACITY_CONF, "64")

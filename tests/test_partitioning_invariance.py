@@ -55,7 +55,7 @@ QUERIES = [
 def test_result_identical_under_different_shuffle_partitioning(
     spark, sf_dir, name
 ):
-    fn = getattr(get(name).fn, "__wrapped__", get(name).fn)
+    fn = get(name).fn
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "32")

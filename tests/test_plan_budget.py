@@ -73,11 +73,7 @@ PLAN_BUDGETS = {
 
 @pytest.mark.parametrize("name", sorted(PLAN_BUDGETS))
 def test_headline_plan_within_shuffle_budget(spark, sf_check_dir, name):
-    # bypass the registry's plan memo: a memoized frame another test has
-    # already EXECUTED reports its post-AQE adaptive plan, whose exchange
-    # spelling differs from the fresh plan these budgets pin
-    fn = getattr(get(name).fn, "__wrapped__", get(name).fn)
-    df = fn(spark, sf_check_dir)
+    df = get(name).fn(spark, sf_check_dir)
     if not hasattr(df, "_jdf"):
         pytest.skip("classic session required for executed-plan asserts")
     plan = df._jdf.queryExecution().executedPlan().toString()

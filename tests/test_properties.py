@@ -260,8 +260,7 @@ price_series = st.lists(
 def test_up_streaks_match_python_reference(spark, closes):
     """b84's gaps-and-islands streak length must equal the obvious
     sequential scan on any series."""
-    from stock_data_pipeline_spark.catalog import register_views
-    from stock_data_pipeline_spark.registry import get
+    from stock_data_pipeline_spark.operators.finance import _B84_SQL
 
     rows = [
         ("x", datetime(2024, 1, 1) + timedelta(days=i), float(c))
@@ -270,13 +269,9 @@ def test_up_streaks_match_python_reference(spark, closes):
     df = spark.createDataFrame(rows, "event_type string, ts timestamp, value double")
     df.createOrReplaceTempView("events")
     try:
-        fn = getattr(get("b84_up_streaks").fn, "__wrapped__")
         # one tick per day -> daily close == the value itself
         out = {r.event_type: (r.max_up_streak, r.n_up_days)
-               for r in spark.sql(
-                   __import__("stock_data_pipeline_spark.operators.finance",
-                              fromlist=["_B84_SQL"])._B84_SQL
-               ).collect()}
+               for r in spark.sql(_B84_SQL).collect()}
     finally:
         spark.catalog.dropTempView("events")
 

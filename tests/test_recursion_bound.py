@@ -9,12 +9,13 @@ with an eager driver-side pre-check (groupBy+collect at plan-build
 time); round 12 moved the guard INTO the plan — a per-row
 ``raise_error`` in the recursion's input projection, mirroring
 gap_fill_hourly's spine cap — so the builder is a pure plan constructor
-under the registry memo and the guard re-measures on every execution.
+(it runs no job before the caller asks and freezes no data it read) and
+the guard re-measures on every execution.
 
 Pinned here:
 1. a hostile chain fails FAST at execution with the actionable message
    (during the anchor's first scan, not after N self-join stages);
-2. building the plan runs NO Spark job (the memo-purity invariant the
+2. building the plan runs NO Spark job (the pure-builder invariant the
    r11 eager check broke — ADVICE r11);
 3. raising ``max_rounds`` explicitly re-admits the same data, and the
    result matches the window formulation exactly;
@@ -127,7 +128,7 @@ def test_hostile_chain_fails_fast_with_actionable_message(spark, hostile_dir):
 
 
 def test_plan_build_runs_no_job(spark, hostile_dir):
-    """The builder must be a pure plan constructor (registry-memo
+    """The builder must be a pure plan constructor (registry
     invariant): constructing the guarded plan — even over data that
     VIOLATES the cap — must neither run a job nor raise; the guard
     belongs to execution."""

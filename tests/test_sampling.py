@@ -534,10 +534,7 @@ def test_dsir_select_ranks_target_like_documents_first(spark, tmp_path):
 
     from stock_data_pipeline_spark.registry import get
 
-    fn = getattr(
-        get("c08_dsir_select").fn, "__wrapped__", get("c08_dsir_select").fn
-    )
-    rows = fn(spark, str(sf)).collect()
+    rows = get("c08_dsir_select").fn(spark, str(sf)).collect()
     got = {r.doc_id: r.avg_log_ratio for r in rows}
     assert set(got) == {2, 3, 4}, "selection pool is exactly the non-target docs"
     assert got[2] > got[4] > got[3], (

@@ -1033,7 +1033,7 @@ def test_tfidf_shuffle_grain_scales_linearly_at_64x(spark, sf_stress_dir, tmp_pa
         == base_tok.select("token").distinct().count()
     )
 
-    fn = getattr(get("c04_tfidf_terms").fn, "__wrapped__", get("c04_tfidf_terms").fn)
+    fn = get("c04_tfidf_terms").fn
     base = {
         (r.source, r.term_rank): (r.token, r.tf, r.df, r.tfidf)
         for r in fn(spark, sf_stress_dir).collect()

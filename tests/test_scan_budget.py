@@ -123,7 +123,6 @@ def registry_scan_counts(spark, sf_dir):
     spark.catalog.clearCache()
     counts = {}
     for name, fn in registry.full_queries().items():
-        fn = getattr(fn, "__wrapped__", fn)
         df = fn(spark, sf_dir)
         if not hasattr(df, "_jdf"):
             # visible skip, not `return`: a silent early return would
@@ -210,12 +209,9 @@ def test_decontaminate_verdicts_materialize_gate(spark, sf_dir):
     Forcing the threshold conf to each side of the fixture's size pins
     that the gate actually switches plans."""
     from stock_data_pipeline_spark.operators.text import (
-        c04_decontaminate_verdicts,
+        c04_decontaminate_verdicts as fn,
     )
 
-    fn = getattr(
-        c04_decontaminate_verdicts, "__wrapped__", c04_decontaminate_verdicts
-    )
     conf = "spark.spark_graft.decon.materializeMinBytes"
     try:
         spark.conf.set(conf, "0")  # everything is >= 0 bytes: materialize

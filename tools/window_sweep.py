@@ -101,8 +101,6 @@ for name in sorted(qs):
             hs = {}
             for p in ("1", "200"):
                 spark.conf.set("spark.sql.shuffle.partitions", p)
-                from stock_data_pipeline_spark import registry
-                registry.invalidate_plans(spark)
                 hs[p] = vhash(qs[name](spark, sf).toPandas())
             ok = hs["1"] == hs["200"]
             if name in os_:

@@ -49,12 +49,10 @@ HEADLINE_QUERIES = [
     # c02: the PRODUCTION near-dup path — since r13 the SCALE-SAFE
     # composition (VERDICT r12 task 1): exact-dedup first, df-pruned
     # pairs, connected components, anti-join (operators/dedup.py
-    # near_dedup_corpus). The anti-pattern variants c02_minhash_lsh
-    # (uncapped single-stage LSH, quadratic candidate mass on dup-heavy
-    # corpora — left the headline in r12) and c02_near_dedup_exactpairs
-    # (the r12 headline composition, whose unpruned pair join is
-    # unbounded under stop-shingle skew — left the headline in r13) stay
-    # registered but are not timed.
+    # near_dedup_corpus). The uncapped single-stage LSH (quadratic
+    # candidate mass on dup-heavy corpora) and the unpruned-pair
+    # composition (unbounded under stop-shingle skew) left the headline
+    # in r12/r13 and are no longer registered queries.
     "c02_near_dedup_corpus",
     "c03_cosine_topk",
     "c03_ann_ivf",

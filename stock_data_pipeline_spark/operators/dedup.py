@@ -14,11 +14,21 @@ Scale design (the whole point of these implementations):
   the standard document-frequency prune;
 - MinHash signatures are fixed-width (k columns) per doc — state is O(docs),
   band buckets are O(docs × bands).
+
+One implementation per stage: shingle rows, MinHash banding (one set of
+banding constants for both hash families), the band-candidate self-join
+and set-Jaccard verify are each written once and shared. Two hash
+families exist for a reason: xxhash64 MinHash is the production index
+(the streaming near-dedup job persists its BIGINT buckets), and the md5
+family is what lets a DuckDB oracle replay the pipeline (c02_minhash_portable,
+c02_near_dedup_banded, c02_simhash_portable). The oracles' shared CTEs
+(surviving docs, banded candidates, closure) are likewise spelled once.
 """
 
 from __future__ import annotations
 
 import random
+from collections.abc import Callable
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
@@ -163,6 +173,15 @@ def c01_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 _JACCARD_THRESHOLD = 0.1
 _SHINGLE_K = 3
 
+# Oracle fragment: shingle-overlap counts over an ``sh(doc_id, shingle)``
+# CTE — the inverted-index self-join every exact-Jaccard oracle runs.
+_INTER_SQL = """sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
+    inter AS (
+      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
+      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+      GROUP BY a.doc_id, b.doc_id
+    )"""
+
 
 @query(
     "c02_ngram_jaccard",
@@ -171,12 +190,7 @@ _SHINGLE_K = 3
       SELECT doc_id, unnest({sql_word_shingles(sql_tokens('text'), _SHINGLE_K)}) AS shingle
       FROM documents
     ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    )
+    {_INTER_SQL}
     SELECT doc_a, doc_b,
            floor(CAST(n_inter AS DOUBLE) / (sa.n + sb.n - n_inter) * 1000000)
              / 1000000 AS jaccard
@@ -206,7 +220,7 @@ _PRUNE_MAX_DF = 20
 @query(
     "c02_ngram_jaccard_pruned",
     # rotated out late r7 (driver row r6 green); the C2 near-dup family
-    # stays in-window via c02_simhash_portable
+    # stays in-window via c02_minhash_portable and c02_near_dedup_corpus
     driver=False,
     oracle=f"""
     WITH sh0 AS (
@@ -218,12 +232,7 @@ _PRUNE_MAX_DF = 20
       HAVING COUNT(*) <= {_PRUNE_MAX_DF}
     ),
     sh AS (SELECT sh0.doc_id, sh0.shingle FROM sh0 JOIN keep USING (shingle)),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    )
+    {_INTER_SQL}
     SELECT doc_a, doc_b,
            floor(CAST(n_inter AS DOUBLE) / (sa.n + sb.n - n_inter) * 1000000)
              / 1000000 AS jaccard
@@ -262,12 +271,25 @@ def ngram_jaccard_pairs(
     appearing in more than that many docs (document-frequency prune — the
     standard way to bound the inverted-index join at corpus scale; ~exact
     for high thresholds because stop-shingles contribute little)."""
-    sh = rebalance(docs).select(
+    return _jaccard_pairs_from_index(
+        _shingle_rows(docs, k), threshold=threshold, max_shingle_df=max_shingle_df
+    )
+
+
+def _shingle_rows(docs: DataFrame, k: int = _SHINGLE_K) -> DataFrame:
+    """(doc_id, shingle) rows — each doc's distinct k-word shingles,
+    exploded over a rebalanced scan. The index every shingle-keyed stage
+    (inverted-index Jaccard, both MinHash signatures) starts from."""
+    return rebalance(docs).select(
         "doc_id", F.explode(word_shingles(tokens("text"), k)).alias("shingle")
     )
-    return _jaccard_pairs_from_index(
-        sh, threshold=threshold, max_shingle_df=max_shingle_df
-    )
+
+
+def _set_jaccard(a: str, b: str) -> F.Column:
+    """Exact set Jaccard of two distinct-shingle array columns:
+    |a ∩ b| / (|a| + |b| − |a ∩ b|)."""
+    n_inter = F.size(F.array_intersect(a, b))
+    return n_inter.cast("double") / (F.size(a) + F.size(b) - n_inter)
 
 
 def _jaccard_pairs_from_index(
@@ -366,69 +388,88 @@ def _jaccard_pairs_from_index(
 # --------------------------------------------------------------------------
 # C2b — MinHash + LSH banding (approximate near-dup at scale)
 # --------------------------------------------------------------------------
-@query("c02_minhash_lsh", driver=False)
-def c02_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C2b: MinHash(k=32) + LSH(8 bands × 4 rows) candidate generation,
-    then exact Jaccard verification on candidates only.
-
-    No SQL oracle (the permutation family isn't reasonably expressible in
-    DuckDB); correctness = recall vs the exact C2a pairs, asserted in
-    tests/test_dedup.py. Scale: signatures are 32 ints per doc computed in
-    ONE groupBy pass (32 min-aggregates over the shingle explode); band
-    buckets equi-join — only docs sharing a band collide, so the join is
-    O(bucket²) per bucket instead of O(corpus²).
-    """
-    docs = load(spark, sf_dir, "documents")
-    return minhash_lsh_pairs(docs, threshold=_JACCARD_THRESHOLD)
+# One banding for both hash families: 32 minhashes, 8 bands × 4 rows.
+_MH_K, _MH_BANDS, _MH_ROWS = 32, 8, 4
 
 
-def minhash_signatures(
-    docs: DataFrame, *, k: int = 32, shingle_k: int = _SHINGLE_K
-) -> DataFrame:
-    """(doc_id, mh0..mh{k-1}) MinHash signature table, one shuffle."""
-    coeffs = _perm_coeffs(k)
-    sh = rebalance(docs).select(
-        "doc_id", F.explode(word_shingles(tokens("text"), shingle_k)).alias("shingle")
-    )
+def minhash_signatures(docs: DataFrame) -> DataFrame:
+    """(doc_id, mh0..mh31) MinHash signature table, one shuffle: 32
+    min-aggregates over the shingle explode, one Mersenne-prime
+    permutation h_i(x) = (a_i·x + b_i) mod P per column."""
     # 31-bit base hash keeps a*h + b < 2^62: safe under ANSI arithmetic.
     h = F.pmod(F.xxhash64("shingle"), F.lit(_MERSENNE_P)).alias("h")
-    sh = sh.select("doc_id", h)
+    sh = _shingle_rows(docs).select("doc_id", h)
     aggs = [
         F.min((F.lit(a) * F.col("h") + F.lit(b)) % _MERSENNE_P).alias(f"mh{i}")
-        for i, (a, b) in enumerate(coeffs)
+        for i, (a, b) in enumerate(_perm_coeffs(_MH_K))
     ]
     return sh.groupBy("doc_id").agg(*aggs)
 
 
-def lsh_bucket_index(
-    docs: DataFrame, *, k: int = 32, bands: int = 8
+def _band_rows(
+    sig: DataFrame, band_hash: Callable[..., F.Column]
 ) -> DataFrame:
-    """(doc_id, band, bucket) LSH index rows for ``docs``.
-
-    One projection + posexplode emits all (band, bucket) rows in a single
-    pass over the signatures — no per-band re-read, no 8-way union. The
-    index is k ints + 1 bucket hash per doc (~200 B/doc): the canonical
-    "persist the index, not the corpus" LSH shape, and the table an
-    incremental ingest pipeline appends to per batch
-    (:func:`probe_near_dup_batch`).
-    """
-    rows = k // bands
-    sig = minhash_signatures(docs, k=k)
+    """(doc_id, band, bucket) rows of a (doc_id, mh0..mh31) signature:
+    ``band_hash`` over each band's row columns, and ONE posexplode emits
+    every band in a single pass over the signatures — no per-band
+    re-read, no 8-way union."""
     band_hashes = F.array(
         *[
-            F.xxhash64(*[f"mh{band * rows + r}" for r in range(rows)])
-            for band in range(bands)
+            band_hash(*[f"mh{band * _MH_ROWS + r}" for r in range(_MH_ROWS)])
+            for band in range(_MH_BANDS)
         ]
     )
     return sig.select("doc_id", F.posexplode(band_hashes).alias("band", "bucket"))
 
 
+def lsh_bucket_index(docs: DataFrame) -> DataFrame:
+    """(doc_id, band, bucket) LSH index rows for ``docs``, BIGINT buckets.
+
+    The index is 32 ints + 1 bucket hash per doc (~200 B/doc): the
+    canonical "persist the index, not the corpus" LSH shape, and the
+    table an incremental ingest pipeline appends to per batch
+    (:func:`probe_near_dup_batch`).
+    """
+    return _band_rows(minhash_signatures(docs), F.xxhash64)
+
+
+def _md5_lsh_buckets(sh: DataFrame) -> DataFrame:
+    """(doc_id, band, bucket) rows from ``(doc_id, shingle)`` rows with
+    the cross-engine-portable hash family: minhash i is the string MIN
+    of ``md5('mh<i>:' || shingle)``, a band's bucket the md5 of its
+    rows joined by '|'. md5 costs more per shingle than xxhash64 (why
+    the production index keeps xxhash64), but DuckDB spells it
+    byte-identically, so the oracles replay it (:data:`_MD5_LSH_SQL`)."""
+    aggs = [
+        F.min(F.md5(F.concat(F.lit(f"mh{i}:"), F.col("shingle")))).alias(f"mh{i}")
+        for i in range(_MH_K)
+    ]
+    return _band_rows(
+        sh.groupBy("doc_id").agg(*aggs),
+        lambda *rows: F.md5(F.concat_ws("|", *rows)),
+    )
+
+
+def _band_candidates(buckets: DataFrame) -> DataFrame:
+    """(doc_a, doc_b) candidate pairs, ``doc_a < doc_b``: docs sharing a
+    (band, bucket), deduplicated across bands. An equi-join, so the cost
+    is Σ_bucket |bucket|² instead of O(corpus²)."""
+    a = buckets.alias("a")
+    b = buckets.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bucket") == F.col("b.bucket"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .distinct()
+    )
+
+
 def verify_jaccard_pairs(
-    candidates: DataFrame,
-    texts: DataFrame,
-    *,
-    threshold: float,
-    shingle_k: int = _SHINGLE_K,
+    candidates: DataFrame, texts: DataFrame, *, threshold: float
 ) -> DataFrame:
     """Exact-Jaccard verification of (doc_a, doc_b) candidates — per PAIR,
     with JVM array ops. ``word_shingles`` returns the distinct shingle
@@ -449,18 +490,10 @@ def verify_jaccard_pairs(
     shingled = pairs.select(
         "doc_a",
         "doc_b",
-        word_shingles(tokens("text_a"), shingle_k).alias("sha"),
-        word_shingles(tokens("text_b"), shingle_k).alias("shb"),
-    ).select(
-        "doc_a",
-        "doc_b",
-        F.size(F.array_intersect("sha", "shb")).alias("n_inter"),
-        F.size("sha").alias("na"),
-        F.size("shb").alias("nb"),
+        word_shingles(tokens("text_a"), _SHINGLE_K).alias("sha"),
+        word_shingles(tokens("text_b"), _SHINGLE_K).alias("shb"),
     )
-    jac = F.col("n_inter").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("n_inter")
-    )
+    jac = _set_jaccard("sha", "shb")
     return shingled.filter(jac >= threshold).select(
         "doc_a", "doc_b", trunc6(jac).alias("jaccard")
     )
@@ -470,8 +503,6 @@ def minhash_lsh_pairs(
     docs: DataFrame,
     *,
     threshold: float = 0.1,
-    k: int = 32,
-    bands: int = 8,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs via banded MinHash, verified with exact Jaccard.
@@ -487,7 +518,8 @@ def minhash_lsh_pairs(
     a mega-bucket — i.e. the pair sits inside a duplicate mega-cluster,
     which exact dedup (C1) removes more cheaply than pairwise LSH; the
     skew stress test pins both the bound and the retained off-cluster
-    recall. Default None preserves the registered query's semantics.
+    recall. Default None is the uncapped join, quadratic on dup-heavy
+    raw corpora (run exact dedup first, tests/test_scalegen_recipe.py).
     """
     # Persist the bucket table: the LSH self-join reads it from BOTH sides,
     # and with AQE broadcasting one side there is no common shuffle exchange
@@ -498,9 +530,7 @@ def minhash_lsh_pairs(
     # persist BEFORE the size-filter derivation: `small` aggregates the
     # bucket table and the self-join reads it twice more — without the
     # cache the signature pass would run three times on the capped path
-    buckets = lsh_bucket_index(docs, k=k, bands=bands).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    buckets = lsh_bucket_index(docs).persist(StorageLevel.MEMORY_AND_DISK)
     if max_bucket_size is not None:
         small = (
             buckets.groupBy("band", "bucket")
@@ -509,19 +539,9 @@ def minhash_lsh_pairs(
             .select("band", "bucket")
         )
         buckets = buckets.join(small, ["band", "bucket"])
-    a = buckets.alias("a")
-    b = buckets.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
+    return verify_jaccard_pairs(
+        _band_candidates(buckets), docs, threshold=threshold
     )
-    return verify_jaccard_pairs(candidates, docs, threshold=threshold)
 
 
 def probe_near_dup_batch(
@@ -530,8 +550,6 @@ def probe_near_dup_batch(
     corpus_texts: DataFrame,
     *,
     threshold: float = 0.1,
-    k: int = 32,
-    bands: int = 8,
 ) -> tuple[DataFrame, DataFrame]:
     """Incremental near-dup detection for ONE ingest batch.
 
@@ -551,9 +569,7 @@ def probe_near_dup_batch(
     it arrives in — incremental pairs across batches exactly equal the
     full-corpus recompute (asserted in tests/test_dedup.py).
     """
-    new_buckets = lsh_bucket_index(new_docs, k=k, bands=bands).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    new_buckets = lsh_bucket_index(new_docs).persist(StorageLevel.MEMORY_AND_DISK)
     both = index.unionByName(new_buckets)
     a = new_buckets.alias("a")
     b = both.alias("b")
@@ -572,87 +588,6 @@ def probe_near_dup_batch(
     )
     pairs = verify_jaccard_pairs(candidates, corpus_texts, threshold=threshold)
     return pairs, new_buckets
-
-
-# --------------------------------------------------------------------------
-# C2c — SimHash (64-bit, stored as two 32-bit halves) + chunk blocking
-# --------------------------------------------------------------------------
-@query("c02_simhash", driver=False)
-def c02_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C2c: 64-bit SimHash near-dup pairs with Hamming distance ≤ 3.
-
-    Signature: bit b = sign of Σ_tokens (±1 by bit b of xxhash64(token)).
-    Stored as two 32-bit halves (hi/lo) so assembling bits never overflows
-    64-bit signed arithmetic under ANSI mode. Blocking: split the 64 bits
-    into 4 × 16-bit chunks — by pigeonhole any pair with Hamming ≤ 3 shares
-    at least one exact chunk, so the equi-join on (chunk_index, chunk_value)
-    has perfect recall at this radius (a larger radius needs more chunks).
-    No oracle (bit-level SQL would re-implement the operator); behavior is
-    tested in tests/test_dedup.py with planted near-duplicates.
-    """
-    docs = load(spark, sf_dir, "documents")
-    return simhash_pairs(docs, max_hamming=3)
-
-
-def simhash_signatures(docs: DataFrame) -> DataFrame:
-    """(doc_id, sim_lo, sim_hi) — 64-bit SimHash as two 32-bit halves."""
-    tok = rebalance(docs).select("doc_id", F.explode(tokens("text")).alias("token"))
-    tok = tok.filter(F.col("token") != "").select(
-        "doc_id", F.xxhash64("token").alias("h")
-    )
-    bit_aggs = [
-        F.sum(
-            F.when(F.shiftright("h", b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"s{b}")
-        for b in range(64)
-    ]
-    sums = tok.groupBy("doc_id").agg(*bit_aggs)
-    lo = None
-    hi = None
-    for b in range(32):
-        term_lo = F.when(F.col(f"s{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
-        term_hi = F.when(F.col(f"s{b + 32}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
-        lo = term_lo if lo is None else lo + term_lo
-        hi = term_hi if hi is None else hi + term_hi
-    return sums.select(
-        "doc_id", lo.cast("bigint").alias("sim_lo"), hi.cast("bigint").alias("sim_hi")
-    )
-
-
-def simhash_pairs(docs: DataFrame, *, max_hamming: int = 6) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance, chunk-blocked."""
-    sig = simhash_signatures(docs)
-    chunk_exprs = []
-    for j in range(4):
-        half = F.col("sim_lo") if j < 2 else F.col("sim_hi")
-        shift = 16 * (j % 2)
-        chunk_exprs.append(F.shiftright(half, shift).bitwiseAND(F.lit(0xFFFF)))
-    blocked = sig.select(
-        "doc_id",
-        "sim_lo",
-        "sim_hi",
-        F.posexplode(F.array(*chunk_exprs)).alias("chunk_idx", "chunk"),
-    )
-    a = blocked.alias("a")
-    b = blocked.alias("b")
-    hamming = F.bit_count(
-        F.col("a.sim_lo").bitwiseXOR(F.col("b.sim_lo"))
-    ) + F.bit_count(F.col("a.sim_hi").bitwiseXOR(F.col("b.sim_hi")))
-    return (
-        a.join(
-            b,
-            (F.col("a.chunk_idx") == F.col("b.chunk_idx"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            hamming.cast("int").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
 
 
 # --------------------------------------------------------------------------
@@ -741,7 +676,7 @@ def fuzzy_join_dist1(
 
 @query(
     "c02_fuzzy_name_join",
-    # demoted in the round-9 rotation: ledger-closed one-shot (driver-green r8); c02 stays in-window via c02_simhash_portable;
+    # demoted in the round-9 rotation: ledger-closed one-shot (driver-green r8);
     # stays on the full bench/oracle-parity surface
     driver=False,
     oracle=_FUZZY_JOIN_SQL,
@@ -758,33 +693,43 @@ def c02_fuzzy_name_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# C2b' — portable-hash MinHash+LSH twin (oracle-backed)
+# C2b' — portable-hash MinHash+LSH (oracle-backed)
 # --------------------------------------------------------------------------
-_MP_K, _MP_BANDS, _MP_ROWS, _MP_THRESH = 32, 8, 4, 0.1
+# Oracle fragment: the md5 family's signatures, band buckets and
+# band-collision candidates over an ``sh(doc_id, shingle)`` CTE — the SQL
+# spelling of _md5_lsh_buckets + _band_candidates. A fixed-length
+# lowercase-hex string's LEXICOGRAPHIC min is its numeric 128-bit min, so
+# ``MIN(str)`` IS the minhash — no modular arithmetic, no 64-bit
+# multiply, nothing either engine spells differently.
+_MD5_LSH_SQL = """sig AS (
+      SELECT doc_id,
+      {aggs}
+      FROM sh GROUP BY doc_id
+    ),
+    buckets AS ({buckets}),
+    cand AS (
+      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+      FROM buckets a JOIN buckets b
+        ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
+    )""".format(
+    aggs=",\n      ".join(
+        f"MIN(md5('mh{i}:' || shingle)) AS mh{i}" for i in range(_MH_K)
+    ),
+    buckets=" UNION ALL ".join(
+        f"SELECT doc_id, {band} AS band, md5(concat_ws('|', "
+        + ",".join(f"mh{band * _MH_ROWS + r}" for r in range(_MH_ROWS))
+        + ")) AS bucket FROM sig"
+        for band in range(_MH_BANDS)
+    ),
+)
 
 
 def _minhash_portable_oracle() -> str:
     """DuckDB oracle for c02_minhash_portable — banded MinHash + LSH +
-    exact-Jaccard verify, re-implemented end to end in SQL.
-
-    Portable because the twin's k hash functions are salted md5 digests
-    (``md5('mh<i>:' || shingle)``): a fixed-length lowercase-hex string
-    whose LEXICOGRAPHIC min is its numeric 128-bit min, so ``MIN(str)``
-    IS the minhash — no modular arithmetic, no 64-bit multiply, nothing
-    either engine spells differently. Band buckets are md5 over the
-    concatenated row mins; candidates come from the (band, bucket)
-    self-join; verification is exact set Jaccard over 3-word shingles
-    (list ops in DuckDB ≡ array ops in Spark) with the trunc6 output
-    convention."""
-    mh_aggs = ",\n      ".join(
-        f"MIN(md5('mh{i}:' || shingle)) AS mh{i}" for i in range(_MP_K)
-    )
-    bucket_select = " UNION ALL ".join(
-        f"SELECT doc_id, {band} AS band, md5(concat_ws('|', "
-        + ",".join(f"mh{band * _MP_ROWS + r}" for r in range(_MP_ROWS))
-        + ")) AS bucket FROM sig"
-        for band in range(_MP_BANDS)
-    )
+    exact-Jaccard verify, re-implemented end to end in SQL: md5 band
+    candidates (:data:`_MD5_LSH_SQL`), then exact set Jaccard over 3-word
+    shingles (list ops in DuckDB ≡ array ops in Spark) with the trunc6
+    output convention."""
     shingles = (
         "CASE WHEN len({tk}) >= 3 THEN list_distinct(list_transform("
         "generate_series(1, len({tk}) - 2), "
@@ -802,17 +747,7 @@ def _minhash_portable_oracle() -> str:
       FROM (SELECT doc_id, {shingles.format(tk="tk")} AS shingles FROM t),
            UNNEST(shingles) AS s(shingle)
     ),
-    sig AS (
-      SELECT doc_id,
-          {mh_aggs}
-      FROM sh GROUP BY doc_id
-    ),
-    buckets AS ({bucket_select}),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM buckets a JOIN buckets b
-        ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-    ),
+    {_MD5_LSH_SQL},
     jc AS (
       SELECT cand.doc_a, cand.doc_b,
              len(list_intersect({shingles.format(tk="ta.tk")},
@@ -827,43 +762,12 @@ def _minhash_portable_oracle() -> str:
            floor((CAST(n_inter AS DOUBLE) / (na + nb - n_inter)) * 1000000)
              / 1000000 AS jaccard
     FROM jc
-    WHERE CAST(n_inter AS DOUBLE) / (na + nb - n_inter) >= {_MP_THRESH}
+    WHERE CAST(n_inter AS DOUBLE) / (na + nb - n_inter) >= {_JACCARD_THRESHOLD}
     """
-
-
-def minhash_portable_buckets(docs: DataFrame) -> DataFrame:
-    """(doc_id, band, bucket) LSH rows from salted-md5 minhashes — same
-    one-pass shape as :func:`lsh_bucket_index`, hash family swapped for
-    the cross-engine-portable one. md5 costs more per shingle than
-    xxhash64 (why the production index keeps xxhash64); string mins ride
-    the same partial-aggregated groupBy."""
-    sh = rebalance(docs).select(
-        "doc_id",
-        F.explode(word_shingles(tokens("text"), _SHINGLE_K)).alias("shingle"),
-    )
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"mh{i}:"), F.col("shingle")))).alias(f"mh{i}")
-        for i in range(_MP_K)
-    ]
-    sig = sh.groupBy("doc_id").agg(*aggs)
-    band_hashes = F.array(
-        *[
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    *[f"mh{band * _MP_ROWS + r}" for r in range(_MP_ROWS)],
-                )
-            )
-            for band in range(_MP_BANDS)
-        ]
-    )
-    return sig.select("doc_id", F.posexplode(band_hashes).alias("band", "bucket"))
 
 
 @query(
     "c02_minhash_portable",
-    # demoted in the round-9 rotation: ledger-closed one-shot (driver-green r8); c02 stays in-window via c02_simhash_portable;
-    # stays on the full bench/oracle-parity surface
     driver=True,  # promoted r14: fresh oracle-backed rotation (VERDICT r13 task 8)
     oracle=_minhash_portable_oracle(),
 )
@@ -871,37 +775,27 @@ def c02_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C2b': the oracle-backed MinHash — salted-md5 hash family so the
     ENTIRE banded-LSH pipeline (shingle → 32 string-min hashes → 8×4
     band buckets → candidate self-join → exact-Jaccard verify) re-runs
-    independently in DuckDB. ``c02_minhash_lsh`` (xxhash64 + Mersenne
-    permutations) remains the production path with its recall tests;
-    verification reuses the production :func:`verify_jaccard_pairs`.
-    Hash parity at sf0.001/0.01/0.1 (28/25/256 pairs)."""
+    independently in DuckDB. Every stage but the hash family is shared
+    with :func:`minhash_lsh_pairs` (xxhash64 + Mersenne permutations, the
+    production index with its recall tests). Verification re-shingles
+    only the candidate docs from text. Hash parity at sf0.001/0.01/0.1
+    (28/25/256 pairs)."""
     docs = load(spark, sf_dir, "documents")
-    buckets = minhash_portable_buckets(docs)
-    a = buckets.alias("a")
-    b = buckets.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
+    buckets = _md5_lsh_buckets(_shingle_rows(docs))
+    return verify_jaccard_pairs(
+        _band_candidates(buckets), docs, threshold=_JACCARD_THRESHOLD
     )
-    return verify_jaccard_pairs(candidates, docs, threshold=_MP_THRESH)
 
 
 # --------------------------------------------------------------------------
-# C2c' — portable-hash SimHash twin (oracle-backed)
+# C2c — SimHash (64-bit, stored as two 32-bit halves) + chunk blocking
 # --------------------------------------------------------------------------
 def _simhash_portable_oracle() -> str:
     """DuckDB oracle for c02_simhash_portable — the ENTIRE SimHash
     pipeline re-implemented independently in SQL. Possible because the
-    portable variant derives its 64 bit-hashes from md5 hex digits
-    (available in both engines, byte-identical on utf-8 text) instead of
-    Spark's xxhash64 (which DuckDB lacks — the reason c02_simhash itself
-    stays no-oracle). Same token definition as every text oracle
+    64 bit-hashes come from md5 hex digits (available in both engines,
+    byte-identical on utf-8 text), not from Spark's xxhash64 (which
+    DuckDB lacks). Same token definition as every text oracle
     (string_split_regex ≡ functions/textfns.tokens, proven by the c08
     oracles), same two-halves signature layout, same 4×16-bit pigeonhole
     blocking, same Hamming≤3 verify."""
@@ -953,16 +847,13 @@ def _simhash_portable_oracle() -> str:
     """
 
 
-def simhash_portable_signatures(docs: DataFrame) -> DataFrame:
-    """(doc_id, sig_lo, sig_hi) — 64-bit SimHash whose per-token bit
-    source is the md5 hex digest instead of xxhash64.
-
-    Same algorithm, same layout, same scale story as
-    :func:`simhash_signatures`; only the hash family differs. md5 is
-    ~3-4× more CPU per token than xxhash64 (why the DEFAULT simhash
-    keeps xxhash64), but it exists in DuckDB, which buys this variant a
-    full independent SQL re-implementation as its oracle — the
-    cross-engine-verifiable member of the SimHash family.
+def simhash_signatures(docs: DataFrame) -> DataFrame:
+    """(doc_id, sig_lo, sig_hi) — 64-bit SimHash as two 32-bit halves,
+    so assembling bits never overflows 64-bit signed arithmetic under
+    ANSI mode. Bit b = sign of Σ_tokens (±1 by bit b of the token's md5
+    hex digest). md5 costs ~3-4× more CPU per token than xxhash64, but
+    it exists in DuckDB, which buys the pipeline a full independent SQL
+    re-implementation as its oracle.
     """
     tok = rebalance(docs).select(
         "doc_id", F.explode(tokens("text")).alias("token")
@@ -1002,11 +893,13 @@ def simhash_portable_signatures(docs: DataFrame) -> DataFrame:
     )
 
 
-def simhash_portable_pairs(docs: DataFrame, *, max_hamming: int = 3) -> DataFrame:
-    """Near-dup pairs from the portable signatures — chunk-blocked
-    exactly like :func:`simhash_pairs` (4×16-bit pigeonhole, perfect
-    recall at Hamming ≤ 3)."""
-    sig = simhash_portable_signatures(docs)
+def simhash_pairs(docs: DataFrame, *, max_hamming: int = 3) -> DataFrame:
+    """Near-dup pairs by SimHash Hamming distance ≤ ``max_hamming``.
+    Blocking splits the 64 bits into 4 × 16-bit chunks: by pigeonhole
+    any pair with Hamming ≤ 3 shares at least one exact chunk, so the
+    equi-join on (chunk_idx, chunk) has perfect recall at that radius (a
+    larger radius needs more chunks)."""
+    sig = simhash_signatures(docs)
     chunk_exprs = []
     for j in range(4):
         half = F.col("sig_lo") if j < 2 else F.col("sig_hi")
@@ -1043,15 +936,13 @@ def simhash_portable_pairs(docs: DataFrame, *, max_hamming: int = 3) -> DataFram
 
 @query("c02_simhash_portable", oracle=_simhash_portable_oracle(), driver=False)
 def c02_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C2c': the oracle-backed SimHash — md5-hex bit source so the full
-    pipeline (tokenize → 64 bit-majorities → two-halves signature →
-    pigeonhole chunk blocking → Hamming≤3 verify) re-runs independently
-    in DuckDB. The xxhash64 ``c02_simhash`` remains the production fast
-    path; this twin pins the ALGORITHM cross-engine the way
-    c03_semdedup_exact pins the celled semdedup. Hash-parity verified at
+    """C2c: 64-bit SimHash near-dup pairs with Hamming distance ≤ 3 —
+    md5-hex bit source so the full pipeline (tokenize → 64 bit-majorities
+    → two-halves signature → pigeonhole chunk blocking → Hamming≤3
+    verify) re-runs independently in DuckDB. Hash-parity verified at
     sf0.001/0.01/0.1 (23/12/312 pairs)."""
     docs = load(spark, sf_dir, "documents")
-    return simhash_portable_pairs(docs, max_hamming=3)
+    return simhash_pairs(docs, max_hamming=3)
 
 
 # --------------------------------------------------------------------------
@@ -1097,7 +988,6 @@ def _cluster_labels_with_drop_count(
     observed on the final round's checkpoint job, so callers that need
     the drop-set size for a broadcast decision (``near_dedup_corpus``)
     do not pay a separate ``count()`` job over the result."""
-    edge_obs = Observation()
     edges = (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .unionByName(
@@ -1106,28 +996,31 @@ def _cluster_labels_with_drop_count(
             )
         )
         .distinct()
-        .observe(edge_obs, F.count(F.lit(1)).alias("n_edges"))
         .localCheckpoint(eager=True)
     )
     # Checkpoint leaves carry no size statistics, so every per-round join
     # (edges ⋈ labels, propagated ⋈ parent) plans as an exchange-backed
-    # join even when the edge set is a few hundred candidate pairs —
-    # pure fixed cost repeated every round. The edge count rides the
-    # checkpoint job above for free; when the graph is small enough that
-    # a node-table broadcast is safely bounded (rows ≤ 2·n_edges ≤ 2·cap
-    # of (long, long) pairs — the 1M-edge default is ≤ ~32 MB raw per
-    # side), hint the per-round build sides broadcast and the rounds run
-    # exchange-free. Above the cap the rounds keep the bounded-memory
-    # shuffled plan (same size-gated adaptivity as the drop-set
-    # broadcast below). Conf is a ROW COUNT of directed edges, not
-    # bytes.
-    n_edges = edge_obs.get["n_edges"] or 0
-    max_bcast_edges = int(
+    # join even when the graph is a few hundred candidate pairs — pure
+    # fixed cost repeated every round. The build sides are NODE tables
+    # (labels, neighbor mins, parents: one row of two longs per node), so
+    # the gate is the node count, observed on round 1's checkpoint job for
+    # free. At or under the cap, rounds >= 2 hint those sides broadcast and
+    # run exchange-free; above it they keep the bounded-memory shuffled
+    # plan (same size-gated adaptivity as the drop-set broadcast below).
+    # Round 1 runs before the count exists and broadcasts nothing. The
+    # conf is a ROW COUNT of nodes, not bytes: Spark's hashed relation
+    # costs roughly 3-5x the 16 B/node raw payload per executor, rebuilt
+    # every round, so one broadcast stays under ~3-5x 16 B x cap.
+    max_bcast_nodes = int(
         pairs.sparkSession.conf.get(
-            "spark.spark_graft.dedupclusters.broadcastMaxEdges", "1000000"
+            "spark.spark_graft.dedupclusters.broadcastMaxNodes", "1000000"
         )
     )
-    _b = F.broadcast if n_edges <= max_bcast_edges else (lambda df: df)
+    bcast = False  # decided from round 1's node count
+
+    def _b(df: DataFrame) -> DataFrame:
+        return F.broadcast(df) if bcast else df
+
     labels = None
     n_changed = n_drops = 0
     for _ in range(max_iters):
@@ -1198,10 +1091,13 @@ def _cluster_labels_with_drop_count(
             F.sum(
                 (F.col("node") != F.col("label")).cast("long")
             ).alias("n_drops"),
+            F.count(F.lit(1)).alias("n_nodes"),
         ).localCheckpoint(eager=True)
         metrics = changed_obs.get
         n_changed = metrics["n_changed"] or 0
         n_drops = metrics["n_drops"] or 0
+        if labels is None:
+            bcast = metrics["n_nodes"] <= max_bcast_nodes
         labels = updated.drop("_changed")
         if n_changed == 0:
             break
@@ -1222,29 +1118,20 @@ def _cluster_labels_with_drop_count(
     )
 
 
-# Shared oracle prefix: exact-Jaccard edge set -> transitive closure via
-# recursive CTE (UNION-distinct terminates: finite reachable-label space),
-# cluster id = min reachable node.
-_CLOSURE_CTE = f"""
-    WITH RECURSIVE sh AS (
-      SELECT doc_id, unnest({sql_word_shingles(sql_tokens('text'), _SHINGLE_K)}) AS shingle
-      FROM documents
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    ),
-    pairs AS (
+# Oracle fragments shared by the near-dedup oracles, each spelled once.
+# Exact-Jaccard pairs from the _INTER_SQL overlap counts:
+_PAIRS_SQL = f"""pairs AS (
       SELECT doc_a, doc_b
       FROM inter
       JOIN sizes sa ON sa.doc_id = doc_a
       JOIN sizes sb ON sb.doc_id = doc_b
       WHERE CAST(n_inter AS DOUBLE) / (sa.n + sb.n - n_inter)
             >= {_JACCARD_THRESHOLD}
-    ),
-    edges AS (
+    )"""
+# Transitive closure of ``pairs`` via recursive CTE (UNION-distinct
+# terminates: finite reachable-label space); cluster id = min reachable
+# node.
+_CLOSURE_SQL = """edges AS (
       SELECT doc_a AS src, doc_b AS dst FROM pairs
       UNION
       SELECT doc_b AS src, doc_a AS dst FROM pairs
@@ -1254,7 +1141,39 @@ _CLOSURE_CTE = f"""
       UNION
       SELECT e.src AS node, r.label AS label
       FROM edges e JOIN reach r ON r.node = e.dst
+    )"""
+_CLUSTERS_SQL = (
+    "SELECT node AS doc_id, MIN(label) AS cluster_id FROM reach GROUP BY node"
+)
+# Exact-dedup survivors: the min-doc_id keeper per content fingerprint.
+_SURV_SQL = """surv AS (
+      SELECT doc_id, source, n_chars, text FROM (
+        SELECT doc_id, source, n_chars, text,
+               ROW_NUMBER() OVER (
+                 PARTITION BY
+                   md5(lower(regexp_replace(trim(text), '\\s+', ' ', 'g')))
+                 ORDER BY doc_id
+               ) AS rn
+        FROM documents
+      ) WHERE rn = 1
+    )"""
+# The deduped corpus: survivors that are unpaired or their cluster's keeper.
+_KEEPERS_SQL = f"""clusters AS (
+      {_CLUSTERS_SQL}
     )
+    SELECT d.doc_id, d.source, d.n_chars
+    FROM surv d LEFT JOIN clusters c ON d.doc_id = c.doc_id
+    WHERE c.doc_id IS NULL OR c.cluster_id = d.doc_id"""
+
+# Exact-Jaccard edge set over the whole corpus, then its closure.
+_CLOSURE_CTE = f"""
+    WITH RECURSIVE sh AS (
+      SELECT doc_id, unnest({sql_word_shingles(sql_tokens('text'), _SHINGLE_K)}) AS shingle
+      FROM documents
+    ),
+    {_INTER_SQL},
+    {_PAIRS_SQL},
+    {_CLOSURE_SQL}
 """
 
 
@@ -1262,9 +1181,8 @@ _CLOSURE_CTE = f"""
     "c02_dedup_clusters",
     # Connected components ARE SQL-expressible when the edge set is (the
     # exact Jaccard pairs above): see _CLOSURE_CTE.
-    oracle=_CLOSURE_CTE
-    + """
-    SELECT node AS doc_id, MIN(label) AS cluster_id FROM reach GROUP BY node
+    oracle=f"""{_CLOSURE_CTE}
+    {_CLUSTERS_SQL}
     """,
     driver=False,
 )
@@ -1287,17 +1205,7 @@ def c02_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ON, then transitive closure. Every stage is spelled identically to the
 # Spark composition so the driver hash compare pins the full pipeline.
 _PRUNED_CLOSURE_CTE = f"""
-    WITH RECURSIVE surv AS (
-      SELECT doc_id, source, n_chars, text FROM (
-        SELECT doc_id, source, n_chars, text,
-               ROW_NUMBER() OVER (
-                 PARTITION BY
-                   md5(lower(regexp_replace(trim(text), '\\s+', ' ', 'g')))
-                 ORDER BY doc_id
-               ) AS rn
-        FROM documents
-      ) WHERE rn = 1
-    ),
+    WITH RECURSIVE {_SURV_SQL},
     sh0 AS (
       SELECT doc_id, unnest({sql_word_shingles(sql_tokens('text'), _SHINGLE_K)}) AS shingle
       FROM surv
@@ -1307,31 +1215,9 @@ _PRUNED_CLOSURE_CTE = f"""
       HAVING COUNT(*) <= {_PRUNE_MAX_DF}
     ),
     sh AS (SELECT sh0.doc_id, sh0.shingle FROM sh0 JOIN keepsh USING (shingle)),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    ),
-    pairs AS (
-      SELECT doc_a, doc_b
-      FROM inter
-      JOIN sizes sa ON sa.doc_id = doc_a
-      JOIN sizes sb ON sb.doc_id = doc_b
-      WHERE CAST(n_inter AS DOUBLE) / (sa.n + sb.n - n_inter)
-            >= {_JACCARD_THRESHOLD}
-    ),
-    edges AS (
-      SELECT doc_a AS src, doc_b AS dst FROM pairs
-      UNION
-      SELECT doc_b AS src, doc_a AS dst FROM pairs
-    ),
-    reach(node, label) AS (
-      SELECT DISTINCT src AS node, src AS label FROM edges
-      UNION
-      SELECT e.src AS node, r.label AS label
-      FROM edges e JOIN reach r ON r.node = e.dst
-    )
+    {_INTER_SQL},
+    {_PAIRS_SQL},
+    {_CLOSURE_SQL}
 """
 
 
@@ -1479,14 +1365,8 @@ def _drop_non_keepers(survivors: DataFrame, pairs: DataFrame) -> DataFrame:
 
 @query(
     "c02_near_dedup_corpus",
-    oracle=_PRUNED_CLOSURE_CTE
-    + """
-    , clusters AS (
-      SELECT node AS doc_id, MIN(label) AS cluster_id FROM reach GROUP BY node
-    )
-    SELECT d.doc_id, d.source, d.n_chars
-    FROM surv d LEFT JOIN clusters c ON d.doc_id = c.doc_id
-    WHERE c.doc_id IS NULL OR c.cluster_id = d.doc_id
+    oracle=f"""{_PRUNED_CLOSURE_CTE}
+    , {_KEEPERS_SQL}
     """,
     driver=True,
 )
@@ -1495,47 +1375,14 @@ def c02_near_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the C2 family exists to serve, recomposed in r13 as the
     SCALE-SAFE plan (VERDICT r12 task 1): exact-dedup first, then
     df-pruned pairs, then components, then anti-join (see
-    :func:`near_dedup_corpus` for the per-stage scale argument). The
-    previous composition — pairs from the UNPRUNED exact index join,
-    whose Σ df² cost is unbounded under stop-shingle skew — survives as
-    the named diagnostic ``c02_near_dedup_exactpairs`` below, still
-    oracle-backed.
+    :func:`near_dedup_corpus` for the per-stage scale argument). Its
+    pair stage is df-pruned because the UNPRUNED exact index join costs
+    Σ df², unbounded under stop-shingle skew; the unpruned pairs remain
+    available as ``c02_ngram_jaccard`` and its clusters as
+    ``c02_dedup_clusters``.
     """
     docs = load(spark, sf_dir, "documents")
     return near_dedup_corpus(docs)
-
-
-@query(
-    "c02_near_dedup_exactpairs",
-    oracle=_CLOSURE_CTE
-    + """
-    , clusters AS (
-      SELECT node AS doc_id, MIN(label) AS cluster_id FROM reach GROUP BY node
-    )
-    SELECT d.doc_id, d.source, d.n_chars
-    FROM documents d LEFT JOIN clusters c ON d.doc_id = c.doc_id
-    WHERE c.doc_id IS NULL OR c.cluster_id = d.doc_id
-    """,
-    driver=False,
-)
-def c02_near_dedup_exactpairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C2g-diagnostic: the r12 headline composition — near-dup corpus with
-    the pair stage on the UNPRUNED exact index join (no dedup-first, no
-    df cap). Kept registered and oracle-backed as ground truth for the
-    pruned composition's quality tests and as a named bench diagnostic
-    (like c02_minhash_lsh), NOT as the production path: its Σ df² join
-    cost is unbounded under stop-shingle skew (dedup.py:223,
-    tests/test_scale_stress.py)."""
-    docs = load(spark, sf_dir, "documents")
-    clusters = dedup_clusters(
-        ngram_jaccard_pairs(docs, threshold=_JACCARD_THRESHOLD)
-    )
-    drops = clusters.filter(F.col("doc_id") != F.col("cluster_id")).select(
-        "doc_id"
-    )
-    return docs.join(drops, "doc_id", "left_anti").select(
-        "doc_id", "source", "n_chars"
-    )
 
 
 def _banded_closure_oracle() -> str:
@@ -1547,27 +1394,8 @@ def _banded_closure_oracle() -> str:
     numeric 128-bit min), bucket-collision candidates, exact-Jaccard
     verify over the survivors' shingle sets, transitive closure, keeper
     anti-join."""
-    mh_aggs = ",\n      ".join(
-        f"MIN(md5('mh{i}:' || shingle)) AS mh{i}" for i in range(_MP_K)
-    )
-    bucket_select = " UNION ALL ".join(
-        f"SELECT doc_id, {band} AS band, md5(concat_ws('|', "
-        + ",".join(f"mh{band * _MP_ROWS + r}" for r in range(_MP_ROWS))
-        + ")) AS bucket FROM sig"
-        for band in range(_MP_BANDS)
-    )
     return f"""
-    WITH RECURSIVE surv AS (
-      SELECT doc_id, source, n_chars, text FROM (
-        SELECT doc_id, source, n_chars, text,
-               ROW_NUMBER() OVER (
-                 PARTITION BY
-                   md5(lower(regexp_replace(trim(text), '\\s+', ' ', 'g')))
-                 ORDER BY doc_id
-               ) AS rn
-        FROM documents
-      ) WHERE rn = 1
-    ),
+    WITH RECURSIVE {_SURV_SQL},
     shn AS (
       SELECT doc_id,
              {sql_word_shingles(sql_tokens('text'), _SHINGLE_K)} AS shingles
@@ -1576,17 +1404,7 @@ def _banded_closure_oracle() -> str:
     sh AS (
       SELECT doc_id, s.shingle FROM shn, UNNEST(shingles) AS s(shingle)
     ),
-    sig AS (
-      SELECT doc_id,
-      {mh_aggs}
-      FROM sh GROUP BY doc_id
-    ),
-    buckets AS ({bucket_select}),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM buckets a JOIN buckets b
-        ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-    ),
+    {_MD5_LSH_SQL},
     jc AS (
       SELECT cand.doc_a, cand.doc_b,
              len(list_intersect(sa.shingles, sb.shingles)) AS n_inter,
@@ -1601,23 +1419,8 @@ def _banded_closure_oracle() -> str:
       WHERE CAST(n_inter AS DOUBLE) / (na + nb - n_inter)
             >= {_JACCARD_THRESHOLD}
     ),
-    edges AS (
-      SELECT doc_a AS src, doc_b AS dst FROM pairs
-      UNION
-      SELECT doc_b AS src, doc_a AS dst FROM pairs
-    ),
-    reach(node, label) AS (
-      SELECT DISTINCT src AS node, src AS label FROM edges
-      UNION
-      SELECT e.src AS node, r.label AS label
-      FROM edges e JOIN reach r ON r.node = e.dst
-    ),
-    clusters AS (
-      SELECT node AS doc_id, MIN(label) AS cluster_id FROM reach GROUP BY node
-    )
-    SELECT d.doc_id, d.source, d.n_chars
-    FROM surv d LEFT JOIN clusters c ON d.doc_id = c.doc_id
-    WHERE c.doc_id IS NULL OR c.cluster_id = d.doc_id
+    {_CLOSURE_SQL},
+    {_KEEPERS_SQL}
     """
 
 
@@ -1634,10 +1437,10 @@ def near_dedup_corpus_banded(
     Scale rationale: the exact pair stage's cost is Σ_shingle min(df,
     cap)², which grows with vocabulary; banding's candidate mass is
     Σ_bucket C(|bucket|, 2), which after exact-dedup-first is driven by
-    the TRUE near-dup rate, not the vocabulary — the composition the
-    uncapped c02_minhash_lsh diagnostic proves quadratic on RAW
-    dup-heavy corpora becomes bounded once exact copies are collapsed
-    first (the r11 law, tests/test_scalegen_recipe.py). Recall < 1 by
+    the TRUE near-dup rate, not the vocabulary — uncapped banding,
+    quadratic on RAW dup-heavy corpora, becomes bounded once exact
+    copies are collapsed first (the r11 law,
+    tests/test_scalegen_recipe.py). Recall < 1 by
     construction (a missed band is a missed pair): this is a DIFFERENT
     declared contract, shipped as its own named query beside the exact
     composition — never a silent replacement. Precision IS 1: every
@@ -1657,42 +1460,8 @@ def _banded_pairs(survivors: DataFrame, *, threshold: float) -> DataFrame:
     MinHash band collisions as candidates, then exact Jaccard on the
     stored ``_shingles`` arrays. Returns ``(doc_a, doc_b)`` with
     ``doc_a < doc_b``."""
-    sh = survivors.select("doc_id", F.explode("_shingles").alias("shingle"))
-    aggs = [
-        F.min(
-            F.md5(F.concat(F.lit(f"mh{i}:"), F.col("shingle")))
-        ).alias(f"mh{i}")
-        for i in range(_MP_K)
-    ]
-    sig = sh.groupBy("doc_id").agg(*aggs)
-    band_hashes = F.array(
-        *[
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    *[f"mh{band * _MP_ROWS + r}" for r in range(_MP_ROWS)],
-                )
-            )
-            for band in range(_MP_BANDS)
-        ]
-    )
-    buckets = sig.select(
-        "doc_id", F.posexplode(band_hashes).alias("band", "bucket")
-    )
-    a = buckets.alias("a")
-    b = buckets.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .distinct()
+    buckets = _md5_lsh_buckets(
+        survivors.select("doc_id", F.explode("_shingles").alias("shingle"))
     )
     sa = survivors.select(
         F.col("doc_id").alias("doc_a"), F.col("_shingles").alias("_sa")
@@ -1700,14 +1469,11 @@ def _banded_pairs(survivors: DataFrame, *, threshold: float) -> DataFrame:
     sb = survivors.select(
         F.col("doc_id").alias("doc_b"), F.col("_shingles").alias("_sb")
     )
-    n_inter = F.size(F.array_intersect("_sa", "_sb"))
-    jac = n_inter.cast("double") / (
-        F.size("_sa") + F.size("_sb") - n_inter
-    )
     return (
-        cand.join(sa, "doc_a")
+        _band_candidates(buckets)
+        .join(sa, "doc_a")
         .join(sb, "doc_b")
-        .filter(jac >= threshold)
+        .filter(_set_jaccard("_sa", "_sb") >= threshold)
         .select("doc_a", "doc_b")
     )
 
@@ -1840,43 +1606,6 @@ def c02_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     of 16-token windows whose content occurs more than once corpus-wide
     (window-hash formulation of suffix-array substring dedup)."""
     return duplicate_span_stats(load(spark, sf_dir, "documents"))
-
-
-# --------------------------------------------------------------------------
-# LSH banding calculator — pick (bands, rows) for a target threshold
-# --------------------------------------------------------------------------
-def lsh_tuning(
-    threshold: float, k: int = 32
-) -> "tuple[int, int, float]":
-    """Choose the (bands, rows) factorization of a ``k``-permutation
-    MinHash signature whose S-curve threshold best matches ``threshold``.
-
-    The probability two docs with Jaccard ``s`` share at least one band
-    bucket is ``1 - (1 - s^r)^b``; its inflection sits near
-    ``(1/b)^(1/r)``. Scanning the divisor pairs of ``k`` and minimizing
-    the distance of that inflection to the target keeps candidate
-    generation aligned with the verification threshold — bands too wide
-    flood the verifier with false candidates, too narrow and recall
-    collapses BEFORE verification can save it (verification only ever
-    removes pairs). Returns ``(bands, rows, inflection)``.
-
-    Driver-side arithmetic over ≤ a few dozen divisor pairs — use it to
-    parameterize :func:`minhash_lsh_pairs` / :func:`lsh_bucket_index`
-    when the dedup threshold changes, instead of hand-tuning.
-    """
-    if not 0.0 < threshold < 1.0:
-        raise ValueError("threshold must be in (0, 1)")
-    best = None
-    for rows in range(1, k + 1):
-        if k % rows:
-            continue
-        bands = k // rows
-        inflection = (1.0 / bands) ** (1.0 / rows)
-        score = abs(inflection - threshold)
-        if best is None or score < best[3]:
-            best = (bands, rows, inflection, score)
-    bands, rows, inflection, _ = best
-    return bands, rows, inflection
 
 
 # --------------------------------------------------------------------------

@@ -1163,7 +1163,7 @@ def c03_semdedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     smaller-id neighbor at cos ≥ threshold, across the whole corpus (no
     cells). O(n²) pair space: this is the oracle-checkable twin that
     measures the celled path's recall, exactly the c02_ngram_jaccard ↔
-    c02_minhash_lsh relationship for vectors. The pair generation reuses
+    minhash_lsh_pairs relationship for vectors. The pair generation reuses
     the broadcast upper-triangle join of c03_embedding_near_dup."""
     emb = load(spark, sf_dir, "embeddings")
     a = rebalance(emb).select(

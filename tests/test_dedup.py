@@ -73,8 +73,8 @@ def test_minhash_recall_vs_exact(spark, doc_df):
 
 
 def test_minhash_signatures_deterministic(spark, doc_df):
-    a = {tuple(r) for r in minhash_signatures(doc_df, k=8).collect()}
-    b = {tuple(r) for r in minhash_signatures(doc_df, k=8).collect()}
+    a = {tuple(r) for r in minhash_signatures(doc_df).collect()}
+    b = {tuple(r) for r in minhash_signatures(doc_df).collect()}
     assert a == b
 
 
@@ -84,7 +84,7 @@ def test_simhash_identical_docs_distance_zero(spark):
          (1, "the quick brown fox jumps over the lazy dog")],
         "doc_id long, text string",
     )
-    sigs = {r.doc_id: (r.sim_lo, r.sim_hi) for r in simhash_signatures(df).collect()}
+    sigs = {r.doc_id: (r.sig_lo, r.sig_hi) for r in simhash_signatures(df).collect()}
     assert sigs[0] == sigs[1]
     pairs = simhash_pairs(df, max_hamming=0).collect()
     assert [(p.doc_a, p.doc_b, p.hamming) for p in pairs] == [(0, 1, 0)]
@@ -334,6 +334,41 @@ def test_dedup_clusters_random_graph_matches_union_find(spark):
     assert got == want
 
 
+def test_dedup_clusters_broadcast_gate_counts_nodes(spark, monkeypatch):
+    """The per-round broadcast is gated on the NODE count (the build
+    sides are node tables), observed on round 1's checkpoint: a 20-node
+    clique has 380 directed edges, so a cap of 100 admits it by nodes
+    even though an edge-count gate would refuse it. Round 1 broadcasts
+    nothing; round 2 hints all three node-table joins. A cap under the
+    node count hints none, and both branches give the same clusters."""
+    from stock_data_pipeline_spark.operators import dedup
+
+    real = dedup.F.broadcast
+    calls = []
+
+    def counting_broadcast(df):
+        calls.append(df)
+        return real(df)
+
+    monkeypatch.setattr(dedup.F, "broadcast", counting_broadcast)
+    pairs = spark.createDataFrame(
+        [(a, b) for a in range(20) for b in range(a + 1, 20)],
+        "doc_a long, doc_b long",
+    )
+    conf = "spark.spark_graft.dedupclusters.broadcastMaxNodes"
+    try:
+        spark.conf.set(conf, "100")
+        hinted = {r.doc_id: r.cluster_id for r in dedup.dedup_clusters(pairs).collect()}
+        assert len(calls) == 3  # round 2: labels, neighbor mins, parents
+        calls.clear()
+        spark.conf.set(conf, "19")
+        plain = {r.doc_id: r.cluster_id for r in dedup.dedup_clusters(pairs).collect()}
+        assert calls == []
+    finally:
+        spark.conf.unset(conf)
+    assert hinted == plain == {n: 0 for n in range(20)}
+
+
 def test_duplicate_spans_planted_and_clean(spark):
     from stock_data_pipeline_spark.operators.dedup import duplicate_span_stats
 
@@ -416,30 +451,6 @@ def test_incremental_lsh_probe_equals_full_recompute(spark, doc_df):
     # the appended index rows cover exactly the new docs
     new_ids = {r.doc_id for r in new_buckets.select("doc_id").distinct().collect()}
     assert new_ids == {r.doc_id for r in batch2.select("doc_id").collect()}
-
-
-def test_lsh_tuning_matches_thresholds():
-    """The chosen banding's S-curve inflection must track the requested
-    threshold monotonically, and the (8, 4) default must be what the
-    calculator picks near the engine's 0.1-0.2 operating range."""
-    import pytest
-
-    from stock_data_pipeline_spark.operators.dedup import lsh_tuning
-
-    b_lo, r_lo, t_lo = lsh_tuning(0.15)
-    assert (b_lo, r_lo) == (8, 4) or t_lo == pytest.approx(0.15, abs=0.25)
-    # higher target threshold -> fewer/wider bands (higher inflection)
-    prev = 0.0
-    for target in (0.1, 0.3, 0.5, 0.7, 0.9):
-        _, _, infl = lsh_tuning(target)
-        assert infl >= prev - 1e-9
-        prev = infl
-    # factorization is always exact
-    for target in (0.05, 0.33, 0.62, 0.95):
-        bands, rows, _ = lsh_tuning(target)
-        assert bands * rows == 32
-    with pytest.raises(ValueError):
-        lsh_tuning(0.0)
 
 
 # --------------------------------------------------------------------------
@@ -527,62 +538,24 @@ def test_sharded_bloom_no_false_negatives_and_bounded_fp(spark):
     assert got == 0
 
 
-def test_simhash_portable_agrees_with_xxhash_variant_on_planted(spark, doc_df):
-    """The portable (md5-bit, oracle-backed) and production (xxhash64)
-    SimHash variants implement the same algorithm over different hash
-    families — both must land the planted 2-word-substitution near-dups
-    within the same radius, and identical docs at distance zero."""
-    from stock_data_pipeline_spark.operators.dedup import simhash_portable_pairs
-
-    pairs = {
-        (r.doc_a, r.doc_b): r.hamming
-        for r in simhash_portable_pairs(doc_df, max_hamming=10).collect()
-    }
-    found = sum(1 for i in range(8) if (i, 100 + i) in pairs)
-    assert found >= 6, f"only {found}/8 planted pairs within radius"
-
-    dup = spark.createDataFrame(
-        [(0, "the quick brown fox jumps over the lazy dog"),
-         (1, "the quick brown fox jumps over the lazy dog")],
-        "doc_id long, text string",
-    )
-    got = simhash_portable_pairs(dup, max_hamming=0).collect()
-    assert [(p.doc_a, p.doc_b, p.hamming) for p in got] == [(0, 1, 0)]
-
-
 def test_minhash_portable_agrees_with_xxhash_variant_on_planted(spark, doc_df):
     """Both MinHash hash families run the same banded-LSH algorithm and
     the same exact-Jaccard verify, so on the planted 2-word-substitution
     near-dups (Jaccard far above threshold, every band likely to
     collide) they must land essentially the same verified pairs."""
     from stock_data_pipeline_spark.operators.dedup import (
-        c02_minhash_portable,
-        minhash_lsh_pairs,
+        _band_candidates,
+        _md5_lsh_buckets,
+        _shingle_rows,
+        verify_jaccard_pairs,
     )
 
     prod = {
         (r.doc_a, r.doc_b)
         for r in minhash_lsh_pairs(doc_df, threshold=0.5).collect()
     }
-    # portable twin over the same frame: reuse its building blocks
-    from stock_data_pipeline_spark.operators.dedup import (
-        minhash_portable_buckets,
-        verify_jaccard_pairs,
-    )
-    from pyspark.sql import functions as F
-
-    buckets = minhash_portable_buckets(doc_df)
-    a, b = buckets.alias("a"), buckets.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    # c02_minhash_portable's stages over the same frame
+    cand = _band_candidates(_md5_lsh_buckets(_shingle_rows(doc_df)))
     port = {
         (r.doc_a, r.doc_b)
         for r in verify_jaccard_pairs(cand, doc_df, threshold=0.5).collect()

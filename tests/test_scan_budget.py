@@ -34,12 +34,10 @@ ALLOWED_MULTI_SCAN = {
     "b30_range_join": "clicks and purchases are two logical relations stored in one table (filter-pruned scans)",
     "b71_q17_small_quantity": "per-part AVG threshold: 2 pruned scans beat a full fact shuffle (the window form would sort the raw facts)",
     "b73_q21_waiting_supplier": "EXISTS + NOT EXISTS genuinely probe lineitem as separate relations (every engine's Q21 does)",
-    "c02_minhash_lsh": "candidate self-join: both sides of the band-bucket join are the corpus (persisted-index path avoids it in production)",
-    "c02_minhash_portable": "band-bucket self-join + Jaccard verify re-reads (md5 oracle twin of c02_minhash_lsh, same shape)",
+    "c02_minhash_portable": "band-bucket self-join + Jaccard verify re-reads of the candidate texts (the persisted lsh_bucket_index path avoids it in production)",
     "c02_ngram_jaccard": "inverted-index self-join (ground-truth variant)",
     "c02_ngram_jaccard_pruned": "pruned inverted-index self-join + df-statistics pass",
-    "c02_simhash": "signature self-join across chunk blocks",
-    "c02_simhash_portable": "signature self-join across chunk blocks (md5-bit oracle twin, same shape)",
+    "c02_simhash_portable": "signature self-join across chunk blocks",
     "c02_substring_dedup": "span-hash inverted-index self-join",
     "c03_ann_ivf": "index build + probe in one query (persisted-index path save_ivf_index avoids it)",
     "c03_ivf_fixed_centroids": "assignment + probe + rerank in one query (oracle twin of c03_ann_ivf, same inline-index shape)",

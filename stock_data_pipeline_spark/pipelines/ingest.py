@@ -42,7 +42,6 @@ class PipelineSpec:
     fields: tuple[str, ...]        # measure columns after (Time, Ticker)
     cadence: str                   # Structured Streaming trigger interval
     news_shaped: bool = False      # 1:N headline fetch vs 1:1 quote fetch
-    num_fetch_partitions: int = 8  # replaces the reference's 5-shard fan-out
 
 
 # The four reference pipelines (cadences from SURVEY.md §1.1).
@@ -115,19 +114,10 @@ class IngestPipeline:
         """One micro-batch: fetch universe → split → enforce → append."""
         tickers = seed_table(spark, self.symbols)
         if self.spec.news_shaped:
-            fetched = fetch_mod.fetch_news_batch(
-                tickers,
-                self.fetcher,
-                batch_time,
-                num_partitions=self.spec.num_fetch_partitions,
-            )
+            fetched = fetch_mod.fetch_news_batch(tickers, self.fetcher, batch_time)
         else:
             fetched = fetch_mod.fetch_batch(
-                tickers,
-                self.fetcher,
-                self.spec.fields,
-                batch_time,
-                num_partitions=self.spec.num_fetch_partitions,
+                tickers, self.fetcher, self.spec.fields, batch_time
             )
 
         import uuid

@@ -3,9 +3,11 @@
 The reference loops ``yf.Ticker(sym).info`` sequentially inside each of 5
 manually-sharded Airflow tasks (/root/reference/dags/stock_data_to_gcp.py:42-50).
 Spark-first shape: the ticker universe is a DataFrame; the per-key HTTP/
-scrape call runs inside ``mapInPandas`` partitions, so parallelism is the
-task scheduler's job (repartition controls fan-out; at 500 keys this is
-trivia, at 5M keys it's the same code).
+scrape call runs inside ``mapInPandas`` over the ticker frame's own
+partitions, so parallelism is the task scheduler's job: a seed frame from
+``seed_table`` has one partition per task slot, hence one fetch task per
+slot with no shuffle before it (at 500 keys this is trivia, at 5M keys
+it's the same code).
 
 Error tolerance (A6): the reference's bare ``except: continue`` silently
 drops rows. Here a failed fetch yields a row with ``fetch_error`` set and
@@ -25,7 +27,6 @@ from datetime import datetime
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 # A fetcher maps (symbol, batch_time) -> {field: float | None}; raising
 # marks the whole row failed (quarantined), mirroring the reference's
@@ -74,18 +75,19 @@ def fetch_batch(
     fetcher: RowFetcher,
     fields: tuple[str, ...],
     batch_time: datetime,
-    *,
-    num_partitions: int | None = None,
 ) -> DataFrame:
-    """Run the fetcher across executor partitions via mapInPandas.
+    """Run the fetcher across the partitions of ``tickers`` via mapInPandas.
 
     Output schema: Time, Ticker, <fields...>, fetch_error. One row per
     input symbol — failures carry the error message instead of measures.
 
-    Scale: ``repartition(n)`` replaces the reference's manual 5-shard
-    fan-out (A4); each partition holds one long-lived fetch context (e.g.
-    an HTTP session or headless browser for the A13 news scraper) across
-    its Arrow batches.
+    Scale: the partitions of ``tickers`` replace the reference's manual
+    5-shard fan-out (A4), so the fan-out is set where the frame is built
+    (``seed_table``: one partition per task slot). Each partition holds
+    one long-lived fetch context (e.g. an HTTP session or headless
+    browser for the A13 news scraper) across its Arrow batches, and every
+    Python task pays a fixed worker setup, so more partitions than slots
+    only add setup.
     """
     field_cols = ", ".join(f"`{f}` double" for f in fields)
     out_schema = f"Time timestamp_ntz, Ticker string, {field_cols}, fetch_error string"
@@ -118,8 +120,7 @@ def fetch_batch(
                     )
             yield pd.DataFrame(rows)
 
-    src = tickers.repartition(num_partitions) if num_partitions else tickers
-    return src.mapInPandas(run, out_schema)
+    return tickers.mapInPandas(run, out_schema)
 
 
 def synthetic_news_fetcher(
@@ -160,8 +161,6 @@ def fetch_news_batch(
     tickers: DataFrame,
     fetcher: Callable[[str, datetime], list[dict]],
     batch_time: datetime,
-    *,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """News variant of :func:`fetch_batch`: one row per headline (1:N)."""
     out_schema = (
@@ -197,5 +196,4 @@ def fetch_news_batch(
                     )
             yield pd.DataFrame(rows)
 
-    src = tickers.repartition(num_partitions) if num_partitions else tickers
-    return src.mapInPandas(run, out_schema)
+    return tickers.mapInPandas(run, out_schema)

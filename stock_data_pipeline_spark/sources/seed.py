@@ -40,7 +40,14 @@ def synthetic_universe(n: int = 500) -> list[str]:
 def seed_table(
     spark: SparkSession, symbols: list[str] | None = None
 ) -> DataFrame:
-    """Seed DataFrame of tickers with the bad-symbol filter applied (A2+A3)."""
+    """Seed DataFrame of tickers with the bad-symbol filter applied (A2+A3).
+
+    Its partitions set the fetch fan-out (sources/fetch.py):
+    ``createDataFrame`` parallelizes the list into
+    ``sparkContext.defaultParallelism`` slices, so a batch runs one fetch
+    task per task slot, and slices left empty (fewer symbols than slots)
+    run no fetch and write no file.
+    """
     from pyspark.sql import functions as F
 
     symbols = symbols if symbols is not None else synthetic_universe()

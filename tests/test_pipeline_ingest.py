@@ -60,6 +60,28 @@ def test_batch_metrics_and_quarantine(spark, pipeline):
     assert all("ConnectionError" in r.fetch_error for r in rows)
 
 
+def test_fetch_fans_out_one_task_per_slot(spark, tmp_path):
+    """A clean batch writes one ok file per fetch task, and fetch runs on
+    the seed frame's own partitions: one per task slot, capped by the
+    symbol count. A fixed ``repartition(8)`` before the fetch wrote 8
+    files here, so this fails on every session but an 8-slot one."""
+    import glob
+    import os
+
+    p = IngestPipeline(
+        TICKER_SPEC,
+        str(tmp_path),
+        fetcher=synthetic_quote_fetcher(TICKER_SPEC.fields),
+        symbols=SYMBOLS[:40],  # no bad tickers: no slice filters to empty
+    )
+    metrics = p.run_batch(spark, T0)
+    assert (metrics.n_ok, metrics.n_quarantined) == (40, 0)
+    day_dir = f"{p.sink_path}/ingest_date={T0.date().isoformat()}"
+    files = glob.glob(f"{day_dir}/*.parquet")
+    assert len(files) == min(40, spark.sparkContext.defaultParallelism)
+    assert not os.path.exists(p.quarantine_path)
+
+
 def test_sink_schema_matches_reference_declaration(spark, pipeline):
     pipeline.run_batch(spark, T0)
     got = pipeline.read_sink(spark).schema

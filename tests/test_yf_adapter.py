@@ -122,28 +122,38 @@ def test_live_transport_is_import_gated():
         assert callable(live_yfinance_transport())
 
 
-def test_live_single_ticker_fetch_opt_in(request, spark):
-    """Opt-in live smoke (`pytest --live`): ONE ticker through the full
-    adapter path — live transport -> yfinance_fetcher -> fetch_batch —
+@pytest.mark.parametrize("transport", ["recorded", "live"])
+def test_live_single_ticker_fetch_opt_in(request, spark, transport):
+    """ONE ticker through the direct adapter path — transport ->
+    yfinance_fetcher -> fetch_batch over a ``seed_table`` frame —
     asserting a priced row or an explicit quarantine row (a dead market
-    feed must not look like silent success). CI-default: skipped, and
+    feed must not look like silent success). The recorded transport
+    always runs; the live one is an opt-in smoke (`pytest --live`), and
     the import gate's actionable message is covered by
     test_live_transport_is_import_gated."""
-    if not request.config.getoption("--live"):
-        pytest.skip("live transport smoke runs only with --live")
     from stock_data_pipeline_spark.sources.fetch import fetch_batch
+    from stock_data_pipeline_spark.sources.seed import seed_table
     from stock_data_pipeline_spark.sources.yf_adapter import (
         live_yfinance_transport,
-        yfinance_fetcher,
     )
 
-    fetcher = yfinance_fetcher("ticker_data", live_yfinance_transport())
-    tickers = spark.createDataFrame([("AAPL",)], "Ticker string")
+    if transport == "live":
+        if not request.config.getoption("--live"):
+            pytest.skip("live transport smoke runs only with --live")
+        fetcher = yfinance_fetcher("ticker_data", live_yfinance_transport())
+    else:
+        fetcher = yfinance_fetcher("ticker_data", recorded_transport(PAGES))
     rows = fetch_batch(
-        tickers, fetcher, ("Price", "Volume"), datetime(2024, 1, 2, 9, 30)
+        seed_table(spark, ["AAPL"]),
+        fetcher,
+        TICKER_SPEC.fields,
+        datetime(2024, 1, 2, 9, 30),
     ).collect()
     assert len(rows) == 1
     r = rows[0]
+    assert r.Ticker == "AAPL"
     assert (r.fetch_error is None and r.Price is not None) or (
         r.fetch_error is not None
     )
+    if transport == "recorded":
+        assert r.fetch_error is None and r.Price == pytest.approx(231.44)

@@ -36,8 +36,8 @@ def parse_news_dom(html_col: Column | str) -> Column:
     ``array<struct<href,title>>`` — the declarative, JVM-side twin of the
     reference's XPath headline scrape (news_data_to_gcp.py:54-59; A13).
 
-    The Python fetcher path (sources/fetch.py::fetch_news_batch) exists
-    for ragged real-world HTML; THIS path is what runs when the landing
+    The Python fetcher path (sources/fetch.py::fetch_batch with a
+    headline fetcher) exists for ragged real-world HTML; THIS path is what runs when the landing
     zone stores raw snippets and extraction should stay inside
     whole-stage codegen: ``from_xml`` (Spark 4) parses once per row, the
     accessor projects typed fields, and a later ``explode`` fans out to

@@ -25,6 +25,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from datetime import datetime
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -36,40 +37,38 @@ from ..sources.seed import seed_table
 
 @dataclass(frozen=True)
 class PipelineSpec:
-    """Everything that distinguishes the reference's four DAGs."""
+    """Everything that distinguishes the reference's four DAGs. The
+    columns are declared once, in ``schemas.SINK_SCHEMAS[name]``; the rest
+    derives from that."""
 
     name: str                      # sink table name
-    fields: tuple[str, ...]        # measure columns after (Time, Ticker)
     cadence: str                   # Structured Streaming trigger interval
-    news_shaped: bool = False      # 1:N headline fetch vs 1:1 quote fetch
+
+    @property
+    def schema(self) -> T.StructType:
+        return schemas.SINK_SCHEMAS[self.name]
+
+    @property
+    def fields(self) -> tuple[str, ...]:
+        """The columns a fetcher fills."""
+        return fetch_mod.fetched_columns(self.schema)
+
+    @property
+    def news_shaped(self) -> bool:
+        """1:N headline fetch vs 1:1 quote fetch."""
+        return "Title" in self.schema.names
+
+    @property
+    def key(self) -> list[str]:
+        """Natural dedup key: collection time and ticker (+ headline)."""
+        return [self.schema.names[0], "Ticker"] + (["Title"] if self.news_shaped else [])
 
 
 # The four reference pipelines (cadences from SURVEY.md §1.1).
-TICKER_SPEC = PipelineSpec("ticker_data", ("Price", "Volume"), "120 seconds")
-RATIO_SPEC = PipelineSpec(
-    "fin_ratio_data",
-    ("QuickRatio", "CurrentRatio", "ROA", "ROE", "DebttoEquity", "FCF"),
-    "1 hour",
-)
-STATEMENT_SPEC = PipelineSpec(
-    "fin_stm_data",
-    (
-        "DividendYield",
-        "TotalCash",
-        "TotalDebt",
-        "TotalRevenue",
-        "RevPerShare",
-        "GrossProfits",
-        "OCF",
-    ),
-    "1 hour",
-)
-NEWS_SPEC = PipelineSpec(
-    "news_data",
-    ("Price", "Volume"),
-    "2 hours",
-    news_shaped=True,
-)
+TICKER_SPEC = PipelineSpec("ticker_data", "120 seconds")
+RATIO_SPEC = PipelineSpec("fin_ratio_data", "1 hour")
+STATEMENT_SPEC = PipelineSpec("fin_stm_data", "1 hour")
+NEWS_SPEC = PipelineSpec("news_data", "2 hours")
 
 
 @dataclass
@@ -109,16 +108,17 @@ class IngestPipeline:
     def quarantine_path(self) -> str:
         return f"{self.sink_root}/{self.spec.name}_quarantine"
 
+    def _dated(self, df: DataFrame) -> DataFrame:
+        """``df`` plus the ``ingest_date`` partition column."""
+        return df.withColumn("ingest_date", F.to_date(F.col(self.spec.schema.names[0])))
+
     # -- batch run --------------------------------------------------------
     def run_batch(self, spark: SparkSession, batch_time: datetime) -> BatchMetrics:
         """One micro-batch: fetch universe → split → enforce → append."""
-        tickers = seed_table(spark, self.symbols)
-        if self.spec.news_shaped:
-            fetched = fetch_mod.fetch_news_batch(tickers, self.fetcher, batch_time)
-        else:
-            fetched = fetch_mod.fetch_batch(
-                tickers, self.fetcher, self.spec.fields, batch_time
-            )
+        schema = self.spec.schema
+        fetched = fetch_mod.fetch_batch(
+            seed_table(spark, self.symbols), self.fetcher, schema, batch_time
+        )
 
         import uuid
 
@@ -145,12 +145,8 @@ class IngestPipeline:
             )
             bad = fetched.filter(F.col("fetch_error").isNotNull())
 
-            sink_schema = schemas.SINK_SCHEMAS[self.spec.name]
-            enforced = enforce_schema(ok, sink_schema)
-            time_col = sink_schema.fields[0].name
-
             (
-                enforced.withColumn("ingest_date", F.to_date(F.col(time_col)))
+                self._dated(enforce_schema(ok, schema))
                 .write.mode("append")
                 .partitionBy("ingest_date")
                 .parquet(self.sink_path)
@@ -211,11 +207,29 @@ class IngestPipeline:
         raise last
 
     # -- reads ------------------------------------------------------------
+    def _scan_sink(self, spark: SparkSession) -> DataFrame:
+        """The sink's files read with the declared schema: no
+        schema-inference job, and a sink whose batches all failed (no
+        data files yet) reads as empty instead of failing to infer."""
+        schema = T.StructType(
+            [*self.spec.schema.fields, T.StructField("ingest_date", T.DateType(), True)]
+        )
+        return spark.read.schema(schema).parquet(self.sink_path)
+
     def read_sink(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.sink_path).drop("ingest_date")
+        return self._scan_sink(spark).drop("ingest_date")
 
     def read_quarantine(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.quarantine_path)
+        """Failed rows: the sink columns plus ``fetch_error``. A pipeline
+        whose batches were all clean never writes the quarantine, so a
+        missing directory reads as empty."""
+        schema = fetch_mod.with_fetch_error(self.spec.schema)
+        try:
+            return spark.read.schema(schema).parquet(self.quarantine_path)
+        except AnalysisException as exc:
+            if exc.getCondition() != "PATH_NOT_FOUND":
+                raise
+            return spark.createDataFrame([], schema)
 
     def read_quarantine_deduped(self, spark: SparkSession) -> DataFrame:
         """Retry-repaired quarantine view: like the sink, the quarantine
@@ -223,21 +237,13 @@ class IngestPipeline:
         write and was retried appends its failed rows twice — alerting
         built on raw counts would double-fire. Same natural-key dedup as
         ``read_sink_deduped``."""
-        time_col = schemas.SINK_SCHEMAS[self.spec.name].fields[0].name
-        keys = [time_col, "Ticker"]
-        if self.spec.news_shaped:
-            keys.append("Title")
-        return self.read_quarantine(spark).dropDuplicates(keys)
+        return self.read_quarantine(spark).dropDuplicates(self.spec.key)
 
     def read_sink_deduped(self, spark: SparkSession) -> DataFrame:
         """Rerun-repair view (B11): retried batches may double-append
         (the reference's WRITE_APPEND + retries=2,
         stock_data_to_gcp.py:82,134); the natural key wins."""
-        time_col = schemas.SINK_SCHEMAS[self.spec.name].fields[0].name
-        keys = [time_col, "Ticker"]
-        if self.spec.news_shaped:
-            keys.append("Title")
-        return self.read_sink(spark).dropDuplicates(keys)
+        return self.read_sink(spark).dropDuplicates(self.spec.key)
 
     def read_sink_day(self, spark: SparkSession, day: str) -> DataFrame:
         """Partition-pruned single-day read.
@@ -250,7 +256,7 @@ class IngestPipeline:
         the table; the reference gets the same effect only by paying
         BigQuery to scan-filter server-side.
         """
-        return spark.read.parquet(self.sink_path).filter(
+        return self._scan_sink(spark).filter(
             F.col("ingest_date") == F.lit(day).cast("date")
         )
 
@@ -266,17 +272,15 @@ class IngestPipeline:
         conf is set per-write via ``.option`` so the session default stays
         untouched.
         """
-        time_col = schemas.SINK_SCHEMAS[self.spec.name].fields[0].name
         # accept sink-derived frames directly: read_sink_day keeps the
         # ingest_date partition column, which is recomputed below anyway
         # — without this drop the documented read->fix->write repair flow
         # fails schema enforcement on an 'extra' column
         if "ingest_date" in df.columns:
             df = df.drop("ingest_date")
-        enforced = enforce_schema(df, schemas.SINK_SCHEMAS[self.spec.name])
-        day_df = enforced.withColumn(
-            "ingest_date", F.to_date(F.col(time_col))
-        ).filter(F.col("ingest_date") == F.lit(day).cast("date"))
+        day_df = self._dated(enforce_schema(df, self.spec.schema)).filter(
+            F.col("ingest_date") == F.lit(day).cast("date")
+        )
         # The repair frame usually DERIVES from this sink (read → fix →
         # write back). Lazy execution would then stream the overwrite from
         # the very files it is deleting — FILE_NOT_EXIST mid-job. Cut the
@@ -291,7 +295,7 @@ class IngestPipeline:
             raise ValueError(
                 f"backfill_day({day!r}): repair frame contains no rows for "
                 f"that day — nothing would be overwritten; check the "
-                f"{time_col} values (day-wipes need an explicit delete, "
+                f"{self.spec.schema.names[0]} values (day-wipes need an explicit delete, "
                 f"not an empty overwrite)"
             )
         (

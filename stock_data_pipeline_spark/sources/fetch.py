@@ -9,6 +9,11 @@ partitions, so parallelism is the task scheduler's job: a seed frame from
 slot with no shuffle before it (at 500 keys this is trivia, at 5M keys
 it's the same code).
 
+One entry point serves every table: :func:`fetch_batch` takes the sink
+schema (``schemas.SINK_SCHEMAS``), stamps the collection time and ticker
+itself, and leaves the row shape to the fetcher — one row per symbol for
+quotes, one per headline for news.
+
 Error tolerance (A6): the reference's bare ``except: continue`` silently
 drops rows. Here a failed fetch yields a row with ``fetch_error`` set and
 null measures; the pipeline splits that into an observable quarantine
@@ -27,11 +32,27 @@ from datetime import datetime
 import pandas as pd
 
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
-# A fetcher maps (symbol, batch_time) -> {field: float | None}; raising
-# marks the whole row failed (quarantined), mirroring the reference's
-# per-ticker try/except granularity.
-RowFetcher = Callable[[str, datetime], dict[str, float | None]]
+# A fetcher maps (symbol, batch_time) -> a list of rows, each a dict over
+# the columns it fills (:func:`fetched_columns`): one row per quote, one
+# per headline for news (1:N). Raising marks the symbol failed
+# (quarantined), mirroring the reference's per-ticker try/except
+# granularity.
+RowFetcher = Callable[[str, datetime], list[dict[str, object]]]
+
+
+def fetched_columns(schema: T.StructType) -> tuple[str, ...]:
+    """The sink columns a fetcher fills: all but the leading collection
+    time and ``Ticker``, which :func:`fetch_batch` sets itself."""
+    return tuple(n for n in schema.names[1:] if n != "Ticker")
+
+
+def with_fetch_error(schema: T.StructType) -> T.StructType:
+    """``schema`` plus a nullable ``fetch_error`` string: the shape of a
+    fetched batch and of the quarantine. Builds a new field list: the
+    sink schemas are shared, and ``StructType.add`` would append to them."""
+    return T.StructType([*schema.fields, T.StructField("fetch_error", T.StringType(), True)])
 
 
 def _stable_unit(symbol: str, field: str, batch_time: datetime, salt: str = "") -> float:
@@ -46,7 +67,7 @@ def synthetic_quote_fetcher(
     fail_symbols: frozenset[str] = frozenset(),
     null_field_rate: float = 0.02,
 ) -> RowFetcher:
-    """Deterministic stand-in for ``yf.Ticker(sym).info``.
+    """Deterministic stand-in for ``yf.Ticker(sym).info``: one row per symbol.
 
     Values are hash-derived (reproducible across runs/partitions);
     ``fail_symbols`` raise (→ quarantine), and ~``null_field_rate`` of
@@ -54,10 +75,10 @@ def synthetic_quote_fetcher(
     case, which is why every sink column is NULLABLE).
     """
 
-    def fetch(symbol: str, batch_time: datetime) -> dict[str, float | None]:
+    def fetch(symbol: str, batch_time: datetime) -> list[dict[str, object]]:
         if symbol in fail_symbols:
             raise ConnectionError(f"synthetic fetch failure for {symbol}")
-        out: dict[str, float | None] = {}
+        out: dict[str, object] = {}
         for field in fields:
             if _stable_unit(symbol, field, batch_time, "null") < null_field_rate:
                 out[field] = None
@@ -65,7 +86,7 @@ def synthetic_quote_fetcher(
                 out[field] = round(
                     _stable_unit(symbol, field, batch_time) * 1000, 4
                 )
-        return out
+        return [out]
 
     return fetch
 
@@ -73,13 +94,16 @@ def synthetic_quote_fetcher(
 def fetch_batch(
     tickers: DataFrame,
     fetcher: RowFetcher,
-    fields: tuple[str, ...],
+    schema: T.StructType,
     batch_time: datetime,
 ) -> DataFrame:
     """Run the fetcher across the partitions of ``tickers`` via mapInPandas.
 
-    Output schema: Time, Ticker, <fields...>, fetch_error. One row per
-    input symbol — failures carry the error message instead of measures.
+    Output schema: ``schema`` (a sink schema: collection time, ``Ticker``,
+    the fetched columns) plus ``fetch_error``. Every row the fetcher
+    returns for a symbol becomes one output row stamped with
+    ``batch_time`` and the symbol; a symbol whose fetch raises yields one
+    row carrying the error message instead of measures.
 
     Scale: the partitions of ``tickers`` replace the reference's manual
     5-shard fan-out (A4), so the fan-out is set where the frame is built
@@ -89,8 +113,13 @@ def fetch_batch(
     Python task pays a fixed worker setup, so more partitions than slots
     only add setup.
     """
-    field_cols = ", ".join(f"`{f}` double" for f in fields)
-    out_schema = f"Time timestamp_ntz, Ticker string, {field_cols}, fetch_error string"
+    out_schema = with_fetch_error(schema)
+    columns = out_schema.names
+    time_col = columns[0]
+    # every column a row leaves unset is None, not absent: pandas fills an
+    # absent one with float NaN, and Arrow will not cast an all-NaN double
+    # column to the timestamp or string a failed batch's columns declare
+    blank = dict.fromkeys(columns)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # Per-partition setup would go here (session/browser reuse — the
@@ -100,25 +129,21 @@ def fetch_batch(
             rows = []
             for symbol in pdf["Symbol"]:
                 try:
-                    measures = fetcher(symbol, batch_time)
-                    rows.append(
-                        {
-                            "Time": batch_time,
-                            "Ticker": symbol,
-                            **{f: measures.get(f) for f in fields},
-                            "fetch_error": None,
-                        }
-                    )
+                    for row in fetcher(symbol, batch_time):
+                        rows.append(
+                            {**blank, **row, time_col: batch_time, "Ticker": symbol}
+                        )
                 except Exception as exc:  # noqa: BLE001 - quarantine semantics
                     rows.append(
                         {
-                            "Time": batch_time,
+                            **blank,
+                            time_col: batch_time,
                             "Ticker": symbol,
-                            **{f: None for f in fields},
                             "fetch_error": f"{type(exc).__name__}: {exc}",
                         }
                     )
-            yield pd.DataFrame(rows)
+            # columns= fixes the order and drops keys outside the schema
+            yield pd.DataFrame(rows, columns=columns)
 
     return tickers.mapInPandas(run, out_schema)
 
@@ -155,45 +180,3 @@ def synthetic_news_fetcher(
         return out
 
     return fetch
-
-
-def fetch_news_batch(
-    tickers: DataFrame,
-    fetcher: Callable[[str, datetime], list[dict]],
-    batch_time: datetime,
-) -> DataFrame:
-    """News variant of :func:`fetch_batch`: one row per headline (1:N)."""
-    out_schema = (
-        "CollectedAt timestamp_ntz, Date timestamp_ntz, Ticker string, "
-        "Title string, Price double, Volume double, fetch_error string"
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for symbol in pdf["Symbol"]:
-                try:
-                    for item in fetcher(symbol, batch_time):
-                        rows.append(
-                            {
-                                "CollectedAt": batch_time,
-                                "Ticker": symbol,
-                                "fetch_error": None,
-                                **item,
-                            }
-                        )
-                except Exception as exc:  # noqa: BLE001
-                    rows.append(
-                        {
-                            "CollectedAt": batch_time,
-                            "Date": None,
-                            "Ticker": symbol,
-                            "Title": None,
-                            "Price": None,
-                            "Volume": None,
-                            "fetch_error": f"{type(exc).__name__}: {exc}",
-                        }
-                    )
-            yield pd.DataFrame(rows)
-
-    return tickers.mapInPandas(run, out_schema)

@@ -21,9 +21,10 @@ Row-level error tolerance (A6) lives INSIDE the source: a failing symbol
 yields a row with ``fetch_error`` set and null measures — observable
 quarantine, never a silent drop.
 
-Determinism: values are hash-derived from (symbol, field, batch_time) via
-the same ``_stable_unit`` generator the mapInPandas fetcher uses, so both
-ingestion paths produce identical rows for identical inputs.
+Determinism: rows come from the same ``synthetic_quote_fetcher`` the
+mapInPandas path runs (values hash-derived from symbol, field and
+batch_time; the same failed symbols and nulled fields), so both ingestion
+paths produce identical rows for identical inputs.
 """
 
 from __future__ import annotations
@@ -38,7 +39,7 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
-from .fetch import _stable_unit
+from .fetch import synthetic_quote_fetcher
 
 DEFAULT_FIELDS = ("price", "volume")
 
@@ -60,10 +61,13 @@ def _parse_options(options) -> dict:
             str(options.get("batch_time", _EPOCH.isoformat()))
         ),
         "num_partitions": int(options.get("num_partitions", 4)),
-        "fail_symbols": frozenset(
-            s for s in str(options.get("fail_symbols", "")).split(",") if s
+        "fetcher": synthetic_quote_fetcher(
+            fields,
+            fail_symbols=frozenset(
+                s for s in str(options.get("fail_symbols", "")).split(",") if s
+            ),
+            null_field_rate=float(options.get("null_field_rate", 0.0)),
         ),
-        "null_field_rate": float(options.get("null_field_rate", 0.0)),
         "n_batches": int(options.get("n_batches", 3)),
         "interval_minutes": int(options.get("interval_minutes", 60)),
     }
@@ -80,21 +84,11 @@ def _quote_schema(fields: tuple[str, ...]) -> T.StructType:
 
 def _fetch_row(symbol: str, batch_time: datetime, cfg: dict) -> tuple:
     """One quote row; failures become data (A6), never exceptions."""
-    if symbol in cfg["fail_symbols"]:
-        return (symbol, batch_time) + (None,) * len(cfg["fields"]) + (
-            f"synthetic fetch failure for {symbol}",
-        )
-    vals = []
-    for field in cfg["fields"]:
-        if (
-            cfg["null_field_rate"] > 0.0
-            and _stable_unit(symbol, field, batch_time, "null")
-            < cfg["null_field_rate"]
-        ):
-            vals.append(None)
-        else:
-            vals.append(round(_stable_unit(symbol, field, batch_time) * 1000, 4))
-    return (symbol, batch_time, *vals, None)
+    try:
+        (values,) = cfg["fetcher"](symbol, batch_time)
+    except Exception as exc:  # noqa: BLE001 - quarantine semantics
+        return (symbol, batch_time, *(None for _ in cfg["fields"]), str(exc))
+    return (symbol, batch_time, *(values[f] for f in cfg["fields"]), None)
 
 
 class _ShardPartition(InputPartition):

@@ -5,8 +5,9 @@ into their sink columns (stock_data_to_gcp.py:47,
 financial_ratio_to_gcp.py:47, financial_statement_to_gcp.py:47,
 news_data_to_gcp.py:59). This module carries those exact field→info-key
 mappings as data, and adapts ANY ``.info``-shaped source — the real
-``yfinance`` client or a recorded fixture — into a ``RowFetcher`` the
-engine's pipelines consume unchanged.
+``yfinance`` client or a recorded fixture — into a ``RowFetcher`` that
+returns one row per symbol, which ``fetch_batch`` stamps with the batch
+time and ticker like any other fetcher's rows.
 
 Error semantics, deliberately different from the reference: a missing
 info key there raises inside a bare ``except: continue`` and the row
@@ -74,18 +75,18 @@ def yfinance_fetcher(spec_name: str, transport: InfoTransport) -> RowFetcher:
             f"expected one of {sorted(YF_FIELD_MAP)}"
         ) from None
 
-    def fetch(symbol: str, batch_time: datetime) -> dict[str, float | None]:
+    def fetch(symbol: str, batch_time: datetime) -> list[dict[str, object]]:
         info = transport(symbol)
         missing = [key for key in mapping.values() if key not in info]
         if missing:
             raise KeyError(
                 f"info dict for {symbol} missing key(s) {missing}"
             )
-        out: dict[str, float | None] = {}
+        out: dict[str, object] = {}
         for field, key in mapping.items():
             value = info[key]
             out[field] = None if value is None else float(value)  # type: ignore[arg-type]
-        return out
+        return [out]
 
     return fetch
 

@@ -173,7 +173,7 @@ def test_retry_then_alert_on_batch_failure(spark, tmp_path):
 
     # a spec whose sink schema doesn't exist fails every attempt
     broken = IngestPipeline(
-        PipelineSpec("no_such_table", ("Price",), "1 hour"),
+        PipelineSpec("no_such_table", "1 hour"),
         str(tmp_path),
         fetcher=synthetic_quote_fetcher(("Price",)),
         symbols=SYMBOLS[:5],
@@ -206,14 +206,6 @@ def test_retry_then_alert_on_batch_failure(spark, tmp_path):
 def test_transient_failure_recovers_within_retries(spark, tmp_path):
     """A fetcher whose whole batch fails once then succeeds must recover
     on retry with no alert."""
-    calls = {"n": 0}
-
-    def flaky_fetcher(symbol, fields, t):
-        if calls["n"] == 0 and symbol.endswith("000"):
-            calls["n"] += 1
-            raise RuntimeError("transient backend outage")
-        return synthetic_quote_fetcher(fields)(symbol, fields, t)
-
     # per-row tolerance catches fetcher exceptions into quarantine, so a
     # whole-batch failure needs the sink to break instead: simulate by
     # making the first attempt's sink root an existing FILE
@@ -244,22 +236,57 @@ def test_transient_failure_recovers_within_retries(spark, tmp_path):
     assert alerts == []
 
 
-def test_spec_fields_match_sink_schemas():
-    """PipelineSpec.fields and schemas.SINK_SCHEMAS declare the measure
-    columns twice; drift between them only surfaces as a runtime schema
-    mismatch mid-batch. Pin the agreement here instead."""
-    from stock_data_pipeline_spark import schemas
-    from stock_data_pipeline_spark.pipelines.ingest import (
-        RATIO_SPEC,
-        STATEMENT_SPEC,
-        TICKER_SPEC,
-    )
+def test_fetch_schema_is_sink_schema_plus_error_for_every_spec(spark, tmp_path):
+    """Every spec's fetch output is its sink schema plus ``fetch_error``
+    (names and types), and running a batch leaves the shared sink schemas
+    untouched — building the fetch schema by appending to a sink schema's
+    field list would add ``fetch_error`` to the sink table itself."""
+    import copy
 
-    for spec in (TICKER_SPEC, RATIO_SPEC, STATEMENT_SPEC):
-        declared = tuple(
-            f.name for f in schemas.SINK_SCHEMAS[spec.name].fields[2:]
-        )
-        assert spec.fields == declared, spec.name
+    from pyspark.sql import types as T
+
+    from stock_data_pipeline_spark.pipelines.ingest import STATEMENT_SPEC
+    from stock_data_pipeline_spark.sources.fetch import fetch_batch
+
+    before = copy.deepcopy(SINK_SCHEMAS)
+    for spec in (TICKER_SPEC, RATIO_SPEC, STATEMENT_SPEC, NEWS_SPEC):
+        p = IngestPipeline(spec, str(tmp_path), symbols=SYMBOLS[:5])
+        got = fetch_batch(seed_table(spark, SYMBOLS[:5]), p.fetcher, spec.schema, T0)
+        want = [*SINK_SCHEMAS[spec.name].fields, T.StructField("fetch_error", T.StringType())]
+        assert [(f.name, f.dataType) for f in got.schema.fields] == [
+            (f.name, f.dataType) for f in want
+        ], spec.name
+        p.run_batch(spark, T0)
+        assert SINK_SCHEMAS == before, spec.name
+
+
+def test_sink_reads_survive_an_outage_batch(spark, tmp_path):
+    """A batch in which every symbol fails writes no sink data file;
+    the sink reads then return no rows instead of failing to infer a
+    schema from an empty directory."""
+    p = IngestPipeline(
+        TICKER_SPEC,
+        str(tmp_path),
+        fetcher=synthetic_quote_fetcher(TICKER_SPEC.fields, fail_symbols=frozenset(SYMBOLS)),
+        symbols=SYMBOLS[:5],
+    )
+    metrics = p.run_batch(spark, T0)
+    assert (metrics.n_ok, metrics.n_quarantined) == (0, 5)
+    deduped = p.read_sink_deduped(spark)
+    assert deduped.schema == SINK_SCHEMAS["ticker_data"]
+    assert deduped.count() == 0
+    assert p.read_sink_day(spark, T0.date().isoformat()).count() == 0
+    assert p.read_quarantine_deduped(spark).count() == 5
+
+
+def test_quarantine_reads_empty_on_a_healthy_pipeline(spark, tmp_path):
+    """Clean batches skip the quarantine write, so its directory never
+    exists; reading it yields an empty frame of the quarantine schema."""
+    p = IngestPipeline(TICKER_SPEC, str(tmp_path), symbols=SYMBOLS[:5])
+    assert p.run_batch(spark, T0).n_quarantined == 0
+    q = p.read_quarantine_deduped(spark)
+    assert q.columns == [*SINK_SCHEMAS["ticker_data"].names, "fetch_error"]
+    assert q.count() == 0
 
 
 def test_backfill_day_accepts_sink_frames_and_rejects_empty(spark, tmp_path):

@@ -68,6 +68,36 @@ def test_failed_symbols_become_quarantine_rows(registered):
     assert out["S001"].fetch_error is None
 
 
+def test_source_rows_equal_fetch_batch_rows(registered):
+    """Both ingestion paths run ``synthetic_quote_fetcher``: with failed
+    symbols and nulled fields, the source and ``fetch_batch`` over a seed
+    frame agree on symbol, price, volume and failure for every row."""
+    from stock_data_pipeline_spark.schemas import TICKER_DATA
+    from stock_data_pipeline_spark.sources.fetch import fetch_batch, synthetic_quote_fetcher
+    from stock_data_pipeline_spark.sources.seed import seed_table
+
+    fail = frozenset({"S003", "S007"})
+    source = _batch_df(
+        registered,
+        fields="Price,Volume",
+        fail_symbols=",".join(sorted(fail)),
+        null_field_rate=0.3,
+    )
+    mapped = fetch_batch(
+        seed_table(registered, SYMS),
+        synthetic_quote_fetcher(("Price", "Volume"), fail_symbols=fail, null_field_rate=0.3),
+        TICKER_DATA,
+        datetime(2024, 3, 1),
+    )
+    a = {(r.symbol, r.Price, r.Volume, r.fetch_error is not None) for r in source.collect()}
+    b = {(r.Ticker, r.Price, r.Volume, r.fetch_error is not None) for r in mapped.collect()}
+    assert a == b
+    assert len(a) == len(SYMS)
+    assert {r[0] for r in a if r[3]} == fail
+    # nulled fields on healthy symbols, so the null path is compared too
+    assert any(r[1] is None or r[2] is None for r in a if not r[3])
+
+
 def _drain_until(q, predicate, timeout_s=60):
     """Run a continuous-trigger stream until ``predicate()`` holds (Python
     stream sources do not support Trigger.AvailableNow in Spark 4.1 — the

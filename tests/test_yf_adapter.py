@@ -146,7 +146,7 @@ def test_live_single_ticker_fetch_opt_in(request, spark, transport):
     rows = fetch_batch(
         seed_table(spark, ["AAPL"]),
         fetcher,
-        TICKER_SPEC.fields,
+        TICKER_SPEC.schema,
         datetime(2024, 1, 2, 9, 30),
     ).collect()
     assert len(rows) == 1

@@ -76,7 +76,7 @@ def sql_word_shingles(tokens_expr: str, k: int = 3) -> str:
 def quality_expr(n_tokens: Column, n_stop: Column, n_chars: Column) -> Column:
     """Pretraining-quality heuristic ∈ [0, 1]: length, stopword density,
     and average word length, weighted 0.4/0.3/0.3. Shared by the per-doc
-    scoring query (c04_quality_score) and the corpus-prep pipeline
+    text panel (c04_text_metrics) and the corpus-prep pipeline
     (c09_prep_pipeline) so both gates score identically."""
     nt = n_tokens.cast("double")
     ns = n_stop.cast("double")

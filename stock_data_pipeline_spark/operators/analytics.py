@@ -1,12 +1,12 @@
 """Tier B analytics extensions: pivot/unpivot, distribution windows,
 grouping sets, SQL-API entry, correlated subqueries, list aggregation,
-sliding windows, BPE-ish token counting, embedding near-dup.
+and sliding windows.
 
 Second coverage wave over SURVEY.md §2 — the dashboard/reporting shapes
-(B8/B9/B13/B14 generalizations) plus the remaining C3/C4 rows. These are
-the queries behind the dashboard the reference promises over its BigQuery
-tables but never builds (/root/reference/README.md:3,23). Same determinism
-contract as registry.py.
+(B8/B9/B13/B14 generalizations). These are the queries behind the
+dashboard the reference promises over its BigQuery tables but never
+builds (/root/reference/README.md:3,23). Same determinism contract as
+registry.py.
 """
 
 from __future__ import annotations
@@ -34,7 +34,7 @@ from ..registry import query
     FROM lineitem
     GROUP BY l_returnflag
     """,
-    driver=False,  # rotated out r14 (r13-green; still registered+oracle-backed)
+    driver=False,
 )
 def b20_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot: line status → columns. ``pivot`` with an explicit value list
@@ -69,7 +69,7 @@ def b20_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM lineitem WHERE l_orderkey % 100 = 0
     )
     """,
-    driver=False,  # rotated out r14 (r13-green; still registered+oracle-backed)
+    driver=False,
 )
 def b21_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unpivot (melt): wide measures → (name, value) rows — one pass,
@@ -100,7 +100,7 @@ def b21_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM customer
     WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal ASC, c_custkey ASC)
     """,
-    driver=True,  # promoted r14: fresh oracle-backed rotation (VERDICT r13 task 8)
+    driver=True,
 )
 def b22_window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """percent_rank / cume_dist / ntile — dashboard distribution stats.
@@ -134,7 +134,7 @@ def b22_window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
       ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING
     )
     """,
-    driver=True,  # promoted r14: fresh oracle-backed rotation (VERDICT r13 task 8)
+    driver=True,
 )
 def b23_first_last_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """first/last/nth value over the full-partition frame (constant per
@@ -175,7 +175,7 @@ LIMIT 10
 """
 
 
-@query("b24_sql_api", oracle=_Q3_SQL, driver=False)  # demoted in the r12 rotation (r11-green)
+@query("b24_sql_api", oracle=_Q3_SQL, driver=False)
 def b24_sql_api(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SQL entry point: the engine's tables as temp views + ANSI SQL
     through ``spark.sql`` (TPC-H Q3 shape). Catalyst produces the same
@@ -197,7 +197,7 @@ def b24_sql_api(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM customer
     GROUP BY GROUPING SETS ((c_mktsegment, c_nationkey), (c_mktsegment), ())
     """,
-    driver=False,  # demoted in the r12 rotation (r11-green); B13 family rep stays b13_rollup
+    driver=False,
 )
 def b26_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS (the general form behind rollup/cube) via
@@ -227,7 +227,7 @@ def b26_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
       WHERE c2.c_nationkey = c.c_nationkey
     )
     """,
-    driver=False,  # demoted in the r12 rotation (r11-green)
+    driver=False,
 )
 def b27_correlated_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated scalar subquery: customers above their nation's mean
@@ -259,7 +259,7 @@ def b27_correlated_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE c_custkey % 50 = 0
     GROUP BY c_nationkey
     """,
-    driver=True,  # promoted r14: fresh oracle-backed rotation (VERDICT r13 task 8)
+    driver=True,
 )
 def b25_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered string aggregation (LISTAGG WITHIN GROUP) — deterministic
@@ -318,82 +318,6 @@ def b03_sliding_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# C3: exact embedding near-dup pairs (the C2-for-vectors operator)
-# --------------------------------------------------------------------------
-@query(
-    "c03_embedding_near_dup",
-    oracle="""
-    WITH e AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings
-    )
-    SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-           round(list_cosine_similarity(a.v, b.v), 6) AS cos_sim
-    FROM e a JOIN e b ON a.vec_id < b.vec_id
-    WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.4
-    """,
-    driver=False,
-)
-def c03_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (threshold 0.4), exact.
-
-    This is the oracle-checkable ground truth; the production-scale path
-    is LSH bucketing (``ann_lsh_topk``/``lsh_signatures``) which turns
-    the O(n²) pair space into per-bucket blocks. Here n is corpus-sized
-    but the comparison is pruned by the upper-triangle condition and runs
-    broadcast — no shuffle of the pair space.
-    """
-    from .similarity import cosine
-
-    emb = load(spark, sf_dir, "embeddings")
-    a = rebalance(emb).select(
-        F.col("vec_id").alias("vec_a"), F.col("embedding").alias("emb_a")
-    )
-    b = emb.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("emb_b"))
-    sim = F.round(cosine(F.col("emb_a"), F.col("emb_b")), 6)
-    return (
-        a.join(F.broadcast(b), F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b", sim.alias("cos_sim"))
-        .filter(F.col("cos_sim") >= 0.4)
-    )
-
-
-# --------------------------------------------------------------------------
-# C4: BPE-ish regex token counting
-# --------------------------------------------------------------------------
-from ..functions.textfns import BPE_TOKEN_RE as _TOKEN_RE  # noqa: E402
-
-
-@query(
-    "c04_token_count_bpe",
-    oracle=f"""
-    SELECT
-      lang,
-      COUNT(*) AS n_docs,
-      CAST(SUM(len(regexp_extract_all(text, '{_TOKEN_RE}'))) AS BIGINT) AS total_tokens,
-      CAST(SUM(CAST(len(regexp_extract_all(text, '{_TOKEN_RE}')) AS DECIMAL(18,6)))
-           AS DOUBLE) / COUNT(*) AS avg_tokens
-    FROM documents
-    GROUP BY lang
-    """,
-    driver=False,
-)
-def c04_token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token counting with a BPE-ish regex (letters / digits / single
-    punctuation marks as separate tokens) — the cheap pre-tokenizer count
-    that training-data pipelines budget with. Pure JVM regex, no Python."""
-    docs = load(spark, sf_dir, "documents")
-    ntok = F.size(F.regexp_extract_all("text", F.lit(_TOKEN_RE), 0))
-    return docs.groupBy("lang").agg(
-        F.count("*").alias("n_docs"),
-        F.sum(ntok).cast("bigint").alias("total_tokens"),
-        (F.sum(ntok.cast("decimal(18,6)")).cast("double") / F.count("*")).alias(
-            "avg_tokens"
-        ),
-    )
-
-
-# --------------------------------------------------------------------------
 # B32 — histogram / fixed-width binning (dashboard distribution card)
 # --------------------------------------------------------------------------
 _HIST_WIDTH = 50_000.0
@@ -411,7 +335,7 @@ _HIST_WIDTH = 50_000.0
     FROM orders
     GROUP BY floor(o_totalprice / {_HIST_WIDTH})
     """,
-    driver=False,  # demoted in the r12 rotation (r11-green); B15 family rep stays b15_topk_sketch
+    driver=False,
 )
 def b32_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B32: fixed-width histogram of order totals — the distribution card
@@ -464,7 +388,7 @@ def b32_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE l_shipdate <= TIMESTAMP '2001-09-02 00:00:00'
     GROUP BY l_returnflag, l_linestatus
     """,
-    driver=False,  # demoted in the r12 rotation (r11-green); stays a bench headline
+    driver=False,
 )
 def b33_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B33: the TPC-H Q1 pricing summary — 8 simultaneous aggregates over a
@@ -539,7 +463,7 @@ def b33_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
            COUNT(t_purchase) AS n_purchased_after_click
     FROM per_user
     """,
-    driver=False,  # demoted in the r12 rotation (r11-green)
+    driver=False,
 )
 def b35_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B35: strictly-ordered conversion funnel — users whose first view
@@ -606,7 +530,7 @@ def b35_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM cohorts c JOIN activity a USING (user_id)
     GROUP BY c.cohort_week, a.active_week
     """,
-    driver=False,  # demoted in the r12 rotation (r11-green)
+    driver=False,
 )
 def b36_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B36: weekly cohort retention — users bucketed by first-seen week,
@@ -648,7 +572,7 @@ def b36_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY event_type
     """,
-    driver=False,  # demoted in the r12 rotation (r11-green)
+    driver=False,
 )
 def b39_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B39: distinct users per event type — executed with the two-phase
@@ -682,8 +606,6 @@ def b39_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY revenue DESC, o_orderdate ASC, l_orderkey ASC
     LIMIT 10
     """,
-    # re-promoted r13 rotation (driver-green r10, stale since): B10's
-    # in-window rep (TakeOrderedAndProject); b10_topk_orders rotated out
     driver=True)
 def b42_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B42: the TPC-H Q3 shape — urgent-segment orders taken before the
@@ -728,7 +650,7 @@ _PROFILE_STR_COLS = ("o_orderstatus", "o_orderpriority", "o_orderdate")
 
 @query(
     "b44_table_profile",
-    driver=False,  # rotated out r14 (r13-green; still registered+oracle-backed)
+    driver=False,
     oracle=f"""
     {" UNION ALL ".join(
         f'''SELECT '{c}' AS column_name, COUNT(*) AS n,
@@ -811,8 +733,6 @@ _NUMERIC_RANGE_SQL = """
 """
 
 
-# rotated out of the driver window late r7 (driver row r6 green); the B9
-# frame-window family stays in-window via b56_rolling_sharpe (ROWS frame)
 @query("b47_numeric_range_frame", oracle=_NUMERIC_RANGE_SQL, driver=False)
 def b47_numeric_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B9++: RANGE frame bounded by VALUE distance (±1000 of each order's
@@ -842,7 +762,7 @@ def b47_numeric_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     WHERE o_orderkey % 40 = 0
     """,
-    driver=False,  # rotated out r14 (r13-green; still registered+oracle-backed)
+    driver=False,
 )
 def b48_share_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B48: ratio-to-report — each order's share of its priority class's
@@ -939,7 +859,7 @@ def b55_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "b57_returned_items",
-    driver=False,  # rotated out r10 (driver-green r9; family rep: no family requirement; b57 r9-green)
+    driver=False,
     oracle=f"""
     SELECT c.c_custkey, c.c_name, n.n_name,
            {sql_dec_sum("l.l_extendedprice * (1 - l.l_discount)", 4)}
@@ -1054,7 +974,7 @@ def b58_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "b59_mad",
-    driver=False,  # rotated out r10 (driver-green r9; family rep: no family requirement; b59 r9-green)
+    driver=False,
     oracle="""
     WITH med AS (
       SELECT c_mktsegment,

@@ -92,7 +92,7 @@ def _perm_coeffs(k: int, seed: int = 42) -> list[tuple[int, int]]:
     FROM documents
     GROUP BY md5(lower(regexp_replace(trim(text), '\\s+', ' ', 'g')))
     """,
-    driver=False,  # rotated out r13 (driver-green r12); C1 family rep is the re-promoted c01_dedup_keep_best
+    driver=False,
 )
 def c01_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C1: exact dedup — group by content hash, keep the smallest doc_id.
@@ -134,8 +134,6 @@ def c01_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM documents
     ) WHERE rn = 1
     """,
-    # re-promoted r13 rotation (driver-green r10, stale since): C1's
-    # in-window rep (quality-keeper rule); c01_exact_dedup rotated out
     driver=True)
 def c01_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C1b: exact dedup with a QUALITY keeper rule — within each content
@@ -219,8 +217,6 @@ _PRUNE_MAX_DF = 20
 
 @query(
     "c02_ngram_jaccard_pruned",
-    # rotated out late r7 (driver row r6 green); the C2 near-dup family
-    # stays in-window via c02_minhash_portable and c02_near_dedup_corpus
     driver=False,
     oracle=f"""
     WITH sh0 AS (
@@ -676,8 +672,6 @@ def fuzzy_join_dist1(
 
 @query(
     "c02_fuzzy_name_join",
-    # demoted in the round-9 rotation: ledger-closed one-shot (driver-green r8);
-    # stays on the full bench/oracle-parity surface
     driver=False,
     oracle=_FUZZY_JOIN_SQL,
 )
@@ -768,7 +762,7 @@ def _minhash_portable_oracle() -> str:
 
 @query(
     "c02_minhash_portable",
-    driver=True,  # promoted r14: fresh oracle-backed rotation (VERDICT r13 task 8)
+    driver=True,
     oracle=_minhash_portable_oracle(),
 )
 def c02_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:

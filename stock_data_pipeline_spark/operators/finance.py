@@ -115,7 +115,6 @@ _B50_SQL = f"""
 """
 
 
-# promoted r14: fresh oracle-backed rotation (VERDICT r13 task 8)
 @query("b50_drawdown", oracle=_B50_SQL, driver=True)
 def b50_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B50: maximum drawdown per instrument, with the trough row.
@@ -401,8 +400,6 @@ _B56_SQL = f"""
 """
 
 
-# rotated out r13 (driver-green r12); B9 frame family rep is the
-# re-promoted b09_moving_window (+ b79_atr for the finance-frame shape)
 @query("b56_rolling_sharpe", oracle=_B56_SQL, driver=False)
 def b56_rolling_sharpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B56: 10-day rolling Sharpe ratio (mean/σ of daily returns).
@@ -467,7 +464,7 @@ _B61_SQL = """
 """
 
 
-@query("b61_mom_growth", oracle=_B61_SQL, driver=False)  # demoted in the r12 rotation (r11-green); B2 family rep now b02_group_agg
+@query("b61_mom_growth", oracle=_B61_SQL, driver=False)
 def b61_mom_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B61: month-over-month growth and indexed level per priority class —
     the period-over-period report every revenue dashboard opens with.
@@ -514,7 +511,7 @@ _B62_SQL = f"""
 """
 
 
-@query("b62_candle_patterns", oracle=_B62_SQL, driver=False)  # rotated out r10 (r9-green)
+@query("b62_candle_patterns", oracle=_B62_SQL, driver=False)
 def b62_candle_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B62: candlestick pattern screen over the daily bars — doji
     (indecision: body within 10% of the range), bullish engulfing
@@ -565,8 +562,6 @@ _B78_SQL = f"""
 """
 
 
-# rotated out r13 (driver-green r12); the band/volatility shape stays
-# in-window via the re-promoted b79_atr
 @query("b78_bollinger", oracle=_B78_SQL, driver=False)
 def b78_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B78: Bollinger bands (5-day mean ± 2σ) with breakout flags.
@@ -610,8 +605,6 @@ _B79_SQL = f"""
 """
 
 
-# re-promoted r13 rotation (driver-green r9, stale since): the
-# greatest-of-lags true-range frame returns in-window
 @query("b79_atr", oracle=_B79_SQL, driver=True)
 def b79_atr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B79: Average True Range (5-day simple mean of the true range).
@@ -1006,8 +999,6 @@ _B87_SQL = f"""
 
 @query(
     "b87_momentum_rank",
-    # re-promoted r13 rotation (driver-green r8, stale since): B8's
-    # in-window rep; b08_rank_in_group rotated out this round
     driver=True,
     oracle=_B87_SQL,
 )
@@ -1150,7 +1141,7 @@ _B88_ORACLE = (
 )
 
 
-@query("b88_pairs_spread", oracle=_B88_ORACLE, driver=False)  # rotated out r10 (r9-green)
+@query("b88_pairs_spread", oracle=_B88_ORACLE, driver=False)
 def b88_pairs_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B88: pairs-trading spread monitor — hedge one instrument against
     another with the OLS ratio (the b53 exact-moment machinery pointed

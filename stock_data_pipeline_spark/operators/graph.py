@@ -404,9 +404,6 @@ def _components_oracle(rounds: int) -> str:
 
 @query(
     "c10_component_labels",
-    # re-promoted r13 rotation (driver-green r8, stale since): C10's
-    # in-window rep (fixed-round label propagation); c10_kcore_peel
-    # rotated out this round
     driver=True,
     oracle=_components_oracle(CC_ROUNDS),
 )
@@ -436,7 +433,6 @@ def c10_triangle_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     return triangle_stats(click_edges(load(spark, sf_dir, "events")))
 
 
-# promoted r14: fresh oracle-backed rotation (VERDICT r13 task 8)
 @query("c10_link_pagerank", oracle=_pagerank_oracle(PR_ITERATIONS), driver=True)
 def c10_link_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C10: damped PageRank over the user-navigation graph mined from
@@ -574,7 +570,7 @@ def _kcore_oracle(k: int, rounds: int) -> str:
 @query(
     "c10_kcore_peel",
     oracle=_kcore_oracle(KCORE_K, KCORE_ROUNDS),
-    driver=False,  # rotated out r13 (driver-green r11-r12); C10 family rep is the re-promoted c10_component_labels
+    driver=False,
 )
 def c10_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C10: fixed-round k-core peeling (k=85, 4 rounds) over the
@@ -824,7 +820,7 @@ def _harmonic_oracle(max_hub: int) -> str:
 @query(
     "c10_harmonic_centrality",
     oracle=_harmonic_oracle(HC_MAX_HUB),
-    driver=False,  # demoted in the r12 rotation (r11-green); C10 family rep stays c10_kcore_peel
+    driver=False,
 )
 def c10_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C10: radius-2 truncated harmonic centrality over the navigation
@@ -956,7 +952,7 @@ def harmonic_centrality_hyperball(
 @query(
     "c10_link_prediction",
     oracle=_link_prediction_oracle(RA_MAX_HUB, RA_TOP_K),
-    driver=False,  # demoted in the r12 rotation (r11-green); C10 family rep stays c10_kcore_peel
+    driver=False,
 )
 def c10_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C10: top-100 predicted links on the navigation graph by the

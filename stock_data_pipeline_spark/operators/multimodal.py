@@ -149,7 +149,7 @@ def sample_frames(docs: DataFrame) -> DataFrame:
              AS frame_sha256
     FROM f WHERE idx % 4 = 0
     """,
-    driver=True,  # promoted r14: fresh oracle-backed rotation (VERDICT r13 task 8)
+    driver=True,
 )
 def c05_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C5b: frame sampling over opaque media payloads — every 4th 16-byte
@@ -531,7 +531,7 @@ def _image_decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
       END AS INT) AS img_bytes
     FROM documents
     """,
-    driver=False,  # rotated out r13 (driver-green r12); C5 family rep is the re-promoted c05_audio_header
+    driver=False,
 )
 def c05_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C5e: REAL image decode — deterministic BMP/PPM files are written
@@ -896,7 +896,7 @@ def _audio_headers(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         AS n_frames
     FROM documents
     """,
-    driver=True,  # re-promoted r13 rotation (driver-green r10, stale since): C5's binary-header-parse rep; c05_image_decode rotated out
+    driver=True,
 )
 def c05_audio_header(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C5g: REAL audio container parsing — per document a deterministic

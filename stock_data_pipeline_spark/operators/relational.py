@@ -57,7 +57,7 @@ def b01_filter_time_range(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "b02_group_agg",
-    driver=True,  # promoted r12: stale representative (last driver row r<=9)
+    driver=True,
     oracle=f"""
     SELECT
       l_returnflag,
@@ -150,7 +150,7 @@ def b04_broadcast_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "b05_large_join",
-    driver=True,  # re-promoted r13 rotation (driver-green r9, stale since; B5 AQE shuffle-join rep returns in-window)
+    driver=True,
     oracle=f"""
     SELECT
       o.o_orderpriority,
@@ -205,7 +205,7 @@ _BUCKETED_READY: set[str] = set()
     WHERE o.o_totalprice > 1000.0
     GROUP BY o.o_orderpriority
     """,
-    driver=False,  # rotated out r13 (driver-green r12); B5 family rep is the re-promoted b05_large_join
+    driver=False,
 )
 def b05_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B5 on the 100 TB growth path: identical semantics to b05_large_join,
@@ -274,79 +274,6 @@ def b05_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # B6 — outer / semi / anti joins
 # --------------------------------------------------------------------------
 @query(
-    "b06_left_outer_join",
-    oracle=f"""
-    SELECT
-      c.c_custkey,
-      c.c_name,
-      COUNT(o.o_orderkey) AS n_orders,
-      COALESCE({sql_dec_sum('o.o_totalprice')}, 0.0) AS total_spent
-    FROM customer c
-    LEFT JOIN orders o ON o.o_custkey = c.c_custkey
-    GROUP BY c.c_custkey, c.c_name
-    """,
-    driver=False,
-)
-def b06_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B6a: left outer join preserving customers with no orders.
-
-    Scale: orders is the big probe side; customer (dimension) broadcasts.
-    COUNT(col) counts only matched rows, so no-order customers report 0.
-    """
-    customer = load(spark, sf_dir, "customer")
-    orders = load(spark, sf_dir, "orders")
-    return (
-        customer.join(orders, orders.o_custkey == customer.c_custkey, "left")
-        .groupBy("c_custkey", "c_name")
-        .agg(
-            F.count("o_orderkey").alias("n_orders"),
-            F.coalesce(dec_sum("o_totalprice"), F.lit(0.0)).alias("total_spent"),
-        )
-    )
-
-
-@query(
-    "b06_semi_join",
-    oracle="""
-    SELECT c_custkey, c_name, c_acctbal
-    FROM customer c
-    WHERE EXISTS (
-      SELECT 1 FROM orders o
-      WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'F'
-    )
-    """,
-    driver=False,
-)
-def b06_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B6b: left-semi join = EXISTS; emits each qualifying customer once."""
-    customer = load(spark, sf_dir, "customer")
-    orders = load(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    return customer.join(
-        orders, customer.c_custkey == orders.o_custkey, "left_semi"
-    ).select("c_custkey", "c_name", "c_acctbal")
-
-
-@query(
-    "b06_anti_join",
-    oracle="""
-    SELECT c_custkey, c_name
-    FROM customer c
-    WHERE NOT EXISTS (
-      SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey
-    )
-    """,
-    driver=False,
-)
-def b06_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B6c: left-anti join = NOT EXISTS; customers with no orders at all."""
-    customer = load(spark, sf_dir, "customer")
-    orders = load(spark, sf_dir, "orders")
-    return customer.join(
-        orders, customer.c_custkey == orders.o_custkey, "left_anti"
-    ).select("c_custkey", "c_name")
-
-
-@query(
     "b06_join_suite",
     oracle="""
     SELECT 'left_outer' AS join_kind, c.c_custkey, c.c_name,
@@ -368,15 +295,15 @@ def b06_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey
     )
     """,
-    driver=True,  # promoted r12: stale representative (last driver row r<=9)
+    driver=True,
 )
 def b06_join_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B6: outer + semi + anti joins, one driver-verified representative.
-
-    The three variants above stay on the full surface (oracle-parity
-    sweep); this tagged union is the single B6 row inside the driver's
-    50-name verification window. Each branch keeps its canonical plan:
-    dimension-side broadcast, EXISTS → left-semi, NOT EXISTS → left-anti.
+    """B6: outer + semi + anti joins as one tagged union: customers with
+    their order count (left outer; COUNT(col) counts only matched rows,
+    so no-order customers report 0), customers with a fulfilled order
+    (EXISTS → left-semi, each customer once), and customers with no
+    orders at all (NOT EXISTS → left-anti). Each branch keeps its
+    canonical plan; customer is the dimension side.
     """
     customer = load(spark, sf_dir, "customer")
     orders = load(spark, sf_dir, "orders")
@@ -414,7 +341,7 @@ def b06_join_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY o_totalprice DESC, o_orderkey ASC
     LIMIT 25
     """,
-    driver=False,  # rotated out r13 (driver-green r12); B10 family rep is the promoted b42_shipping_priority (TakeOrderedAndProject, bigger shape)
+    driver=False,
 )
 def b10_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B10: global top-k by price (tie-broken by key for determinism).
@@ -475,8 +402,6 @@ def b11_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
       INTERSECT
       SELECT DISTINCT s_nationkey AS x FROM supplier)
     """,
-    # re-promoted in the round-9 rotation (VERDICT r8 task 2): stale core
-    # representative whose last driver-green row predates r7
     driver=True,
 )
 def b12_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -502,8 +427,6 @@ def b12_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "b12_set_ops_all",
-    # demoted in the round-9 rotation: driver-green r8; B12 rep is the re-promoted b12_set_ops;
-    # stays on the full bench/oracle-parity surface
     driver=False,
     oracle="""
     SELECT 'both_all' AS side, user_id FROM (
@@ -554,7 +477,7 @@ def b12_set_ops_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     GROUP BY ROLLUP (l_returnflag, l_linestatus)
     """,
-    driver=False,  # rotated out r13 (driver-green r12); B13 family rep is the re-promoted b13_cube
+    driver=False,
 )
 def b13_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B13a: ROLLUP — per-(flag,status), per-flag subtotals, grand total.
@@ -570,29 +493,7 @@ def b13_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "b13_cube",
-    # re-promoted r13 rotation (driver-green r8, stale since): B13's
-    # in-window rep; b13_rollup rotated out this round
     driver=True,
-    oracle=f"""
-    SELECT
-      o_orderstatus,
-      o_orderpriority,
-      COUNT(*) AS n,
-      {sql_dec_sum('o_totalprice')} AS revenue
-    FROM orders
-    GROUP BY CUBE (o_orderstatus, o_orderpriority)
-    """,
-)
-def b13_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B13b: CUBE — all 2² grouping combinations in one pass."""
-    orders = load(spark, sf_dir, "orders")
-    return orders.cube("o_orderstatus", "o_orderpriority").agg(
-        F.count("*").alias("n"), dec_sum("o_totalprice").alias("revenue")
-    )
-
-
-@query(
-    "b13_rollup_cube_sets",
     oracle=f"""
     SELECT
       o_orderstatus,
@@ -604,15 +505,11 @@ def b13_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     GROUP BY CUBE (o_orderstatus, o_orderpriority)
     """,
-    # re-promoted in the round-9 rotation (VERDICT r8 task 2): stale core
-    # representative whose last driver-green row predates r7
-    driver=False,
 )
-def b13_rollup_cube_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B13: one driver-verified representative for rollup/cube/grouping
-    sets. CUBE's 2² sets are a strict superset of ROLLUP's, and the
-    GROUPING() markers exercise the grouping-id surface that
-    distinguishes a real subtotal row from a NULL-valued group.
+def b13_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """B13b: CUBE — all 2² grouping combinations in one pass. CUBE's sets
+    are a strict superset of ROLLUP's, and the GROUPING() markers tell a
+    real subtotal row from a NULL-valued group.
 
     Scale: Spark expands grouping sets map-side before the exchange; the
     shuffle stays O(groups × sets).
@@ -738,8 +635,6 @@ def approx_aggregates_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "b15_approx_aggregates",
-    # demoted in the round-9 rotation: driver-green r8; B15 rep is the re-promoted b15_exact_percentiles;
-    # stays on the full bench/oracle-parity surface
     driver=False,
     oracle="""
     SELECT l_returnflag,
@@ -791,8 +686,6 @@ def b15_approx_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM customer
     GROUP BY c_mktsegment
     """,
-    # re-promoted r13 rotation (driver-green r9-r10, stale since): B15's
-    # in-window rep; b15_topk_sketch rotated out this round
     driver=True,
 )
 def b15_exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -920,7 +813,7 @@ def b15_hll_union(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM events GROUP BY user_id
     ) WHERE user_rank <= 20
     """,
-    driver=False,  # rotated out r13 (driver-green r12); B15 family rep is the re-promoted b15_exact_percentiles
+    driver=False,
 )
 def b15_topk_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B15d: mergeable heavy-hitters — ``approx_top_k_accumulate`` builds
@@ -974,8 +867,6 @@ def b15_topk_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "b16_null_handling",
-    # re-promoted r8 as the B16 rep so COALESCE/NULLIF/<=> semantics are
-    # driver-verified directly (ADVICE r7); b45_try_arithmetic rotated out
     oracle=f"""
     SELECT
       COALESCE(NULLIF(c_mktsegment, 'BUILDING'), '(suppressed)') AS segment,
@@ -1072,7 +963,7 @@ def a10_union_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND o.o_orderdate <  TIMESTAMP '1999-01-01 00:00:00'
     GROUP BY n.n_name
     """,
-    driver=False,  # demoted in the r12 rotation (r11-green); stays a bench headline
+    driver=False,
 )
 def b37_regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B37: the TPC-H Q5 local-supplier-volume shape — a 6-table star join
@@ -1143,7 +1034,7 @@ _Q18_MIN_QTY = 150
     )
     GROUP BY c.c_custkey, c.c_name, o.o_orderkey, o.o_orderdate, o.o_totalprice
     """,
-    driver=False,  # rotated out r14 (r13-green; still registered+oracle-backed)
+    driver=False,
 )
 def b38_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B38: the TPC-H Q18 large-volume-customer shape — orders whose total
@@ -1188,7 +1079,7 @@ def b38_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "b41_promo_revenue",
-    driver=False,  # rotated out r14 (r13-green; still registered+oracle-backed)
+    driver=False,
     oracle=f"""
     SELECT
       p.p_brand,
@@ -1251,7 +1142,7 @@ def b41_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "b45_try_arithmetic",
-    driver=False,  # rotated out r14 (r13-green; still registered+oracle-backed)
+    driver=False,
     oracle="""
     SELECT
       event_id,
@@ -1302,7 +1193,7 @@ _LATERAL_TOPK_SQL = """
 """
 
 
-@query("b46_lateral_topk", oracle=_LATERAL_TOPK_SQL, driver=False)  # demoted in the r12 rotation (r11-green); B10 family rep now b10_topk_orders
+@query("b46_lateral_topk", oracle=_LATERAL_TOPK_SQL, driver=False)
 def b46_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B46: LATERAL correlated subquery — the two most expensive line
     items PER ORDER, written as a per-row dependent subquery. The

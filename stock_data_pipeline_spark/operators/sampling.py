@@ -128,7 +128,7 @@ def stratified_sample(docs: DataFrame, rates: dict[str, int], default: int) -> D
     )
     GROUP BY lang
     """,
-    driver=True,  # re-promoted r13 rotation (driver-green r7, stale since): C8's hash-gated sampler rep; c08_dsir_select rotated out
+    driver=True,
 )
 def c08_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C8b: stratified corpus rebalancing — keep 40% of 'en' docs, 90% of
@@ -334,8 +334,6 @@ def _pack_portable_oracle() -> str:
 
 @query(
     "c09_sequence_packing_portable",
-    # demoted in the round-9 rotation: ledger-closed one-shot (driver-green r8); c09 stays in-window via c09_interleave_order;
-    # stays on the full bench/oracle-parity surface
     driver=False,
     oracle=_pack_portable_oracle(),
 )
@@ -399,7 +397,7 @@ def _sql_mix_bucket() -> str:
 
 @query(
     "c08_source_mix",
-    driver=False,  # rotated out r8 (driver-green r7); family keeps an in-window rep
+    driver=False,
     oracle=f"""
     SELECT
       source,
@@ -512,7 +510,7 @@ def chunk_documents(
       FROM (SELECT doc_id, {{tokens}} AS tok FROM documents)
     )
     """.replace("{tokens}", "string_split_regex(lower(trim(text)), '\\s+')"),
-    driver=False,  # rotated out r13 (driver-green r12); C9 family rep is the re-promoted c09_curriculum_order
+    driver=False,
 )
 def c09_doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C9b: context-window chunking — every document split into 32-token
@@ -550,7 +548,7 @@ def shuffled(docs: DataFrame, key: str = "doc_id") -> DataFrame:
 
 @query(
     "c08_global_shuffle",
-    driver=False,  # rotated out r8 (driver-green r7); family keeps an in-window rep
+    driver=False,
     oracle=f"""
     SELECT doc_id,
            md5('{_SHUFFLE_SEED}' || CAST(doc_id AS VARCHAR)) AS shuffle_key
@@ -1065,7 +1063,7 @@ from ..functions.textfns import (
              AS pos_in_bucket
     FROM scored
     """,
-    driver=True,  # re-promoted r13 rotation (driver-green r10, stale since): C9's ordering rep; c09_doc_chunking rotated out
+    driver=True,
 )
 def c09_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C9f: curriculum read order — documents banded by ABSOLUTE quality
@@ -1134,7 +1132,7 @@ _WS_K = 100
              doc_id ASC
     LIMIT {_WS_K}
     """,
-    driver=True,  # promoted r14: fresh oracle-backed rotation (VERDICT r13 task 8)
+    driver=True,
 )
 def c08_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C8f: weighted sampling WITHOUT replacement (Efraimidis–Spirakis
@@ -1308,7 +1306,7 @@ def _dsir_oracle() -> str:
 @query(
     "c08_dsir_select",
     oracle=_dsir_oracle(),
-    driver=False,  # rotated out r13 (driver-green r10-r12); C8 family reps are c08_split_leakage + the re-promoted c08_stratified_sample
+    driver=False,
 )
 def c08_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C8i: DSIR-style importance-weighted data selection (Xie et al.

@@ -69,7 +69,7 @@ def parse_news_dom(html_col: Column | str) -> Column:
     FROM events
     GROUP BY event_type
     """,
-    driver=False,  # rotated out r13 (driver-green r12); C6 family rep is the re-promoted c06_xml_extract
+    driver=False,
 )
 def c06_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C6: the JSON surface over ``events.props`` — typed ``from_json``
@@ -120,7 +120,7 @@ def c06_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY event_type
     """,
-    driver=True,  # promoted r14: fresh oracle-backed rotation (VERDICT r13 task 8)
+    driver=True,
 )
 def c06_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C6b: the Spark 4 VariantType path — ``parse_json`` shreds the
@@ -170,7 +170,7 @@ def c06_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
       CAST(len(list_filter(embedding, x -> x > 0)) AS INT) AS n_positive
     FROM embeddings
     """,
-    driver=True,  # re-promoted r13 rotation (driver-green r10, stale since): C7's higher-order-array rep; c07_map_funcs rotated out
+    driver=True,
 )
 def c07_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C7: higher-order array functions over the embedding vectors.
@@ -216,7 +216,7 @@ def c07_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
       CASE WHEN -value > 0 THEN -value * 2.0 END AS neg_x2
     FROM events
     """,
-    driver=False,  # rotated out r13 (driver-green r12); C7 family rep is the re-promoted c07_array_funcs
+    driver=False,
 )
 def c07_map_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C7 map functions: build a map<string,double> per event with
@@ -266,8 +266,6 @@ def c07_map_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents, (SELECT unnest([0, 1]) AS item)
     WHERE doc_id % 7 = 0
     """,
-    # re-promoted r13 rotation (driver-green r10, stale since): C6's
-    # in-window rep (from_xml explode); c06_json_extract rotated out
     driver=True)
 def c06_xml_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C6c: the declarative XML/DOM extraction path, driver-checkable —

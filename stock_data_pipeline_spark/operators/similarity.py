@@ -131,7 +131,7 @@ def cosine_pandas_scores(
       WHERE q.vec_id < {_N_QUERIES}
     ) WHERE sim_rank <= {_TOP_K}
     """,
-    driver=False,  # rotated out r13 (driver-green r12); C3 reps are c03_filtered_topk + the re-promoted c03_ivf_fixed_centroids
+    driver=False,
 )
 def c03_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C3a: exact top-k nearest neighbors by cosine for a query set.
@@ -250,8 +250,6 @@ def _lsh_oracle_sql(n_tables: int = 4, n_planes: int = 8, dim: int = 64) -> str:
 
 @query(
     "c03_ann_lsh",
-    # demoted in the round-9 rotation: ledger-closed one-shot (driver-green r8);
-    # stays on the full bench/oracle-parity surface
     driver=False,
     oracle=_lsh_oracle_sql(),
 )
@@ -694,8 +692,6 @@ def _ivf_fixed_oracle() -> str:
     """
 
 
-# re-promoted r13 rotation (driver-green r10, stale since): the
-# oracle-backed IVF twin returns in-window; c03_cosine_topk rotated out
 @query(
     "c03_ivf_fixed_centroids", oracle=_ivf_fixed_oracle(), driver=True)
 def c03_ivf_fixed_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -971,8 +967,6 @@ def quantize_embeddings(vecs: DataFrame, col: str = "embedding") -> DataFrame:
 
 @query(
     "c03_embedding_quantize",
-    # rotated out late r7 (driver row r6 green); the C3 similarity family
-    # stays in-window via c03_ivf_fixed_centroids
     driver=False,
     oracle=f"""
     WITH xd AS (
@@ -1028,7 +1022,7 @@ def c03_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
       WHERE q.vec_id < {_N_QUERIES}
     ) WHERE sim_rank <= {_TOP_K}
     """,
-    driver=False,  # rotated out r14 (r13-green; still registered+oracle-backed)
+    driver=False,
 )
 def c03_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C3f: filtered vector search — top-k cosine neighbors restricted by
@@ -1163,8 +1157,8 @@ def c03_semdedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     smaller-id neighbor at cos ≥ threshold, across the whole corpus (no
     cells). O(n²) pair space: this is the oracle-checkable twin that
     measures the celled path's recall, exactly the c02_ngram_jaccard ↔
-    minhash_lsh_pairs relationship for vectors. The pair generation reuses
-    the broadcast upper-triangle join of c03_embedding_near_dup."""
+    minhash_lsh_pairs relationship for vectors. The pairs come from one
+    broadcast upper-triangle join, so the pair space never shuffles."""
     emb = load(spark, sf_dir, "embeddings")
     a = rebalance(emb).select(
         F.col("vec_id").alias("a_id"), F.col("embedding").alias("a_emb")
@@ -1479,8 +1473,6 @@ def _pq_fixed_oracle() -> str:
 
 @query(
     "c03_pq_fixed_books",
-    # demoted in the round-9 rotation: ledger-closed one-shot (driver-green r8); c03 stays in-window via c03_ivf_fixed_centroids;
-    # stays on the full bench/oracle-parity surface
     driver=False,
     oracle=_pq_fixed_oracle(),
 )

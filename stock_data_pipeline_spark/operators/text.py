@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 from ..catalog import load
 from ..functions.exact import sql_dec_avg, sql_dec_sum, sql_trunc6, trunc6
 from ..functions.partitioning import hash_bucket, sql_hash_bucket
-from ..functions.zlib_pins import ZLIB_LEVEL
 from ..functions.textfns import (
     BPE_TOKEN_RE,
     quality_expr,
@@ -63,12 +62,24 @@ from ..registry import query
     driver=False,
 )
 def c04_text_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4: the per-document text-analysis panel — token counts
-    (whitespace + the BPE-ish pre-tokenizer), quality score, language-ID
-    heuristic, and the canonical md5 fingerprint, all from ONE scan of
-    ``documents``. Previously the family's driver-window row; rotated to
-    the full-surface tier (local oracle-parity sweep) as hard driver
-    coverage accumulated over the narrower C4 queries.
+    """C4: the per-document text-analysis panel, all from ONE scan of
+    ``documents``:
+
+    - token counts: whitespace tokens and the BPE-ish pre-tokenizer count;
+    - quality score: length / stopword-density / word-length heuristics,
+      the standard pretraining-data filter shape;
+    - language-ID heuristic: EN function-word density (``stopword_ratio``)
+      plus CJK-script character density, no model. The synthetic corpus
+      is English-like for every label, so label accuracy is asserted on
+      crafted samples in tests/test_text.py;
+    - the canonical fingerprint: md5 over whitespace-normalized,
+      lowercased text, the exact-dedup join key (operators/dedup.py C1).
+
+    Ratios are truncated to 6 dp with floor(x·1e6)/1e6, NOT round(): the
+    per-row doubles are bit-identical across engines but round() is not —
+    Spark half-rounds the exact binary value while the oracle rounds its
+    shortest decimal rendering, and a score landing on a .xxxxxx5 boundary
+    (1 doc in 5000 at sf0.1) splits them.
 
     Scale: map-only — every metric is a built-in string/array expression
     over scan columns (one tokenize pass reused by four metrics), so the
@@ -91,7 +102,6 @@ def c04_text_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         norm.alias("norm"),
     )
-    n_tokens_d = F.col("n_tokens").cast("double")
     n_chars_d = F.col("n_chars").cast("double")
     n_stop_d = F.col("n_stop").cast("double")
     cjk_score = F.col("n_cjk").cast("double") / F.greatest(
@@ -164,7 +174,7 @@ def c04_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY freq DESC, token ASC
     LIMIT 20
     """,
-    driver=False,  # rotated out r13 (driver-green r12); C4 token-stat rep is the re-promoted c04_bigram_pmi
+    driver=False,
 )
 def c04_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4b: global top-20 token frequencies (explode → count → top-k).
@@ -181,126 +191,6 @@ def c04_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("freq"))
         .orderBy(F.desc("freq"), F.asc("token"))
         .limit(20)
-    )
-
-
-@query(
-    "c04_quality_score",
-    oracle=f"""
-    SELECT
-      doc_id,
-      n_tokens,
-      floor(CAST(n_chars AS DOUBLE) / n_tokens * 1000000) / 1000000
-        AS avg_token_len,
-      floor(CAST(n_stop AS DOUBLE) / n_tokens * 1000000) / 1000000
-        AS stopword_ratio,
-      floor({sql_quality_expr('n_tokens', 'n_stop', 'n_chars')}
-            * 1000000) / 1000000 AS quality_score
-    FROM (
-      SELECT doc_id, n_chars,
-             len({sql_tokens('text')}) AS n_tokens,
-             {sql_stopword_count(sql_tokens('text'))} AS n_stop
-      FROM documents
-    )
-    """,
-    driver=False,  # rotated out r14 (r13-green; still registered+oracle-backed)
-)
-def c04_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4c: per-document quality score (length / stopword-density /
-    word-length heuristics — the standard pretraining-data filter shape).
-
-    The score is a deterministic formula so the oracle replicates it
-    exactly. Truncation to 6 dp uses floor(x·1e6)/1e6, NOT round(): the
-    per-row doubles are bit-identical across engines but round() is not —
-    Spark half-rounds the exact binary value while the oracle rounds its
-    shortest decimal rendering, and a score landing on a .xxxxxx5 boundary
-    (1 doc in 5000 at sf0.1) splits them. floor of the same double is the
-    same double, always.
-    """
-    docs = load(spark, sf_dir, "documents")
-    tok = tokens("text")
-    base = docs.select(
-        "doc_id",
-        "n_chars",
-        F.size(tok).alias("n_tokens"),
-        stopword_count(tok).alias("n_stop"),
-    )
-    n_chars_d = F.col("n_chars").cast("double")
-    n_stop_d = F.col("n_stop").cast("double")
-
-    def trunc6(c):
-        return F.floor(c * 1000000.0) / 1000000.0
-
-    return base.select(
-        "doc_id",
-        "n_tokens",
-        trunc6(n_chars_d / F.col("n_tokens")).alias("avg_token_len"),
-        trunc6(n_stop_d / F.col("n_tokens")).alias("stopword_ratio"),
-        trunc6(
-            quality_expr(F.col("n_tokens"), F.col("n_stop"), F.col("n_chars"))
-        ).alias("quality_score"),
-    )
-
-
-@query(
-    "c04_lang_id",
-    oracle=f"""
-    SELECT
-      doc_id,
-      lang AS labeled_lang,
-      {sql_trunc6('CAST(n_stop AS DOUBLE) / n_tokens')} AS en_score,
-      {sql_trunc6('CAST(n_cjk AS DOUBLE) / greatest(n_chars, 1)')} AS cjk_score,
-      CASE
-        WHEN CAST(n_cjk AS DOUBLE) / greatest(n_chars, 1) > 0.2 THEN 'zh'
-        WHEN CAST(n_stop AS DOUBLE) / n_tokens >= 0.03 THEN 'en'
-        ELSE 'unknown'
-      END AS predicted_lang
-    FROM (
-      SELECT doc_id, lang, n_chars,
-             len({sql_tokens('text')}) AS n_tokens,
-             {sql_stopword_count(sql_tokens('text'))} AS n_stop,
-             length(regexp_replace(text, '[^\\x{{4e00}}-\\x{{9fff}}]', '', 'g')) AS n_cjk
-      FROM documents
-    )
-    """,
-    driver=False,  # rotated out r13 (driver-green r12); C4 per-doc-classifier rep is the re-promoted c04_winnowing fingerprint shape
-)
-def c04_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4d: language-ID heuristic — EN function-word density + CJK-script
-    character density (classic charset/n-gram cascade, no model).
-
-    The synthetic corpus is English-like for every label, so the value of
-    this operator is the deterministic scoring plumbing (the oracle
-    replicates the formula), not label accuracy — accuracy is asserted
-    separately on crafted fixtures in tests/test_text.py.
-    """
-    docs = load(spark, sf_dir, "documents")
-    tok = tokens("text")
-    base = docs.select(
-        "doc_id",
-        "lang",
-        "n_chars",
-        F.size(tok).alias("n_tokens"),
-        stopword_count(tok).alias("n_stop"),
-        F.length(F.regexp_replace("text", r"[^一-鿿]", "")).alias("n_cjk"),
-    )
-    en_score = F.col("n_stop").cast("double") / F.col("n_tokens")
-    cjk_score = F.col("n_cjk").cast("double") / F.greatest(
-        F.col("n_chars"), F.lit(1).cast("bigint")
-    )
-    return base.select(
-        "doc_id",
-        F.col("lang").alias("labeled_lang"),
-        # trunc6, not round(6): rational quotients can land on .xxxxxx5
-        # boundaries where Spark's BigDecimal half-round and DuckDB's
-        # arithmetic round disagree (functions/exact.py documents the
-        # observed 1-in-5000 case on exactly this stopword ratio)
-        trunc6(en_score).alias("en_score"),
-        trunc6(cjk_score).alias("cjk_score"),
-        F.when(cjk_score > 0.2, "zh")
-        .when(en_score >= 0.03, "en")
-        .otherwise("unknown")
-        .alias("predicted_lang"),
     )
 
 
@@ -438,31 +328,6 @@ def c04_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "c04_fingerprint",
-    driver=False,  # rotated out r14 (r13-green; still registered+oracle-backed)
-    oracle="""
-    SELECT
-      doc_id,
-      md5(lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))) AS fingerprint,
-      length(regexp_replace(trim(text), '\\s+', ' ', 'g')) AS norm_len
-    FROM documents
-    """,
-)
-def c04_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4e: canonical document fingerprint — md5 over whitespace-normalized,
-    lowercased text. The join key for exact dedup across shards/snapshots
-    (see operators/dedup.py C1). Per-row, no shuffle.
-    """
-    docs = load(spark, sf_dir, "documents")
-    norm = F.regexp_replace(F.trim("text"), r"\s+", " ")
-    return docs.select(
-        "doc_id",
-        F.md5(F.lower(norm)).alias("fingerprint"),
-        F.length(norm).alias("norm_len"),
-    )
-
-
 # --------------------------------------------------------------------------
 # C4g — PII redaction (regex scrub, the pre-training hygiene pass)
 # --------------------------------------------------------------------------
@@ -506,7 +371,7 @@ def redact_pii(docs: DataFrame, text_col: str = "text") -> DataFrame:
         '{PHONE_RE}')) AS INT) AS n_phones
     FROM documents
     """,
-    driver=True,  # promoted r14: fresh oracle-backed rotation (VERDICT r13 task 8)
+    driver=True,
 )
 def c04_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4g: PII redaction — emails/phones scrubbed to placeholders with
@@ -799,7 +664,7 @@ _TOP_BG_MAX = 0.06  # ...and most-frequent-bigram share <= this
 
 @query(
     "c04_repetition_filter",
-    driver=False,  # rotated out r8 (driver-green r7); family keeps an in-window rep
+    driver=False,
     oracle=f"""
     WITH w AS (
       SELECT doc_id, string_split(text, ' ') AS ws FROM documents
@@ -930,7 +795,7 @@ def winnow_fingerprints(
 
 @query(
     "c04_winnowing",
-    driver=True,  # re-promoted r13 rotation (driver-green r7, stale since): document-fingerprint rep; c04_lang_id rotated out
+    driver=True,
     oracle=f"""
     WITH grams AS (
       SELECT doc_id,
@@ -957,7 +822,7 @@ def c04_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "c04_unigram_logprob",
-    driver=False,  # rotated out r8 (driver-green r7); family keeps an in-window rep
+    driver=False,
     oracle=f"""
     WITH td AS (
       SELECT doc_id, token, COUNT(*) AS cnt
@@ -1033,7 +898,7 @@ def c04_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "c04_length_histogram",
-    driver=False,  # rotated out r8 (driver-green r7); family keeps an in-window rep
+    driver=False,
     oracle=f"""
     SELECT
       CAST(floor(ln(greatest(n_tok, 1)) / ln(2)) AS BIGINT) AS log2_bucket,
@@ -1153,92 +1018,6 @@ def c04_model_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         trunc6(F.col("raw_score")).alias("model_score"),
         (F.col("raw_score") > 0.0).alias("keep_doc"),
     )
-
-
-# --------------------------------------------------------------------------
-# C4 — compression-ratio quality signal (boilerplate/duplication detector)
-# --------------------------------------------------------------------------
-def compression_ratio(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """(doc_id, n_bytes, n_compressed, compress_ratio): per-doc zlib
-    compressibility — the classic cheap quality signal (highly
-    compressible text is boilerplate, templating, or repetition; nearly
-    incompressible text is often binary junk or high-entropy noise; both
-    tails get filtered before pretraining).
-
-    zlib is a sequential codec, so this is an honest Python path —
-    Arrow-batched ``mapInPandas`` (the C5 codec discipline), one pass,
-    no shuffle. DEFLATE output is deterministic for a fixed zlib version
-    and level, and the ratio is a quotient of exact integers, so the
-    operator is reproducible run-to-run on a pinned environment. The
-    ratio is TRUNCATED at 1e-6 via exact integer floor-division (the
-    trunc6 discipline) so the oracle's integer math reproduces it bit
-    for bit — round() halfway cases differ between numpy and SQL.
-    """
-    import pandas as pd
-
-    def run(batches):
-        import zlib
-
-        for pdf in batches:
-            raw = pdf[text_col].fillna("").str.encode("utf-8")
-            n_bytes = raw.str.len().astype("int64")
-            n_comp = raw.map(
-                lambda b: len(zlib.compress(b, ZLIB_LEVEL))
-            ).astype("int64")
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": n_bytes,
-                    "n_compressed": n_comp,
-                    "compress_ratio": (
-                        n_comp * 1_000_000 // n_bytes.where(n_bytes > 0, 1)
-                        / 1e6
-                    ),
-                }
-            )
-
-    return docs.select("doc_id", text_col).mapInPandas(
-        run,
-        "doc_id long, n_bytes long, n_compressed long, compress_ratio double",
-    )
-
-
-def _zlib_pin_values() -> str:
-    from stock_data_pipeline_spark.functions.zlib_pins import PINS
-
-    return ",\n      ".join(f"('{h}', {n})" for h, n in sorted(PINS.items()))
-
-
-@query(
-    "c04_compression_ratio",
-    driver=False,  # rotated out r8 (driver-green r7); family keeps an in-window rep
-    oracle=f"""
-    WITH pins(h, n_comp) AS (VALUES
-      {_zlib_pin_values()}
-    ),
-    d AS (SELECT doc_id, coalesce(text, '') AS t FROM documents)
-    SELECT d.doc_id,
-           CAST(strlen(t) AS BIGINT) AS n_bytes,
-           CAST(p.n_comp AS BIGINT) AS n_compressed,
-           ((p.n_comp * 1000000) // greatest(strlen(t), 1)) / 1000000.0
-             AS compress_ratio
-    FROM d JOIN pins p ON md5(t) = p.h
-    """,
-)
-def c04_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4: per-doc zlib compression ratio, digest-oracle-backed.
-
-    DuckDB has no zlib, so the oracle joins the live documents table
-    against the fixture-pinned (md5(text) → compressed size) map in
-    ``functions/zlib_pins.py`` — the c05_frame_sample pattern with the
-    recompute replaced by a content-addressed pin (doc_id-free, so one
-    map serves all three fixture scales; an unpinned text DROPS its row
-    and fails the row-count gate loudly). Also checked against a local
-    single-process recompute and planted high/low-entropy documents in
-    tests/test_text.py. Promoted into the driver window in the late-r7
-    rotation (the second r7 session reopened the frozen window).
-    """
-    return compression_ratio(load(spark, sf_dir, "documents"))
 
 
 # --------------------------------------------------------------------------
@@ -1530,8 +1309,6 @@ def bigram_pmi(
     CROSS JOIN tot CROSS JOIN btot
     WHERE bgc.c_xy >= {PMI_MIN_COUNT}
     """,
-    # re-promoted r13 rotation (driver-green r10, stale since): C4's
-    # collocation/token-stat rep; c04_top_tokens rotated out this round
     driver=True)
 def c04_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4o: bigram PMI collocation mining over ``documents`` — the

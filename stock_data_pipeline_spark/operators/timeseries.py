@@ -124,7 +124,7 @@ def b03_ohlcv_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM events
     ) WHERE rn = 1
     """,
-    driver=False,  # rotated out r13 (driver-green r12); B7 family rep is the re-promoted b07_asof_join
+    driver=False,
 )
 def b07_latest_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B7a: latest event per key — the "current price per ticker" snapshot
@@ -160,8 +160,6 @@ def b07_latest_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
       ON p.user_id = c.user_id AND p.ts >= c.ts
     """,
-    # re-promoted r13 rotation (driver-green r9-r10, stale since): B7's
-    # in-window rep; b07_latest_per_key rotated out this round
     driver=True,
 )
 def b07_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -211,8 +209,6 @@ def b07_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "b07_asof_tolerance",
-    # demoted in the round-9 rotation: driver-green r8; B7 rep is the re-promoted b07_asof_join;
-    # stays on the full bench/oracle-parity surface
     driver=False,
     oracle="""
     SELECT p.event_id, p.user_id, p.ts, p.value,
@@ -368,7 +364,7 @@ def b07_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM spine s LEFT JOIN hourly h
       ON s.event_type = h.event_type AND s.bucket = h.bucket
     """,
-    driver=False,  # demoted in the r12 rotation (r11-green)
+    driver=False,
 )
 def b28_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B28: gap-filled hourly series — generate the dense per-key hour spine
@@ -531,7 +527,7 @@ def gap_fill_hourly(
     FROM lineitem
     GROUP BY l_returnflag, date_trunc('month', l_shipdate)
     """,
-    driver=True,  # promoted r14: fresh oracle-backed rotation (VERDICT r13 task 8)
+    driver=True,
 )
 def b31_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B31: VWAP — quantity-weighted average price per entity per time
@@ -579,7 +575,7 @@ def b31_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
      AND c.ts <= p.ts
     GROUP BY p.event_id, p.user_id, p.ts
     """,
-    driver=True,  # re-promoted r13 rotation (driver-green r10, stale since): range-join shape returns in-window
+    driver=True,
 )
 def b30_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B30: interval join — per purchase, count/sum the same user's clicks
@@ -941,7 +937,6 @@ FROM rec r JOIN ev e ON e.user_id = r.user_id AND e.i = r.i
 """
 
 
-# rotated out r14 (r13-green; still registered+oracle-backed)
 @query("b29_ema_rsi", oracle=_B29_SQL, driver=False)
 def b29_ema_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B29: per-user EMA(α=0.2) and RSI(14) over the event stream — the
@@ -953,7 +948,7 @@ def b29_ema_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Oracle-backed since round 7 via the recursive-CTE replay of pandas'
     ewm loop (see ``_B29_SQL``) — bit-exact, not tolerance-compared.
-    Driver-verified since the r12 rotation. The ORACLE's iteration count
+    The ORACLE's iteration count
     is the longest per-key chain, so skew-regime sweeps substitute it
     (tools/window_sweep.py) and the engine's skew behavior is pinned by
     tests/test_timeseries_oracle.py::test_engine_matches_pandas_on_skewed_chain.
@@ -979,8 +974,6 @@ def b29_ema_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM customer
     ) WHERE bal_rank <= 3
     """,
-    # rotated out r13 (driver-green r12); B8 family rep is the promoted
-    # b87_momentum_rank (dense-rank deciles, bigger shape)
     driver=False,
 )
 def b08_rank_in_group(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1034,7 +1027,7 @@ def b08_rank_in_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
     """,
-    driver=True,  # re-promoted r13 rotation (driver-green r9, stale since): B9's ROWS-frame rep; b56/b78 rotated out this round
+    driver=True,
 )
 def b09_moving_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B9: lag / 5-row moving average / running total per key.
@@ -1085,7 +1078,7 @@ def b09_moving_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE dur_s IS NOT NULL
     GROUP BY user_id
     """,
-    driver=False,  # demoted in the r12 rotation (r11-green); stays a bench headline
+    driver=False,
 )
 def b34_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B34: time-weighted average value per key — each observation weighted
@@ -1144,7 +1137,7 @@ _HOUR_US = 3_600_000_000
       RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW
     )
     """,
-    driver=False,  # rotated out r14 (r13-green; still registered+oracle-backed)
+    driver=False,
 )
 def b40_trailing_hour_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B40: per-event trailing-hour rollup — a TIME-based RANGE frame

@@ -302,7 +302,7 @@ def bpe_encode(
             # fillna first: NULL text otherwise propagates NaN through the
             # .str chain and the per-row iteration raises in the Arrow
             # worker, failing the whole job — a null doc is (0 tokens,
-            # 0 words), same convention as compression_ratio
+            # 0 words)
             words = (
                 pdf[text_col].fillna("").str.lower().str.strip().str.split(r"\s+")
             )
@@ -373,8 +373,6 @@ def _bpe_fixed_oracle() -> str:
 
 @query(
     "c04_bpe_apply_fixed",
-    # demoted in the round-9 rotation: ledger-closed one-shot (driver-green r8); c04 stays in-window via c04_bigram_pmi;
-    # stays on the full bench/oracle-parity surface
     driver=False,
     oracle=_bpe_fixed_oracle(),
 )
@@ -425,8 +423,8 @@ def c04_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("c04_bpe_token_counts", driver=False)
 def c04_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4: per-doc token counts under the corpus-trained BPE tokenizer —
-    the real-tokenizer upgrade of c04_token_count_bpe's regex
-    approximation. Rows-only (training + sequential encode aren't
+    the real-tokenizer upgrade of the regex approximation in
+    c04_text_metrics' ``bpe_tokens``. Rows-only (training + sequential encode aren't
     SQL-expressible); invariants tested: n_tokens is bounded below by
     n_words (every word is ≥1 token) and above by character count + words
     (no merges at all)."""

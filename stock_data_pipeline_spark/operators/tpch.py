@@ -60,7 +60,7 @@ def _rev() -> F.Column:
       AND l.l_discount BETWEEN 0.05 AND 0.07
       AND l.l_quantity < 24.0
     """,
-    driver=False,  # rotated out r13 (driver-green r12); pushdown-scan TPC-H rep is the re-promoted b65_q8_market_share
+    driver=False,
 )
 def b63_q6_revenue_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 shape: revenue lost to discounts in a band — a single
@@ -149,7 +149,7 @@ def b64_q4_priority_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE r.r_name = 'ASIA' AND p.p_type = 'ECONOMY'
     GROUP BY CAST(EXTRACT(year FROM o.o_orderdate) AS BIGINT)
     """,
-    driver=True,  # re-promoted r13 rotation (driver-green r10, stale since): 8-table join-tree TPC-H rep; b63/b66 rotated out
+    driver=True,
 )
 def b65_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 shape: NATION_3 suppliers' share of the ECONOMY-part
@@ -205,7 +205,7 @@ def b65_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE p.p_name LIKE '%widget%'
     GROUP BY ns.n_name, CAST(EXTRACT(year FROM o.o_orderdate) AS BIGINT)
     """,
-    driver=False,  # rotated out r13 (driver-green r12); dim-broadcast TPC-H rep is the re-promoted b65_q8_market_share
+    driver=False,
 )
 def b66_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9 shape: profit on widget-line products by supplier nation
@@ -254,7 +254,7 @@ def b66_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM scoped l2
     )
     """,
-    driver=True,  # promoted r14: fresh oracle-backed rotation (VERDICT r13 task 8)
+    driver=True,
 )
 def b67_q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11 shape: parts whose traded value within a nation scope
@@ -568,7 +568,7 @@ GROUP BY s.s_name
 """
 
 
-@query("b73_q21_waiting_supplier", oracle=_Q21_SQL, driver=False)  # demoted in the r12 rotation (r11-green); B6 family rep now b06_join_suite
+@query("b73_q21_waiting_supplier", oracle=_Q21_SQL, driver=False)
 def b73_q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape: the sole-blame supplier — late lines on finished
     multi-supplier orders where NO other supplier was also late. The

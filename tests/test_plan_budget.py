@@ -58,13 +58,12 @@ PLAN_BUDGETS = {
     "b84_up_streaks": (2, 0),
     "b86_seasonal_decompose": (2, 0),    # ONE fact scan (window-form means)
     "c04_model_score": (1, 1),           # weight table broadcasts
-    # round 9: the rotation re-promoted these into the driver window —
-    # pin their audited shapes so a regression can't ride in with them
+    # joins, set ops, grouping sets, percentiles and pivots
     "b05_large_join": (1, 1),            # orders broadcasts at test SF
     "b06_join_suite": (1, 3),            # outer/semi/anti: dims broadcast
     "b07_asof_join": (1, 0),             # one user-keyed window exchange
     "b12_set_ops": (4, 2),               # EXCEPT/INTERSECT two-phase aggs
-    "b13_rollup_cube_sets": (1, 0),      # CUBE = ONE expand + one agg
+    "b13_cube": (1, 0),                  # CUBE = ONE expand + one agg
     "b15_exact_percentiles": (1, 0),
     "b20_pivot": (2, 0),
     "b21_unpivot": (0, 0),               # pure scan + stack, no shuffle

@@ -10,53 +10,27 @@ import re
 from stock_data_pipeline_spark import registry
 
 # One driver-facing name required per SURVEY §2 family. A family is
-# represented by its own prefix OR by a listed bonus query that exercises
-# the same operator class (the round-5 rotation moved several families'
-# driver rows onto the TPC-H/indicator shapes so hard CORRECTNESS
-# coverage can grow past the 50-row window without orphaning a family).
+# represented by its own prefix OR by an in-window query that exercises
+# the same operator class. Every listed prefix must match a query in the
+# window (test_every_listed_representative_is_in_the_window), so a stale
+# alternate cannot hide a family that has lost its representative.
 REQUIRED_DRIVER_FAMILIES: dict[str, list[str]] = {
     "a10": ["a10"], "a13": ["a13"],
-    "b01": ["b01"],
-    # B2 group aggregate: b61's first stage is the exact fixed-point
-    # GROUP BY aggregate (priority × month revenue roll-up) — promoted as
-    # the in-window rep in the late-r7 rotation (b02 itself r1–r6 green)
-    "b02": ["b02", "b61"],
-    "b03": ["b03"], "b04": ["b04"],
-    # B5 large×large join: b58 (TPC-H Q7) is the canonical fact×fact
-    # orderkey join with broadcast dims — in-window rep since late r7
-    "b05": ["b05", "b58"],
-    # B6 outer/semi/anti joins: TPC-H Q21/Q22/Q20 are exists/not-exists/
-    # semi-join chains — the same operator family, bigger shapes
-    "b06": ["b06", "b73", "b74", "b77"],
-    # B7 as-of/point-in-time: b85 is the point-in-time SCD join
-    "b07": ["b07", "b85"],
+    "b01": ["b01"], "b02": ["b02"], "b03": ["b03"], "b04": ["b04"],
+    "b05": ["b05"], "b06": ["b06"], "b07": ["b07"],
     # B8 ranking windows: b87 is dense-rank momentum deciles
-    "b08": ["b08", "b87"],
-    # B9 analytic windows with frames: b56 rolling Sharpe is a textbook
-    # ROWS-BETWEEN-9-PRECEDING frame (in-window since late r7) and b47
-    # value-RANGE was re-promoted r8 so both frame variants are
-    # driver-verified; the Bollinger/ATR/seasonal suites also qualify
-    "b09": ["b09", "b47", "b78", "b79", "b86", "b56"],
-    # B10 sort/limit/top-k: b46 is LATERAL top-k per key (same operator
-    # class, WindowGroupLimit plan) — b10 itself rotated out in round 5;
-    # b42 (TPC-H Q3) is global ORDER BY revenue LIMIT 10, the canonical
-    # TakeOrderedAndProject shape, promoted in the round-7 rotation
-    "b10": ["b10", "b46", "b42"],
+    "b08": ["b87"],
+    # B9 analytic windows with frames: b79 ATR is a ROWS frame over bars
+    "b09": ["b09", "b79"],
+    # B10 sort/limit/top-k: b42 (TPC-H Q3) is global ORDER BY revenue
+    # LIMIT 10, the canonical TakeOrderedAndProject shape
+    "b10": ["b42"],
     "b11": ["b11"], "b12": ["b12"], "b13": ["b13"],
-    "b14": ["b14"],
-    # B15 approx distinct/percentiles: topk sketch + VaR/CVaR percentiles
-    "b15": ["b15", "b82"],
-    # B16 null handling (+try_*): b16 itself re-promoted r8 so the
-    # NULLIF/COALESCE/<=> core is driver-verified directly (ADVICE r7);
-    # b45 (try_* NULL-on-failure) is driver-green r7
-    "b16": ["b16", "b45"],
+    "b14": ["b14"], "b15": ["b15"], "b16": ["b16"],
     "b17": ["b17"], "b18": ["b18"], "b19": ["b19"],
     "c01": ["c01"], "c02": ["c02"], "c03": ["c03"], "c04": ["c04"],
     "c05": ["c05"], "c06": ["c06"], "c07": ["c07"], "c08": ["c08"],
-    "c09": ["c09"],
-    # C10 graph analytics (new family, late r7): PageRank + triangle
-    # clustering promoted in their debut round
-    "c10": ["c10"],
+    "c09": ["c09"], "c10": ["c10"],
     "flagship": ["flagship"],
 }
 
@@ -77,6 +51,17 @@ def test_every_family_has_a_driver_representative():
         if not any(n.startswith(p) for p in reps for n in names)
     ]
     assert not missing, f"families with no driver-verified query: {missing}"
+
+
+def test_every_listed_representative_is_in_the_window():
+    names = sorted(registry.all_queries())
+    stale = sorted(
+        p
+        for reps in REQUIRED_DRIVER_FAMILIES.values()
+        for p in reps
+        if not any(n.startswith(p) for n in names)
+    )
+    assert not stale, f"listed representatives with no in-window query: {stale}"
 
 
 def test_driver_names_are_a_subset_of_full_surface():

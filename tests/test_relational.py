@@ -62,43 +62,64 @@ def test_column_pruning_reads_only_needed_columns(spark, sf_check_dir):
     assert "l_extendedprice" not in plan  # unprojected column absent from scan
 
 
+# Oracle-backed queries that run Python by design; every other
+# oracle-backed query must stay JVM-side.
+PYTHON_EXEMPT = {
+    # mapInPandas by design (C5 codec surface)
+    "c05_multimodal_features",
+    "c05_image_decode",
+    "c05_audio_energy",
+    "c05_audio_header",
+    "c05_frame_sample",
+    "c05_resize_thumbnail",
+    # applyInPandas O(1)-per-row recurrence by design (B20 surface;
+    # the JVM windowed twin is measured ~6× slower); its oracle is
+    # the recursive-CTE replay, not a JVM plan
+    "b29_ema_rsi",
+    # the production FFD packer (applyInPandas, sequential by
+    # nature); its oracle is the recursive-CTE packing replay
+    "c09_sequence_packing_portable",
+}
+
+
+def _executed_plan(spark, sf_dir, name):
+    return (
+        get(name).fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    )
+
+
 def test_no_python_udf_in_relational_plans(spark, sf_check_dir):
     """EVERY oracle-backed query must stay JVM-side (whole-stage codegen
     territory): no BatchEvalPython / ArrowEvalPython / FlatMapsInPandas.
     Python is reserved for the explicitly-pandas operators (fetch UDFs,
     multimodal decode, sequence packing, EMA recurrence); the
-    oracle-backed ones among them are exempted below."""
+    oracle-backed ones among them are listed in PYTHON_EXEMPT."""
     from stock_data_pipeline_spark.registry import full_oracles
 
-    exempt = {
-        # mapInPandas by design (C5 codec surface)
-        "c05_multimodal_features",
-        "c05_image_decode",
-        "c05_audio_energy",
-        "c05_audio_header",
-        "c05_frame_sample",
-        "c05_resize_thumbnail",
-        # zlib is a sequential codec — mapInPandas, digest-oracled (r7)
-        "c04_compression_ratio",
-        # applyInPandas O(1)-per-row recurrence by design (B20 surface;
-        # the JVM windowed twin is measured ~6× slower); its oracle is
-        # the r7 recursive-CTE replay, not a JVM plan
-        "b29_ema_rsi",
-        # the production FFD packer (applyInPandas, sequential by
-        # nature); its oracle is the r7 recursive-CTE packing replay
-        "c09_sequence_packing_portable",
-    }
     for name in full_oracles():
-        if name in exempt:
+        if name in PYTHON_EXEMPT:
             continue
-        plan = (
-            get(name)
-            .fn(spark, sf_check_dir)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
+        plan = _executed_plan(spark, sf_check_dir, name)
         assert "EvalPython" not in plan and "InPandas" not in plan, name
+
+
+def test_python_exempt_has_no_stale_entries(spark, sf_check_dir):
+    """Every exempt name must still be an oracle-backed query whose plan
+    still runs Python — otherwise the entry hides a regression."""
+    from stock_data_pipeline_spark.registry import full_oracles
+
+    oracles = full_oracles()
+    unknown = sorted(n for n in PYTHON_EXEMPT if n not in oracles)
+    assert not unknown, f"exempt names are not oracle-backed queries: {unknown}"
+    jvm_only = sorted(
+        n
+        for n in PYTHON_EXEMPT
+        if not any(
+            op in _executed_plan(spark, sf_check_dir, n)
+            for op in ("InPandas", "EvalPython")
+        )
+    )
+    assert not jvm_only, f"exempt queries no longer run Python: {jvm_only}"
 
 
 def test_topk_uses_take_ordered(spark, sf_check_dir):

@@ -43,7 +43,6 @@ ALLOWED_MULTI_SCAN = {
     "c03_ivf_fixed_centroids": "assignment + probe + rerank in one query (oracle twin of c03_ann_ivf, same inline-index shape)",
     "c03_ann_lsh": "corpus and query signatures derive from the same table",
     "c03_cosine_topk": "queries are a subset of the corpus (self-join by design)",
-    "c03_embedding_near_dup": "upper-triangle self-join (exact ground truth)",
     "c03_filtered_topk": "queries subset vs corpus self-join",
     "c03_pq_topk": "inline train+encode+rerank (persisted path save_pq_index avoids it)",
     "c03_pq_fixed_books": "inline encode+ADC+rerank (oracle twin of c03_pq_topk, same inline-index shape)",

@@ -5,7 +5,6 @@ multilingual samples — SURVEY.md §2 C4)."""
 from __future__ import annotations
 
 from stock_data_pipeline_spark.operators.multimodal import extract_byte_features
-from stock_data_pipeline_spark.operators.text import c04_lang_id  # noqa: F401
 from stock_data_pipeline_spark.functions.textfns import tokens, word_shingles
 
 from pyspark.sql import functions as F
@@ -33,7 +32,10 @@ def test_lang_id_heuristic_on_crafted_samples(spark, tmp_path, monkeypatch):
     df = _lang_id_frame(spark, samples)
     monkeypatch.setattr(catalog, "load", lambda _s, _d, _n: df)
     monkeypatch.setattr(text_mod, "load", lambda _s, _d, _n: df)
-    out = {r.doc_id: r.predicted_lang for r in text_mod.c04_lang_id(spark, "ignored").collect()}
+    out = {
+        r.doc_id: r.predicted_lang
+        for r in text_mod.c04_text_metrics(spark, "ignored").collect()
+    }
     assert out[0] == "en"
     assert out[1] == "zh"
     assert out[2] == "unknown"
@@ -228,42 +230,6 @@ def test_winnowing_guarantee_and_density(spark):
     assert len(by_doc[3]) < 26 / 2
 
 
-# --------------------------------------------------------------------------
-# Compression-ratio quality signal (round 4)
-# --------------------------------------------------------------------------
-from stock_data_pipeline_spark.catalog import load
-
-
-def test_compression_ratio_matches_local_recompute(spark, sf_dir):
-    import zlib
-
-    from stock_data_pipeline_spark.operators.text import compression_ratio
-
-    docs = load(spark, sf_dir, "documents")
-    got = {r.doc_id: (r.n_bytes, r.n_compressed) for r in compression_ratio(docs).collect()}
-    for r in docs.select("doc_id", "text").collect():
-        raw = (r.text or "").encode("utf-8")
-        assert got[r.doc_id] == (len(raw), len(zlib.compress(raw, 6)))
-
-
-def test_compression_ratio_separates_boilerplate_from_noise(spark):
-    import random
-
-    from stock_data_pipeline_spark.operators.text import compression_ratio
-
-    rng = random.Random(42)
-    noise = "".join(rng.choice("abcdefghijklmnopqrstuvwxyz0123456789") for _ in range(2000))
-    rows = [
-        (0, "spam " * 400),   # boilerplate: compresses hard
-        (1, noise),            # high entropy: barely compresses
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r.doc_id: r.compress_ratio for r in compression_ratio(df).collect()}
-    assert out[0] < 0.1
-    assert out[1] > 0.5
-    assert out[0] < out[1]
-
-
 def test_boilerplate_newline_mode_removes_repeated_lines(spark):
     """Production (newline) mode: a footer line shared by many docs is
     removed everywhere; unique body lines survive in order; a doc made
@@ -424,21 +390,3 @@ def test_bigram_pmi_matches_python_model_and_ranks_collocations(spark):
             want[(x, y)] = (c, math.floor(pmi * 1e6) / 1e6)
     assert got == want
     assert got[("new", "york")][1] > got[("the", "cat")][1]
-
-
-def test_zlib_pins_match_live_fixtures_and_runtime():
-    """The c04_compression_ratio oracle joins against the fixture-pinned
-    (md5(text) → zlib size) map; if the driver ever regenerates testdata
-    or the container's zlib drifts from the pinned version, this fails
-    with the regeneration instruction instead of letting a stale pin
-    reach the driver sweep as a silent row-drop."""
-    import zlib
-
-    from stock_data_pipeline_spark.functions import zlib_pins
-
-    assert zlib.ZLIB_RUNTIME_VERSION == zlib_pins.PINNED_ZLIB_VERSION
-    live = zlib_pins.derive_pins()
-    assert live == zlib_pins.PINS, (
-        "fixture texts or zlib output drifted from functions/zlib_pins.py "
-        "— rerun zlib_pins.regenerate()"
-    )

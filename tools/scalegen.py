@@ -15,8 +15,7 @@ Recipe (seed-free, fully deterministic):
   (FIXTURES.md) stays unique because l_orderkey is offset per copy.
 - events: K=10 copies with fresh event_id AND offset user_id — per-user
   chain lengths stay <=99, so the b19 recursion bound (256) still clears.
-- documents: K=10 copies, fresh doc_id, text BYTE-IDENTICAL (the
-  c04_compression_ratio zlib pins are keyed by text content; each text
+- documents: K=10 copies, fresh doc_id, text BYTE-IDENTICAL (each text
   gains a 10-member exact-dup family, which c01/c02 handle by design).
 - embeddings: K=4 copies (matching the driver's own 0.01->0.1 embedding
   ratio of 4x), fresh vec_id, vectors identical (top-k ties broken by

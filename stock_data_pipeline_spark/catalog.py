@@ -1,118 +1,102 @@
 """Table catalog over the driver-provided parquet test tables.
 
-The canonical tables (TESTDATA.md) live at ``{sf_dir}/{name}.parquet``. Every
-query builder goes through :func:`load` so that
+The canonical tables (TESTDATA.md) live at ``{sf_dir}/{name}.parquet``, and
+:data:`FIXTURE_SCHEMAS` is the one declaration of their columns (the way
+``schemas.SINK_SCHEMAS`` declares the ingest tables). Every query builder
+goes through :func:`load`, which
 
-- runtime confs required for deterministic semantics are pinned on whatever
+- pins the runtime confs required for deterministic semantics on whatever
   session is in use (:func:`session.apply_runtime_confs`),
-- reads are plain ``spark.read.parquet`` scans — Catalyst gets full predicate
-  pushdown / column pruning / partition pruning on them, and
-- at cluster scale the same entry point can grow bucketing / partition
-  discovery without touching call sites.
+- reads with the declared schema — no inference job per load — after a
+  driver-side footer check that the file holds exactly the declared
+  columns (a declared read would turn a missing column into NULLs), and
+- returns a plain parquet scan, so Catalyst keeps full predicate pushdown /
+  column pruning / partition pruning on it.
 """
 
 from __future__ import annotations
 
 import os
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .session import apply_runtime_confs
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+def _table(*fields: tuple[str, T.DataType]) -> T.StructType:
+    return T.StructType([T.StructField(name, dtype, True) for name, dtype in fields])
+
+
+INT, BIGINT, DOUBLE, STRING = (
+    T.IntegerType(), T.LongType(), T.DoubleType(), T.StringType()
+)
+TS = T.TimestampNTZType()  # parquet TIMESTAMP(MICROS), isAdjustedToUTC=false
+
+FIXTURE_SCHEMAS: dict[str, T.StructType] = {
+    "region": _table(("r_regionkey", INT), ("r_name", STRING)),
+    "nation": _table(
+        ("n_nationkey", INT), ("n_name", STRING), ("n_regionkey", INT),
+    ),
+    "customer": _table(
+        ("c_custkey", BIGINT), ("c_name", STRING), ("c_nationkey", INT),
+        ("c_acctbal", DOUBLE), ("c_mktsegment", STRING),
+    ),
+    "supplier": _table(
+        ("s_suppkey", BIGINT), ("s_name", STRING), ("s_nationkey", INT),
+        ("s_acctbal", DOUBLE),
+    ),
+    "part": _table(
+        ("p_partkey", BIGINT), ("p_name", STRING), ("p_brand", STRING),
+        ("p_type", STRING), ("p_size", INT), ("p_retailprice", DOUBLE),
+    ),
+    "orders": _table(
+        ("o_orderkey", BIGINT), ("o_custkey", BIGINT), ("o_orderstatus", STRING),
+        ("o_totalprice", DOUBLE), ("o_orderdate", TS), ("o_orderpriority", STRING),
+    ),
+    "lineitem": _table(
+        ("l_orderkey", BIGINT), ("l_partkey", BIGINT), ("l_suppkey", BIGINT),
+        ("l_linenumber", INT), ("l_quantity", DOUBLE), ("l_extendedprice", DOUBLE),
+        ("l_discount", DOUBLE), ("l_tax", DOUBLE), ("l_returnflag", STRING),
+        ("l_linestatus", STRING), ("l_shipdate", TS),
+    ),
+    "events": _table(
+        ("event_id", BIGINT), ("ts", TS), ("user_id", BIGINT),
+        ("event_type", STRING), ("value", DOUBLE), ("props", STRING),
+    ),
+    "documents": _table(
+        ("doc_id", BIGINT), ("text", STRING), ("lang", STRING),
+        ("source", STRING), ("n_chars", BIGINT),
+    ),
+    "embeddings": _table(
+        ("vec_id", BIGINT), ("embedding", T.ArrayType(T.FloatType())), ("label", INT),
+    ),
+}
+
+TABLES = tuple(FIXTURE_SCHEMAS)
 
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-# Columns stored as TIMESTAMP(NANOS) parquet, which Spark reads as int64
-# (nanosAsLong) — converted to TIMESTAMP_NTZ at µs precision on load.
-_NANOS_TS_COLUMNS = {"events": ("ts",)}
-
-
-def _normalize(name: str, df: DataFrame) -> DataFrame:
-    for col in _NANOS_TS_COLUMNS.get(name, ()):
-        if isinstance(df.schema[col].dataType, T.LongType):
-            # integer DIV keeps full precision (double division would not
-            # past 2^53 ns); session tz is pinned UTC so the LTZ→NTZ cast
-            # is the identity on the wall-clock value.
-            df = df.withColumn(
-                col,
-                F.timestamp_micros(F.expr(f"{col} DIV 1000")).cast("timestamp_ntz"),
-            )
-    return df
-
-
-# Loaded-table memo: a DataFrame is an immutable lazy plan, so handing the
-# same object to every caller is safe and skips the per-call py4j traffic
-# (8 conf round trips + a parquet footer read + plan construction ≈
-# 100-200 ms of pure driver overhead per load). This is ordinary catalog
-# behavior — table metadata is resolved once per (session, table).
-# Keyed by the LIVE SESSION OBJECT (weak), not applicationId: sibling
-# sessions from ``spark.newSession()`` share an appId but have separate
-# SQLConf, and a DataFrame executes under the conf of the session that
-# BUILT it — an appId-keyed memo would silently answer one session's
-# query under another session's timezone.
-_LOAD_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], DataFrame]]"
-_LOAD_MEMO = weakref.WeakKeyDictionary()
-
-# On a memo hit the full conf re-apply is skipped after probing these two
-# sentinels (the confs a host session most plausibly flips mid-run; the
-# timezone pin is also what oracle parity depends on). Wrong sentinel →
-# full re-apply, so a hostile `conf.set` after our first load still heals.
-_SENTINEL_CONFS = (
-    ("spark.sql.session.timeZone", "UTC"),
-    ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-)
-
-
-def _confs_intact(spark: SparkSession) -> bool:
-    try:
-        return all(
-            str(spark.conf.get(key, None)) == value
-            for key, value in _SENTINEL_CONFS
-        )
-    except Exception:  # pragma: no cover - conf inaccessible on host session
-        return False
-
-
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one canonical table as a DataFrame (lazy parquet scan)."""
-    if name not in TABLES:
+    if name not in FIXTURE_SCHEMAS:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    try:
-        per_session = _LOAD_MEMO.setdefault(spark, {})
-    except TypeError:  # session object not weak-referenceable
-        per_session = {}
-    key = (os.path.abspath(sf_dir), name)
-    cached = per_session.get(key)
-    if cached is not None and _confs_intact(spark):
-        return cached
+    import pyarrow.dataset as ds
+
+    path = table_path(sf_dir, name)
+    schema = FIXTURE_SCHEMAS[name]
+    # one footer read on the driver; handles a file or a directory of parts
+    found = ds.dataset(path, format="parquet").schema.names
+    if set(found) != set(schema.fieldNames()):
+        raise ValueError(
+            f"{path}: columns {found} do not match the declared "
+            f"{name} columns {schema.fieldNames()}"
+        )
     apply_runtime_confs(spark)
-    df = _normalize(name, spark.read.parquet(table_path(sf_dir, name)))
-    per_session[key] = df
-    return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLES}
+    return spark.read.schema(schema).parquet(path)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

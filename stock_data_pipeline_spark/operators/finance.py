@@ -160,19 +160,17 @@ def _hourly_series_mat(spark: SparkSession, sf_dir: str) -> DataFrame:
     before re-querying, or it will be served the stale series."""
     import os as _os
 
-    # Same sentinel probe as catalog.load: a series-memo HIT skips
-    # register_views/catalog.load, so a hostile conf.set since the
-    # checkpoint was built would otherwise go unhealed at the CONSUMER's
-    # execution/collection time (b51/b53 mask a poisoned session tz —
-    # their pair-joins cancel a uniform bucket shift — but b88 exposes
-    # the bucket column directly; caught by the r8 hostile sweep).
-    from ..catalog import _confs_intact
+    # Re-pin on every call: a series-memo HIT skips register_views/
+    # catalog.load, so a hostile conf.set since the checkpoint was built
+    # would otherwise go unhealed at the CONSUMER's execution/collection
+    # time (b51/b53 mask a poisoned session tz — their pair-joins cancel a
+    # uniform bucket shift — but b88 exposes the bucket column directly;
+    # caught by the r8 hostile sweep).
     from ..session import apply_runtime_confs
 
-    if not _confs_intact(spark):
-        apply_runtime_confs(spark)
+    apply_runtime_confs(spark)
 
-    key = _os.path.abspath(sf_dir)  # same identity rule as catalog.load
+    key = _os.path.abspath(sf_dir)
     try:
         per_session = _SERIES_MEMO.setdefault(spark, {})
     except TypeError:

@@ -367,15 +367,6 @@ def c09_sequence_packing_portable(spark: SparkSession, sf_dir: str) -> DataFrame
 # --------------------------------------------------------------------------
 # C8c — weighted source mixing (curriculum / domain-proportion control)
 # --------------------------------------------------------------------------
-# Target keep-rates per source: the corpus-mixing move behind every
-# pretraining data recipe (upsample curated sources, downsample crawl).
-# The strata are REAL sources of the fixture corpus (src0..src19) — a
-# review found the original web/wiki/news labels matched nothing, so
-# every per-source branch was dead and only the default rate ever ran.
-_MIX_RATES = {"src0": 35, "src1": 95, "src2": 70}
-_MIX_DEFAULT = 50
-
-
 def source_mix(docs: DataFrame, rates: dict[str, int], default: int) -> DataFrame:
     """Deterministic per-source downsample to target mixture proportions.
 
@@ -389,65 +380,6 @@ def source_mix(docs: DataFrame, rates: dict[str, int], default: int) -> DataFram
     for src, r in rates.items():
         rate = F.when(F.col("source") == src, F.lit(r)).otherwise(rate)
     return docs.withColumn("_keep", b < rate)
-
-
-def _sql_mix_bucket() -> str:
-    return _sql_hash_bucket("doc_id", salt="mix:")
-
-
-@query(
-    "c08_source_mix",
-    driver=False,
-    oracle=f"""
-    SELECT
-      source,
-      COUNT(*) AS n_total,
-      CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-      CAST(SUM(CASE WHEN keep THEN doc_id END) AS BIGINT) AS kept_checksum,
-      floor(CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS DOUBLE)
-            / COUNT(*) * 1000000) / 1000000 AS achieved_rate
-    FROM (
-      SELECT source, doc_id,
-             {_sql_mix_bucket()} <
-               (CASE WHEN source = 'src0' THEN {_MIX_RATES['src0']}
-                     WHEN source = 'src1' THEN {_MIX_RATES['src1']}
-                     WHEN source = 'src2' THEN {_MIX_RATES['src2']}
-                     ELSE {_MIX_DEFAULT} END) AS keep
-      FROM documents
-    )
-    GROUP BY source
-    """,
-)
-def c08_source_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C8c: weighted source mixing — per-source keep-rates rebalance the
-    corpus toward a target domain mixture (35% src0 / 95% src1 / 70%
-    src2, 50% elsewhere — strata that EXIST in the corpus, so the
-    per-source branches and the achieved-rate tracking are genuinely
-    exercised), deterministically and engine-independently.
-
-    The achieved_rate column pins that realized proportions track the
-    targets; kept_checksum pins the exact row set. Scale: one scan, one
-    O(sources) aggregate — the mixture of a 100 TB corpus costs no
-    shuffle of the kept data.
-    """
-    from ..functions.exact import trunc6
-
-    docs = source_mix(
-        load(spark, sf_dir, "documents"), _MIX_RATES, _MIX_DEFAULT
-    )
-    return docs.groupBy("source").agg(
-        F.count("*").alias("n_total"),
-        F.sum(F.when(F.col("_keep"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_kept"),
-        F.sum(F.when(F.col("_keep"), F.col("doc_id")))
-        .cast("bigint")
-        .alias("kept_checksum"),
-        trunc6(
-            F.sum(F.when(F.col("_keep"), 1).otherwise(0)).cast("double")
-            / F.count("*")
-        ).alias("achieved_rate"),
-    )
 
 
 # --------------------------------------------------------------------------

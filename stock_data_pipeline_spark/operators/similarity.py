@@ -886,9 +886,9 @@ def load_ivf_index(
 # query-many — the quantizer training and the corpus assignment pass are
 # index-construction cost, amortized across every subsequent search. The
 # assignment table (~5 B/vector) is persisted; keyed by the LIVE SESSION
-# object (weak — same rationale as catalog._LOAD_MEMO: sibling sessions
-# share an applicationId but a cached frame belongs to the session that
-# built it, and entries must die with their session).
+# object (weak: sibling sessions share an applicationId but a cached
+# frame belongs to the session that built it, and entries must die with
+# their session).
 _IVF_INDEX_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]"
 _IVF_INDEX_CACHE = weakref.WeakKeyDictionary()
 

@@ -32,10 +32,6 @@ RUNTIME_CONFS: dict[str, str] = {
     # Parquet naive timestamps (isAdjustedToUTC=false, as written by
     # pandas/pyarrow) load as TIMESTAMP_NTZ: no session-tz shifting ever.
     "spark.sql.parquet.inferTimestampNTZ.enabled": "true",
-    # Spark has no TIMESTAMP(NANOS) type; read ns columns as raw int64 and
-    # let the catalog convert to TIMESTAMP_NTZ at µs precision (lossless for
-    # this corpus — ns remainders are zero; see catalog._normalize).
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Recursive-CTE depth = longest per-key chain (b19_sessionize_recursive
     # walks one event per level; the default 100 fails past ~99 events per
     # user). Pinned here — not conf.set inside the query — so the setting

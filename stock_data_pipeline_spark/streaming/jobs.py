@@ -18,26 +18,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..catalog import load
+from ..catalog import FIXTURE_SCHEMAS, load
 from ..registry import query
 
 # On-disk schema: ts is TIMESTAMP(MICROS) parquet without timezone →
 # TIMESTAMP_NTZ; read_event_stream casts it to event-time TIMESTAMP (LTZ)
 # for watermarks (session tz pinned UTC, so the cast is wall-clock
-# identity). Earlier driver drops stored ts as TIMESTAMP(NANOS)/int64 —
-# the batch path (catalog._normalize) stays type-defensive for that.
-EVENTS_RAW_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampNTZType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
-)
+# identity).
+EVENTS_RAW_SCHEMA = FIXTURE_SCHEMAS["events"]
 
 
 # --------------------------------------------------------------------------
@@ -299,7 +288,7 @@ def recursive_sessionize(
     from ..catalog import register_views
 
     # Recursion depth limit is pinned in session.RUNTIME_CONFS (which
-    # register_views→load re-applies on any session), not set here: a
+    # every catalog.load re-pins on the calling session), not set here: a
     # query must not mutate host-session conf as a side effect.
     register_views(spark, sf_dir)
     return spark.sql(

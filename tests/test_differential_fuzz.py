@@ -1,7 +1,7 @@
 """Differential query fuzzing: hypothesis-generated relational queries run
 on BOTH engines (SURVEY.md §5.4 extended).
 
-The per-query oracles in ``tests/test_oracle_parity.py`` verify the 173
+The per-query oracles in ``tests/test_oracle_parity.py`` verify the
 hand-written query/oracle pairs; this module closes the complementary gap —
 systematic coverage of the *composition space* (filter × group × aggregate ×
 join) that hand-written queries sample only pointwise. Each example builds a

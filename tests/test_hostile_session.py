@@ -9,7 +9,6 @@ tests prove that healing works end-to-end."""
 
 from __future__ import annotations
 
-from stock_data_pipeline_spark.catalog import load
 from stock_data_pipeline_spark.registry import get
 
 # Timestamp-sensitive driver-facing queries: a timezone shift would move
@@ -34,22 +33,9 @@ def test_hostile_timezone_session_heals(spark, sf_dir):
     assert hostile.conf.get("spark.sql.session.timeZone") == "UTC"
 
 
-def test_sibling_sessions_do_not_share_catalog_memo(spark, sf_dir):
-    """A DataFrame executes under the conf of the session that built it;
-    the catalog memo must therefore never hand session A's frame to
-    session B (sessions share an applicationId)."""
-    df_main = load(spark, sf_dir, "events")
-    sib = spark.newSession()
-    df_sib = load(sib, sf_dir, "events")
-    assert df_main is not df_sib
-    # same session -> memo hit
-    assert load(spark, sf_dir, "events") is df_main
-    assert load(sib, sf_dir, "events") is df_sib
-
-
 def test_mid_run_conf_flip_heals(spark, sf_dir):
-    """A hostile conf.set AFTER a memo hit must trigger re-pinning on the
-    next load (the sentinel-probe path in catalog._confs_intact)."""
+    """A hostile conf.set between two calls must be re-pinned by the
+    next call (catalog.load pins the runtime confs on every load)."""
     before = _rows(get("b17_hourly_window_agg").fn(spark, sf_dir))
     spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
     after = _rows(get("b17_hourly_window_agg").fn(spark, sf_dir))
@@ -58,8 +44,8 @@ def test_mid_run_conf_flip_heals(spark, sf_dir):
 
 
 def test_series_memo_hit_heals_conf_poisoning(spark, sf_dir):
-    """The finance hourly-series localCheckpoint memo must re-probe the
-    conf sentinels on a HIT: b51 warms the memo, a hostile tz lands,
+    """The finance hourly-series localCheckpoint memo must re-pin the
+    runtime confs on a HIT: b51 warms the memo, a hostile tz lands,
     then b88 — whose builder reads only `_hourly_series_mat` (a
     series-memo hit, no catalog.load) — must still execute and collect
     under re-pinned UTC. Regression for the r8 hostile-sweep find:

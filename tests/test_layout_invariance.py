@@ -17,7 +17,7 @@ import os
 import pyarrow.parquet as pq
 import pytest
 
-from stock_data_pipeline_spark.catalog import TABLES
+from stock_data_pipeline_spark.catalog import TABLES, load
 from stock_data_pipeline_spark.registry import get
 
 from .oracle import normalize
@@ -73,3 +73,11 @@ def test_split_layout_is_bit_identical(spark, sf_dir, split_sf_dir, name):
             f"{name}.{col}: {int((~same).sum())} of {len(a)} rows differ "
             f"between single-file and {_K}-file layouts"
         )
+
+
+def test_split_layout_reads_the_declared_schema(spark, split_sf_dir):
+    """The declared catalog schema is what Spark would infer from the
+    part-file directories too (nullability included)."""
+    for t in TABLES:
+        inferred = spark.read.parquet(os.path.join(split_sf_dir, f"{t}.parquet")).schema
+        assert load(spark, split_sf_dir, t).schema == inferred, t

@@ -54,9 +54,8 @@ def _rows(df):
 
 
 def _write_events(tmp_path_factory, rows, name):
-    """Write an events fixture with the real fixture's arrow schema so
-    the catalog's ns-timestamp normalization applies identically; link
-    the untouched catalog tables beside it."""
+    """Write an events fixture with the real fixture's arrow schema (the
+    catalog's declared one); link the untouched catalog tables beside it."""
     import os
 
     from stock_data_pipeline_spark.catalog import TABLES

@@ -18,6 +18,13 @@ from stock_data_pipeline_spark.operators.timeseries import (
     with_indicators,
 )
 
+# Target keep-rates per source for the source_mix checks. The strata are
+# REAL sources of the fixture corpus (src0..src19) — a review found the
+# original web/wiki/news labels matched nothing, so every per-source branch
+# was dead and only the default rate ever ran.
+_MIX_RATES = {"src0": 35, "src1": 95, "src2": 70}
+_MIX_DEFAULT = 50
+
 
 def test_hash_split_is_deterministic_and_partition_invariant(spark, sf_check_dir):
     docs = load(spark, sf_check_dir, "documents")
@@ -142,8 +149,6 @@ def test_source_mix_is_independent_of_split_assignment(spark, sf_dir):
     train/val/test buckets: the kept fraction inside 'train' and outside
     it should both track the target rate (within a loose tolerance)."""
     from stock_data_pipeline_spark.operators.sampling import (
-        _MIX_DEFAULT,
-        _MIX_RATES,
         source_mix,
         with_split,
     )
@@ -411,23 +416,23 @@ def test_source_mix_rates_actually_differentiate_strata(spark, sf_check_dir):
     web/wiki/news labels matched nothing, so every branch silently fell
     to the default). Achieved rates must track each configured target
     and differ from the default for the configured strata."""
-    from stock_data_pipeline_spark.operators.sampling import (
-        _MIX_DEFAULT,
-        _MIX_RATES,
-    )
-    from stock_data_pipeline_spark.registry import get
+    from stock_data_pipeline_spark.operators.sampling import source_mix
 
+    from pyspark.sql import functions as F
+
+    docs = load(spark, sf_check_dir, "documents")
     docs_sources = {
-        r.source
-        for r in load(spark, sf_check_dir, "documents")
-        .select("source").distinct().collect()
+        r.source for r in docs.select("source").distinct().collect()
     }
     missing = set(_MIX_RATES) - docs_sources
     assert not missing, f"configured mix strata absent from corpus: {missing}"
 
     rates = {
         r.source: r.achieved_rate
-        for r in get("c08_source_mix").fn(spark, sf_check_dir).collect()
+        for r in source_mix(docs, _MIX_RATES, _MIX_DEFAULT)
+        .groupBy("source")
+        .agg(F.avg(F.col("_keep").cast("double")).alias("achieved_rate"))
+        .collect()
     }
     for src, target in _MIX_RATES.items():
         assert abs(rates[src] - target / 100.0) < 0.12, (src, rates[src])

@@ -21,6 +21,7 @@ per session; what must survive in-suite is the RECIPE's correctness:
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
@@ -33,6 +34,7 @@ from pyspark.sql import functions as F
 from stock_data_pipeline_spark.catalog import TABLES, load
 
 _K = 4
+_SCALEGEN = os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools", "scalegen.py")
 _SRC = "/root/testdata/sf0.001"
 
 
@@ -40,7 +42,7 @@ _SRC = "/root/testdata/sf0.001"
 def twin_dir(tmp_path_factory):
     d = str(tmp_path_factory.mktemp("scalegen_twin"))
     proc = subprocess.run(
-        [sys.executable, "/root/repo/tools/scalegen.py", "0.001", str(_K), d],
+        [sys.executable, _SCALEGEN, "0.001", str(_K), d],
         capture_output=True,
         text=True,
         timeout=600,

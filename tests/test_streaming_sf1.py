@@ -38,6 +38,7 @@ from stock_data_pipeline_spark.streaming.jobs import (
 )
 
 _SF1 = os.environ.get("SPARK_GRAFT_SF1_DIR", "/tmp/scaledata/sf1")
+_SCALEGEN = os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools", "scalegen.py")
 _N_CHUNKS = 4
 
 
@@ -65,7 +66,7 @@ def sf1_dir(tmp_path_factory):
     vanished (host restart) — same recipe the sweeps use."""
     if not os.path.isfile(os.path.join(_SF1, "events.parquet")):
         proc = subprocess.run(
-            [sys.executable, "/root/repo/tools/scalegen.py", "0.1", "10", _SF1],
+            [sys.executable, _SCALEGEN, "0.1", "10", _SF1],
             capture_output=True,
             text=True,
             timeout=900,

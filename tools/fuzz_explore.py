@@ -7,10 +7,15 @@ Usage: python tools/fuzz_explore.py <sf_dir> <n_per_shape> <seed> [shape...]
 With no shape names, sweeps every shape. Prints one "<shape>: N plans OK"
 line per shape and a final EXPLORE_OK line.
 """
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
-SF = sys.argv[1]
+# Explore the checkout this file is in: the driver imports the package via
+# sys.path, the Python UDF workers from their working directory.
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+SF = os.path.abspath(sys.argv[1])
+os.chdir(ROOT)
 N = int(sys.argv[2])
 SEED = int(sys.argv[3])
 ONLY = set(sys.argv[4:])

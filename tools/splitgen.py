@@ -21,7 +21,7 @@ K = int(sys.argv[2]) if len(sys.argv) > 2 else 64
 SRC = sys.argv[3] if len(sys.argv) > 3 else f"/root/testdata/sf{_SF}"
 DST = sys.argv[4] if len(sys.argv) > 4 else f"/tmp/splitdata/sf{_SF}-split{K}"
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from stock_data_pipeline_spark.catalog import TABLES  # noqa: E402
 
 for t in TABLES:

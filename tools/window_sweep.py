@@ -3,10 +3,15 @@ physical regime. Usage: python window_sweep.py <regime> [sf_dir]
 regimes: default | skew | nosmj (AQE-off/broadcast-off all-SMJ) | tz (hostile
 timezone poisoned before EVERY query) | parts (shuffle.partitions 1 vs 200,
 hash must be identical AND oracle-green at both)."""
-import sys, hashlib
-sys.path.insert(0, "/root/repo")
+import os, sys, hashlib
+# Sweep the checkout this file is in: the driver imports the package via
+# sys.path, the Python UDF workers from their working directory.
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 regime = sys.argv[1]
 sf = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
+sf = os.path.abspath(sf)
+os.chdir(ROOT)
 
 from pyspark.sql import SparkSession
 import duckdb, pandas as pd

@@ -14,6 +14,10 @@ machine-readable regardless of tail size.
 
 Each query is forced end-to-end with the noop sink (full evaluation of
 every output column — ``count()`` alone would let Spark skip projections).
+
+``BENCH_DETAIL.json["compiles"]`` holds each headline query's Janino
+compile count per timed pass (Spark's ``CodegenMetrics``), so a pass that
+recompiled its generated classes shows in the artifact.
 """
 
 from __future__ import annotations
@@ -94,9 +98,13 @@ def main() -> None:
     )
 
     # Warmup outside the timed region: run every headline query once at the
-    # smallest SF so the timed section measures steady-state execution at
-    # the target SF — not JIT/codegen, Arrow init, Python-worker spinup, or
-    # ML class loading (measured ~2-4 s of one-time cost per cold path).
+    # smallest SF so the timed section measures execution at the target SF
+    # — not Arrow init, Python-worker spinup, or ML class loading (measured
+    # ~2-4 s of one-time cost per cold path). Generated code stays warm
+    # only while the headline set fits the codegen cache get_spark sizes
+    # (session.CODEGEN_CACHE_ENTRIES); a smaller cache recompiles every
+    # query on every pass. Plans that differ by scale (join strategy, AQE)
+    # still compile on the first timed pass.
     # Falls back to warming at sf_dir itself when the tiny fixture is
     # absent (ADVICE r12) — slower warm-up, but the run still completes.
     warm_dir = "/root/testdata/sf0.001"
@@ -114,13 +122,18 @@ def main() -> None:
     # steady-state number and makes round-over-round comparisons
     # meaningful. Each call builds its plan fresh, so every reading
     # includes plan-build time as well as execution.
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compile_count = lambda: codegen.METRIC_COMPILATION_TIME().getCount()  # noqa: E731
     timings: dict[str, float] = {}
+    compiles: dict[str, list[int]] = {name: [] for name in HEADLINE_QUERIES}
     for _ in range(3):
         for name in HEADLINE_QUERIES:
             fn = registry.get(name).fn
+            c0 = compile_count()
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             dt = round(time.perf_counter() - t0, 3)
+            compiles[name].append(compile_count() - c0)
             timings[name] = min(timings.get(name, dt), dt)
 
     total = round(sum(timings.values()), 3)
@@ -132,7 +145,7 @@ def main() -> None:
         "sf": sf,
     }
 
-    detail: dict = {"headline": record}
+    detail: dict = {"headline": record, "compiles": compiles}
 
     def _time_set(names: list[str], at_dir: str, passes: int) -> dict[str, float]:
         out: dict[str, float] = {}

@@ -12,6 +12,7 @@ JVM-side, no Python in the scoring loop.
 
 from __future__ import annotations
 
+import json
 import weakref
 from collections.abc import Iterator  # noqa: F401 (mapInPandas annotations)
 
@@ -402,19 +403,38 @@ def _kmeans_numpy(
     return centers
 
 
-def _centroid_sql(centers: list[list[float]]) -> str:
-    """SQL literal `array(array(...), ...)` for the centroid table.
+def _double_arrays(values: list, depth: int) -> F.Column:
+    """A ``depth``-level nested array<double> literal (centroid tables,
+    PQ codebooks) as ONE string literal through ``from_json``.
 
-    repr() keeps full double precision; 'D' suffix pins DOUBLE type so the
-    parsed literal matches the numpy float64 centroids bit-for-bit.
+    No SQL parse and a fixed number of py4j calls: an ``array(...)``
+    SQL literal of 8×64 doubles is ~10k characters through the ANTLR
+    parser per use, and nested ``F.lit`` costs a round trip per element.
+    ConstantFolding evaluates the ``from_json`` once on the driver, so
+    the optimized plan holds a plain literal; json.dumps writes each
+    float with ``repr`` and Jackson parses it back, so the numpy float64
+    values round-trip bit-for-bit.
     """
-    return (
-        "array("
-        + ",".join(
-            "array(" + ",".join(f"{v!r}D" for v in c) + ")" for c in centers
-        )
-        + ")"
+    ddl = "array<" * depth + "double" + ">" * depth
+    return F.from_json(F.lit(json.dumps(values)), ddl)
+
+
+def _sq_dist(a: F.Column, b: F.Column) -> F.Column:
+    """Squared L2 distance of a float vector ``a`` and a double vector
+    ``b``, summed left to right from 0.0 (the oracles' fold order)."""
+    return F.aggregate(
+        F.zip_with(
+            a, b, lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)
+        ),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
     )
+
+
+def _argmin_cell(vec: F.Column, centers: list[list[float]]) -> F.Column:
+    """0-based index of the nearest centroid (first one on ties)."""
+    dists = F.transform(_double_arrays(centers, 2), lambda c: _sq_dist(vec, c))
+    return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
 
 
 def ivf_index(
@@ -457,11 +477,6 @@ def ivf_index(
     centers = _kmeans_numpy(x, n_cells, seed)
     centers_list = [list(map(float, c)) for c in centers]
 
-    # One parsed SQL expression instead of n_cells·dim nested F.lit()
-    # Column objects: each lit is a py4j round trip, and the literal is
-    # rebuilt for assignment AND probing — ~2k driver→JVM calls per query
-    # that a single expr() string parse replaces (~0.5 s saved per stage
-    # at any scale; it's pure driver overhead). See assign_to_cells.
     return assign_to_cells(feats, centers_list), centers_list
 
 
@@ -479,13 +494,9 @@ def _probe_cells(
     probes = queries.select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
-        F.posexplode(F.expr(_centroid_sql(centers))).alias("cell", "centroid"),
+        F.posexplode(_double_arrays(centers, 2)).alias("cell", "centroid"),
     )
-    sq_dist = F.expr(
-        "aggregate(zip_with(q_emb, centroid, (x, y) -> "
-        "(cast(x as double) - y) * (cast(x as double) - y)), "
-        "cast(0.0 as double), (acc, v) -> acc + v)"
-    )
+    sq_dist = _sq_dist(F.col("q_emb"), F.col("centroid"))
     w = Window.partitionBy("query_id").orderBy(F.asc("cell_dist"), F.asc("cell"))
     cols = ["query_id", "cell"] + (["q_emb"] if keep_q_emb else [])
     return (
@@ -585,15 +596,8 @@ def assign_to_cells(
     """(vec_id, cell) for ``vectors`` against a FIXED centroid list — the
     map-side argmin expression shared by index build and incremental
     ingest. No shuffle, no Python."""
-    dists = F.expr(
-        f"transform({_centroid_sql(centers)}, c -> "
-        "aggregate(zip_with(embedding, c, (x, y) -> "
-        "(cast(x as double) - y) * (cast(x as double) - y)), "
-        "cast(0.0 as double), (acc, v) -> acc + v))"
-    )
     return vectors.select(
-        "vec_id",
-        (F.array_position(dists, F.array_min(dists)) - 1).cast("int").alias("cell"),
+        "vec_id", _argmin_cell(F.col("embedding"), centers).alias("cell")
     )
 
 
@@ -1228,18 +1232,16 @@ def pq_train(
     return books
 
 
-def _books_sql(books: list[list[list[float]]]) -> str:
-    """3-level SQL literal: array(book_0, ..., book_{n_sub-1})."""
-    return "array(" + ",".join(_centroid_sql(b) for b in books) + ")"
-
-
 def _recon_expr(books: list[list[list[float]]]) -> F.Column:
     """Reconstruction of a ``pq_codes`` column from the codebooks —
     shared by pq_reconstruct and the IVF-PQ ADC pass (1-based
     element_at over 0-based codes)."""
-    return F.expr(
-        f"flatten(transform(pq_codes, (c, i) -> "
-        f"element_at(element_at({_books_sql(books)}, i + 1), c + 1)))"
+    lit = _double_arrays(books, 3)
+    return F.flatten(
+        F.transform(
+            "pq_codes",
+            lambda c, i: F.element_at(F.element_at(lit, i + 1), c + 1),
+        )
     )
 
 
@@ -1260,19 +1262,10 @@ def pq_encode(
             F.expr("array()").cast("array<int>").alias("pq_codes"),
         ).limit(0)
     d_sub = len(books[0][0])
-    code_exprs = []
-    for m, book in enumerate(books):
-        sub = f"slice(embedding, {m * d_sub + 1}, {d_sub})"
-        dists = (
-            f"transform({_centroid_sql(book)}, c -> "
-            f"aggregate(zip_with({sub}, c, (x, y) -> "
-            "(cast(x as double) - y) * (cast(x as double) - y)), "
-            "cast(0.0 as double), (acc, v) -> acc + v))"
-        )
-        code_exprs.append(
-            f"cast(array_position({dists}, array_min({dists})) - 1 as int)"
-        )
-    codes = F.expr("array(" + ",".join(code_exprs) + ")")
+    codes = F.array(*(
+        _argmin_cell(F.slice("embedding", m * d_sub + 1, d_sub), book)
+        for m, book in enumerate(books)
+    ))
     return vectors.select("vec_id", codes.alias("pq_codes"))
 
 

@@ -13,6 +13,14 @@ a 1000-executor cluster:
   (and match the DuckDB oracle used by the tests).
 - Shuffle partitions default to a CPU-derived value locally; on a real
   cluster AQE coalescing makes the initial number far less sensitive.
+- A whole-stage-codegen class cache that holds the registry's working set
+  (``CODEGEN_CACHE_ENTRIES``). The cache is JVM-wide and LRU; at Spark's
+  default of 100 classes a pass over more shapes than that recompiles
+  every class on every call. Its size is a static conf, read once when
+  the JVM's first session is built, so it is a builder conf and not a
+  ``RUNTIME_CONFS`` entry (a live ``conf.set`` raises, and
+  ``apply_runtime_confs`` would swallow that). Sessions this module did
+  not build keep Spark's 100.
 """
 
 from __future__ import annotations
@@ -55,6 +63,21 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
+# Entries of Spark's JVM-wide generated-class cache
+# (spark.sql.codegen.cache.maxEntries, default 100). Janino compiles
+# (CodegenMetrics.METRIC_COMPILATION_TIME count) in the first pass of a
+# query set at local[2], sf0.001 / sf0.01 / sf0.1 (BENCHNOTES "Round 21"):
+# the 13 perfbench cold_sweep queries 170 at each scale; the 50-query
+# driver window 1,837 / 1,979 / 2,015; the whole registry 3,350 / 3,551
+# at sf0.001 / sf0.01. The cache evicts in LRU order, so at 100 entries a
+# second cold_sweep pass recompiled 165-167 classes; at this size it
+# compiles none. 770-805 of the registry's classes compile again on every
+# pass even at 8192 entries (their generated code differs between
+# identical calls), so the size follows the largest set the cache can
+# serve: the smallest power of two at least twice the window's 2,015.
+CODEGEN_CACHE_ENTRIES = 4096
+
+
 def default_parallelism() -> int:
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if cpus:
@@ -92,6 +115,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for key, value in RUNTIME_CONFS.items():
         builder = builder.config(key, value)

@@ -288,28 +288,27 @@ def lsh_signatures(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, table, sig) — one row per hash table per vector."""
-    planes = _plane_literals(n_tables, n_planes, dim)
+    planes = _double_arrays(_plane_literals(n_tables, n_planes, dim), 3)
+    bits = F.array(*(F.lit(1 << p) for p in range(n_planes)))
     df = rebalance(df)
-    # One parsed SQL string for ALL table signatures: n_tables·n_planes·dim
-    # nested F.lit() Columns would be ~2k py4j round trips of pure driver
-    # overhead per call site (built once for the corpus, again for the
-    # queries); a single expr() parse replaces them.
-    def _dot(plane: list[float]) -> str:
-        arr = "array(" + ",".join(f"{float(v)!r}D" for v in plane) + ")"
-        return (
-            f"aggregate(zip_with({vec_col}, {arr}, "
-            "(x, y) -> cast(x as double) * y), "
-            "cast(0.0 as double), (acc, v) -> acc + v)"
+
+    def _dot(plane: F.Column) -> F.Column:  # left fold from 0.0, as the oracle
+        return F.aggregate(
+            F.zip_with(F.col(vec_col), plane, lambda x, y: x.cast("double") * y),
+            F.lit(0.0),
+            lambda acc, v: acc + v,
         )
 
-    def _sig(table: list[list[float]]) -> str:
-        terms = [
-            f"(case when {_dot(plane)} > 0.0D then {1 << p} else 0 end)"
-            for p, plane in enumerate(table)
-        ]
-        return "(" + " + ".join(terms) + ")"
+    def _sig(table: F.Column) -> F.Column:
+        return F.aggregate(
+            F.zip_with(
+                table, bits, lambda plane, b: F.when(_dot(plane) > 0.0, b).otherwise(0)
+            ),
+            F.lit(0),
+            lambda acc, v: acc + v,
+        )
 
-    sig_arr = F.expr("array(" + ",".join(_sig(t) for t in planes) + ")")
+    sig_arr = F.transform(planes, _sig)
     # All tables' signatures in one projection + posexplode: the vector is
     # scanned once total, not once per table.
     return df.select(

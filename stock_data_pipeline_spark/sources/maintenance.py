@@ -7,8 +7,8 @@ correction or late re-statement implies the BigQuery MERGE the reference
 would run downstream. This module supplies that capability natively over
 parquet, plus the compaction pass every micro-batch landing zone needs
 (the streaming sink writes one partition per batch —
-streaming/jobs.py::run_stream_to_parquet — which at a 2-minute cadence is
-720 small partitions/day).
+streaming/jobs.py::write_batch_idempotent under run_foreach_batch — which
+at a 2-minute cadence is 720 small partitions/day).
 
 Both operators follow the same atomicity discipline: write the new table
 image to a staging directory, then swap directories — readers never see a

@@ -1,8 +1,8 @@
 """Streaming operators (SURVEY.md §2 B17-B19) in unified batch/stream form.
 
 The reference's "streaming" is Airflow cron micro-batches with strict
-serialization (`max_active_runs=1`, `depends_on_past=True`,
-/root/reference/dags/stock_data_to_gcp.py:76,87,90); Structured Streaming's
+serialization (`max_active_runs=1`, `depends_on_past=True`, the
+reference's dags/stock_data_to_gcp.py:76,87,90); Structured Streaming's
 micro-batch loop is the native replacement (trigger ↔ cron, checkpoint ↔
 Airflow metadata DB, `availableNow` ↔ catch-up run).
 
@@ -12,9 +12,18 @@ oracle-checkable (registered below); applied to ``readStream`` input it is
 the production streaming job (exercised with ``trigger(availableNow=True)``
 in tests/test_streaming.py). One definition, two execution modes — that is
 exactly the unification Structured Streaming promises.
+
+Sinks: :func:`run_stream_to_memory` for tests, and one production runner,
+:func:`run_foreach_batch`, which drives a ``write_batch_*`` body per
+micro-batch (idempotent partitions, OHLCV bar partials, exact or near
+corpus dedup, corpus prep, IVF index append) at a cron-like cadence or
+as an ``availableNow`` catch-up run.
 """
 
 from __future__ import annotations
+
+import math
+from collections import deque
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -177,33 +186,6 @@ def b19_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sessionize(load(spark, sf_dir, "events"), gap_minutes=30)
 
 
-_RECURSIVE_SESSION_SQL = """
-    WITH RECURSIVE ordered AS (
-      SELECT user_id, ts, event_id,
-             ROW_NUMBER() OVER (
-               PARTITION BY user_id ORDER BY ts ASC, event_id ASC
-             ) AS rn
-      FROM events
-    ),
-    walk(user_id, rn, ts, session_seq) AS (
-      SELECT user_id, rn, ts, CAST(1 AS BIGINT) AS session_seq
-      FROM ordered WHERE rn = 1
-      UNION ALL
-      SELECT o.user_id, o.rn, o.ts,
-             w.session_seq + CASE WHEN o.ts > w.ts + INTERVAL 30 MINUTE
-                                  THEN 1 ELSE 0 END
-      FROM ordered o
-      JOIN walk w ON o.user_id = w.user_id AND o.rn = w.rn + 1
-    )
-    SELECT user_id, session_seq,
-           MIN(ts) AS session_start,
-           MAX(ts) AS session_end,
-           COUNT(*) AS n_events
-    FROM walk
-    GROUP BY user_id, session_seq
-"""
-
-
 #: Default recursion-round budget for :func:`recursive_sessionize`. The
 #: uniform fixtures' longest per-user chain is 99 (sf0.1); the
 #: celebrity-skew twin's is ~8,600 — each round is a full self-join
@@ -213,20 +195,21 @@ _RECURSIVE_SESSION_SQL = """
 #: chain with ~2.5x headroom while failing FAST on pathological ones.
 MAX_RECURSION_ROUNDS_DEFAULT = 256
 
-# The GUARDED twin of _RECURSIVE_SESSION_SQL that Spark actually runs:
-# identical text except the recursion reads from a `guarded` projection
-# whose per-row CASE raises (Spark `raise_error`) the moment any
-# non-NULL user's chain position exceeds {max_rounds}. The guard is IN
-# THE PLAN — evaluated during the anchor's first scan, BEFORE any
-# recursive self-join stage launches — mirroring gap_fill_hourly's
-# plan-embedded spine cap, so the builder stays a pure plan constructor
-# (the r11 eager groupBy+collect pre-check both ran a Spark job before
-# the caller asked and froze the measurement at build time).
+# One text for both engines: the DuckDB oracle renders `{rn}` as `rn`,
+# Spark renders it as _RN_GUARD. The recursion reads from the `guarded`
+# projection, so the guard's per-row CASE raises (Spark `raise_error`)
+# the moment any non-NULL user's chain position exceeds {max_rounds}.
+# The guard is IN THE PLAN — evaluated during the anchor's first scan,
+# BEFORE any recursive self-join stage launches — mirroring
+# gap_fill_hourly's plan-embedded spine cap, so the builder stays a pure
+# plan constructor (the r11 eager groupBy+collect pre-check both ran a
+# Spark job before the caller asked and froze the measurement at build
+# time).
 # NULL users are exempt by construction: the recursive join condition
 # `o.user_id = w.user_id` never matches NULL, so a NULL-user chain of
 # any length contributes exactly its rn=1 anchor row and adds no
 # recursion depth — capping it would reject data the walk terminates on.
-_RECURSIVE_SESSION_SQL_GUARDED = """
+_RECURSIVE_SESSION_SQL = """
     WITH RECURSIVE ordered AS (
       SELECT user_id, ts, event_id,
              ROW_NUMBER() OVER (
@@ -235,21 +218,7 @@ _RECURSIVE_SESSION_SQL_GUARDED = """
       FROM events
     ),
     guarded AS (
-      SELECT user_id, ts,
-             CASE WHEN user_id IS NULL OR rn <= {max_rounds} THEN rn
-                  ELSE CAST(raise_error(CONCAT(
-                    'recursive sessionization: user ',
-                    CAST(user_id AS STRING),
-                    ' has an event chain of at least ',
-                    CAST(rn AS STRING),
-                    ' events > max_rounds={max_rounds}; each recursion ',
-                    'round is a full self-join stage, so an uncapped walk ',
-                    'spins for hours instead of erroring. Use the window ',
-                    'formulation (streaming.jobs.sessionize / ',
-                    'b19_sessionization), which handles any chain length ',
-                    'in one shuffle, or raise max_rounds explicitly if ',
-                    'you accept the cost.'
-                  )) AS INT) END AS rn
+      SELECT user_id, ts, {rn} AS rn
       FROM ordered
     ),
     walk(user_id, rn, ts, session_seq) AS (
@@ -270,6 +239,21 @@ _RECURSIVE_SESSION_SQL_GUARDED = """
     GROUP BY user_id, session_seq
 """
 
+_RN_GUARD = """CASE WHEN user_id IS NULL OR rn <= {max_rounds} THEN rn
+                  ELSE CAST(raise_error(CONCAT(
+                    'recursive sessionization: user ',
+                    CAST(user_id AS STRING),
+                    ' has an event chain of at least ',
+                    CAST(rn AS STRING),
+                    ' events > max_rounds={max_rounds}; each recursion ',
+                    'round is a full self-join stage, so an uncapped walk ',
+                    'spins for hours instead of erroring. Use the window ',
+                    'formulation (streaming.jobs.sessionize / ',
+                    'b19_sessionization), which handles any chain length ',
+                    'in one shuffle, or raise max_rounds explicitly if ',
+                    'you accept the cost.'
+                  )) AS INT) END"""
+
 
 def recursive_sessionize(
     spark: SparkSession, sf_dir: str, *, max_rounds: int = MAX_RECURSION_ROUNDS_DEFAULT
@@ -283,7 +267,7 @@ def recursive_sessionize(
     guard rides the plan it re-measures on every execution instead of
     freezing a driver-side pre-check at build time.
     On clean data the CASE is the identity on ``rn``, so results are
-    bit-identical to the unguarded oracle text.
+    bit-identical to the oracle's rendering of the same text.
     """
     from ..catalog import register_views
 
@@ -291,17 +275,18 @@ def recursive_sessionize(
     # every catalog.load re-pins on the calling session), not set here: a
     # query must not mutate host-session conf as a side effect.
     register_views(spark, sf_dir)
-    return spark.sql(
-        _RECURSIVE_SESSION_SQL_GUARDED.format(max_rounds=int(max_rounds))
-    )
+    guard = _RN_GUARD.format(max_rounds=int(max_rounds))
+    return spark.sql(_RECURSIVE_SESSION_SQL.format(rn=guard))
 
 
-@query("b19_sessionize_recursive", oracle=_RECURSIVE_SESSION_SQL)
+@query(
+    "b19_sessionize_recursive", oracle=_RECURSIVE_SESSION_SQL.format(rn="rn")
+)
 def b19_sessionize_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B19 twin on the Spark 4 recursive-CTE surface (WITH RECURSIVE,
     UNION ALL): walk each user's event chain in ts order, bumping the
-    session counter when the 30-minute gap is exceeded. The IDENTICAL SQL
-    text runs on DuckDB as the oracle.
+    session counter when the 30-minute gap is exceeded. The same SQL
+    text, without the round guard, runs on DuckDB as the oracle.
 
     Driver-verified (in the window since r10) but deliberately
     non-headline in bench.py: recursion is the SQL-surface
@@ -417,80 +402,102 @@ def stream_running_ema(events: DataFrame, *, alpha: float = 0.2) -> DataFrame:
     )
 
 
+def _zscore_ring(event_type: str, ring: list[int], ticks, window: int):
+    """One key's step of the b52 rolling z-score (operators/finance.py),
+    shared by both streaming detectors: push each in-order tick
+    ``(ts, event_id, v2)`` — ``v2`` the cent-scaled integer price —
+    through the last-``window`` ring and keep those with |z| > 3.
+    Returns the new ring and the anomaly frame.
+
+    The ring's Σv and Σv² are EXACT integers maintained incrementally
+    (add the entering tick, subtract the leaving one): bit-identical to
+    re-summing the ring but O(1) per row instead of O(window). The
+    statistics then follow the batch SQL's expression sequence (integer
+    sums, then the identical IEEE double ops), so in-order input yields
+    the batch query's flagged set and z-scores bit-for-bit.
+    """
+    import pandas as pd
+
+    ring = deque(ring)
+    sv_i = sum(ring)
+    svv_i = sum(b * b for b in ring)
+    out = {"event_id": [], "event_type": [], "ts": [], "px": [], "zscore": []}
+    for ts, event_id, v2 in ticks:
+        ring.append(v2)
+        sv_i += v2
+        svv_i += v2 * v2
+        if len(ring) > window:
+            gone = ring.popleft()
+            sv_i -= gone
+            svv_i -= gone * gone
+        n = len(ring)
+        if n >= 30:
+            sv = float(sv_i) / 100.0
+            svv = float(svv_i) / 10000.0
+            px = float(v2) / 100.0
+            mu = sv / n
+            var = (svv - sv * sv / n) / (n - 1)
+            if var > 0:
+                z = (px - mu) / math.sqrt(var)
+                if abs(z) > 3.0:
+                    out["event_id"].append(event_id)
+                    out["event_type"].append(event_type)
+                    out["ts"].append(ts)
+                    out["px"].append(px)
+                    out["zscore"].append(math.floor(z * 1000000) / 1000000)
+    return list(ring), pd.DataFrame(out)
+
+
+def _cents(value) -> int:
+    """A tick price as the scaled integer the b52 SQL sums exactly."""
+    return math.floor(float(value) * 100.0 + 0.5)
+
+
+_ZSCORE_OUTPUT = (
+    "event_id bigint, event_type string, ts timestamp, px double, zscore double"
+)
+
+
 def stream_zscore_anomalies(events: DataFrame, *, window: int = 100) -> DataFrame:
     """Streaming twin of the batch b52 spike detector (operators/
     finance.py): per-instrument rolling z-score over the last ``window``
     ticks, emitted as anomalies arrive (outputMode=append).
 
     State per key is the ring buffer of the last ``window`` SCALED-INTEGER
-    ticks — bounded O(keys × window), never history. The statistics are
-    computed with the exact same expression sequence as the batch SQL
-    (integer Σv/Σv², then the identical double ops), so on in-order input
-    the flagged set and z-scores EQUAL the batch query bit-for-bit
-    (asserted in tests/test_streaming.py). Ordering caveat: rows are
-    sorted (ts, event_id) within each micro-batch, but cross-batch
-    out-of-order arrival is not re-buffered — on a disordered feed the
-    live edge is approximate and the batch query is the authority
-    (re-running it is the repair path, same rule as b18 replay).
+    ticks — bounded O(keys × window), never history. The statistics come
+    from :func:`_zscore_ring`, so on in-order input the flagged set and
+    z-scores EQUAL the batch query bit-for-bit (asserted in
+    tests/test_streaming.py). Ordering caveat: rows are sorted
+    (ts, event_id) within each micro-batch, but cross-batch out-of-order
+    arrival is not re-buffered — on a disordered feed the live edge is
+    approximate and the batch query is the authority (re-running it is
+    the repair path, same rule as b18 replay).
     """
-    import math
-
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     def update(key, pdf_iter, state: GroupState):
-        from collections import deque
-
-        (buf_l,) = state.get if state.exists else ([],)
-        buf = deque(buf_l)
-        # running EXACT integer sums: maintained incrementally (add the
-        # entering tick, subtract the leaving one) — bit-identical to
-        # re-summing the ring but O(1) per row instead of O(window)
-        sv_i = sum(buf)
-        svv_i = sum(b * b for b in buf)
+        (ring,) = state.get if state.exists else ([],)
         batch = pd.concat(list(pdf_iter), ignore_index=True).sort_values(
             ["ts", "event_id"]
         )
-        out = {"event_id": [], "event_type": [], "ts": [], "px": [], "zscore": []}
-        for row in batch.itertuples(index=False):
-            v2 = math.floor(float(row.value) * 100.0 + 0.5)
-            buf.append(v2)
-            sv_i += v2
-            svv_i += v2 * v2
-            if len(buf) > window:
-                gone = buf.popleft()
-                sv_i -= gone
-                svv_i -= gone * gone
-            n = len(buf)
-            if n >= 30:
-                # identical op sequence to the batch SQL: exact int sums,
-                # then the same IEEE double expressions
-                sv = float(sv_i) / 100.0
-                svv = float(svv_i) / 10000.0
-                px = float(v2) / 100.0
-                mu = sv / n
-                var = (svv - sv * sv / n) / (n - 1)
-                if var > 0:
-                    z = (px - mu) / math.sqrt(var)
-                    if abs(z) > 3.0:
-                        out["event_id"].append(row.event_id)
-                        out["event_type"].append(key[0])
-                        out["ts"].append(row.ts)
-                        out["px"].append(px)
-                        out["zscore"].append(
-                            math.floor(z * 1000000) / 1000000
-                        )
-        state.update((list(buf),))
-        yield pd.DataFrame(out)
+        ring, out = _zscore_ring(
+            key[0],
+            ring,
+            (
+                (row.ts, row.event_id, _cents(row.value))
+                for row in batch.itertuples(index=False)
+            ),
+            window,
+        )
+        state.update((ring,))
+        yield out
 
     return events.select("event_type", "event_id", "ts", "value").groupBy(
         "event_type"
     ).applyInPandasWithState(
         update,
-        outputStructType=(
-            "event_id bigint, event_type string, ts timestamp, "
-            "px double, zscore double"
-        ),
+        outputStructType=_ZSCORE_OUTPUT,
         stateStructType="buf array<bigint>",
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
@@ -520,71 +527,38 @@ def stream_zscore_anomalies_ordered(
     receives NO further data — under NoTimeout a key that goes quiet
     while other keys advance the watermark would hold its confirmed
     anomalies in state forever.
-
-    Per-tick cost: the ring's Σv and Σv² are EXACT integers maintained
-    incrementally (add entering tick, subtract leaving tick — deque for
-    the ring), bit-identical to re-summing but O(1) per row instead of
-    O(window); the floats are derived from the same integer sums as the
-    batch SQL.
     """
-    import math
-    from collections import deque
-
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     def update(key, pdf_iter, state: GroupState):
         if state.hasTimedOut:
-            p_ts, p_eid, p_v2, ring_l = state.get
+            p_ts, p_eid, p_v2, ring = state.get
         else:
-            p_ts, p_eid, p_v2, ring_l = (
+            p_ts, p_eid, p_v2, ring = (
                 state.get if state.exists else ([], [], [], [])
             )
         pend = list(zip(p_ts, p_eid, p_v2))
-        ring = deque(ring_l)
-        sv_i = sum(ring)
-        svv_i = sum(b * b for b in ring)
         chunks = [] if state.hasTimedOut else list(pdf_iter)
         if chunks:
             batch = pd.concat(chunks, ignore_index=True)
             for row in batch.itertuples(index=False):
                 ts_us = int(pd.Timestamp(row.ts).value // 1000)
-                pend.append(
-                    (ts_us, int(row.event_id),
-                     math.floor(float(row.value) * 100.0 + 0.5))
-                )
+                pend.append((ts_us, int(row.event_id), _cents(row.value)))
         wm_us = state.getCurrentWatermarkMs() * 1000
         pend.sort()  # (ts, event_id) order — the batch query's order
         ready = [r for r in pend if r[0] <= wm_us]
         pend = [r for r in pend if r[0] > wm_us]
 
-        out = {"event_id": [], "event_type": [], "ts": [], "px": [], "zscore": []}
-        for ts_us, eid, v2 in ready:
-            ring.append(v2)
-            sv_i += v2
-            svv_i += v2 * v2
-            if len(ring) > window:
-                gone = ring.popleft()
-                sv_i -= gone
-                svv_i -= gone * gone
-            n = len(ring)
-            if n >= 30:
-                sv = float(sv_i) / 100.0
-                svv = float(svv_i) / 10000.0
-                px = float(v2) / 100.0
-                mu = sv / n
-                var = (svv - sv * sv / n) / (n - 1)
-                if var > 0:
-                    z = (px - mu) / math.sqrt(var)
-                    if abs(z) > 3.0:
-                        out["event_id"].append(eid)
-                        out["event_type"].append(key[0])
-                        out["ts"].append(pd.Timestamp(ts_us * 1000))
-                        out["px"].append(px)
-                        out["zscore"].append(math.floor(z * 1000000) / 1000000)
+        ring, out = _zscore_ring(
+            key[0],
+            ring,
+            ((pd.Timestamp(ts_us * 1000), eid, v2) for ts_us, eid, v2 in ready),
+            window,
+        )
         state.update((
             [r[0] for r in pend], [r[1] for r in pend], [r[2] for r in pend],
-            list(ring),
+            ring,
         ))
         if pend:
             # wake this key when the watermark passes its oldest pending
@@ -593,95 +567,19 @@ def stream_zscore_anomalies_ordered(
             state.setTimeoutTimestamp(
                 max(pend[0][0] // 1000, state.getCurrentWatermarkMs() + 1)
             )
-        yield pd.DataFrame(out)
+        yield out
 
     return events.withWatermark("ts", watermark).select(
         "event_type", "event_id", "ts", "value"
     ).groupBy("event_type").applyInPandasWithState(
         update,
-        outputStructType=(
-            "event_id bigint, event_type string, ts timestamp, "
-            "px double, zscore double"
-        ),
+        outputStructType=_ZSCORE_OUTPUT,
         stateStructType=(
             "pend_ts array<bigint>, pend_eid array<bigint>, "
             "pend_v2 array<bigint>, ring array<bigint>"
         ),
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def make_ema_processor(alpha: float = 0.2):
-    """Build the transformWithState EMA ``StatefulProcessor``.
-
-    Hoisted out of :func:`stream_running_ema_tws` so the processor's
-    lifecycle (init → handleInputRows per micro-batch → close) can ALSO
-    be driven directly against a fake ``StatefulProcessorHandle`` — the
-    non-protobuf state-equivalence twin in tests/test_streaming.py that
-    verifies the processor's state logic in containers where the real
-    Python runner's protobuf wire format is unavailable.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    one_minus = 1.0 - alpha
-
-    class EmaProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "ema_acc", "num double, den double, n bigint"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            num, den, n = (
-                self._state.get() if self._state.exists() else (0.0, 0.0, 0)
-            )
-            batch = pd.concat(list(rows), ignore_index=True).sort_values(
-                ["ts", "event_id"]
-            )
-            for v in batch["value"]:
-                num = float(v) + one_minus * num
-                den = 1.0 + one_minus * den
-                n += 1
-            self._state.update((num, den, n))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "ema": [num / den]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return EmaProcessor()
-
-
-def stream_running_ema_tws(events: DataFrame, *, alpha: float = 0.2) -> DataFrame:
-    """The same per-key running EMA on the ``transformWithStateInPandas``
-    API (Spark 4's arbitrary-state successor to applyInPandasWithState):
-    typed ValueState handles, explicit processor lifecycle, and the path
-    that gains timers/TTL/state-schema-evolution going forward.
-
-    Semantics are asserted identical to :func:`stream_running_ema` in
-    tests/test_streaming.py — one snapshot row per key per micro-batch,
-    O(keys) state (the same three scalars, now in a ValueState cell).
-
-    Runtime requirements: the RocksDB state store provider and the
-    ``protobuf`` package (the API's Python-runner wire format). Where
-    protobuf is absent the full-runner parity test import-skips and the
-    HARNESS-equivalence twin (the processor driven handler-by-handler
-    against a fake state store, vs the applyInPandasWithState operator)
-    carries the check; :func:`stream_running_ema` remains the
-    in-container production path.
-    """
-    return (
-        events.select("user_id", "event_id", "ts", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=make_ema_processor(alpha),
-            outputStructType="user_id bigint, n_events bigint, ema double",
-            outputMode="Update",
-            timeMode="None",
-        )
     )
 
 
@@ -699,6 +597,32 @@ def run_stream_to_memory(
     )
 
 
+def run_foreach_batch(
+    df: DataFrame, body, *, checkpoint: str, cadence: str | None = None
+):
+    """Drive ``body(batch_df, batch_id)`` once per micro-batch of ``df``:
+    every production sink below is one of the ``write_batch_*`` bodies,
+    its extra arguments bound with ``functools.partial``.
+
+    ``cadence=None`` drains what has landed and stops (``availableNow``,
+    the catch-up run). A string is a ``processingTime`` interval, and the
+    query keeps polling the source every interval: this is what consumes
+    ``PipelineSpec.cadence`` ("120 seconds" for the ticker feed, "1 hour"
+    for ratios/statements; SURVEY §1.1 maps the reference's cron
+    schedules), the Structured Streaming replacement for the reference's
+    Airflow ``schedule_interval``.
+    """
+    trigger = (
+        {"availableNow": True} if cadence is None else {"processingTime": cadence}
+    )
+    return (
+        df.writeStream.foreachBatch(body)
+        .option("checkpointLocation", checkpoint)
+        .trigger(**trigger)
+        .start()
+    )
+
+
 # --------------------------------------------------------------------------
 # Exactly-once append sink (fixes the reference's WRITE_APPEND replay bug)
 # --------------------------------------------------------------------------
@@ -709,12 +633,14 @@ def write_batch_idempotent(df: DataFrame, batch_id: int, sink_dir: str) -> None:
     """One micro-batch → one sink partition, idempotently.
 
     The reference append-loads with ``WRITE_APPEND`` under ``retries: 2``
-    (/root/reference/dags/stock_data_to_gcp.py:82,134): a task that wrote
+    (the reference's dags/stock_data_to_gcp.py:82,134): a task that wrote
     then failed before commit double-loads on retry. Here a replayed batch
     OVERWRITES its own ``_batch_id`` partition (dynamic partition
     overwrite touches only that partition), so write-then-crash-then-retry
-    converges to exactly one copy. At 100 TB dynamic overwrite rewrites a
-    micro-batch's worth of files, never the table.
+    converges to exactly one copy. As a :func:`run_foreach_batch` body the
+    checkpoint's offset log gives at-least-once batch delivery and this
+    writer upgrades it to exactly-once table contents. At 100 TB dynamic
+    overwrite rewrites a micro-batch's worth of files, never the table.
     """
     (
         df.withColumn(BATCH_COL, F.lit(batch_id))
@@ -762,29 +688,9 @@ def read_as_of(spark, sink_dir: str, batch_id: int) -> DataFrame:
     )
 
 
-def run_stream_at_cadence(
-    df: DataFrame, sink_dir: str, *, checkpoint: str, cadence: str
-):
-    """Production cadence runner: the idempotent parquet sink driven by a
-    real ``processingTime`` trigger — this is what consumes
-    ``PipelineSpec.cadence`` ("120 seconds" for the ticker feed, "1 hour"
-    for ratios/statements; SURVEY §1.1 maps the reference's cron
-    schedules). Unlike availableNow, the query keeps polling the source
-    every interval — the Structured Streaming replacement for the
-    reference's Airflow ``schedule_interval``.
-    """
-    return (
-        df.writeStream.foreachBatch(
-            lambda bdf, bid: write_batch_idempotent(bdf, bid, sink_dir)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=cadence)
-        .start()
-    )
-
-
-def run_bars_ingest(ticks: DataFrame, partials_dir: str, *, checkpoint: str):
-    """Continuously maintained OHLCV bars, exactly-once, no merge ledger.
+def write_batch_bars(ticks: DataFrame, batch_id: int, partials_dir: str) -> None:
+    """foreachBatch body: continuously maintained OHLCV bars, exactly-once,
+    no merge ledger.
 
     Each micro-batch is aggregated to PARTIAL bar states (mergeable
     argmin/argmax structs + count/sum — sources/maintenance.py::
@@ -800,16 +706,7 @@ def run_bars_ingest(ticks: DataFrame, partials_dir: str, *, checkpoint: str):
     """
     from ..sources.maintenance import _ohlcv_partials
 
-    return (
-        ticks.writeStream.foreachBatch(
-            lambda bdf, bid: write_batch_idempotent(
-                _ohlcv_partials(bdf), bid, partials_dir
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    write_batch_idempotent(_ohlcv_partials(ticks), batch_id, partials_dir)
 
 
 def read_bars(spark: SparkSession, partials_dir: str) -> DataFrame:
@@ -828,20 +725,6 @@ def read_bars(spark: SparkSession, partials_dir: str) -> DataFrame:
         F.col("close_p.v").alias("close"),
         "n_ticks",
         F.col("volume").cast("double").alias("volume"),
-    )
-
-
-def run_stream_to_parquet(df: DataFrame, sink_dir: str, *, checkpoint: str):
-    """Production sink: checkpointed foreachBatch with idempotent batch
-    partitions — WAL offsets give at-least-once batch delivery, the
-    idempotent writer upgrades it to exactly-once table contents."""
-    return (
-        df.writeStream.foreachBatch(
-            lambda bdf, bid: write_batch_idempotent(bdf, bid, sink_dir)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
     )
 
 
@@ -884,13 +767,44 @@ def attribute_purchases(clicks: DataFrame, purchases: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------------
 # Continuous corpus ingestion with cross-batch exact dedup
 # --------------------------------------------------------------------------
-def _norm_fingerprint(text_col: str = "text") -> F.Column:
-    """Whitespace-normalized md5 fingerprint — the SHARED definition
-    from operators/dedup.py (cross-batch dedup joins are only correct
-    while every producer fingerprints identically)."""
+def _read_sink(spark: SparkSession, path: str) -> DataFrame | None:
+    """The parquet dataset at ``path``, or None while nothing has landed
+    there: a missing directory (``PATH_NOT_FOUND``) or an empty one
+    (``UNABLE_TO_INFER_SCHEMA``). Every other analysis error is raised —
+    read as "first batch" it would skip dedup against a sink that does
+    exist and permanently append duplicates. Callers select columns from
+    the returned frame, outside this check."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as exc:
+        if exc.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            return None
+        raise
+
+
+def _exact_new(
+    batch_df: DataFrame, sink: DataFrame | None, key: str = "doc_id"
+) -> DataFrame:
+    """The exact-dedup stage of the corpus sinks: one keeper per canonical
+    fingerprint within the batch (min ``key``, deterministic, matching
+    the batch dedup operators; one window over the fingerprint exchange),
+    then a fingerprint anti-join against ``sink`` (None: nothing landed)."""
+    from pyspark.sql import Window
+
     from ..operators.dedup import canonical_fingerprint
 
-    return canonical_fingerprint(text_col)
+    w = Window.partitionBy("fingerprint").orderBy(key)
+    batch = (
+        batch_df.withColumn("fingerprint", canonical_fingerprint())
+        .withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+    if sink is None:
+        return batch
+    return batch.join(sink.select("fingerprint"), "fingerprint", "left_anti")
 
 
 def write_batch_deduped(
@@ -910,41 +824,11 @@ def write_batch_deduped(
     mid-write crash finds its already-written rows in the sink and drops
     them — append-only convergence without a batch-id partition.
 
-    Within-batch keeper is min(``key``) per fingerprint (deterministic,
-    matching the batch dedup operators), enforced with one window over
-    the fingerprint exchange.
+    Within-batch keeper is min(``key``) per fingerprint
+    (:func:`_exact_new`).
     """
-    from pyspark.sql import Window
-    from pyspark.sql.utils import AnalysisException
-
-    spark = batch_df.sparkSession
-    w = Window.partitionBy("fingerprint").orderBy(key)
-    batch = (
-        batch_df.withColumn("fingerprint", _norm_fingerprint())
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    try:
-        seen = spark.read.parquet(sink_dir).select("fingerprint")
-    except AnalysisException:  # first batch: sink does not exist yet
-        seen = None
-    if seen is not None:
-        batch = batch.join(seen, "fingerprint", "left_anti")
-    batch.write.mode("append").parquet(sink_dir)
-
-
-def run_dedup_ingest(docs: DataFrame, sink_dir: str, *, checkpoint: str):
-    """Continuous corpus ingestion: every micro-batch lands exact-deduped
-    against the full ingestion history (see :func:`write_batch_deduped`)."""
-    return (
-        docs.writeStream.foreachBatch(
-            lambda bdf, bid: write_batch_deduped(bdf, bid, sink_dir)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    sink = _read_sink(batch_df.sparkSession, sink_dir)
+    _exact_new(batch_df, sink, key).write.mode("append").parquet(sink_dir)
 
 
 # --------------------------------------------------------------------------
@@ -1000,26 +884,14 @@ def write_batch_near_deduped(
     themselves, exactly as durable as the data, no streaming state store.
     """
     from pyspark.sql import Window
-    from pyspark.sql.utils import AnalysisException
 
     from ..operators.dedup import dedup_clusters, probe_near_dup_batch
 
     spark = batch_df.sparkSession
 
     # -- 1. exact pass (within-batch + vs sink) ---------------------------
-    w = Window.partitionBy("fingerprint").orderBy("doc_id")
-    batch = (
-        batch_df.withColumn("fingerprint", _norm_fingerprint())
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    try:
-        corpus = spark.read.parquet(sink_dir)
-    except AnalysisException:
-        corpus = None
-    if corpus is not None:
-        batch = batch.join(corpus.select("fingerprint"), "fingerprint", "left_anti")
+    corpus = _read_sink(spark, sink_dir)
+    batch = _exact_new(batch_df, corpus)
     # CORRECTNESS, not just lineage-trimming: the sink-append below happens
     # between two actions that both consume `batch` (survivor write, then
     # index write). Without pinning, the second action would re-run the
@@ -1032,11 +904,9 @@ def write_batch_near_deduped(
     batch = batch.localCheckpoint(eager=False)
 
     # -- 2. near pass (vs index + within batch) ---------------------------
-    index = (
-        spark.read.schema(_LSH_INDEX_SCHEMA).parquet(index_dir)
-        if _dir_has_data(spark, index_dir)
-        else spark.createDataFrame([], _LSH_INDEX_SCHEMA)
-    )
+    index = _read_sink(spark, index_dir)
+    if index is None:
+        index = spark.createDataFrame([], _LSH_INDEX_SCHEMA)
     texts = batch.select("doc_id", "text")
     if corpus is not None:
         texts = corpus.select("doc_id", "text").unionByName(texts)
@@ -1073,43 +943,6 @@ def write_batch_near_deduped(
     )
     survivors.write.mode("append").parquet(sink_dir)
     new_buckets.unpersist()
-
-
-def _dir_has_data(spark: SparkSession, path: str) -> bool:
-    """True when ``path`` is a readable parquet dataset. Catches ONLY
-    AnalysisException (path absent / empty): a transient IO or
-    permission error must FAIL the batch — swallowing it here would
-    silently probe an empty near-dup index, permanently ingesting
-    duplicates of already-landed docs into the append-only corpus."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        spark.read.parquet(path).schema
-        return True
-    except AnalysisException:
-        return False
-
-
-def run_near_dedup_ingest(
-    docs: DataFrame,
-    sink_dir: str,
-    index_dir: str,
-    *,
-    checkpoint: str,
-    threshold: float = 0.5,
-):
-    """Continuous corpus ingestion with exact AND near-duplicate
-    suppression (see :func:`write_batch_near_deduped`)."""
-    return (
-        docs.writeStream.foreachBatch(
-            lambda bdf, bid: write_batch_near_deduped(
-                bdf, bid, sink_dir, index_dir, threshold=threshold
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1157,6 +990,8 @@ def write_batch_ivf(
     persisted (frozen) centroids, append to the cell-partitioned
     assignment table, then run the drift monitor and append one health
     row — ``retrain_needed`` flips when cell skew passes the threshold.
+    Search jobs see the batch on their next index load: the streaming
+    half of build-once-query-many.
 
     The monitor FLAGS retraining rather than performing it: retraining
     the coarse quantizer invalidates every existing assignment, so it is
@@ -1213,28 +1048,6 @@ def write_batch_ivf(
         "batch_id BIGINT, n_vectors BIGINT, max_skew DOUBLE,"
         " retrain_needed BOOLEAN",
     ).coalesce(1).write.mode("append").parquet(f"{index_path}/health")
-
-
-def run_ivf_ingest(
-    vectors: DataFrame,
-    index_path: str,
-    *,
-    checkpoint: str,
-    skew_threshold: float = 4.0,
-):
-    """Continuous ANN-index maintenance over a vector stream (see
-    :func:`write_batch_ivf`): each micro-batch lands in the persisted IVF
-    index and search jobs see it on their next index load — the
-    streaming half of build-once-query-many."""
-    return (
-        vectors.writeStream.foreachBatch(
-            lambda bdf, bid: write_batch_ivf(
-                bdf, bid, index_path, skew_threshold=skew_threshold
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1304,8 +1117,6 @@ def write_batch_prepped(
     replay-self-erasure trap). First landed wins, matching the batch
     pipeline's min-doc_id keeper within a batch.
     """
-    from pyspark.sql.utils import AnalysisException
-
     from ..operators.sampling import prep_pipeline
 
     kwargs = {}
@@ -1314,40 +1125,12 @@ def write_batch_prepped(
     if min_quality is not None:
         kwargs["min_quality"] = min_quality
     prepped = prep_pipeline(batch_df, **kwargs)
-    spark = batch_df.sparkSession
-    try:
+    sink = _read_sink(batch_df.sparkSession, sink_dir)
+    if sink is not None:
         prior = (
-            spark.read.parquet(sink_dir)
-            .filter(F.col(BATCH_COL) != batch_id)
+            sink.filter(F.col(BATCH_COL) != batch_id)
             .select("fingerprint")
             .distinct()
         )
         prepped = prepped.join(prior, "fingerprint", "left_anti")
-    except AnalysisException:
-        pass  # first batch: no sink yet
     write_batch_idempotent(prepped, batch_id, sink_dir)
-
-
-def run_corpus_prep_ingest(
-    docs: DataFrame,
-    sink_dir: str,
-    *,
-    checkpoint: str,
-    min_tokens: int | None = None,
-    min_quality: float | None = None,
-):
-    """Continuous corpus preparation (see :func:`write_batch_prepped`)."""
-    return (
-        docs.writeStream.foreachBatch(
-            lambda bdf, bid: write_batch_prepped(
-                bdf,
-                bid,
-                sink_dir,
-                min_tokens=min_tokens,
-                min_quality=min_quality,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )

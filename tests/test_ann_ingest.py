@@ -1,11 +1,13 @@
 """Streaming ANN-index maintenance: the Python Data Source quote feed
 drives feature vectors into the persisted IVF index via foreachBatch
-(streaming/jobs.py::run_ivf_ingest), and the drift monitor appends a
-health row per batch that flags offline retraining on cell skew."""
+(streaming/jobs.py::write_batch_ivf under run_foreach_batch), and the
+drift monitor appends a health row per batch that flags offline
+retraining on cell skew."""
 
 from __future__ import annotations
 
 import time
+from functools import partial
 
 import pytest
 
@@ -22,7 +24,7 @@ from stock_data_pipeline_spark.operators.similarity import (
 from stock_data_pipeline_spark.sources import pyds
 from stock_data_pipeline_spark.streaming.jobs import (
     quotes_to_vectors,
-    run_ivf_ingest,
+    run_foreach_batch,
     write_batch_ivf,
 )
 
@@ -63,8 +65,11 @@ def test_stream_ingest_then_search_sees_new_vectors(spark, sf_dir, tmp_path):
     n_base = base.count()
 
     vectors = quotes_to_vectors(_quote_stream(spark))
-    q = run_ivf_ingest(
-        vectors, str(tmp_path / "ivf"), checkpoint=str(tmp_path / "ckpt")
+    q = run_foreach_batch(
+        vectors,
+        partial(write_batch_ivf, index_path=str(tmp_path / "ivf")),
+        checkpoint=str(tmp_path / "ckpt"),
+        cadence="0 seconds",
     )
     def n_health():
         try:

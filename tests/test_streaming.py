@@ -8,6 +8,7 @@ formulation of the same transformation (unified semantics).
 from __future__ import annotations
 
 import shutil
+from functools import partial
 
 import pytest
 
@@ -270,7 +271,8 @@ def test_stream_to_parquet_incremental_batches(spark, tmp_path):
     from stock_data_pipeline_spark.catalog import load
     from stock_data_pipeline_spark.streaming.jobs import (
         read_event_stream,
-        run_stream_to_parquet,
+        run_foreach_batch,
+        write_batch_idempotent,
     )
 
     land = tmp_path / "landing"; land.mkdir()
@@ -279,7 +281,9 @@ def test_stream_to_parquet_incremental_batches(spark, tmp_path):
     n1 = spark.read.parquet(str(land / "drop1.parquet")).count()
 
     stream = read_event_stream(spark, str(land))
-    q = run_stream_to_parquet(stream, sink, checkpoint=ckpt)
+    q = run_foreach_batch(
+        stream, partial(write_batch_idempotent, sink_dir=sink), checkpoint=ckpt
+    )
     q.awaitTermination(120)
     assert spark.read.parquet(sink).drop("_batch_id").count() == n1
 
@@ -287,7 +291,9 @@ def test_stream_to_parquet_incremental_batches(spark, tmp_path):
     # file is processed, totals stay exactly-once
     shutil.copy("/root/testdata/sf0.001/events.parquet", land / "drop2.parquet")
     stream2 = read_event_stream(spark, str(land))
-    q2 = run_stream_to_parquet(stream2, sink, checkpoint=ckpt)
+    q2 = run_foreach_batch(
+        stream2, partial(write_batch_idempotent, sink_dir=sink), checkpoint=ckpt
+    )
     q2.awaitTermination(120)
     out = spark.read.parquet(sink)
     assert out.count() == 2 * n1
@@ -345,76 +351,12 @@ def test_stream_stream_join_matches_batch_range_join(spark, tmp_path):
     assert got == want and len(want) > 0
 
 
-def test_transform_with_state_ema_equals_classic(spark, sf_dir, events_dir, tmp_path):
-    """The transformWithStateInPandas twin must produce the same final
-    per-key EMA snapshots as the applyInPandasWithState operator / the
-    batch EMA. Requires the RocksDB state store (the new API's backend)
-    and protobuf (the API's Python runner wire format — absent from this
-    container, so the test skips here and runs wherever protobuf exists)."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState Python runner needs protobuf",
-    )
-    from stock_data_pipeline_spark.operators.timeseries import with_indicators
-    from stock_data_pipeline_spark.streaming.jobs import stream_running_ema_tws
-
-    provider_conf = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(provider_conf, None)
-    spark.conf.set(
-        provider_conf,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    out = str(tmp_path / "tws_out")
-    try:
-        q = (
-            stream_running_ema_tws(read_event_stream(spark, events_dir))
-            .writeStream.foreachBatch(
-                lambda bdf, bid: bdf.write.mode("append").parquet(out)
-            )
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "tws_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
-    finally:
-        if old is None:
-            spark.conf.unset(provider_conf)
-        else:
-            spark.conf.set(provider_conf, old)
-
-    snapshots = spark.read.parquet(out)
-    snapshots.createOrReplaceTempView("tws_snapshots")
-    final = {
-        r.user_id: (r.n_events, r.ema)
-        for r in spark.sql(
-            """SELECT user_id, n_events, ema FROM (
-                 SELECT *, ROW_NUMBER() OVER (
-                   PARTITION BY user_id ORDER BY n_events DESC) rn
-                 FROM tws_snapshots) WHERE rn = 1"""
-        ).collect()
-    }
-    events = load(spark, sf_dir, "events")
-    want = {
-        r.user_id: (r.n, r.ema)
-        for r in with_indicators(events)
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.max_by("ema", "ts").alias("ema"))
-        .collect()
-    }
-    assert set(final) == set(want)
-    for uid, (n, ema) in want.items():
-        assert final[uid][0] == n
-        assert final[uid][1] == pytest.approx(ema, rel=1e-9)
-
-
 def test_dedup_ingest_across_batches_and_replay(spark, tmp_path):
     """Cross-batch exact dedup through the sink: overlapping document
     batches land exactly once, and a replayed foreachBatch call appends
     nothing (idempotence without a batch-id partition)."""
     from stock_data_pipeline_spark.streaming.jobs import (
-        run_dedup_ingest,
+        run_foreach_batch,
         write_batch_deduped,
     )
 
@@ -432,7 +374,9 @@ def test_dedup_ingest_across_batches_and_replay(spark, tmp_path):
     stream = spark.readStream.schema(schema).option(
         "recursiveFileLookup", "true"
     ).parquet(str(landing))
-    q = run_dedup_ingest(stream, sink, checkpoint=ckpt)
+    q = run_foreach_batch(
+        stream, partial(write_batch_deduped, sink_dir=sink), checkpoint=ckpt
+    )
     q.awaitTermination(300)
 
     first = spark.read.parquet(sink).collect()
@@ -442,7 +386,9 @@ def test_dedup_ingest_across_batches_and_replay(spark, tmp_path):
         [(4, "delta epsilon"), (5, "zeta eta theta")], schema
     )  # doc 4 duplicates doc 2 from the PREVIOUS batch
     b2.coalesce(1).write.parquet(str(landing / "b2"))
-    q = run_dedup_ingest(stream, sink, checkpoint=ckpt)
+    q = run_foreach_batch(
+        stream, partial(write_batch_deduped, sink_dir=sink), checkpoint=ckpt
+    )
     q.awaitTermination(300)
 
     rows = spark.read.parquet(sink).collect()
@@ -455,6 +401,46 @@ def test_dedup_ingest_across_batches_and_replay(spark, tmp_path):
     assert sorted(
         r.doc_id for r in spark.read.parquet(sink).collect()
     ) == [1, 2, 5]
+
+
+@pytest.mark.parametrize("body", ["deduped", "prepped", "near_deduped"])
+def test_sink_without_fingerprint_raises(spark, sf_dir, tmp_path, body):
+    """A sink that exists but cannot be deduped against (no
+    ``fingerprint`` column) must fail the batch. Read as "first batch",
+    it would append every doc with no dedup at all."""
+    from pyspark.errors import AnalysisException
+
+    from stock_data_pipeline_spark.streaming.jobs import (
+        write_batch_deduped,
+        write_batch_idempotent,
+        write_batch_near_deduped,
+        write_batch_prepped,
+    )
+
+    write = {
+        "deduped": write_batch_deduped,
+        "prepped": write_batch_prepped,
+        "near_deduped": partial(
+            write_batch_near_deduped, index_dir=str(tmp_path / "index")
+        ),
+    }[body]
+    docs = load(spark, sf_dir, "documents").limit(5)
+    sink = str(tmp_path / "sink")
+    write_batch_idempotent(docs.select("doc_id", "text"), 0, sink)
+    with pytest.raises(AnalysisException, match="fingerprint"):
+        write(docs, 1, sink)
+    assert spark.read.parquet(sink).count() == 5  # nothing appended
+
+
+def test_empty_sink_dir_reads_as_first_batch(spark, tmp_path):
+    """An empty sink directory (created, nothing landed yet) is the one
+    error besides a missing directory that means "no sink yet"."""
+    from stock_data_pipeline_spark.streaming.jobs import write_batch_deduped
+
+    sink = tmp_path / "sink"
+    sink.mkdir()
+    write_batch_deduped(_mk_docs(spark, [(1, "a b"), (2, "a  b")]), 0, str(sink))
+    assert [r.doc_id for r in spark.read.parquet(str(sink)).collect()] == [1]
 
 
 def _mk_docs(spark, rows):
@@ -506,9 +492,13 @@ def test_near_dedup_ingest_cross_batch(spark, tmp_path):
 
 
 def test_near_dedup_ingest_streaming_wiring(spark, tmp_path):
-    """run_near_dedup_ingest drains a file-source landing zone with
-    availableNow and produces the near-deduped corpus + index."""
-    from stock_data_pipeline_spark.streaming.jobs import run_near_dedup_ingest
+    """write_batch_near_deduped under run_foreach_batch drains a
+    file-source landing zone with availableNow and produces the
+    near-deduped corpus + index."""
+    from stock_data_pipeline_spark.streaming.jobs import (
+        run_foreach_batch,
+        write_batch_near_deduped,
+    )
 
     land = tmp_path / "landing"; land.mkdir()
     doc_text = ("streaming ingest corpus document with enough words to "
@@ -522,8 +512,13 @@ def test_near_dedup_ingest_streaming_wiring(spark, tmp_path):
     stream = spark.readStream.schema("doc_id long, text string").option(
         "maxFilesPerTrigger", 1
     ).parquet(str(land))
-    q = run_near_dedup_ingest(
-        stream, str(tmp_path / "corpus"), str(tmp_path / "idx"),
+    q = run_foreach_batch(
+        stream,
+        partial(
+            write_batch_near_deduped,
+            sink_dir=str(tmp_path / "corpus"),
+            index_dir=str(tmp_path / "idx"),
+        ),
         checkpoint=str(tmp_path / "ckpt"),
     )
     q.awaitTermination(300)
@@ -539,7 +534,10 @@ def test_processing_time_cadence_end_to_end(spark, sf_dir, tmp_path):
     processingTime cadence (PipelineSpec.cadence's consumption path)."""
     import time
 
-    from stock_data_pipeline_spark.streaming.jobs import run_stream_at_cadence
+    from stock_data_pipeline_spark.streaming.jobs import (
+        run_foreach_batch,
+        write_batch_idempotent,
+    )
 
     src = tmp_path / "landing"
     src.mkdir()
@@ -547,8 +545,11 @@ def test_processing_time_cadence_end_to_end(spark, sf_dir, tmp_path):
 
     stream = read_event_stream(spark, str(src))
     sink = str(tmp_path / "sink")
-    q = run_stream_at_cadence(
-        stream, sink, checkpoint=str(tmp_path / "ckpt"), cadence="1 seconds"
+    q = run_foreach_batch(
+        stream,
+        partial(write_batch_idempotent, sink_dir=sink),
+        checkpoint=str(tmp_path / "ckpt"),
+        cadence="1 seconds",
     )
 
     def batch_ids():
@@ -592,13 +593,14 @@ def test_spec_cadence_strings_are_valid_trigger_intervals(spark, sf_dir, tmp_pat
 
 
 def test_streamed_bar_partials_equal_batch_bars(spark, sf_dir, tmp_path):
-    """run_bars_ingest lands per-batch OHLCV partials exactly-once; the
+    """write_batch_bars lands per-batch OHLCV partials exactly-once; the
     read-side merge must equal a from-scratch bar aggregate, across
     multiple micro-batches AND after a simulated batch replay."""
     from stock_data_pipeline_spark.sources.maintenance import _ohlcv_partials
     from stock_data_pipeline_spark.streaming.jobs import (
         read_bars,
-        run_bars_ingest,
+        run_foreach_batch,
+        write_batch_bars,
         write_batch_idempotent,
     )
 
@@ -618,7 +620,11 @@ def test_streamed_bar_partials_equal_batch_bars(spark, sf_dir, tmp_path):
 
     partials_dir = str(tmp_path / "bar_partials")
     stream = read_event_stream(spark, str(land))
-    q = run_bars_ingest(stream, partials_dir, checkpoint=str(tmp_path / "ck"))
+    q = run_foreach_batch(
+        stream,
+        partial(write_batch_bars, partials_dir=partials_dir),
+        checkpoint=str(tmp_path / "ck"),
+    )
     q.awaitTermination(300)
     assert not q.isActive
 
@@ -760,8 +766,9 @@ def test_stream_zscore_ordered_survives_restart(spark, sf_dir, tmp_path):
     import time
 
     from stock_data_pipeline_spark.streaming.jobs import (
-        run_stream_to_parquet,
+        run_foreach_batch,
         stream_zscore_anomalies_ordered,
+        write_batch_idempotent,
     )
 
     events = load(spark, sf_dir, "events")
@@ -776,12 +783,12 @@ def test_stream_zscore_ordered_survives_restart(spark, sf_dir, tmp_path):
         parts.append(glob.glob(str(tmp_path / f"r{i}" / "*.parquet"))[0])
 
     def start(land_dir, sink, ckpt):
-        return run_stream_to_parquet(
+        return run_foreach_batch(
             stream_zscore_anomalies_ordered(
                 read_event_stream(spark, str(tmp_path / land_dir)),
                 watermark="10 days",
             ),
-            str(tmp_path / sink),
+            partial(write_batch_idempotent, sink_dir=str(tmp_path / sink)),
             checkpoint=str(tmp_path / ckpt),
         )
 
@@ -816,7 +823,7 @@ def test_bollinger_served_from_streamed_bars_equals_batch_b78(
     spark, sf_dir, tmp_path
 ):
     """The live-dashboard path: ticks stream into the bar store
-    (run_bars_ingest partials), indicators are computed over the merged
+    (write_batch_bars partials), indicators are computed over the merged
     bars — and must be BIT-EQUAL to the batch b78 query over the same
     feed (same scaled-integer moments, same IEEE expression order)."""
     import glob
@@ -827,7 +834,8 @@ def test_bollinger_served_from_streamed_bars_equals_batch_b78(
     from stock_data_pipeline_spark.streaming.jobs import (
         read_bars,
         read_event_stream,
-        run_bars_ingest,
+        run_foreach_batch,
+        write_batch_bars,
     )
 
     land = tmp_path / "ticks"
@@ -843,9 +851,9 @@ def test_bollinger_served_from_streamed_bars_equals_batch_b78(
         sh.copy(part, land / f"batch{i}.parquet")
 
     partials_dir = str(tmp_path / "bar_partials")
-    q = run_bars_ingest(
+    q = run_foreach_batch(
         read_event_stream(spark, str(land)),
-        partials_dir,
+        partial(write_batch_bars, partials_dir=partials_dir),
         checkpoint=str(tmp_path / "ck_boll"),
     )
     q.awaitTermination(300)
@@ -933,7 +941,8 @@ def test_atr_and_obv_served_from_streamed_bars_equal_batch(
     from stock_data_pipeline_spark.streaming.jobs import (
         read_bars,
         read_event_stream,
-        run_bars_ingest,
+        run_foreach_batch,
+        write_batch_bars,
     )
 
     land = tmp_path / "ticks"
@@ -948,9 +957,9 @@ def test_atr_and_obv_served_from_streamed_bars_equal_batch(
         part = glob.glob(str(tmp_path / f"as{i}" / "*.parquet"))[0]
         sh.copy(part, land / f"batch{i}.parquet")
 
-    q = run_bars_ingest(
+    q = run_foreach_batch(
         read_event_stream(spark, str(land)),
-        str(tmp_path / "bar_partials"),
+        partial(write_batch_bars, partials_dir=str(tmp_path / "bar_partials")),
         checkpoint=str(tmp_path / "ck_ind"),
     )
     q.awaitTermination(300)
@@ -1046,7 +1055,7 @@ def test_corpus_prep_ingest_equals_batch_modulo_arrival_order(
 
     from stock_data_pipeline_spark.operators.sampling import prep_pipeline
     from stock_data_pipeline_spark.streaming.jobs import (
-        run_corpus_prep_ingest,
+        run_foreach_batch,
         write_batch_prepped,
     )
 
@@ -1070,8 +1079,10 @@ def test_corpus_prep_ingest_equals_batch_modulo_arrival_order(
         .option("maxFilesPerTrigger", 1)
         .parquet(str(land))
     )
-    q = run_corpus_prep_ingest(
-        stream, sink, checkpoint=str(tmp_path / "ck_prep")
+    q = run_foreach_batch(
+        stream,
+        partial(write_batch_prepped, sink_dir=sink),
+        checkpoint=str(tmp_path / "ck_prep"),
     )
     q.awaitTermination(300)
     assert not q.isActive
@@ -1103,85 +1114,6 @@ def test_corpus_prep_ingest_equals_batch_modulo_arrival_order(
         map(tuple, spark.read.parquet(sink).drop("_batch_id").collect())
     )
     assert after == before
-
-
-def test_transform_with_state_processor_harness_equivalence(spark, sf_dir):
-    """Non-protobuf state-equivalence twin for stream_running_ema_tws:
-    drive the StatefulProcessor's lifecycle directly — init against a
-    fake handle/ValueState, handleInputRows once per (key, micro-batch)
-    with the rows split into multiple Arrow-like chunks — and assert the
-    final snapshots equal the batch EMA, exactly what the full-runner
-    parity test asserts where protobuf exists. This pins the processor's
-    state logic (read-modify-write, chunk concat, ordering) minus only
-    the wire format."""
-    import pandas as pd
-
-    from stock_data_pipeline_spark.operators.timeseries import with_indicators
-    from stock_data_pipeline_spark.streaming.jobs import make_ema_processor
-
-    class FakeValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    class FakeHandle:
-        def __init__(self):
-            self.states = {}
-
-        def getValueState(self, name, schema):
-            return self.states.setdefault(name, FakeValueState())
-
-    events = (
-        load(spark, sf_dir, "events")
-        .select("user_id", "event_id", "ts", "value")
-        .toPandas()
-    )
-    # three micro-batches by day-of-month, as the streaming tests split
-    batches = [
-        events[events.ts.dt.day <= 10],
-        events[(events.ts.dt.day > 10) & (events.ts.dt.day <= 20)],
-        events[events.ts.dt.day > 20],
-    ]
-
-    # one processor instance per key-partition in production; the state
-    # is keyed, so a single instance + per-key fake handles is equivalent
-    final = {}
-    handles = {}
-    for batch in batches:
-        for uid, grp in batch.groupby("user_id"):
-            proc = make_ema_processor()
-            proc.init(handles.setdefault(int(uid), FakeHandle()))
-            # feed shuffled multi-chunk input: the handler must reorder
-            chunks = [
-                grp.sample(frac=1.0, random_state=7).iloc[i::2]
-                for i in range(2)
-            ]
-            (out,) = list(proc.handleInputRows((uid,), iter(chunks), None))
-            proc.close()
-            final[int(uid)] = (
-                int(out.n_events.iloc[0]),
-                float(out.ema.iloc[0]),
-            )
-
-    want = {
-        r.user_id: (r.n, r.ema)
-        for r in with_indicators(load(spark, sf_dir, "events"))
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.max_by("ema", "ts").alias("ema"))
-        .collect()
-    }
-    assert set(final) == set(want) and want
-    for uid, (n, ema) in want.items():
-        assert final[uid][0] == n
-        assert final[uid][1] == pytest.approx(ema, rel=1e-9)
 
 
 def test_snapshot_read_as_of_is_stable_and_pruned(spark, tmp_path):
@@ -1234,14 +1166,14 @@ def test_snapshot_read_as_of_is_stable_and_pruned(spark, tmp_path):
 
 def test_crash_mid_stream_replay_is_exactly_once(spark, tmp_path):
     """Kill-mid-stream recovery for the production ingest sink
-    (run_stream_to_parquet, the A19/A20 path): simulate a crash AFTER a
-    micro-batch's data landed in the sink but BEFORE its checkpoint commit
-    — the exact at-least-once window the WAL leaves open — by deleting the
-    batch's entry from ``<ckpt>/commits/``. Restarting on the same
-    checkpoint must replay that batch (at-least-once delivery), and the
-    idempotent partition-overwrite writer must land it exactly once, so
-    the final sink equals the BATCH-mode read of the landing directory
-    row-for-row. This is the reference's retry semantics
+    (write_batch_idempotent under run_foreach_batch, the A19/A20 path):
+    simulate a crash AFTER a micro-batch's data landed in the sink but
+    BEFORE its checkpoint commit — the exact at-least-once window the WAL
+    leaves open — by deleting the batch's entry from ``<ckpt>/commits/``.
+    Restarting on the same checkpoint must replay that batch (at-least-once
+    delivery), and the idempotent partition-overwrite writer must land it
+    exactly once, so the final sink equals the BATCH-mode read of the
+    landing directory row-for-row. This is the reference's retry semantics
     (stock_data_to_gcp.py:82,134 — WRITE_APPEND under retries: 2, a
     double-load defect) done right at engine scale.
 
@@ -1256,7 +1188,8 @@ def test_crash_mid_stream_replay_is_exactly_once(spark, tmp_path):
 
     from stock_data_pipeline_spark.streaming.jobs import (
         read_event_stream,
-        run_stream_to_parquet,
+        run_foreach_batch,
+        write_batch_idempotent,
     )
 
     # three single-file drops with disjoint rows (event_id % 3 slices)
@@ -1277,7 +1210,11 @@ def test_crash_mid_stream_replay_is_exactly_once(spark, tmp_path):
     sink = str(tmp_path / "sink")
     ckpt = str(tmp_path / "ckpt")
 
-    q = run_stream_to_parquet(read_event_stream(spark, str(land)), sink, checkpoint=ckpt)
+    q = run_foreach_batch(
+        read_event_stream(spark, str(land)),
+        partial(write_batch_idempotent, sink_dir=sink),
+        checkpoint=ckpt,
+    )
     q.awaitTermination(120)
     committed = sorted(
         int(f) for f in os.listdir(os.path.join(ckpt, "commits"))
@@ -1303,7 +1240,11 @@ def test_crash_mid_stream_replay_is_exactly_once(spark, tmp_path):
     )
 
     # restart on the same checkpoint: batch 1 replays, drop2 becomes batch 2
-    q2 = run_stream_to_parquet(read_event_stream(spark, str(land)), sink, checkpoint=ckpt)
+    q2 = run_foreach_batch(
+        read_event_stream(spark, str(land)),
+        partial(write_batch_idempotent, sink_dir=sink),
+        checkpoint=ckpt,
+    )
     q2.awaitTermination(120)
 
     out = spark.read.parquet(sink).drop("_batch_id")

@@ -142,81 +142,13 @@ def _s4(expr: str) -> str:
 # twice is RE-EXPANDED by Spark (two full fact scans + two aggregates —
 # the b86 trap, but unavoidable by window tricks here because both sides
 # genuinely join). The engine therefore MATERIALIZES the aggregate once
-# (``localCheckpoint`` — it is #instruments × #hours rows, MB at any tick
-# volume) and self-joins the materialization; memoized per (session, sf)
-# so repeated queries share it. The oracle keeps the CTE form — DuckDB
-# materializes CTEs automatically, so its one-scan behavior needs no help.
-import weakref as _weakref
-
-_SERIES_MEMO: "_weakref.WeakKeyDictionary[SparkSession, dict[str, DataFrame]]"
-_SERIES_MEMO = _weakref.WeakKeyDictionary()
-
-
+# per call (``localCheckpoint`` — it is #instruments × #hours rows, MB at
+# any tick volume) and self-joins the materialization. The oracle keeps
+# the CTE form — DuckDB materializes CTEs automatically, so its one-scan
+# behavior needs no help.
 def _hourly_series_mat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Staleness contract: the memoized checkpoint reflects the events
-    data under ``sf_dir`` AS OF the first b51/b53/b88 call in this
-    session. A job that mutates the events source mid-session must call
-    ``invalidate_hourly_series`` (mirroring ``result_cache.invalidate``)
-    before re-querying, or it will be served the stale series."""
-    import os as _os
-
-    # Re-pin on every call: a series-memo HIT skips register_views/
-    # catalog.load, so a hostile conf.set since the checkpoint was built
-    # would otherwise go unhealed at the CONSUMER's execution/collection
-    # time (b51/b53 mask a poisoned session tz — their pair-joins cancel a
-    # uniform bucket shift — but b88 exposes the bucket column directly;
-    # caught by the r8 hostile sweep).
-    from ..session import apply_runtime_confs
-
-    apply_runtime_confs(spark)
-
-    key = _os.path.abspath(sf_dir)
-    try:
-        per_session = _SERIES_MEMO.setdefault(spark, {})
-    except TypeError:
-        per_session = {}
-    if key not in per_session:
-        register_views(spark, sf_dir)
-        per_session[key] = spark.sql(_HOURLY_SERIES).localCheckpoint()
-    return per_session[key]
-
-
-def invalidate_hourly_series(
-    spark: SparkSession, sf_dir: str | None = None
-) -> bool:
-    """Drop the memoized hourly-series checkpoint for ``sf_dir`` (or for
-    ALL sf_dirs when None) so the next b51/b53/b88 call rebuilds it from
-    the current source data. Returns whether anything was dropped — the
-    hook an ingest job calls after landing a batch that touches events.
-
-    Dropped checkpoints are unpersisted (best-effort) so executor blocks
-    free now rather than at some future GC.
-    """
-    import os as _os
-
-    def _free(df):
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-
-    try:
-        per_session = _SERIES_MEMO.get(spark)
-    except TypeError:  # unhashable session object (same guard as the memo)
-        return False
-    if not per_session:
-        return False
-    if sf_dir is None:
-        dropped = bool(per_session)
-        for df in per_session.values():
-            _free(df)
-        per_session.clear()
-        return dropped
-    df = per_session.pop(_os.path.abspath(sf_dir), None)
-    if df is None:
-        return False
-    _free(df)
-    return True
+    register_views(spark, sf_dir)
+    return spark.sql(_HOURLY_SERIES).localCheckpoint()
 
 
 _B51_BODY = f"""

@@ -1,20 +1,20 @@
 """Tier C similarity search (SURVEY.md §2 C3): cosine top-k over embeddings.
 
-Two paths, as a 100 TB ANN stack should be layered:
-- brute-force cosine top-k (exact; the oracle-checkable baseline and the
-  recall ground truth);
-- random-hyperplane LSH bucketed search (approximate; candidates come from
-  an equi-join on signature buckets instead of a cross join).
-
-Vector math is pure higher-order built-ins (``zip_with``/``aggregate``) —
-JVM-side, no Python in the scoring loop.
+Every search scores its candidates with the exact cosine and keeps the
+top k (:func:`_top_k`); the paths differ in where candidates come from:
+brute force (exact; the oracle-checkable baseline and the recall ground
+truth), random-hyperplane LSH buckets, IVF k-means cells, a PQ ADC
+shortlist, and IVF-PQ (ADC over a persisted index's probed cells).
+SemDeDup reuses the IVF cells to bound its pairwise comparisons.
+Indexes are built by :func:`ivf_index` / :func:`pq_train` and passed to
+the search functions, which never train one. Vector math is pure
+higher-order built-ins (``zip_with``/``aggregate``) — JVM-side, no
+Python in the scoring loop.
 """
 
 from __future__ import annotations
 
 import json
-import weakref
-from collections.abc import Iterator  # noqa: F401 (mapInPandas annotations)
 
 import numpy as np
 
@@ -47,64 +47,17 @@ def cosine(a, b) -> F.Column:
     return dot / (norm(a) * norm(b))
 
 
-def cosine_pandas_scores(
-    pairs: DataFrame, a_col: str = "q_emb", b_col: str = "embedding"
+def _top_k(
+    scored: DataFrame, k: int, score: str = "cos_sim", rank: str = "sim_rank"
 ) -> DataFrame:
-    """Arrow-vectorized twin of :func:`cosine` for HIGH-dimensional
-    embeddings: one numpy matmul per Arrow batch instead of per-element
-    JVM lambda evaluation.
-
-    The higher-order-function path (`aggregate`/`zip_with`) evaluates a
-    catalyst lambda per vector ELEMENT — fine at dim 64, linear pain at
-    dim 1536+. This variant ships each batch of candidate pairs to a
-    pandas worker once and scores the whole batch with
-    ``(A*B).sum(1)/(|A||B|)``. Same results to double precision (parity
-    asserted in tests); swap it into ``_exact_rerank`` when the corpus
-    moves to wide embeddings. Adds one Python-worker hop — measure both
-    at your dimension before choosing.
-    """
-    import numpy as np
-    import pandas as pd
-
-    passthrough = [
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in pairs.schema.fields
-        if f.name not in (a_col, b_col)
-    ]
-    if not passthrough:
-        raise ValueError(
-            "cosine_pandas_scores needs at least one passthrough column "
-            f"besides {a_col!r}/{b_col!r} to key the scores by"
-        )
-    out_schema = ", ".join(passthrough) + ", cos_sim double"
-
-    def score(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            # NULL-vector rows score NULL — the same semantics as the
-            # JVM twin cosine(); np.stack over a None would otherwise
-            # raise and kill the whole task
-            valid = pdf[a_col].notna() & pdf[b_col].notna()
-            sims = np.full(len(pdf), np.nan)
-            if valid.any():
-                sub = pdf[valid]
-                a = np.stack(sub[a_col].map(np.asarray).to_numpy()).astype(
-                    np.float64
-                )
-                b = np.stack(sub[b_col].map(np.asarray).to_numpy()).astype(
-                    np.float64
-                )
-                sims[valid.to_numpy()] = (a * b).sum(axis=1) / (
-                    np.linalg.norm(a, axis=1) * np.linalg.norm(b, axis=1)
-                )
-            out = pdf.drop(columns=[a_col, b_col])
-            # masked Float64 so invalid rows arrive as SQL NULL (a bare
-            # NaN would survive as NaN, which is not what cosine() emits)
-            out["cos_sim"] = pd.arrays.FloatingArray(
-                sims, mask=(~valid).to_numpy()
-            )
-            yield out
-
-    return pairs.mapInPandas(score, out_schema)
+    """The ``k`` best rows per ``query_id`` by ``score`` (ties broken by
+    vec_id, so the top-k set is stable across engines), numbered in
+    ``rank``. Spark rewrites it into a per-partition top-k before the
+    exchange."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(score), F.asc("vec_id"))
+    return scored.withColumn(rank, F.row_number().over(w)).filter(
+        F.col(rank) <= k
+    )
 
 
 # --------------------------------------------------------------------------
@@ -160,12 +113,30 @@ def c03_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(cosine(F.col("q_emb"), F.col("embedding")), 6).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("sim_rank", F.row_number().over(w))
-        .filter(F.col("sim_rank") <= _TOP_K)
-        .select("query_id", "vec_id", "cos_sim", "sim_rank")
-    )
+    return _top_k(scored, _TOP_K).select("query_id", "vec_id", "cos_sim", "sim_rank")
+
+
+# The round-6 exact rerank of a ``cand(query_id, vec_id)`` CTE — the
+# tail every ANN oracle shares (the DuckDB mirror of :func:`_exact_rerank`).
+_RERANK_SQL = f"""SELECT query_id, vec_id, cos_sim, sim_rank FROM (
+      SELECT cand.query_id, cand.vec_id,
+             round(list_cosine_similarity(
+               list_transform(qe.embedding, x -> CAST(x AS DOUBLE)),
+               list_transform(ce.embedding, x -> CAST(x AS DOUBLE))), 6)
+               AS cos_sim,
+             ROW_NUMBER() OVER (
+               PARTITION BY cand.query_id
+               ORDER BY round(list_cosine_similarity(
+                 list_transform(qe.embedding, x -> CAST(x AS DOUBLE)),
+                 list_transform(ce.embedding, x -> CAST(x AS DOUBLE))), 6)
+                 DESC,
+               cand.vec_id ASC
+             ) AS sim_rank
+      FROM cand
+      JOIN embeddings qe ON qe.vec_id = cand.query_id
+      JOIN embeddings ce ON ce.vec_id = cand.vec_id
+    ) WHERE sim_rank <= {_TOP_K}
+    """
 
 
 # --------------------------------------------------------------------------
@@ -228,25 +199,7 @@ def _lsh_oracle_sql(n_tables: int = 4, n_planes: int = 8, dim: int = 64) -> str:
       FROM expl c JOIN expl q ON c.table_id = q.table_id AND c.sig = q.sig
       WHERE q.vec_id < {_N_QUERIES} AND c.vec_id <> q.vec_id
     )
-    SELECT query_id, vec_id, cos_sim, sim_rank FROM (
-      SELECT cand.query_id, cand.vec_id,
-             round(list_cosine_similarity(
-               list_transform(qe.embedding, x -> CAST(x AS DOUBLE)),
-               list_transform(ce.embedding, x -> CAST(x AS DOUBLE))), 6)
-               AS cos_sim,
-             ROW_NUMBER() OVER (
-               PARTITION BY cand.query_id
-               ORDER BY round(list_cosine_similarity(
-                 list_transform(qe.embedding, x -> CAST(x AS DOUBLE)),
-                 list_transform(ce.embedding, x -> CAST(x AS DOUBLE))), 6)
-                 DESC,
-               cand.vec_id ASC
-             ) AS sim_rank
-      FROM cand
-      JOIN embeddings qe ON qe.vec_id = cand.query_id
-      JOIN embeddings ce ON ce.vec_id = cand.vec_id
-    ) WHERE sim_rank <= {_TOP_K}
-    """
+    {_RERANK_SQL}"""
 
 
 @query(
@@ -333,12 +286,25 @@ def _exact_rerank(
             F.round(cosine(F.col("q_emb"), F.col("embedding")), 6).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("sim_rank", F.row_number().over(w))
-        .filter(F.col("sim_rank") <= k)
-        .select("query_id", "vec_id", "cos_sim", "sim_rank")
-    )
+    return _top_k(scored, k).select("query_id", "vec_id", "cos_sim", "sim_rank")
+
+
+def _shortlist_rerank(
+    approx: DataFrame, corpus: DataFrame, queries: DataFrame, k: int,
+    shortlist: int,
+) -> DataFrame:
+    """The ADC tail of the PQ searches: the ``shortlist`` best
+    (query_id, vec_id, approx_sim) rows per query, exact-reranked."""
+    cand = _top_k(approx, shortlist, "approx_sim", "r").select("query_id", "vec_id")
+    return _exact_rerank(cand, corpus, queries, k)
+
+
+def _no_candidates(corpus: DataFrame, queries: DataFrame, k: int) -> DataFrame:
+    """The search result of an empty index: no rows, the top-k schema
+    (probe and ADC expressions cannot analyze over zero-length centroid
+    or codebook literals, so an empty index never reaches them)."""
+    empty = corpus.select(F.col("vec_id").alias("query_id"), "vec_id").limit(0)
+    return _exact_rerank(empty, corpus, queries, k)
 
 
 def ann_lsh_topk(
@@ -385,13 +351,21 @@ def _kmeans_numpy(
 ) -> np.ndarray:
     """Seeded Lloyd iterations on the driver-side training sample.
 
-    A coarse quantizer needs rough cells, not optimal ones: random init
-    (not kmeans||) and a handful of iterations suffice, and the sample is
-    bounded so the dense distance matrix stays tiny.
+    A coarse quantizer needs rough cells, not optimal ones: a handful of
+    iterations suffice, and the sample is bounded so the dense distance
+    matrix stays tiny. The seeding is k-means++ (each next center drawn
+    with probability ∝ squared distance to the nearest chosen one):
+    a uniform random init can put two starting centers in one cluster
+    and leave Lloyd at an optimum that merges two far-apart clusters.
     """
     rng = np.random.default_rng(seed)
     k = min(n_cells, len(x))
-    centers = x[rng.choice(len(x), size=k, replace=False)].copy()
+    centers = x[[rng.integers(len(x))]].copy()
+    d2 = ((x - centers[0]) ** 2).sum(axis=1)
+    for _ in range(1, k):
+        i = rng.choice(len(x), p=d2 / d2.sum()) if d2.sum() > 0 else 0
+        centers = np.vstack([centers, x[i]])
+        d2 = np.minimum(d2, ((x - x[i]) ** 2).sum(axis=1))
     for _ in range(iters):
         d = ((x[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
         assign = d.argmin(axis=1)
@@ -400,6 +374,19 @@ def _kmeans_numpy(
             if len(members):
                 centers[j] = members.mean(axis=0)
     return centers
+
+
+def _train_sample(
+    corpus: DataFrame, cap: int, seed: int, train_fraction: float | None
+) -> np.ndarray:
+    """The bounded driver-side training sample of every quantizer: at
+    most ``cap`` embeddings as a float64 matrix, drawn at
+    ``train_fraction`` (seeded) before the cap when it is set."""
+    src = corpus.select("embedding")
+    if train_fraction is not None:
+        src = src.sample(fraction=train_fraction, seed=seed)
+    sample = src.limit(cap).toPandas()
+    return np.asarray([np.asarray(e, dtype=np.float64) for e in sample["embedding"]])
 
 
 def _double_arrays(values: list, depth: int) -> F.Column:
@@ -458,15 +445,7 @@ def ivf_index(
     # Train straight off the scan, NOT the rebalanced plan: the sample is
     # ≤256·n_cells rows, so routing it through a repartition shuffle only
     # adds a full-table exchange before the limit.
-    train_src = corpus.select("embedding")
-    train = (
-        train_src.sample(fraction=train_fraction, seed=seed)
-        if train_fraction is not None
-        else train_src
-    )
-    # Bounded collect: cap the driver sample at 256 points per cell.
-    sample = train.limit(256 * n_cells).toPandas()
-    x = np.asarray([np.asarray(e, dtype=np.float64) for e in sample["embedding"]])
+    x = _train_sample(corpus, 256 * n_cells, seed, train_fraction)
     if len(x) == 0:
         # Empty corpus/partition (routine at scale): empty index, no cells.
         empty = feats.select(
@@ -475,9 +454,7 @@ def ivf_index(
         return empty, []
     centers = _kmeans_numpy(x, n_cells, seed)
     centers_list = [list(map(float, c)) for c in centers]
-
     return assign_to_cells(feats, centers_list), centers_list
-
 
 
 def _probe_cells(
@@ -509,16 +486,15 @@ def _probe_cells(
 def ann_ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
+    index: "tuple[DataFrame, list[list[float]]]",
     *,
     k: int = 5,
-    n_cells: int = 16,
     n_probe: int = 4,
-    seed: int = 42,
-    train_fraction: float | None = None,
-    index: "tuple[DataFrame, list[list[float]]] | None" = None,
 ) -> DataFrame:
     """Approximate top-k via IVF: probe the ``n_probe`` nearest cells per
-    query, exact-rerank only vectors in probed cells.
+    query, exact-rerank only vectors in probed cells. ``index`` is the
+    ``(assigned, centers)`` pair of :func:`ivf_index`,
+    :func:`load_ivf_index` or a fixed quantizer's :func:`assign_to_cells`.
 
     Complements the LSH path (data-independent hashing) with a
     data-DEPENDENT partitioning — clustered corpora get much tighter
@@ -526,33 +502,10 @@ def ann_ivf_topk(
     per query; the probe-cell computation is |queries| × n_cells distances
     against a literal centroid array — no join, no shuffle on the corpus
     side beyond the candidate equi-join on ``cell``.
-
-    ``index`` and the build knobs are mutually exclusive: a prebuilt
-    index already fixed its n_cells/seed/train_fraction, and silently
-    ignoring different values here is the trap (a caller "tuning"
-    n_cells against a cached index would get no effect and no warning).
     """
-    if index is not None and (
-        n_cells != 16 or seed != 42 or train_fraction is not None
-    ):
-        raise ValueError(
-            "ann_ivf_topk: pass EITHER a prebuilt index OR build knobs "
-            "(n_cells/seed/train_fraction); the knobs cannot retune a "
-            "prebuilt index"
-        )
-    assigned, centers = (
-        index
-        if index is not None
-        else ivf_index(
-            corpus, n_cells=n_cells, seed=seed, train_fraction=train_fraction
-        )
-    )
+    assigned, centers = index
     if not centers:
-        # Empty index → no candidates → empty (but correctly-typed) top-k.
-        empty_cand = assigned.select(
-            F.col("vec_id").alias("query_id"), "vec_id"
-        ).limit(0)
-        return _exact_rerank(empty_cand, corpus, queries, k)
+        return _no_candidates(corpus, queries, k)
     probe_cells = _probe_cells(queries, centers, n_probe)
     candidates = (
         assigned.join(F.broadcast(probe_cells), "cell")
@@ -562,31 +515,53 @@ def ann_ivf_topk(
     return _exact_rerank(candidates, corpus, queries, k)
 
 
+def _save_cells(
+    cells: DataFrame, centers: list[list[float]], path: str, table: str
+) -> None:
+    """Write a per-vector table partitioned BY CELL under ``path/table``
+    (a probe reads only its n_probe partitions — partition pruning does
+    the candidate restriction at the file level) and the n_cells×dim
+    centroid table under ``path/centroids`` (a few KB). Shared by the
+    IVF and IVF-PQ indexes."""
+    # partitionBy on a zero-row frame writes NO files (an unreadable
+    # directory); an empty index lands unpartitioned so the schema
+    # survives and load/search degrade to empty results, not crashes
+    writer = cells.write.mode("overwrite")
+    if cells.limit(1).count() > 0:
+        writer = writer.partitionBy("cell")
+    writer.parquet(f"{path}/{table}")
+    cells.sparkSession.createDataFrame(
+        [(i, [float(v) for v in c]) for i, c in enumerate(centers)],
+        "cell INT, centroid ARRAY<DOUBLE>",
+    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
+
+
+def _load_cells(
+    spark: SparkSession, path: str, table: str, *cols: str
+) -> "tuple[DataFrame, list[list[float]]]":
+    """The per-vector table :func:`_save_cells` wrote, as a lazy
+    (cell-partitioned, so probes prune) scan, and its centroid list —
+    n_cells rows, the only part collected to the driver."""
+    cells = spark.read.parquet(f"{path}/{table}").select(
+        "vec_id", F.col("cell").cast("int").alias("cell"), *cols
+    )
+    rows = spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
+    return cells, [list(map(float, r.centroid)) for r in rows]
+
+
 def save_ivf_index(
     index: "tuple[DataFrame, list[list[float]]]", path: str
 ) -> None:
-    """Persist an IVF index as two parquet tables: the (vec_id, cell)
-    assignments partitioned BY CELL (a probe reads only its n_probe
-    partitions — partition pruning does the candidate restriction at the
-    file level), and the n_cells×dim centroid table (a few KB).
+    """Persist an IVF index: the (vec_id, cell) assignments under
+    ``assignments/`` and the centroids under ``centroids/``
+    (:func:`_save_cells`).
 
     This is the cross-session / cross-job half of build-once-query-many:
     the quantizer training and the corpus assignment pass run in the
     offline build job; every search job afterwards just reads the index.
     """
     assigned, centers = index
-    # partitionBy on a zero-row frame writes NO files (an unreadable
-    # directory); an empty index lands unpartitioned so the schema
-    # survives and load/search degrade to empty results, not crashes
-    writer = assigned.write.mode("overwrite")
-    if assigned.limit(1).count() > 0:
-        writer = writer.partitionBy("cell")
-    writer.parquet(f"{path}/assignments")
-    spark = assigned.sparkSession
-    spark.createDataFrame(
-        [(i, [float(v) for v in c]) for i, c in enumerate(centers)],
-        "cell INT, centroid ARRAY<DOUBLE>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
+    _save_cells(assigned, centers, path, "assignments")
 
 
 def assign_to_cells(
@@ -612,6 +587,18 @@ def _fixed_centroids(n_cells: int = _IVF_FIXED_CELLS, dim: int = 64,
     return rng.standard_normal((n_cells, dim)).tolist()
 
 
+def _sq_dist_sql(center: list[float], offset: int = 0) -> str:
+    """DuckDB twin of :func:`_sq_dist` for the oracles: squared L2
+    distance of ``embedding[offset + 1 …]`` to a literal ``center``,
+    folded left from 0.0."""
+    terms = " + ".join(
+        f"(CAST(embedding[{offset + i + 1}] AS DOUBLE) - {float(v)!r})"
+        f" * (CAST(embedding[{offset + i + 1}] AS DOUBLE) - {float(v)!r})"
+        for i, v in enumerate(center)
+    )
+    return f"(0.0 + {terms})"
+
+
 def _ivf_fixed_oracle() -> str:
     """DuckDB oracle for c03_ivf_fixed_centroids — the complete IVF
     SEARCH machinery in SQL: argmin cell assignment (same left-fold
@@ -627,15 +614,9 @@ def _ivf_fixed_oracle() -> str:
     centers = _fixed_centroids()
     n_cells = len(centers)
 
-    def dist(ci: int) -> str:
-        terms = " + ".join(
-            f"(CAST(embedding[{i + 1}] AS DOUBLE) - {float(v)!r})"
-            f" * (CAST(embedding[{i + 1}] AS DOUBLE) - {float(v)!r})"
-            for i, v in enumerate(centers[ci])
-        )
-        return f"(0.0 + {terms})"
-
-    d_cols = ",\n    ".join(f"{dist(j)} AS d{j}" for j in range(n_cells))
+    d_cols = ",\n    ".join(
+        f"{_sq_dist_sql(centers[j])} AS d{j}" for j in range(n_cells)
+    )
     least = "least(" + ",".join(f"d{j}" for j in range(n_cells)) + ")"
     argmin = (
         "CASE "
@@ -674,25 +655,7 @@ def _ivf_fixed_oracle() -> str:
       FROM assigned a JOIN probe p ON a.cell = p.cell
       WHERE a.vec_id <> p.query_id
     )
-    SELECT query_id, vec_id, cos_sim, sim_rank FROM (
-      SELECT cand.query_id, cand.vec_id,
-             round(list_cosine_similarity(
-               list_transform(qe.embedding, x -> CAST(x AS DOUBLE)),
-               list_transform(ce.embedding, x -> CAST(x AS DOUBLE))), 6)
-               AS cos_sim,
-             ROW_NUMBER() OVER (
-               PARTITION BY cand.query_id
-               ORDER BY round(list_cosine_similarity(
-                 list_transform(qe.embedding, x -> CAST(x AS DOUBLE)),
-                 list_transform(ce.embedding, x -> CAST(x AS DOUBLE))), 6)
-                 DESC,
-               cand.vec_id ASC
-             ) AS sim_rank
-      FROM cand
-      JOIN embeddings qe ON qe.vec_id = cand.query_id
-      JOIN embeddings ce ON ce.vec_id = cand.vec_id
-    ) WHERE sim_rank <= {_TOP_K}
-    """
+    {_RERANK_SQL}"""
 
 
 @query(
@@ -701,7 +664,7 @@ def c03_ivf_fixed_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C3c': IVF search over a FIXED seeded coarse quantizer — the
     oracle-backed twin of c03_ann_ivf. Identical engine machinery
     (``assign_to_cells`` argmin pass, ``_probe_cells``,
-    ``_exact_rerank`` through ``ann_ivf_topk(index=...)``); only the
+    ``_exact_rerank`` through ``ann_ivf_topk``); only the
     quantizer differs (seeded literals instead of kmeans — lower
     recall, fully verifiable). Hash-parity at sf0.001/0.01/0.1, 50
     rows each. The kmeans-trained path keeps its recall tests; this
@@ -714,8 +677,7 @@ def c03_ivf_fixed_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     queries = emb.filter(F.col("vec_id") < _N_QUERIES)
     return ann_ivf_topk(
-        emb, queries, k=_TOP_K, n_probe=_IVF_FIXED_PROBE,
-        index=(assigned, centers),
+        emb, queries, (assigned, centers), k=_TOP_K, n_probe=_IVF_FIXED_PROBE
     )
 
 
@@ -873,58 +835,22 @@ def retrain_ivf_index(
 def load_ivf_index(
     spark: SparkSession, path: str
 ) -> "tuple[DataFrame, list[list[float]]]":
-    """Load a persisted IVF index. Assignments stay a lazy parquet scan
-    (cell-partitioned, so probes prune); only the centroid table — by
-    construction n_cells rows — is collected to the driver, same bounded
-    footprint as training."""
-    assigned = spark.read.parquet(f"{path}/assignments").select(
-        "vec_id", F.col("cell").cast("int").alias("cell")
-    )
-    rows = spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
-    centers = [list(map(float, r.centroid)) for r in rows]
-    return assigned, centers
-
-
-# Built index per (session, corpus): IVF practice is build-once,
-# query-many — the quantizer training and the corpus assignment pass are
-# index-construction cost, amortized across every subsequent search. The
-# assignment table (~5 B/vector) is persisted; keyed by the LIVE SESSION
-# object (weak: sibling sessions share an applicationId but a cached
-# frame belongs to the session that built it, and entries must die with
-# their session).
-_IVF_INDEX_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]"
-_IVF_INDEX_CACHE = weakref.WeakKeyDictionary()
-
-
-def c03_ivf_cached_index(spark: SparkSession, sf_dir: str):
-    try:
-        per_session = _IVF_INDEX_CACHE.setdefault(spark, {})
-    except TypeError:  # session not weak-referenceable: no memo possible
-        # do NOT persist here — with a fresh dict per call, every
-        # invocation would persist() a new frame that nothing ever
-        # unpersists (a storage leak for the session's lifetime); an
-        # unmemoized rebuild is the lesser cost
-        emb = load(spark, sf_dir, "embeddings")
-        return ivf_index(emb, train_fraction=0.25)
-    if sf_dir not in per_session:
-        emb = load(spark, sf_dir, "embeddings")
-        assigned, centers = ivf_index(emb, train_fraction=0.25)
-        per_session[sf_dir] = (assigned.persist(), centers)
-    return per_session[sf_dir]
+    """Load a persisted IVF index (see :func:`_load_cells`)."""
+    return _load_cells(spark, path, "assignments")
 
 
 @query("c03_ann_ivf", driver=False)
 def c03_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C3c: IVF-partitioned approximate nearest neighbors (16 cells,
-    probe 4) over a build-once cached index. No SQL oracle (k-means isn't
-    SQL-expressible); recall vs the exact C3a top-k is asserted in
-    tests/test_similarity.py."""
+    probe 4); each call trains its index on a seeded 25% sample. No SQL
+    oracle (k-means isn't SQL-expressible); recall vs the exact C3a top-k
+    is asserted in tests/test_similarity.py."""
     emb = load(spark, sf_dir, "embeddings")
     return ann_ivf_topk(
         emb,
         emb.filter(F.col("vec_id") < _N_QUERIES),
+        ivf_index(emb, train_fraction=0.25),
         k=_TOP_K,
-        index=c03_ivf_cached_index(spark, sf_dir),
     )
 
 
@@ -1058,11 +984,8 @@ def c03_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(cosine(F.col("q_emb"), F.col("embedding")), 6).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("sim_rank", F.row_number().over(w))
-        .filter(F.col("sim_rank") <= _TOP_K)
-        .select("query_id", "vec_id", "label", "cos_sim", "sim_rank")
+    return _top_k(scored, _TOP_K).select(
+        "query_id", "vec_id", "label", "cos_sim", "sim_rank"
     )
 
 
@@ -1074,11 +997,9 @@ _SEMDEDUP_THRESHOLD = 0.4
 
 def semantic_dedup(
     corpus: DataFrame,
+    index: "tuple[DataFrame, list[list[float]]]",
     *,
     threshold: float = _SEMDEDUP_THRESHOLD,
-    n_cells: int = 16,
-    seed: int = 42,
-    index: "tuple[DataFrame, list[list[float]]] | None" = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): cluster the embedding space with the IVF coarse
@@ -1095,12 +1016,10 @@ def semantic_dedup(
     cell near-duplicates are missed by construction; that recall loss is
     the documented SemDeDup trade (mitigate with more probe-like overlap
     or a second pass at lower n_cells). Precision is exact: every drop
-    has a genuine within-cell neighbor above threshold.
+    has a genuine within-cell neighbor above threshold. Only the
+    assignments of ``index`` (an :func:`ivf_index` pair) are read.
     """
-    if index is None:
-        assigned, _ = ivf_index(corpus, n_cells=n_cells, seed=seed)
-    else:
-        assigned, _ = index
+    assigned, _ = index
     vecs = corpus.select("vec_id", "embedding").join(assigned, "vec_id")
     a = vecs.select(
         "cell", F.col("vec_id").alias("a_id"), F.col("embedding").alias("a_emb")
@@ -1132,7 +1051,7 @@ def c03_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (every celled drop is a genuine drop) and recall asserted on
     planted duplicates."""
     emb = load(spark, sf_dir, "embeddings")
-    survivors = semantic_dedup(emb, index=c03_ivf_cached_index(spark, sf_dir))
+    survivors = semantic_dedup(emb, ivf_index(emb, train_fraction=0.25))
     return survivors.select("vec_id", "label")
 
 
@@ -1192,7 +1111,7 @@ def pq_train(
     n_codes: int = _PQ_N_CODES,
     seed: int = 42,
     sample_cap: int = 4096,
-    sample_fraction: float | None = None,
+    train_fraction: float | None = None,
 ) -> list[list[list[float]]]:
     """Train PQ codebooks (Jégou et al. 2011, "Product Quantization for
     Nearest Neighbor Search"): split the vector into ``n_sub`` contiguous
@@ -1201,20 +1120,14 @@ def pq_train(
     driver-side sample (codebooks are n_sub·n_codes·d_sub floats — KB —
     regardless of corpus size); the full-corpus work is all map-side.
 
-    ``sample_fraction`` samples BEFORE the cap — at corpus scale a bare
+    ``train_fraction`` samples BEFORE the cap — at corpus scale a bare
     ``limit`` is a storage-order PREFIX (typically one partition / one
     time shard), and codebooks fit to a correlated prefix quantize the
     rest of the corpus badly. Same knob and rationale as
     :func:`ivf_index`'s ``train_fraction``; the default stays prefix
     (exact and cheap at test SF, where the fixture is unordered).
     """
-    src = corpus.select("embedding")
-    if sample_fraction is not None:
-        src = src.sample(fraction=sample_fraction, seed=seed)
-    sample = src.limit(sample_cap).toPandas()
-    x = np.asarray(
-        [np.asarray(e, dtype=np.float64) for e in sample["embedding"]]
-    )
+    x = _train_sample(corpus, sample_cap, seed, train_fraction)
     if len(x) == 0:
         # Empty corpus/partition (routine at scale): no codebooks — the
         # encode/search paths degrade to empty, same as ivf_index.
@@ -1282,10 +1195,10 @@ def pq_reconstruct(encoded: DataFrame, books: list[list[list[float]]]) -> DataFr
 def pq_topk(
     corpus: DataFrame,
     queries: DataFrame,
+    books: list[list[list[float]]],
     *,
     k: int = 5,
     shortlist: int = 50,
-    books: list[list[list[float]]] | None = None,
 ) -> DataFrame:
     """Asymmetric-distance PQ search: score the UNQUANTIZED query against
     each corpus vector's reconstruction (ADC) to build a per-query
@@ -1293,14 +1206,10 @@ def pq_topk(
     vectors. The scan side touches only the codes table (n_sub ints per
     vector — this is why PQ exists: the approximate pass reads 1/30th
     the bytes); the exact pass touches ``shortlist`` vectors per query.
+    ``books`` come from :func:`pq_train` (or a fixed literal set).
     """
-    if books is None:
-        books = pq_train(corpus)
     if not books:
-        empty_cand = corpus.select(
-            F.col("vec_id").alias("query_id"), "vec_id"
-        ).limit(0)
-        return _exact_rerank(empty_cand, corpus, queries, k)
+        return _no_candidates(corpus, queries, k)
     recon = pq_reconstruct(pq_encode(corpus, books), books)
     q = queries.select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
@@ -1313,15 +1222,7 @@ def pq_topk(
             cosine(F.col("q_emb"), F.col("recon")).alias("approx_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_sim"), F.asc("vec_id")
-    )
-    cand = (
-        approx.withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") <= shortlist)
-        .select("query_id", "vec_id")
-    )
-    return _exact_rerank(cand, corpus, queries, k)
+    return _shortlist_rerank(approx, corpus, queries, k, shortlist)
 
 
 @query("c03_pq_topk", driver=False)
@@ -1332,7 +1233,9 @@ def c03_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests, and the final scores are exact because the rerank uses the
     original vectors."""
     emb = load(spark, sf_dir, "embeddings")
-    return pq_topk(emb, emb.filter(F.col("vec_id") < _N_QUERIES), k=_TOP_K)
+    return pq_topk(
+        emb, emb.filter(F.col("vec_id") < _N_QUERIES), pq_train(emb), k=_TOP_K
+    )
 
 
 _PQ_FIXED_SEED, _PQ_FIXED_SHORTLIST = 11, 50
@@ -1362,17 +1265,10 @@ def _pq_fixed_oracle() -> str:
     d_sub = len(books[0][0])
     dim = n_sub * d_sub
 
-    dist_cols = []
-    for m in range(n_sub):
-        for c in range(n_codes):
-            terms = " + ".join(
-                f"(CAST(embedding[{m * d_sub + i + 1}] AS DOUBLE)"
-                f" - {float(books[m][c][i])!r})"
-                f" * (CAST(embedding[{m * d_sub + i + 1}] AS DOUBLE)"
-                f" - {float(books[m][c][i])!r})"
-                for i in range(d_sub)
-            )
-            dist_cols.append(f"(0.0 + {terms}) AS pd{m}_{c}")
+    dist_cols = [
+        f"{_sq_dist_sql(books[m][c], m * d_sub)} AS pd{m}_{c}"
+        for m in range(n_sub) for c in range(n_codes)
+    ]
     code_cols = []
     for m in range(n_sub):
         least = (
@@ -1442,25 +1338,7 @@ def _pq_fixed_oracle() -> str:
         FROM approx
       ) WHERE r <= {_PQ_FIXED_SHORTLIST}
     )
-    SELECT query_id, vec_id, cos_sim, sim_rank FROM (
-      SELECT cand.query_id, cand.vec_id,
-             round(list_cosine_similarity(
-               list_transform(qe.embedding, x -> CAST(x AS DOUBLE)),
-               list_transform(ce.embedding, x -> CAST(x AS DOUBLE))), 6)
-               AS cos_sim,
-             ROW_NUMBER() OVER (
-               PARTITION BY cand.query_id
-               ORDER BY round(list_cosine_similarity(
-                 list_transform(qe.embedding, x -> CAST(x AS DOUBLE)),
-                 list_transform(ce.embedding, x -> CAST(x AS DOUBLE))), 6)
-                 DESC,
-               cand.vec_id ASC
-             ) AS sim_rank
-      FROM cand
-      JOIN embeddings qe ON qe.vec_id = cand.query_id
-      JOIN embeddings ce ON ce.vec_id = cand.vec_id
-    ) WHERE sim_rank <= {_TOP_K}
-    """
+    {_RERANK_SQL}"""
 
 
 @query(
@@ -1479,9 +1357,9 @@ def c03_pq_fixed_books(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pq_topk(
         emb,
         emb.filter(F.col("vec_id") < _N_QUERIES),
+        _fixed_pq_books(),
         k=_TOP_K,
         shortlist=_PQ_FIXED_SHORTLIST,
-        books=_fixed_pq_books(),
     )
 
 
@@ -1508,29 +1386,16 @@ def save_pq_index(
     Set ``train_fraction`` on real corpora so both quantizers train on a
     sample, not a storage-order prefix (see :func:`ivf_index`).
     """
-    spark = corpus.sparkSession
     assigned, centers = ivf_index(
         corpus, n_cells=n_cells, seed=seed, train_fraction=train_fraction
     )
     books = pq_train(
-        corpus,
-        n_sub=n_sub,
-        n_codes=n_codes,
-        seed=seed,
-        sample_fraction=train_fraction,
+        corpus, n_sub=n_sub, n_codes=n_codes, seed=seed,
+        train_fraction=train_fraction,
     )
-    encoded = pq_encode(corpus, books)
-    joined = assigned.join(encoded, "vec_id")
-    # empty-corpus guard: see save_ivf_index — keep the schema readable
-    writer = joined.write.mode("overwrite")
-    if joined.limit(1).count() > 0:
-        writer = writer.partitionBy("cell")
-    writer.parquet(f"{path}/cells")
-    spark.createDataFrame(
-        [(i, [float(v) for v in c]) for i, c in enumerate(centers)],
-        "cell INT, centroid ARRAY<DOUBLE>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-    spark.createDataFrame(
+    cells = assigned.join(pq_encode(corpus, books), "vec_id")
+    _save_cells(cells, centers, path, "cells")
+    corpus.sparkSession.createDataFrame(
         [
             (m, c, [float(v) for v in book[c]])
             for m, book in enumerate(books)
@@ -1545,13 +1410,7 @@ def load_pq_index(
 ) -> "tuple[DataFrame, list[list[float]], list[list[list[float]]]]":
     """(cell-partitioned codes scan, coarse centroids, PQ codebooks).
     Only the two KB artifacts are collected; codes stay a lazy scan."""
-    cells = spark.read.parquet(f"{path}/cells").select(
-        "vec_id", F.col("cell").cast("int").alias("cell"), "pq_codes"
-    )
-    centers = [
-        list(map(float, r.centroid))
-        for r in spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
-    ]
+    cells, centers = _load_cells(spark, path, "cells", "pq_codes")
     book_rows = (
         spark.read.parquet(f"{path}/codebooks").orderBy("sub", "code").collect()
     )
@@ -1586,14 +1445,9 @@ def ivfpq_topk(
     At 100 TB the three tiers touch KB (centroids+codebooks), GB (probed
     code partitions), and MB (shortlist vectors) respectively.
     """
-    spark = corpus.sparkSession
-    cells, centers, books = load_pq_index(spark, index_path)
+    cells, centers, books = load_pq_index(corpus.sparkSession, index_path)
     if not centers or not books:
-        # empty persisted index: empty result with the contract schema
-        # (the probe/ADC expressions cannot even ANALYZE over zero-length
-        # centroid/codebook literals)
-        empty = spark.createDataFrame([], "query_id bigint, vec_id bigint")
-        return _exact_rerank(empty, corpus, queries, k)
+        return _no_candidates(corpus, queries, k)
     probe_cells = _probe_cells(queries, centers, n_probe, keep_q_emb=True)
     recon = _recon_expr(books)
     adc = (
@@ -1605,12 +1459,4 @@ def ivfpq_topk(
             cosine(F.col("q_emb"), recon).alias("approx_sim"),
         )
     )
-    ws = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_sim"), F.asc("vec_id")
-    )
-    cand = (
-        adc.withColumn("r", F.row_number().over(ws))
-        .filter(F.col("r") <= shortlist)
-        .select("query_id", "vec_id")
-    )
-    return _exact_rerank(cand, corpus, queries, k)
+    return _shortlist_rerank(adc, corpus, queries, k, shortlist)

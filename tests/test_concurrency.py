@@ -1,9 +1,9 @@
-"""Thread-safety of the shared per-session memos under concurrent use.
+"""Thread-safety of registry queries under concurrent use of one session.
 
 Spark supports concurrent job submission from multiple driver threads on
-one session; the engine's catalog and series memos (plain dicts guarded by
-the GIL, last-writer-wins on a race) must never corrupt results or crash when
-a multi-tenant driver fires queries in parallel."""
+one session; queries that share the session's temp views and runtime
+confs must never corrupt results or crash when a multi-tenant driver
+fires them in parallel."""
 
 from __future__ import annotations
 

@@ -53,12 +53,15 @@ def test_bollinger_over_short_series_is_empty_not_wrong(spark):
 
 
 def test_semantic_dedup_empty_corpus(spark):
-    from stock_data_pipeline_spark.operators.similarity import semantic_dedup
+    from stock_data_pipeline_spark.operators.similarity import (
+        ivf_index,
+        semantic_dedup,
+    )
 
     empty = spark.createDataFrame(
         [], "vec_id long, embedding array<float>, label int"
     )
-    assert semantic_dedup(empty).count() == 0
+    assert semantic_dedup(empty, ivf_index(empty)).count() == 0
 
 
 def test_pq_train_rejects_indivisible_dim(spark):

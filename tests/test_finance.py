@@ -70,30 +70,3 @@ def test_beta_recovers_index_composition(spark, sf_dir):
     assert 0.5 < mean_beta < 1.5
     for r in rows:
         assert math.isfinite(r.beta) and math.isfinite(r.alpha)
-
-
-def test_hourly_series_memo_invalidation(spark, sf_dir):
-    """The b51/b53/b88 shared hourly-series checkpoint is memoized per
-    (session, sf_dir); `invalidate_hourly_series` is the staleness hook
-    an ingest job calls after mutating the events source — the next call
-    must rebuild (a NEW checkpoint object), and invalidating an
-    untouched sf_dir reports False."""
-    from stock_data_pipeline_spark.operators.finance import (
-        _hourly_series_mat,
-        invalidate_hourly_series,
-    )
-
-    first = _hourly_series_mat(spark, sf_dir)
-    assert _hourly_series_mat(spark, sf_dir) is first  # memo hit
-    assert invalidate_hourly_series(spark, sf_dir) is True
-    assert invalidate_hourly_series(spark, sf_dir) is False  # already gone
-    rebuilt = _hourly_series_mat(spark, sf_dir)
-    assert rebuilt is not first
-    # path-spelling variants resolve to one identity (abspath key)
-    alias = sf_dir.rstrip("/") + "/."
-    assert invalidate_hourly_series(spark, alias) is True
-    # drop-all arm: other suites may have populated OTHER sf_dirs in the
-    # shared session memo, so only assert it leaves nothing behind for
-    # THIS sf_dir (the global return value is order-dependent)
-    invalidate_hourly_series(spark)
-    assert invalidate_hourly_series(spark, sf_dir) is False

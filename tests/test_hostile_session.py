@@ -44,21 +44,15 @@ def test_mid_run_conf_flip_heals(spark, sf_dir):
 
 
 def test_series_memo_hit_heals_conf_poisoning(spark, sf_dir):
-    """The finance hourly-series localCheckpoint memo must re-pin the
-    runtime confs on a HIT: b51 warms the memo, a hostile tz lands,
-    then b88 — whose builder reads only `_hourly_series_mat` (a
-    series-memo hit, no catalog.load) — must still execute and collect
-    under re-pinned UTC. Regression for the r8 hostile-sweep find:
-    b51/b53 mask a poisoned session tz (their pair-joins cancel a
-    uniform bucket shift) while b88 exposes the bucket column; 628/628
-    rows shifted."""
-    from stock_data_pipeline_spark.operators.finance import (
-        _hourly_series_mat,
-        invalidate_hourly_series,
-    )
-
-    invalidate_hourly_series(spark)
-    _hourly_series_mat(spark, sf_dir)  # warm the series memo (healed here)
+    """The finance hourly series (a per-call localCheckpoint that b51,
+    b53 and b88 self-join) must be built and collected under re-pinned
+    runtime confs: a hostile tz lands before each b88 call, and b88 —
+    whose builder reaches the tables only through ``_hourly_series_mat``
+    — must still return the same rows under UTC. Regression for the r8
+    hostile-sweep find, made when the series was memoized per session
+    and a memo hit skipped ``catalog.load``: b51/b53 mask a poisoned
+    session tz (their pair-joins cancel a uniform bucket shift) while
+    b88 exposes the bucket column; 628/628 rows shifted."""
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
     before = _rows(get("b88_pairs_spread").fn(spark, sf_dir))
     assert spark.conf.get("spark.sql.session.timeZone") == "UTC"

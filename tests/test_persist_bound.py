@@ -11,6 +11,8 @@ leaves the session's persistent-RDD count where the first call left it.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from stock_data_pipeline_spark.registry import get
@@ -45,3 +47,21 @@ def test_repeat_call_adds_no_persisted_rdd(spark, sf_dir, name):
         "call; a build-time persist is no longer reused by the "
         "CacheManager, so every call leaks a session-lifetime cache entry"
     )
+
+
+def test_c03_index_builders_leave_no_cache(spark, sf_dir, tmp_path):
+    """`c03_ann_ivf` and `c03_semdedup` build their IVF index inside the
+    call and persist none of it. Run on a path no earlier call has seen
+    (a fresh symlink to the fixture directory), so a per-path index memo
+    would miss and cache its assignments: the session's persistent-RDD
+    count must not grow."""
+    if not hasattr(spark, "_jsc"):
+        pytest.skip("classic session required to list persistent RDDs")
+    alias = tmp_path / "sf"
+    alias.symlink_to(os.path.abspath(sf_dir), target_is_directory=True)
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    after = max(
+        _run_and_count(spark, name, str(alias))
+        for name in ("c03_ann_ivf", "c03_semdedup")
+    )
+    assert after <= before, f"persistent RDDs grew {before} -> {after}"

@@ -451,13 +451,15 @@ def test_pq_recall_at_8x(spark, emb_big):
     """PQ ADC shortlist + exact rerank on the 8× corpus: the base-scale
     recall bound holds at the same 10%-of-corpus shortlist ratio, and the
     shortlist bound (queries × shortlist) caps the exact-rerank volume."""
-    from stock_data_pipeline_spark.operators.similarity import pq_topk
+    from stock_data_pipeline_spark.operators.similarity import pq_topk, pq_train
 
     n = emb_big.count()
     queries = emb_big.filter(F.col("vec_id") < 10)
     truth = _brute_truth(emb_big, queries)
     shortlist = n // 10
-    approx = pq_topk(emb_big, queries, k=5, shortlist=shortlist).collect()
+    approx = pq_topk(
+        emb_big, queries, pq_train(emb_big), k=5, shortlist=shortlist
+    ).collect()
     assert _recall(truth, approx) >= 0.6
 
 

@@ -46,7 +46,7 @@ ALLOWED_MULTI_SCAN = {
     "c03_filtered_topk": "queries subset vs corpus self-join",
     "c03_pq_topk": "inline train+encode+rerank (persisted path save_pq_index avoids it)",
     "c03_pq_fixed_books": "inline encode+ADC+rerank (oracle twin of c03_pq_topk, same inline-index shape)",
-    "c03_semdedup": "cell assignment + within-cell pair self-join (persisted index in production)",
+    "c03_semdedup": "index build + within-cell pair self-join (an index from load_ivf_index avoids the build scan)",
     "c03_semdedup_exact": "all-pairs ground truth self-join",
     "c04_decontaminate": "train corpus vs eval-set shingle index are different logical relations in documents",
     "c04_decontaminate_verdicts": "fixture-sized inputs take the recompute branch of the size-gated materialize-once (cheaper than checkpoint IO below decon.materializeMinBytes; the gate test below pins both branches)",

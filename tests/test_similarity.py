@@ -66,7 +66,9 @@ def test_ivf_recall_vs_brute_force(spark, sf_dir):
     # Random uniform vectors are also IVF's worst case (clusters are
     # arbitrary); probing half the cells keeps recall high while still
     # exercising the pruning path.
-    approx = ann_ivf_topk(emb, queries, k=5, n_cells=8, n_probe=4).collect()
+    approx = ann_ivf_topk(
+        emb, queries, ivf_index(emb, n_cells=8), k=5, n_probe=4
+    ).collect()
     got: dict[int, set[int]] = {}
     for r in approx:
         got.setdefault(r.query_id, set()).add(r.vec_id)
@@ -86,7 +88,7 @@ def test_ivf_candidates_are_pruned(spark, sf_dir):
     cell_sizes = assigned.groupBy("cell").count().collect()
     assert len(cell_sizes) > 1  # k-means actually split the corpus
     assert ann_ivf_topk(
-        emb, emb.filter("vec_id = 0"), k=5, n_cells=8, n_probe=2
+        emb, emb.filter("vec_id = 0"), (assigned, centers), k=5, n_probe=2
     ).count() == 5
     # probe 2 of 8 cells → candidates bounded well under the corpus
     biggest_two = sum(sorted((r["count"] for r in cell_sizes))[-2:])
@@ -220,41 +222,6 @@ def test_incremental_ivf_assignment_equals_rebuild(spark, tmp_path):
     assert hits & {r.vec_id for r in new.select("vec_id").collect()}
 
 
-def test_cosine_pandas_matches_jvm_path(spark, sf_dir):
-    """The Arrow-vectorized cosine must agree with the JVM
-    higher-order-function cosine to double precision on real pairs."""
-    from pyspark.sql import functions as F
-
-    from stock_data_pipeline_spark.catalog import load
-    from stock_data_pipeline_spark.operators.similarity import (
-        cosine,
-        cosine_pandas_scores,
-    )
-
-    emb = load(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    pairs = q.crossJoin(
-        F.broadcast(
-            emb.filter(F.col("vec_id") % 25 == 0).select("vec_id", "embedding")
-        )
-    )
-    jvm = {
-        (r.query_id, r.vec_id): r.c
-        for r in pairs.select(
-            "query_id", "vec_id", cosine(F.col("q_emb"), F.col("embedding")).alias("c")
-        ).collect()
-    }
-    arrow = {
-        (r.query_id, r.vec_id): r.cos_sim
-        for r in cosine_pandas_scores(pairs).collect()
-    }
-    assert set(jvm) == set(arrow)
-    for k, v in jvm.items():
-        assert abs(arrow[k] - v) < 1e-12, k
-
-
 def test_ivf_cell_stats_flags_imbalance(spark):
     """Occupancy shares sum to 1 and a planted hot cell surfaces with
     skew >> 1 (the retrain trigger signal)."""
@@ -304,13 +271,14 @@ def test_semdedup_planted_exact_duplicates_always_dropped(spark, sf_dir):
         "label",
     )
     corpus = emb.select("vec_id", "embedding", "label").unionByName(copies)
-    survivors = semantic_dedup(corpus, n_cells=4)
+    survivors = semantic_dedup(corpus, ivf_index(corpus, n_cells=4))
     ids = {r.vec_id for r in survivors.select("vec_id").collect()}
     planted = {r.vec_id for r in copies.select("vec_id").collect()}
     # every planted copy has an identical lower-id original -> all dropped
     assert not (ids & planted)
     # rerun is deterministic
-    ids2 = {r.vec_id for r in semantic_dedup(corpus, n_cells=4).select("vec_id").collect()}
+    rerun = semantic_dedup(corpus, ivf_index(corpus, n_cells=4))
+    ids2 = {r.vec_id for r in rerun.select("vec_id").collect()}
     assert ids == ids2
 
 
@@ -470,26 +438,6 @@ def test_empty_persisted_index_roundtrips_and_searches_empty(spark, tmp_path):
     assert {"query_id", "vec_id"} <= set(out.columns)
 
 
-def test_cosine_pandas_scores_null_embedding_yields_null(spark):
-    """Parity with the JVM cosine(): a NULL vector on either side scores
-    NULL — it must not crash the Arrow worker (np.stack over None)."""
-    from stock_data_pipeline_spark.operators.similarity import (
-        cosine_pandas_scores,
-    )
-
-    pairs = spark.createDataFrame(
-        [
-            (1, [1.0, 0.0], [1.0, 0.0]),
-            (2, None, [1.0, 0.0]),
-            (3, [0.0, 1.0], None),
-        ],
-        "pair_id long, q_emb array<double>, embedding array<double>",
-    )
-    got = {r.pair_id: r.cos_sim for r in cosine_pandas_scores(pairs).collect()}
-    assert got[1] == pytest.approx(1.0)
-    assert got[2] is None and got[3] is None
-
-
 def test_fixed_quantizer_twins_are_real_searchers(spark, sf_dir):
     """The r7 oracle twins (fixed centroids / fixed codebooks) exist to
     verify the search machinery, but they must still BE functional ANN
@@ -565,10 +513,13 @@ def test_ivf_retrain_on_drift_rebalances_and_swaps_atomically(spark, tmp_path):
     path = str(tmp_path / "ivf")
     save_ivf_index(ivf_index(initial, n_cells=n_cells), path)
 
-    # planted drift: 2x the original corpus, all beside ONE corner -> one
-    # hot cell under the frozen quantizer
+    # planted drift: 2x the original corpus in two blobs beyond corner A
+    # -> all 800 land in A's cell under the frozen quantizer; they sit
+    # apart from every corner, so a retrained quantizer gives them cells
     drifted = spark.createDataFrame(
-        cluster([10.5, 10.5, 0.0, 0.0], 800, 5000), schema
+        cluster([20.0, 20.0, 10.0, 0.0], 400, 5000)
+        + cluster([20.0, 20.0, -10.0, 0.0], 400, 5400),
+        schema,
     )
     append_ivf_batch(spark, drifted, path)
     corpus = initial.unionByName(drifted)
@@ -591,9 +542,9 @@ def test_ivf_retrain_on_drift_rebalances_and_swaps_atomically(spark, tmp_path):
     assert all(0 <= r.cell < n_cells for r in stats_after)
 
     # queries still answer through the swapped index: vec 5000 points in
-    # the (10,10) direction, so every top hit must come from that angular
-    # family — the drifted region (>=5000) or corner A (<1000) — at
-    # near-perfect cosine
+    # the (20,20,10) direction, so every top hit must come from that
+    # angular family — the drifted region (>=5000) or corner A (<1000) —
+    # at near-perfect cosine
     q = corpus.filter(F.col("vec_id") == 5000)
     top = ann_ivf_topk(
         corpus, q, k=3, index=(assigned2, centers2)

@@ -26,10 +26,15 @@ Design for 100 TB:
   partitionings AND across engines, so the whole 3-iteration fixed
   point is differentially verifiable against DuckDB (same discipline as
   the limb-decomposed exact sums in functions/exact.py).
-- At a real 1000-executor scale you would localCheckpoint the rank
-  frame every few iterations to truncate lineage; with the fixed
-  3-iteration unroll used here the plan stays shallow enough to skip
-  that, and the edge cache bounds recomputation.
+- A fixed-round loop reads its round state ONCE per round, so the
+  unrolled plan grows linearly in rounds: component labels and k-core
+  peeling join a self-looped adjacency (each node is also its own
+  neighbour) to the previous state and aggregate by node. A state read
+  twice per round doubles the plan every round even though the cache
+  dedupes execution. PageRank's ranks are read twice per iteration (the
+  second read is the global dangling-mass scalar), so its plan doubles
+  per iteration; it runs three. HyperBall reads its state twice and
+  localCheckpoints every round.
 
 Semantics (classic damped PageRank, d = 0.85, dangling mass
 redistributed uniformly), with explicit floor at every division so both
@@ -138,24 +143,44 @@ def pagerank(edges: DataFrame, iterations: int = PR_ITERATIONS) -> DataFrame:
     return ranks.select("node", F.col("pr").alias("pagerank_scaled"))
 
 
+# The graph every c10 oracle replays: seq/trans/edges are click_edges,
+# ue is undirected_edges, bidir _adjacency and deg _degrees.
+_GRAPH_SQL = """seq AS (
+      SELECT user_id, ts, event_id,
+             CAST(json_extract_string(props, '$.k') AS BIGINT) AS dst
+      FROM events
+    ),
+    trans AS (
+      SELECT LAG(dst) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS src,
+             dst
+      FROM seq
+    ),
+    edges AS (
+      SELECT src, dst, CAST(COUNT(*) AS BIGINT) AS w
+      FROM trans WHERE src IS NOT NULL GROUP BY src, dst
+    ),
+    ue AS (
+      SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
+      FROM edges WHERE src <> dst
+    ),
+    bidir AS (
+      SELECT a AS node, b AS nbr FROM ue UNION ALL SELECT b, a FROM ue
+    ),
+    deg AS (
+      SELECT node, CAST(COUNT(*) AS BIGINT) AS deg FROM bidir GROUP BY node
+    )"""
+
+
+def _unrolled(ctes: list[str], select: str) -> str:
+    """An unrolled-CTE oracle: :data:`_GRAPH_SQL`, then ``ctes``, then
+    ``select``."""
+    return "WITH " + ",\n    ".join([_GRAPH_SQL, *ctes]) + "\n" + select
+
+
 def _pagerank_oracle(iterations: int) -> str:
     """Unrolled-CTE DuckDB replay of click_edges + pagerank: the same
     integer recurrence, floor division spelled ``//``."""
     ctes = [
-        """seq AS (
-      SELECT user_id, ts, event_id,
-             CAST(json_extract_string(props, '$.k') AS BIGINT) AS dst
-      FROM events
-    )""",
-        """trans AS (
-      SELECT LAG(dst) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS src,
-             dst
-      FROM seq
-    )""",
-        """edges AS (
-      SELECT src, dst, CAST(COUNT(*) AS BIGINT) AS w
-      FROM trans WHERE src IS NOT NULL GROUP BY src, dst
-    )""",
         """outw AS (
       SELECT src, CAST(SUM(w) AS BIGINT) AS outw FROM edges GROUP BY src
     )""",
@@ -191,11 +216,7 @@ def _pagerank_oracle(iterations: int) -> str:
       LEFT JOIN ins{i} i ON nodes.node = i.node
       CROSS JOIN dang{i} d CROSS JOIN nc
     )""")
-    joined = ",\n    ".join(ctes)
-    return (
-        f"WITH {joined}\n"
-        f"SELECT node, pr AS pagerank_scaled FROM r{iterations}"
-    )
+    return _unrolled(ctes, f"SELECT node, pr AS pagerank_scaled FROM r{iterations}")
 
 
 def undirected_edges(edges: DataFrame) -> DataFrame:
@@ -209,6 +230,66 @@ def undirected_edges(edges: DataFrame) -> DataFrame:
             F.greatest("src", "dst").alias("b"),
         )
         .distinct()
+    )
+
+
+def _adjacency(edges: DataFrame) -> DataFrame:
+    """The bidirectional ``(node, nbr)`` rows of :func:`undirected_edges`,
+    each undirected edge once per direction, persisted: the one artifact
+    every round or wedge of a builder rereads, so the fact table is
+    scanned once per builder. ``node < nbr`` on it is the canonical
+    ``a < b`` edge set. One ``inline``, not a union: each union branch
+    would scan the fact table, and ``DataFrame.union`` flattens a cached
+    union child into its parent, out of the cache."""
+    return (
+        undirected_edges(edges)
+        .select(F.inline(F.array(
+            F.struct(F.col("a").alias("node"), F.col("b").alias("nbr")),
+            F.struct(F.col("b").alias("node"), F.col("a").alias("nbr")),
+        )))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+
+
+def _with_self_rows(adj: DataFrame) -> DataFrame:
+    """``adj`` plus one ``(u, u)`` row per node. Joined on ``nbr`` to a
+    per-node state, the self row puts the node's own state in the same
+    ``node`` group as its neighbours', so a round reads the state once."""
+    nodes = adj.select("node").distinct()
+    return adj.union(nodes.select("node", F.col("node").alias("nbr")))
+
+
+def _degrees(adj: DataFrame) -> DataFrame:
+    return adj.groupBy("node").agg(F.count("*").cast("long").alias("deg"))
+
+
+def _probe_edges(pairs: DataFrame, adj: DataFrame, how: str) -> DataFrame:
+    """``how``-join (``left_semi``/``left_anti``) of ``(x, z)`` pairs with
+    ``x < z`` against the canonical edge set ``node < nbr`` of ``adj``."""
+    canonical = adj.filter(F.col("node") < F.col("nbr"))
+    return pairs.join(
+        canonical.select(F.col("node").alias("x"), F.col("nbr").alias("z")),
+        ["x", "z"],
+        how,
+    )
+
+
+def _capped_wedges(adj: DataFrame, deg: DataFrame, max_hub: int) -> DataFrame:
+    """Wedges ``x − y − z`` with ``x < z`` whose middle ``y`` has degree
+    ``deg`` ≤ ``max_hub``: rows ``(y, x, z, deg)``.
+
+    Middles above the cap are dropped BEFORE the self-join keyed on
+    ``y``. The unordered wedge blowup through y is deg(y)², so the cap
+    bounds the join output at Σ min(deg,cap)² — without it one celebrity
+    vertex at 100 TB would dominate the whole shuffle. Both callers lose
+    ~nothing to it: a super-hub carries ~zero RA signal (1/deg ≈ 0), and
+    harmonic centrality's spec is "distance 2 through a ≤cap-degree
+    middle"."""
+    mid = adj.join(deg.filter(F.col("deg") <= max_hub), "node")
+    return (
+        mid.select(F.col("node").alias("y"), F.col("nbr").alias("x"), "deg")
+        .join(mid.select(F.col("node").alias("y"), F.col("nbr").alias("z")), "y")
+        .filter(F.col("x") < F.col("z"))
     )
 
 
@@ -234,21 +315,12 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     vertex only fans out to HIGHER-numbered neighbors) and AQE skew
     handling. All arithmetic is integer until the final ratio.
     """
-    e = undirected_edges(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    deg = (
-        e.select(F.col("a").alias("node"))
-        .union(e.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").cast("long").alias("degree"))
-    )
-    e1 = e.select(F.col("a").alias("x"), F.col("b").alias("y"))
-    e2 = e.select(F.col("a").alias("y"), F.col("b").alias("z"))
+    adj = _adjacency(edges)
+    e = adj.filter(F.col("node") < F.col("nbr"))
+    e1 = e.select(F.col("node").alias("x"), F.col("nbr").alias("y"))
+    e2 = e.select(F.col("node").alias("y"), F.col("nbr").alias("z"))
     wedges = e1.join(e2, "y")
-    closed = wedges.join(
-        e.select(F.col("a").alias("x"), F.col("b").alias("z")),
-        ["x", "z"],
-        "left_semi",
-    )
+    closed = _probe_edges(wedges, adj, "left_semi")
     per_node = (
         closed.select(F.explode(F.array("x", "y", "z")).alias("node"))
         .groupBy("node")
@@ -265,10 +337,10 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
         )
     )
     return (
-        deg.join(per_node, "node", "left")
+        _degrees(adj).join(per_node, "node", "left")
         .select(
             "node",
-            "degree",
+            F.col("deg").alias("degree"),
             F.coalesce("n_triangles", F.lit(0)).cast("long").alias("n_triangles"),
         )
         .select("node", "degree", "n_triangles", clustering.alias("clustering"))
@@ -276,25 +348,7 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
 
 
 _TRIANGLE_ORACLE = f"""
-WITH seq AS (
-  SELECT user_id, ts, event_id,
-         CAST(json_extract_string(props, '$.k') AS BIGINT) AS dst
-  FROM events
-),
-trans AS (
-  SELECT LAG(dst) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS src,
-         dst
-  FROM seq
-),
-ue AS (
-  SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-  FROM trans WHERE src IS NOT NULL AND src <> dst
-),
-deg AS (
-  SELECT node, CAST(COUNT(*) AS BIGINT) AS degree
-  FROM (SELECT a AS node FROM ue UNION ALL SELECT b FROM ue)
-  GROUP BY node
-),
+WITH {_GRAPH_SQL},
 tri AS (
   SELECT e1.a AS x, e1.b AS y, e2.b AS z
   FROM ue e1
@@ -310,11 +364,11 @@ per_node AS (
   )
   GROUP BY node
 )
-SELECT deg.node, deg.degree,
+SELECT deg.node, deg.deg AS degree,
        CAST(COALESCE(p.n_triangles, 0) AS BIGINT) AS n_triangles,
-       CASE WHEN deg.degree >= 2 THEN {sql_trunc6(
+       CASE WHEN deg.deg >= 2 THEN {sql_trunc6(
            "2.0 * COALESCE(p.n_triangles, 0)"
-           " / (CAST(deg.degree AS DOUBLE) * (deg.degree - 1))"
+           " / (CAST(deg.deg AS DOUBLE) * (deg.deg - 1))"
        )} END AS clustering
 FROM deg LEFT JOIN per_node p ON deg.node = p.node
 """
@@ -333,28 +387,18 @@ def component_labels(edges: DataFrame, rounds: int = CC_ROUNDS) -> DataFrame:
     converging pointer-jumping variant lives in operators/dedup.py,
     reference: the dedup cluster machinery).
 
-    Per round: one node-keyed join of labels onto the bidirectional
-    edge list and one min-aggregate — both partial-combining, no
-    driver-side state. The edge list is persisted once. At 1000-executor
-    scale you would localCheckpoint the label frame every few rounds to
-    truncate lineage; the fixed shallow unroll here keeps the plan
-    bounded without it.
+    Per round: one join of the labels onto the self-looped adjacency
+    (:func:`_with_self_rows`; the self row carries the node's own
+    label) and one node-keyed min-aggregate — both partial-combining,
+    no driver-side state. The adjacency is persisted once.
     """
-    ue = undirected_edges(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    bidir = ue.select(
-        F.col("a").alias("node"), F.col("b").alias("nbr")
-    ).union(ue.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
-    labels = bidir.select(F.col("node").alias("lnode")).distinct().select(
-        F.col("lnode").alias("node"), F.col("lnode").alias("label")
+    looped = _with_self_rows(_adjacency(edges))
+    labels = looped.filter(F.col("node") == F.col("nbr")).select(
+        "node", F.col("node").alias("label")
     )
     for _ in range(rounds):
-        from_nbrs = (
-            labels.select(F.col("node").alias("lnode"), "label")
-            .join(bidir, F.col("lnode") == F.col("nbr"))
-            .select("node", "label")
-        )
         labels = (
-            labels.unionByName(from_nbrs)
+            looped.join(labels.withColumnRenamed("node", "nbr"), "nbr")
             .groupBy("node")
             .agg(F.min("label").alias("label"))
         )
@@ -364,27 +408,9 @@ def component_labels(edges: DataFrame, rounds: int = CC_ROUNDS) -> DataFrame:
 def _components_oracle(rounds: int) -> str:
     """Unrolled-CTE DuckDB replay of component_labels."""
     ctes = [
-        """seq AS (
-      SELECT user_id, ts, event_id,
-             CAST(json_extract_string(props, '$.k') AS BIGINT) AS dst
-      FROM events
-    )""",
-        """trans AS (
-      SELECT LAG(dst) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS src,
-             dst
-      FROM seq
-    )""",
-        """ue AS (
-      SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-      FROM trans WHERE src IS NOT NULL AND src <> dst
-    )""",
-        """bidir AS (
-      SELECT a AS node, b AS nbr FROM ue
-      UNION ALL SELECT b, a FROM ue
-    )""",
         """l0 AS (
       SELECT node, node AS label FROM (SELECT DISTINCT node FROM bidir)
-    )""",
+    )"""
     ]
     for i in range(1, rounds + 1):
         ctes.append(f"""l{i} AS (
@@ -395,11 +421,7 @@ def _components_oracle(rounds: int) -> str:
         FROM l{i - 1} l JOIN bidir b ON l.node = b.nbr
       ) GROUP BY node
     )""")
-    joined = ",\n    ".join(ctes)
-    return (
-        f"WITH {joined}\n"
-        f"SELECT node, label AS component FROM l{rounds}"
-    )
+    return _unrolled(ctes, f"SELECT node, label AS component FROM l{rounds}")
 
 
 @query(
@@ -473,71 +495,45 @@ def kcore_peel(
     integer-only state make it differentially replayable in unrolled
     DuckDB CTEs.
 
-    Per round: two node-keyed semi-joins restrict the persisted
-    bidirectional adjacency to survivors, then one partial-combining
-    count aggregate; no driver state, no broadcast of the edge list.
-    At 1000-executor scale the adjacency persist is the only reused
-    artifact and the per-round shuffles are all keyed on node.
+    Per round: one join of the state ``(node, degree0, peel_round)``
+    onto the self-looped adjacency (:func:`_with_self_rows`) and one
+    node-keyed aggregate. The self row gives the node's own
+    ``peel_round``; its other rows whose ``peel_round`` is NULL count
+    its degree among survivors, and a survivor below ``k`` peels in
+    this round. No driver state, no broadcast of the edge list.
     """
-    ue = undirected_edges(edges)
-    bidir = (
-        ue.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
-        .union(ue.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    adj = _adjacency(edges)
+    looped = _with_self_rows(adj)
+    own = F.col("node") == F.col("nbr")
+    state = _degrees(adj).select(
+        "node",
+        F.col("deg").alias("degree0"),
+        F.lit(None).cast("int").alias("peel_round"),
     )
-    degree0 = bidir.groupBy("node").agg(
-        F.count("*").cast("long").alias("degree0")
-    )
-    alive = degree0.select("node")
-    peeled = None
     for r in range(1, rounds + 1):
-        deg = (
-            bidir.join(alive, "node", "left_semi")
-            .join(alive.select(F.col("node").alias("nbr")), "nbr", "left_semi")
+        state = (
+            looped.join(state.withColumnRenamed("node", "nbr"), "nbr")
             .groupBy("node")
-            .agg(F.count("*").alias("deg"))
+            .agg(
+                F.max(F.when(own, F.col("degree0"))).alias("degree0"),
+                F.max(F.when(own, F.col("peel_round"))).alias("peeled"),
+                F.count(F.when(~own & F.col("peel_round").isNull(), 1))
+                .alias("deg"),
+            )
+            .select(
+                "node",
+                "degree0",
+                F.coalesce("peeled", F.when(F.col("deg") < k, F.lit(r)))
+                .alias("peel_round"),
+            )
         )
-        survivors = deg.filter(F.col("deg") >= k).select("node")
-        doomed = alive.join(survivors, "node", "left_anti").select(
-            "node", F.lit(r).cast("int").alias("peel_round")
-        )
-        peeled = doomed if peeled is None else peeled.unionByName(doomed)
-        alive = survivors
-    survivors_out = alive.select(
-        "node", F.lit(None).cast("int").alias("peel_round")
-    )
-    out = survivors_out if peeled is None else peeled.unionByName(survivors_out)
-    return degree0.join(out, "node").select("node", "degree0", "peel_round")
+    return state
 
 
 def _kcore_oracle(k: int, rounds: int) -> str:
     """Unrolled-CTE DuckDB replay of kcore_peel: the same per-round
     restrict → count → threshold cascade."""
-    ctes = [
-        """seq AS (
-      SELECT user_id, ts, event_id,
-             CAST(json_extract_string(props, '$.k') AS BIGINT) AS dst
-      FROM events
-    )""",
-        """trans AS (
-      SELECT LAG(dst) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS src,
-             dst
-      FROM seq
-    )""",
-        """ue AS (
-      SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-      FROM trans WHERE src IS NOT NULL AND src <> dst
-    )""",
-        """bidir AS (
-      SELECT a AS node, b AS nbr FROM ue
-      UNION ALL SELECT b, a FROM ue
-    )""",
-        """deg0 AS (
-      SELECT node, CAST(COUNT(*) AS BIGINT) AS degree0
-      FROM bidir GROUP BY node
-    )""",
-        "alive0 AS (SELECT node FROM deg0)",
-    ]
+    ctes = ["alive0 AS (SELECT node FROM deg)"]
     for i in range(1, rounds + 1):
         ctes.append(f"""deg{i} AS (
       SELECT b.node, COUNT(*) AS deg
@@ -557,14 +553,12 @@ def _kcore_oracle(k: int, rounds: int) -> str:
     peels = "\n      UNION ALL ".join(
         f"SELECT node, peel_round FROM peel{i}" for i in range(1, rounds + 1)
     )
-    joined = ",\n    ".join(ctes)
-    return f"""WITH {joined},
-    outcome AS (
+    ctes.append(f"""outcome AS (
       {peels}
       UNION ALL SELECT node, CAST(NULL AS INTEGER) FROM alive{rounds}
-    )
-    SELECT d.node, d.degree0, o.peel_round
-    FROM deg0 d JOIN outcome o ON d.node = o.node"""
+    )""")
+    return _unrolled(ctes, """SELECT d.node, d.deg AS degree0, o.peel_round
+    FROM deg d JOIN outcome o ON d.node = o.node""")
 
 
 @query(
@@ -604,83 +598,47 @@ def link_prediction_ra(
     the score is an exact integer — bit-identical across partitionings
     and engines, same discipline as :func:`pagerank`.
 
-    Shared neighbors with degree > ``max_hub`` are excluded BEFORE the
-    wedge join. That is both the published practice (a super-hub carries
-    ~zero RA signal: 1/deg ≈ 0) and the scale guard: the unordered wedge
-    blowup through y is deg(y)², so capping the serving degree bounds
-    the join output at Σ min(deg,cap)² — without the cap one celebrity
-    vertex at 100 TB would dominate the whole shuffle for signal the
-    index itself discards.
+    Shared neighbors with degree > ``max_hub`` are excluded before the
+    wedge join (:func:`_capped_wedges`): the published practice and the
+    scale guard.
 
     One wedge self-join keyed on the shared neighbor, one pair-keyed
     aggregate, one anti-join against the existing edge set, one top-k.
     Ties rank deterministically by (ra_scaled DESC, x, z).
     """
-    ue = undirected_edges(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    bidir = ue.select(
-        F.col("a").alias("node"), F.col("b").alias("nbr")
-    ).union(ue.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
-    deg = bidir.groupBy("node").agg(F.count("*").cast("long").alias("deg"))
-    serving = (
-        bidir.join(deg.filter(F.col("deg") <= max_hub), "node")
-        .select(F.col("node").alias("y"), F.col("nbr"),
-                F.expr(f"{RA_SCALE} div deg").alias("contrib"))
-    )
-    w1 = serving.select("y", F.col("nbr").alias("x"), "contrib")
-    w2 = serving.select("y", F.col("nbr").alias("z"))
+    adj = _adjacency(edges)
     pairs = (
-        w1.join(w2, "y")
-        .filter(F.col("x") < F.col("z"))
+        _capped_wedges(adj, _degrees(adj), max_hub)
         .groupBy("x", "z")
         .agg(
             F.count("*").cast("long").alias("common_neighbors"),
-            F.sum("contrib").cast("long").alias("ra_scaled"),
+            F.sum(F.expr(f"{RA_SCALE} div deg")).cast("long").alias("ra_scaled"),
         )
     )
-    candidates = pairs.join(
-        ue.select(F.col("a").alias("x"), F.col("b").alias("z")),
-        ["x", "z"],
-        "left_anti",
-    )
-    return candidates.orderBy(
+    return _probe_edges(pairs, adj, "left_anti").orderBy(
         F.desc("ra_scaled"), F.asc("x"), F.asc("z")
     ).limit(top_k)
 
 
+def _wedge_sql(max_hub: int) -> str:
+    """Oracle text of :func:`_capped_wedges`, to follow :data:`_GRAPH_SQL`."""
+    return f"""wedge AS (
+      SELECT w1.node AS y, w1.nbr AS x, w2.nbr AS z, d.deg
+      FROM bidir w1
+      JOIN deg d ON w1.node = d.node
+      JOIN bidir w2 ON w1.node = w2.node
+      WHERE d.deg <= {max_hub} AND w1.nbr < w2.nbr
+    )"""
+
+
 def _link_prediction_oracle(max_hub: int, top_k: int) -> str:
     return f"""
-    WITH seq AS (
-      SELECT user_id, ts, event_id,
-             CAST(json_extract_string(props, '$.k') AS BIGINT) AS dst
-      FROM events
-    ),
-    trans AS (
-      SELECT LAG(dst) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS src,
-             dst
-      FROM seq
-    ),
-    ue AS (
-      SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-      FROM trans WHERE src IS NOT NULL AND src <> dst
-    ),
-    bidir AS (
-      SELECT a AS node, b AS nbr FROM ue UNION ALL SELECT b, a FROM ue
-    ),
-    deg AS (
-      SELECT node, CAST(COUNT(*) AS BIGINT) AS deg FROM bidir GROUP BY node
-    ),
-    serving AS (
-      SELECT b.node AS y, b.nbr, {RA_SCALE} // d.deg AS contrib
-      FROM bidir b JOIN deg d ON b.node = d.node
-      WHERE d.deg <= {max_hub}
-    ),
+    WITH {_GRAPH_SQL},
+    {_wedge_sql(max_hub)},
     pairs AS (
-      SELECT w1.nbr AS x, w2.nbr AS z,
-             CAST(COUNT(*) AS BIGINT) AS common_neighbors,
-             CAST(SUM(w1.contrib) AS BIGINT) AS ra_scaled
-      FROM serving w1 JOIN serving w2 ON w1.y = w2.y
-      WHERE w1.nbr < w2.nbr
-      GROUP BY w1.nbr, w2.nbr
+      SELECT x, z, CAST(COUNT(*) AS BIGINT) AS common_neighbors,
+             CAST(SUM({RA_SCALE} // deg) AS BIGINT) AS ra_scaled
+      FROM wedge GROUP BY x, z
     )
     SELECT p.x, p.z, p.common_neighbors, p.ra_scaled
     FROM pairs p
@@ -714,10 +672,8 @@ def harmonic_centrality_r2(
     bit-identical across partitionings and engines (same discipline as
     :func:`pagerank` / :func:`link_prediction_ra`).
 
-    Distance-2 pairs are found by the same hub-capped wedge join as
-    :func:`link_prediction_ra`: middles with degree > ``max_hub`` are
-    excluded BEFORE the self-join, bounding the shuffle at
-    Σ min(deg,cap)² — the spec is therefore "distance 2 through a
+    Distance-2 pairs come from the hub-capped wedge join
+    (:func:`_capped_wedges`), so the spec is "distance 2 through a
     ≤cap-degree middle". At 100 TB with radius > 2 the published scale
     path is the HyperBall HLL-sketch neighborhood function; radius 2 is
     the largest horizon with an exact bounded-shuffle plan, which is why
@@ -727,27 +683,10 @@ def harmonic_centrality_r2(
     one anti-join against the edge set (distance exactly 2, not 1), one
     explode + node-keyed partial-combining aggregate. No driver state.
     """
-    ue = undirected_edges(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    bidir = ue.select(
-        F.col("a").alias("node"), F.col("b").alias("nbr")
-    ).union(ue.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
-    deg = bidir.groupBy("node").agg(F.count("*").cast("long").alias("n1"))
-    mid = bidir.join(
-        deg.filter(F.col("n1") <= max_hub).select("node"), "node"
-    )
-    w1 = mid.select(F.col("node").alias("y"), F.col("nbr").alias("x"))
-    w2 = mid.select(F.col("node").alias("y"), F.col("nbr").alias("z"))
-    pairs = (
-        w1.join(w2, "y")
-        .filter(F.col("x") < F.col("z"))
-        .select("x", "z")
-        .distinct()
-    )
-    d2 = pairs.join(
-        ue.select(F.col("a").alias("x"), F.col("b").alias("z")),
-        ["x", "z"],
-        "left_anti",
-    )
+    adj = _adjacency(edges)
+    deg = _degrees(adj)
+    pairs = _capped_wedges(adj, deg, max_hub).select("x", "z").distinct()
+    d2 = _probe_edges(pairs, adj, "left_anti")
     n2 = (
         d2.select(F.explode(F.array("x", "z")).alias("node"))
         .groupBy("node")
@@ -757,7 +696,7 @@ def harmonic_centrality_r2(
         deg.join(n2, "node", "left")
         .select(
             "node",
-            "n1",
+            F.col("deg").alias("n1"),
             F.coalesce("n2", F.lit(0)).cast("long").alias("n2"),
         )
         .select(
@@ -771,36 +710,9 @@ def harmonic_centrality_r2(
 
 def _harmonic_oracle(max_hub: int) -> str:
     return f"""
-    WITH seq AS (
-      SELECT user_id, ts, event_id,
-             CAST(json_extract_string(props, '$.k') AS BIGINT) AS dst
-      FROM events
-    ),
-    trans AS (
-      SELECT LAG(dst) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS src,
-             dst
-      FROM seq
-    ),
-    ue AS (
-      SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-      FROM trans WHERE src IS NOT NULL AND src <> dst
-    ),
-    bidir AS (
-      SELECT a AS node, b AS nbr FROM ue UNION ALL SELECT b, a FROM ue
-    ),
-    deg AS (
-      SELECT node, CAST(COUNT(*) AS BIGINT) AS n1 FROM bidir GROUP BY node
-    ),
-    mid AS (
-      SELECT b.node AS y, b.nbr
-      FROM bidir b JOIN deg d ON b.node = d.node
-      WHERE d.n1 <= {max_hub}
-    ),
-    pairs AS (
-      SELECT DISTINCT w1.nbr AS x, w2.nbr AS z
-      FROM mid w1 JOIN mid w2 ON w1.y = w2.y
-      WHERE w1.nbr < w2.nbr
-    ),
+    WITH {_GRAPH_SQL},
+    {_wedge_sql(max_hub)},
+    pairs AS (SELECT DISTINCT x, z FROM wedge),
     d2 AS (
       SELECT x, z FROM pairs p
       WHERE NOT EXISTS (SELECT 1 FROM ue WHERE ue.a = p.x AND ue.b = p.z)
@@ -810,9 +722,9 @@ def _harmonic_oracle(max_hub: int) -> str:
       FROM (SELECT x AS node FROM d2 UNION ALL SELECT z FROM d2)
       GROUP BY node
     )
-    SELECT d.node, d.n1,
+    SELECT d.node, d.deg AS n1,
            CAST(COALESCE(n2.n2, 0) AS BIGINT) AS n2,
-           CAST(2 * d.n1 + COALESCE(n2.n2, 0) AS BIGINT) AS harmonic_x2
+           CAST(2 * d.deg + COALESCE(n2.n2, 0) AS BIGINT) AS harmonic_x2
     FROM deg d LEFT JOIN n2 ON d.node = n2.node
     """
 
@@ -834,8 +746,12 @@ def c10_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     return harmonic_centrality_r2(click_edges(load(spark, sf_dir, "events")))
 
 
+# DataSketches HLL lgConfigK of the HyperBall sketches (error bound below).
+HLL_LG_K = 12
+
+
 def harmonic_centrality_hyperball(
-    edges: DataFrame, *, radius: int = 4, lg_config_k: int = 12
+    edges: DataFrame, *, radius: int = 4
 ) -> DataFrame:
     """HyperBall harmonic centrality beyond radius 2 — the documented
     100 TB scale path of :func:`harmonic_centrality_r2` (Boldi & Vigna
@@ -856,7 +772,7 @@ def harmonic_centrality_hyperball(
 
         H_r(v) = Σ_{t=1..r} (|B_t(v)| − |B_{t-1}(v)|) / t
 
-    Error bound ε: a DataSketches HLL with ``lg_config_k`` = 12 has
+    Error bound ε: a DataSketches HLL with lgConfigK = ``HLL_LG_K`` = 12 has
     relative standard error 1.04/√2¹² ≈ 1.6% per ball estimate (and is
     EXACT below the sparse-mode promotion threshold, so small
     neighborhoods — the overwhelming majority of nodes in a power-law
@@ -873,37 +789,28 @@ def harmonic_centrality_hyperball(
     intractable. Each round costs one shuffle join + one
     partial-combining aggregate. The state frame is
     ``localCheckpoint``-ed per round, NOT merely persisted: every round
-    references the previous state TWICE (the neighbor join and the
-    self-union), so without lineage truncation the logical plan doubles
-    per round and optimizer/compile time grows 2^radius even though the
-    cache dedupes execution (measured: radius 6 at sf0.1 took 55.8 s
+    reads the previous state TWICE (the neighbor join and the
+    self-union), so without lineage truncation the plan doubles per
+    round (module docstring; measured: radius 6 at sf0.1 took 55.8 s
     persisted vs 3.0 s checkpointed; radius 12 is 3.9 s — constant
-    ~0.3 s/round). This is the iterate-with-materialized-state shape
-    the module docstring prescribes for iterative algorithms; on a
-    multi-executor cluster where executor loss must be survivable,
-    swap ``localCheckpoint`` for a reliable ``checkpoint`` directory —
-    same plan, durable blocks. Nothing collects to the driver.
+    ~0.3 s/round). On a multi-executor cluster where executor loss must
+    be survivable, swap ``localCheckpoint`` for a reliable
+    ``checkpoint`` directory — same plan, durable blocks. Nothing
+    collects to the driver.
 
     Returns ``(node, n_reached, harmonic)``: the estimated ball size at
     ``radius`` and the truncated harmonic centrality (double, 6 dp).
     """
-    ue = undirected_edges(edges)
-    bidir = (
-        ue.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
-        .union(ue.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    adj = _adjacency(edges)
     state = (
-        bidir.select("node")
-        .distinct()
-        .groupBy("node")
-        .agg(F.hll_sketch_agg("node", F.lit(lg_config_k)).alias("sk"))
+        adj.groupBy("node")
+        .agg(F.hll_sketch_agg("node", F.lit(HLL_LG_K)).alias("sk"))
         .select("node", "sk", F.lit(1.0).alias("est"), F.lit(0.0).alias("hsum"))
         .localCheckpoint()
     )
     for t in range(1, radius + 1):
         nbr_union = (
-            bidir.join(
+            adj.join(
                 state.select(F.col("node").alias("nbr"), F.col("sk").alias("nsk")),
                 "nbr",
             )
@@ -935,11 +842,11 @@ def harmonic_centrality_hyperball(
             ).alias("hsum"),
         ).localCheckpoint()
     # Safe to release now: state is a materialized localCheckpoint, so the
-    # returned frame no longer reads bidir's cached blocks. Without this,
+    # returned frame no longer reads adj's cached blocks. Without this,
     # repeated calls in one session accumulate MEMORY_AND_DISK blocks for
     # the session lifetime (the checkpointed per-round state is still
     # caller-visible only through the final frame, which owns its blocks).
-    bidir.unpersist()
+    adj.unpersist()
     return state.select(
         "node",
         # round, don't truncate: cast('long') on a dense-regime estimate of

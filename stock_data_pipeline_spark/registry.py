@@ -16,7 +16,7 @@ Determinism contract for every registered query:
 - ties in any rank/top-k are broken by a unique key column;
 - the builder is a pure plan constructor where it can be: a Spark job at
   build time does work before the caller asks and freezes the data it
-  read. The iterative c02/c10 builders, which checkpoint eagerly per
+  read. The iterative c02 builders, which checkpoint eagerly per
   round, are the known exceptions. Each call builds a fresh plan.
 """
 

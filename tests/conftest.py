@@ -70,8 +70,6 @@ SLOW_MODULES = {
 SLOW_TESTS = {
     "test_oracle_parity.py::test_every_query_returns_rows_smoke",
     "test_oracle_parity.py::test_query_matches_oracle[b19_sessionize_recursive]",
-    "test_oracle_parity.py::test_query_matches_oracle[c10_kcore_peel]",
-    "test_oracle_parity.py::test_query_matches_oracle[c10_component_labels]",
     "test_properties.py::test_scd2_apply_matches_python_model",
     "test_properties.py::test_ohlcv_partials_merge_slicing_invariant",
     "test_properties.py::test_exact_dedup_fingerprint_groups_cover_all_docs",
@@ -85,9 +83,6 @@ SLOW_TESTS = {
     "test_empty_inputs.py::test_every_query_survives_empty_tables",
     "test_plan_hygiene.py::test_no_cartesian_product_in_any_registered_query",
     "test_relational.py::test_no_python_udf_in_relational_plans",
-    "test_graph.py::test_kcore_peel_fixpoint_on_corpus",
-    "test_graph.py::test_component_labels_converge_to_true_cc_on_corpus",
-    "test_graph.py::test_kcore_peel_planted_cascade",
     "test_maintenance.py::test_result_cache_collision_degrades_to_recompute",
     "test_maintenance.py::test_result_cache_torn_rewrite_never_serves_wrong_rows",
     "test_maintenance.py::test_result_cache_serves_materialized_rows_until_refreshed",
@@ -103,7 +98,6 @@ SLOW_TESTS = {
     "test_streaming.py::test_dedup_ingest_across_batches_and_replay",
     "test_streaming.py::test_near_dedup_ingest_cross_batch",
     "test_streaming.py::test_near_dedup_ingest_streaming_wiring",
-    "test_partitioning_invariance.py::test_result_identical_under_different_shuffle_partitioning[c10_kcore_peel]",
     "test_recursion_bound.py::test_uniform_fixture_unchanged_under_default_cap",
 }
 

@@ -200,6 +200,36 @@ def test_kcore_peel_planted_cascade(spark):
     }
 
 
+def _optimized_plan_lines(df) -> int:
+    if not hasattr(df, "_jdf"):
+        pytest.skip("Connect session: optimized plan unavailable")
+    return df._jdf.queryExecution().optimizedPlan().toString().count("\n")
+
+
+def test_fixed_round_plans_grow_linearly_in_rounds(spark):
+    """component_labels and kcore_peel read their round state once per
+    round, so doubling the rounds at most about doubles the optimized
+    plan. A round that read its state twice (labels ⋈ adjacency plus
+    labels ∪ that) or three times (two survivor semi-joins plus an
+    anti-join) grows it as 2^rounds or 3^rounds: 16.5× and 5.2× over
+    these doublings. The plans are built and optimized, never run."""
+    from stock_data_pipeline_spark.operators.graph import (
+        component_labels,
+        kcore_peel,
+    )
+
+    walk = [0, 1, 2, 0, 10, 11, 12]
+    edges = click_edges(_events(spark, [(1, s, k) for s, k in enumerate(walk)]))
+    cases = {
+        "component_labels": (lambda r: component_labels(edges, rounds=r), 4),
+        "kcore_peel": (lambda r: kcore_peel(edges, k=2, rounds=r), 2),
+    }
+    for name, (build, rounds) in cases.items():
+        small = _optimized_plan_lines(build(rounds))
+        big = _optimized_plan_lines(build(2 * rounds))
+        assert big <= 2.5 * small, (name, rounds, small, big)
+
+
 def test_kcore_peel_fixpoint_on_corpus(spark, sf_dir):
     """The fixed 4-round peel has CONVERGED on the corpus graph: a 5th
     round changes nothing, so the fixed-round spec equals the true

@@ -46,6 +46,8 @@ QUERIES = [
     "c10_link_prediction",
     "c10_kcore_peel",
     "c10_harmonic_centrality",
+    # min-label propagation: the min is order-free, so labels must not move
+    "c10_component_labels",
     # DSIR: 6-dp exact-decimal accumulation is the invariance design
     "c08_dsir_select",
 ]

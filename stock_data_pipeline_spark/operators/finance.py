@@ -26,7 +26,6 @@ partial aggregation does the 100 TB → MB reduction before the exchange.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..catalog import register_views
 from ..registry import query
@@ -57,6 +56,15 @@ _HOURLY_SERIES = """
     FROM events
     GROUP BY event_type, date_trunc('hour', ts)
 """
+
+
+def _oracle(body: str, **sources: str) -> str:
+    """The one-text form of a ``WITH …`` body that the engine runs as
+    ``spark.sql(body, name=df)``: each source becomes a leading CTE of
+    its placeholder's name (DuckDB materializes a CTE read twice)."""
+    ctes = ", ".join(f"{name} AS ({sql})" for name, sql in sources.items())
+    names = {name: name for name in sources}
+    return f"WITH {ctes}, " + body.format(**names).lstrip().removeprefix("WITH ")
 
 
 _B49_SQL = f"""
@@ -175,10 +183,7 @@ _B51_BODY = f"""
     WHERE (n * sxx - sx * sx) > 0 AND (n * syy - sy * sy) > 0
 """
 
-_B51_ORACLE = (
-    f"WITH hourly_series AS ({_HOURLY_SERIES}), "
-    + _B51_BODY.format(series="hourly_series").lstrip().removeprefix("WITH ")
-)
+_B51_ORACLE = _oracle(_B51_BODY, series=_HOURLY_SERIES)
 
 
 @query("b51_pairwise_corr", oracle=_B51_ORACLE, driver=False)
@@ -200,9 +205,7 @@ def b51_pairwise_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized once (see ``_hourly_series_mat``) — the self-joined CTE
     form would rescan the fact table twice.
     """
-    series = _hourly_series_mat(spark, sf_dir)
-    series.createOrReplaceTempView("hourly_series_mat")
-    return spark.sql(_B51_BODY.format(series="hourly_series_mat"))
+    return spark.sql(_B51_BODY, series=_hourly_series_mat(spark, sf_dir))
 
 
 _B52_SQL = """
@@ -287,10 +290,7 @@ _B53_BODY = f"""
     WHERE (n * sxx - sx * sx) > 0
 """
 
-_B53_ORACLE = (
-    f"WITH hourly_series AS ({_HOURLY_SERIES}), "
-    + _B53_BODY.format(series="hourly_series").lstrip().removeprefix("WITH ")
-)
+_B53_ORACLE = _oracle(_B53_BODY, series=_HOURLY_SERIES)
 
 
 _B56_SQL = f"""
@@ -369,9 +369,7 @@ def b53_market_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
     the index aggregate and the join, and the CTE form would rescan the
     fact table for each.
     """
-    series = _hourly_series_mat(spark, sf_dir)
-    series.createOrReplaceTempView("hourly_series_mat")
-    return spark.sql(_B53_BODY.format(series="hourly_series_mat"))
+    return spark.sql(_B53_BODY, series=_hourly_series_mat(spark, sf_dir))
 
 
 _B61_SQL = """
@@ -407,10 +405,13 @@ def b61_mom_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_B61_SQL)
 
 
+# OHLC daily bars with the tick count: the batch twin of the streamed bar
+# store's columns (streaming/jobs.py::read_bars).
 _OHLC_BARS = """
     SELECT event_type, date_trunc('day', ts) AS bar_date,
            min_by(value, ts) AS open, MAX(value) AS high,
-           MIN(value) AS low, max_by(value, ts) AS close
+           MIN(value) AS low, max_by(value, ts) AS close,
+           COUNT(*) AS n_ticks
     FROM events
     GROUP BY event_type, date_trunc('day', ts)
 """
@@ -460,13 +461,15 @@ def b62_candle_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_B62_SQL)
 
 
-# OHLC daily bars shared by the indicator queries (b62's bar CTE).
-_B78_SQL = f"""
-    WITH bars AS ({_DAILY_BARS}),
-    k AS (
+# b78, b79 and b81 are bodies over a ``{bars}`` frame: the batch bars of
+# the registered query, or the streamed bar store (``read_bars``) for a
+# live dashboard, which then serves the indicator without rescanning
+# ticks. Both run the same text, so their rows are bit-equal.
+_B78_BODY = """
+    WITH k AS (
       SELECT event_type, bar_date, close,
              CAST(FLOOR(close * 100.0 + 0.5) AS DECIMAL(18,0)) AS kc
-      FROM bars
+      FROM {bars}
     ),
     w AS (
       SELECT event_type, bar_date, close,
@@ -492,7 +495,14 @@ _B78_SQL = f"""
 """
 
 
-@query("b78_bollinger", oracle=_B78_SQL, driver=False)
+def bollinger_over_bars(bars: DataFrame) -> DataFrame:
+    """b78 over any (event_type, bar_date, close) bar frame."""
+    return bars.sparkSession.sql(_B78_BODY, bars=bars)
+
+
+@query(
+    "b78_bollinger", oracle=_oracle(_B78_BODY, bars=_DAILY_BARS), driver=False
+)
 def b78_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B78: Bollinger bands (5-day mean ± 2σ) with breakout flags.
 
@@ -502,20 +512,20 @@ def b78_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning), and mean/σ/bands are the same IEEE expression tree on
     both engines, making the breakout flag SET cross-engine identical.
     ``greatest(·, 0)`` guards the zero-variance window where rounding
-    would otherwise hand sqrt a −ε. Scale: ticks→bars is the one
-    map-combined shuffle; the window runs at bar grain.
+    would otherwise hand sqrt a −ε. Fewer bars than the window emit
+    nothing. Scale: ticks→bars is the one map-combined shuffle; the
+    window runs at bar grain.
     """
     register_views(spark, sf_dir)
-    return spark.sql(_B78_SQL)
+    return bollinger_over_bars(spark.sql(_DAILY_BARS))
 
 
-_B79_SQL = f"""
-    WITH bars AS ({_OHLC_BARS}),
-    lagged AS (
+_B79_BODY = """
+    WITH lagged AS (
       SELECT event_type, bar_date, high, low, close,
              lag(close) OVER (PARTITION BY event_type ORDER BY bar_date)
                AS p_close
-      FROM bars
+      FROM {bars}
     ),
     tr AS (
       SELECT event_type, bar_date,
@@ -535,7 +545,12 @@ _B79_SQL = f"""
 """
 
 
-@query("b79_atr", oracle=_B79_SQL, driver=True)
+def atr_over_bars(bars: DataFrame) -> DataFrame:
+    """b79 over any (event_type, bar_date, high, low, close) bar frame."""
+    return bars.sparkSession.sql(_B79_BODY, bars=bars)
+
+
+@query("b79_atr", oracle=_oracle(_B79_BODY, bars=_OHLC_BARS), driver=True)
 def b79_atr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B79: Average True Range (5-day simple mean of the true range).
 
@@ -549,7 +564,7 @@ def b79_atr(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows after one aggregate shuffle.
     """
     register_views(spark, sf_dir)
-    return spark.sql(_B79_SQL)
+    return atr_over_bars(spark.sql(_OHLC_BARS))
 
 
 _B80_SQL = f"""
@@ -599,20 +614,14 @@ def b80_stochastic(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_B80_SQL)
 
 
-_B81_SQL = """
-    WITH bars AS (
-      SELECT event_type, date_trunc('day', ts) AS bar_date,
-             max_by(value, ts) AS close, COUNT(*) AS n_trades
-      FROM events
-      GROUP BY event_type, date_trunc('day', ts)
-    ),
-    flow AS (
+_B81_BODY = """
+    WITH flow AS (
       SELECT event_type, bar_date,
              (CASE WHEN lag(close) OVER w IS NULL THEN NULL
                    WHEN close > lag(close) OVER w THEN 1
                    WHEN close < lag(close) OVER w THEN -1
-                   ELSE 0 END) * n_trades AS signed_flow
-      FROM bars
+                   ELSE 0 END) * n_ticks AS signed_flow
+      FROM {bars}
       WINDOW w AS (PARTITION BY event_type ORDER BY bar_date)
     )
     SELECT event_type, bar_date,
@@ -624,7 +633,12 @@ _B81_SQL = """
 """
 
 
-@query("b81_obv", oracle=_B81_SQL, driver=False)
+def obv_over_bars(bars: DataFrame) -> DataFrame:
+    """b81 over any (event_type, bar_date, close, n_ticks) bar frame."""
+    return bars.sparkSession.sql(_B81_BODY, bars=bars)
+
+
+@query("b81_obv", oracle=_oracle(_B81_BODY, bars=_OHLC_BARS), driver=False)
 def b81_obv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B81: on-balance volume — the cumulative sum of volume signed by
     the day's price direction. Adaptation: the events feed carries no
@@ -638,7 +652,7 @@ def b81_obv(spark: SparkSession, sf_dir: str) -> DataFrame:
     HUGEINT).
     """
     register_views(spark, sf_dir)
-    return spark.sql(_B81_SQL)
+    return obv_over_bars(spark.sql(_OHLC_BARS))
 
 
 # b82 cannot share one SQL text: exact interpolated percentiles are
@@ -786,55 +800,6 @@ def b84_up_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_B84_SQL)
 
 
-def bollinger_over_bars(
-    bars: DataFrame, *, window: int = 5, n_sigma: float = 2.0
-) -> DataFrame:
-    """b78's Bollinger math over ANY (event_type, bar_date, close) bar
-    frame — in particular the continuously-maintained bar store
-    (streaming/jobs.py::read_bars), which is how a live dashboard serves
-    indicators without rescanning ticks: the streamed partials merge to
-    bars, this function runs at bar grain on top.
-
-    The expression sequence mirrors _B78_SQL operation-for-operation
-    (scaled-integer DECIMAL window moments, identical IEEE ops), so the
-    output over batch-derived bars is BIT-EQUAL to the b78 registered
-    query — asserted in tests/test_streaming.py against a 3-micro-batch
-    ingest.
-    """
-    from pyspark.sql import Window
-
-    from ..functions.exact import trunc6
-
-    kc = F.floor(F.col("close") * 100.0 + 0.5).cast("decimal(18,0)")
-    v = (
-        Window.partitionBy("event_type")
-        .orderBy("bar_date")
-        .rowsBetween(-(window - 1), 0)
-    )
-    w = bars.select(
-        "event_type",
-        "bar_date",
-        "close",
-        F.sum(kc).over(v).cast("double").alias("sk"),
-        F.sum(kc * kc).over(v).cast("double").alias("skk"),
-        F.count("*").over(v).alias("n"),
-    )
-    sk, skk, n = F.col("sk"), F.col("skk"), F.col("n")
-    sd_scaled = F.sqrt(F.greatest(skk - sk * sk / n, F.lit(0.0)) / n)
-    upper = (sk / n + n_sigma * sd_scaled) / 100.0
-    lower = (sk / n - n_sigma * sd_scaled) / 100.0
-    return w.filter(n == window).select(
-        "event_type",
-        "bar_date",
-        "close",
-        trunc6(sk / n / 100.0).alias("mid_band"),
-        trunc6(upper).alias("upper_band"),
-        trunc6(lower).alias("lower_band"),
-        (F.col("close") > upper).alias("breakout_up"),
-        (F.col("close") < lower).alias("breakout_down"),
-    )
-
-
 _B86_SQL = f"""
     WITH series AS ({_HOURLY_SERIES}),
     k AS (
@@ -947,79 +912,6 @@ def b87_momentum_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_B87_SQL)
 
 
-def atr_over_bars(bars: DataFrame, *, window: int = 5) -> DataFrame:
-    """b79's ATR math over any (event_type, bar_date, high, low, close)
-    bar frame — the second indicator served from the streamed bar store
-    (``read_bars`` exposes exactly these columns). Mirrors _B79_SQL
-    operation-for-operation; bit-equality with the batch query over
-    streamed bars is asserted in tests/test_streaming.py."""
-    from pyspark.sql import Window
-
-    from ..functions.exact import trunc6
-
-    lagw = Window.partitionBy("event_type").orderBy("bar_date")
-    lagged = bars.select(
-        "event_type",
-        "bar_date",
-        "high",
-        "low",
-        "close",
-        F.lag("close").over(lagw).alias("p_close"),
-    ).filter(F.col("p_close").isNotNull())
-    tr2 = F.floor(
-        F.greatest(
-            F.col("high") - F.col("low"),
-            F.abs(F.col("high") - F.col("p_close")),
-            F.abs(F.col("low") - F.col("p_close")),
-        )
-        * 100.0
-        + 0.5
-    ).cast("decimal(18,0)")
-    v = (
-        Window.partitionBy("event_type")
-        .orderBy("bar_date")
-        .rowsBetween(-(window - 1), 0)
-    )
-    with_tr = lagged.select("event_type", "bar_date", tr2.alias("tr2"))
-    return with_tr.select(
-        "event_type",
-        "bar_date",
-        (F.col("tr2").cast("double") / 100.0).alias("true_range"),
-        trunc6(
-            F.sum("tr2").over(v).cast("double")
-            / (100.0 * F.count("*").over(v))
-        ).alias("atr"),
-    )
-
-
-def obv_over_bars(bars: DataFrame) -> DataFrame:
-    """b81's on-balance volume over any (event_type, bar_date, close,
-    n_ticks) bar frame — ``read_bars``' trade count is b81's volume
-    stand-in, so the streamed bar store serves OBV directly. Integer
-    arithmetic end to end; bit-equality with batch b81 asserted in
-    tests/test_streaming.py."""
-    from pyspark.sql import Window
-
-    lagw = Window.partitionBy("event_type").orderBy("bar_date")
-    flow = (
-        F.when(F.lag("close").over(lagw).isNull(), F.lit(None).cast("long"))
-        .when(F.col("close") > F.lag("close").over(lagw), F.lit(1))
-        .when(F.col("close") < F.lag("close").over(lagw), F.lit(-1))
-        .otherwise(F.lit(0))
-        * F.col("n_ticks")
-    )
-    staged = bars.select(
-        "event_type", "bar_date", flow.cast("long").alias("signed_flow")
-    ).filter(F.col("signed_flow").isNotNull())
-    cum = Window.partitionBy("event_type").orderBy("bar_date")
-    return staged.select(
-        "event_type",
-        "bar_date",
-        F.col("signed_flow").alias("daily_flow"),
-        F.sum("signed_flow").over(cum).cast("bigint").alias("obv"),
-    )
-
-
 _B88_BODY = f"""
     WITH pair AS (
       SELECT a.bucket, a.px AS ya, b.px AS yb
@@ -1065,10 +957,7 @@ _B88_BODY = f"""
     FROM scored
 """
 
-_B88_ORACLE = (
-    f"WITH hourly_series AS ({_HOURLY_SERIES}), "
-    + _B88_BODY.format(series="hourly_series").lstrip().removeprefix("WITH ")
-)
+_B88_ORACLE = _oracle(_B88_BODY, series=_HOURLY_SERIES)
 
 
 @query("b88_pairs_spread", oracle=_B88_ORACLE, driver=False)
@@ -1089,6 +978,4 @@ def b88_pairs_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: everything after the bars aggregate runs at bucket grain; the
     single-partition windows are over #hours rows.
     """
-    series = _hourly_series_mat(spark, sf_dir)
-    series.createOrReplaceTempView("hourly_series_mat")
-    return spark.sql(_B88_BODY.format(series="hourly_series_mat"))
+    return spark.sql(_B88_BODY, series=_hourly_series_mat(spark, sf_dir))

@@ -580,39 +580,6 @@ def c05_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 # C5c — resize / thumbnail (deterministic stand-in for image resample)
 # --------------------------------------------------------------------------
 THUMB_BYTES = 32
-RESIZE_SCHEMA = "doc_id bigint, orig_bytes int, thumb binary, thumb_sha256 string"
-
-
-def _resize_payload(
-    batches: Iterator[pd.DataFrame], *, out_bytes: int = THUMB_BYTES
-) -> Iterator[pd.DataFrame]:
-    """Arrow-batched "resize": even-stride downsample of the payload to a
-    fixed byte budget — the plumbing shape of image thumbnailing (decode →
-    resample → re-encode) with a deterministic fake in place of the codec.
-    A real implementation swaps the strided byte pick for
-    ``PIL.Image.resize`` keeping schema and batch contract identical.
-    """
-    for pdf in batches:
-        rows = {k: [] for k in ("doc_id", "orig_bytes", "thumb", "thumb_sha256")}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            n = len(payload)
-            if n <= out_bytes:
-                thumb = bytes(payload)
-            else:
-                idx = [i * n // out_bytes for i in range(out_bytes)]
-                thumb = bytes(payload[i] for i in idx)
-            rows["doc_id"].append(doc_id)
-            rows["orig_bytes"].append(n)
-            rows["thumb"].append(thumb)
-            rows["thumb_sha256"].append(hashlib.sha256(thumb).hexdigest())
-        yield pd.DataFrame(rows).astype({"orig_bytes": "int32"})
-
-
-def resize_payloads(docs: DataFrame) -> DataFrame:
-    """Fixed-budget thumbnails for every payload (map-only, no shuffle)."""
-    return with_binary_payload(docs).mapInPandas(_resize_payload, RESIZE_SCHEMA)
-
-
 _TEXT_THUMB_SCHEMA = (
     "doc_id bigint, orig_bytes int, thumb_bytes int, thumb_sha256 string"
 )
@@ -621,9 +588,11 @@ _TEXT_THUMB_SCHEMA = (
 def _text_thumbnail(
     batches: Iterator[pd.DataFrame], *, out_chars: int = THUMB_BYTES
 ) -> Iterator[pd.DataFrame]:
-    """Character-strided thumbnail digest (same FFD shape as
-    :func:`_resize_payload`, but over codepoints so the sha256 has an
-    exact cross-engine SQL spelling for ANY text encoding)."""
+    """Arrow-batched "resize": even-stride downsample of each text to a
+    fixed budget — the plumbing shape of image thumbnailing (decode →
+    resample → re-encode) with a deterministic fake in place of the
+    codec. Over codepoints, so the sha256 has an exact cross-engine SQL
+    spelling for ANY text encoding."""
     for pdf in batches:
         rows = {k: [] for k in ("doc_id", "orig_bytes", "thumb_bytes", "thumb_sha256")}
         for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
@@ -668,10 +637,7 @@ def c05_resize_thumbnail(spark: SparkSession, sf_dir: str) -> DataFrame:
     Defined over CHARACTERS (codepoint stride, sha256 of the utf-8
     re-encoding) rather than raw payload bytes so the digest has an exact
     DuckDB spelling — ``sha256(VARCHAR)`` hashes the utf-8 bytes in both
-    engines, making the oracle hold even for non-ASCII corpora. The
-    byte-domain variant (strided BLOB pick, the true media path) stays on
-    :func:`resize_payloads`, recompute-checked in tests/test_multimodal.py
-    (the oracle dialect cannot slice or hash BLOBs).
+    engines, making the oracle hold even for non-ASCII corpora.
 
     Scale: map-only Arrow-batched Python, no shuffle.
     """
@@ -683,44 +649,6 @@ def c05_resize_thumbnail(spark: SparkSession, sf_dir: str) -> DataFrame:
 # C5d — audio-style windowed energy (deterministic stand-in for DSP)
 # --------------------------------------------------------------------------
 AUDIO_WINDOW = 64
-AUDIO_SCHEMA = "doc_id bigint, n_windows int, window_rms array<double>"
-
-
-def _audio_energy(
-    batches: Iterator[pd.DataFrame], *, window: int = AUDIO_WINDOW
-) -> Iterator[pd.DataFrame]:
-    """Per-payload windowed RMS over byte values — the frame-energy shape
-    of audio feature extraction (librosa RMS / mel energies), computed
-    vectorized per Arrow batch with numpy. A real DSP step swaps the byte
-    interpretation for PCM decode with the same (doc → array) contract.
-    """
-    import numpy as np
-
-    for pdf in batches:
-        ids, counts, feats = [], [], []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            x = np.frombuffer(bytes(payload), dtype=np.uint8).astype(np.float64)
-            if len(x) == 0:
-                ids.append(doc_id); counts.append(0); feats.append([])
-                continue
-            pad = (-len(x)) % window
-            x = np.pad(x, (0, pad))
-            frames = x.reshape(-1, window)
-            rms = np.sqrt((frames * frames).mean(axis=1))
-            ids.append(doc_id)
-            counts.append(frames.shape[0])
-            feats.append([round(float(v), 6) for v in rms])
-        yield pd.DataFrame(
-            {"doc_id": ids, "n_windows": pd.array(counts, dtype="int32"),
-             "window_rms": feats}
-        )
-
-
-def audio_energy(docs: DataFrame) -> DataFrame:
-    """Windowed-RMS feature arrays for every payload (map-only)."""
-    return with_binary_payload(docs).mapInPandas(_audio_energy, AUDIO_SCHEMA)
-
-
 _SIGNAL_SCHEMA = (
     "doc_id bigint, n_windows int, energy_sum bigint,"
     " rms_first double, rms_last double, rms_max double"
@@ -806,9 +734,7 @@ def c05_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle: integer squared sums are exact in float64, /64 is a
     power-of-two divide, IEEE sqrt is correctly rounded — no rounding
     tolerance anywhere. ``energy_sum`` additionally pins the whole-signal
-    integer digest per row. The byte-domain variant (uint8 PCM reading,
-    per-window arrays) stays on :func:`audio_energy`, recompute-checked
-    in tests/test_multimodal.py.
+    integer digest per row.
 
     Scale: map-only Arrow-batched Python, no shuffle.
     """

@@ -21,8 +21,6 @@ from __future__ import annotations
 
 import math
 
-from typing import Iterable
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -222,44 +220,34 @@ def _pack_group(pdf: pd.DataFrame, budget: int) -> pd.DataFrame:
     return out[["doc_id", "pack_group", "bin_id", "n_tokens", "bin_fill"]]
 
 
-def pack_sequences(
-    docs: DataFrame, *, budget: int = PACK_BUDGET, n_groups: int = N_PACK_GROUPS
-) -> DataFrame:
-    """Pack documents into ≤``budget``-token bins, greedily within each of
-    ``n_groups`` hash-partitioned pack groups.
+def pack_sequences(docs: DataFrame) -> DataFrame:
+    """Pack documents into ≤``PACK_BUDGET``-token bins, greedily within
+    each of ``N_PACK_GROUPS`` hash-partitioned pack groups.
 
     Packing is inherently order-dependent, so global optimality is traded
     for partition-local determinism: group assignment is a stable hash,
     and within a group FFD order is fixed by (n_tokens desc, doc_id). At
     100 TB each group packs independently in one task — no global sort, no
     driver state; bin_ids are group-local (globally unique as the pair).
+    The group is the last two hex digits of md5(doc_id) — md5 exists in
+    DuckDB, so the whole packing trace replays in the oracle.
     """
     from ..functions.textfns import tokens
 
+    digits = F.substring(F.md5(F.col("doc_id").cast("string")), 31, 2)
     sized = docs.select(
         "doc_id",
-        (F.pmod(F.xxhash64(F.col("doc_id")), F.lit(n_groups)))
-        .cast("int")
-        .alias("pack_group"),
+        (F.conv(digits, 16, 10).cast("int") % N_PACK_GROUPS).alias("pack_group"),
         F.size(tokens("text")).cast("int").alias("n_tokens"),
     )
     return sized.groupBy("pack_group").applyInPandas(
-        lambda pdf: _pack_group(pdf, budget),
+        lambda pdf: _pack_group(pdf, PACK_BUDGET),
         schema=_PACK_SCHEMA,
     )
 
 
-@query("c09_sequence_packing", driver=False)  # order-dependent heuristic → no SQL oracle;
-# invariants (exactly-once, budget) are asserted in tests/test_sampling.py
-def c09_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C9: sequence packing — batch documents into fixed token budgets for
-    training, first-fit-decreasing within hash-partitioned groups.
-    """
-    return pack_sequences(load(spark, sf_dir, "documents"))
-
-
-def _pack_portable_oracle() -> str:
-    """DuckDB oracle for c09_sequence_packing_portable — greedy
+def _pack_oracle() -> str:
+    """DuckDB oracle for c09_sequence_packing — greedy
     first-fit-decreasing BIN PACKING replayed exactly in a recursive CTE.
 
     The recursion carries each pack group's OPEN-BIN FILL LIST as list
@@ -270,11 +258,10 @@ def _pack_portable_oracle() -> str:
     > 0), slot update via an indexed-lambda ``list_transform``, overflow
     via ``list_append``. ``bin_fill`` is the bin's FINAL fill, so the
     last iteration's state is unnested (struct-transform — DuckDB lacks
-    WITH ORDINALITY) and joined back per assignment. Portable because
-    the twin's group hash is md5-hex-digit arithmetic instead of the
-    production xxhash64. This pins the exact packing TRACE cross-engine,
-    complementing the exactly-once/budget invariant tests on the
-    production query."""
+    WITH ORDINALITY) and joined back per assignment. The md5 group digits
+    are spelled independently of the engine's ``conv``. This pins the
+    exact packing TRACE cross-engine, complementing the exactly-once and
+    budget invariant tests."""
     return f"""
     WITH RECURSIVE
     sized AS (
@@ -332,36 +319,14 @@ def _pack_portable_oracle() -> str:
     """
 
 
-@query(
-    "c09_sequence_packing_portable",
-    driver=False,
-    oracle=_pack_portable_oracle(),
-)
-def c09_sequence_packing_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C9': the oracle-backed sequence packing — the PRODUCTION FFD
-    packer (``_pack_group`` applyInPandas, unchanged) over a portable
-    md5-digit group hash, so the full packing trace replays in DuckDB's
-    recursive CTE (see :func:`_pack_portable_oracle`). The xxhash64
-    ``c09_sequence_packing`` stays the production path; hash parity at
-    sf0.001/0.01/0.1 (500/500/5000 assignments)."""
-    from ..functions.textfns import tokens
-
-    docs = load(spark, sf_dir, "documents")
-    grp = F.expr(
-        "cast((instr('0123456789abcdef', "
-        "substring(md5(cast(doc_id as string)), 31, 1)) - 1) * 16 "
-        "+ (instr('0123456789abcdef', "
-        "substring(md5(cast(doc_id as string)), 32, 1)) - 1) as int) % "
-        f"{N_PACK_GROUPS}"
-    )
-    sized = docs.select(
-        "doc_id",
-        grp.cast("int").alias("pack_group"),
-        F.size(tokens("text")).cast("int").alias("n_tokens"),
-    )
-    return sized.groupBy("pack_group").applyInPandas(
-        lambda pdf: _pack_group(pdf, PACK_BUDGET), schema=_PACK_SCHEMA
-    )
+@query("c09_sequence_packing", oracle=_pack_oracle(), driver=False)
+def c09_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """C9: sequence packing — batch documents into fixed token budgets for
+    training, first-fit-decreasing within hash-partitioned groups. The
+    oracle replays the packing trace (hash parity at sf0.001/0.01/0.1:
+    500/500/5000 assignments).
+    """
+    return pack_sequences(load(spark, sf_dir, "documents"))
 
 
 # --------------------------------------------------------------------------

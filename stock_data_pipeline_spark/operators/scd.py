@@ -206,5 +206,4 @@ def b85_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     register_views(spark, sf_dir)
     history = spark.sql(_B54_SQL).localCheckpoint()
-    history.createOrReplaceTempView("scd2_history_mat")
-    return spark.sql(_B85_BODY.format(history="scd2_history_mat"))
+    return spark.sql(_B85_BODY, history=history)

@@ -10,8 +10,6 @@ snapshots, as-of alignment, rankings, and moving windows.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -642,23 +640,6 @@ RSI_PERIOD = 14
 N_INDICATOR_SHARDS = 256
 
 
-def _indicators(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Per-key EMA + Wilder RSI, computed on one key's ordered history.
-
-    Reference implementation (single key) — used as the test ground truth;
-    the distributed path runs :func:`_indicators_shard` over many keys.
-    """
-    pdf = pdf.sort_values(["ts", "event_id"]).reset_index(drop=True)
-    pdf["ema"] = pdf["value"].ewm(alpha=EMA_ALPHA, adjust=True).mean()
-    delta = pdf["value"].diff()
-    gain = delta.clip(lower=0.0).ewm(alpha=1.0 / RSI_PERIOD, adjust=False).mean()
-    loss = (-delta.clip(upper=0.0)).ewm(alpha=1.0 / RSI_PERIOD, adjust=False).mean()
-    rs = gain / loss
-    pdf["rsi"] = (100.0 - 100.0 / (1.0 + rs)).where(loss > 0, 100.0)
-    pdf.loc[delta.isna(), "rsi"] = None
-    return pdf[["user_id", "event_id", "ts", "value", "ema", "rsi"]]
-
-
 def _indicators_shard(pdf: pd.DataFrame) -> pd.DataFrame:
     """EMA/RSI for a SHARD of keys at once.
 
@@ -713,163 +694,6 @@ def with_indicators(events: DataFrame) -> DataFrame:
             lambda pdf: _indicators_shard(pdf.drop(columns=["_shard"])),
             schema=_INDICATOR_SCHEMA,
         )
-    )
-
-
-EMA_TRUNC_WINDOW = 150  # (1-α)^150 ≈ 2.9e-15 at α=0.2: below double ulp
-
-
-def _ema_trunc_window(alpha: float) -> int:
-    """Window length where the truncated tail weight (1-α)^W drops below
-    double ulp (~1e-15) — DERIVED from alpha, because a fixed 150 is
-    calibrated for α=0.2 only: at α=0.01, (0.99)^150 ≈ 0.22 would
-    silently discard 22% of the weight mass."""
-    import math as _math
-
-    c = 1.0 - alpha
-    if c <= 0.0:
-        return 1
-    return max(1, _math.ceil(_math.log(1e-15) / _math.log(c)))
-
-
-def _ema_windowed_fold(col: str, w: Window, alpha: float) -> F.Column:
-    """Adjust-corrected EMA as a truncated-window weighted fold (shared
-    by ema_windowed and with_indicators_windowed — one copy of the
-    weight-ladder arithmetic). NULL-safe: collect_list skips nulls, so a
-    frame with no non-null values gives n=0, guarded to NULL instead of
-    an illegal sequence(-1, 0, -1)."""
-    c = 1.0 - alpha
-    hist = F.collect_list(col).over(w)
-    n = F.size(hist)
-    weights = F.transform(
-        F.sequence(n - F.lit(1), F.lit(0), F.lit(-1)),
-        lambda i: F.pow(F.lit(c), i.cast("double")),
-    )
-    num = F.aggregate(
-        F.zip_with(hist, weights, lambda x, p: x * p),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    den = F.aggregate(weights, F.lit(0.0), lambda acc, p: acc + p)
-    return F.when(n > 0, num / den)
-
-
-def ema_windowed(events: DataFrame, *, alpha: float = EMA_ALPHA) -> DataFrame:
-    """JVM-only EMA twin: truncated-window weighted sum, no Python workers.
-
-    The adjust-corrected EMA is ema_t = Σᵢ(1-α)ⁱ·x_{t-i} / Σᵢ(1-α)ⁱ; at
-    α=0.2 the weight of lag 150 is ~2.9e-15, below double precision
-    relative to the head of the sum, so the window — DERIVED from alpha
-    via ``_ema_trunc_window`` (150 at α=0.2, longer for smaller α) — is
-    exact to ~1e-12 absolute (and EXACT for rows with fewer predecessors
-    than the window, i.e. every series shorter than it). Formulation:
-    ``collect_list`` over the ordered frame, then a higher-order
-    ``zip_with``/``aggregate`` fold against the weight ladder — all
-    whole-stage-codegen-eligible expressions, zero Python.
-
-    Trade-off vs :func:`with_indicators` (the applyInPandas recurrence):
-    this does O(window) arithmetic PER ROW (the affine-scan structure a
-    recurrence exploits is not expressible with built-in window
-    aggregates), but stays on the JVM — no Python worker pool, no Arrow
-    hop, no pandas. Measured ~6× SLOWER than the pandas path at sf0.1
-    under full materialization (a ``count()`` benchmark lies here:
-    Catalyst prunes the unused fold entirely), so this is the fallback
-    for clusters where Python workers are unavailable or prohibited,
-    not the fast path. Both are asserted equal to the pandas ``ewm``
-    ground truth.
-    """
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(F.asc("ts"), F.asc("event_id"))
-        .rowsBetween(-(_ema_trunc_window(alpha) - 1), 0)
-    )
-    return events.select(
-        "user_id",
-        "event_id",
-        "ts",
-        "value",
-        _ema_windowed_fold("value", w, alpha).alias("ema"),
-    )
-
-
-RSI_TRUNC_WINDOW = 512  # (13/14)^512 ≈ 4e-17: below double ulp
-
-
-def _wilder_windowed(col: str, w: Window, alpha: float) -> F.Column:
-    """Truncated-window form of the adjust=False (recursive) EWM:
-    y_t = c·y_{t-1} + α·x_t with y seeded at the first value. Closed
-    form y_t = c^t·x_0 + α·Σ c^i·x_{t-i}; the oldest in-frame element
-    takes weight c^(n-1) WITHOUT the α factor — exactly the seed when
-    the frame reaches the series start, and a ≤c^(W-1)≈4e-17 error when
-    it doesn't. ``collect_list`` skips nulls, so leading null deltas
-    drop out and the seed lands on the first real value, matching
-    pandas' NaN handling.
-    """
-    c = 1.0 - alpha
-    hist = F.collect_list(col).over(w)
-    n = F.size(hist)
-    exps = F.sequence(n - F.lit(1), F.lit(0), F.lit(-1))  # exponent per slot
-    weighted = F.zip_with(
-        hist,
-        exps,
-        lambda x, e: x
-        * F.pow(F.lit(c), e.cast("double"))
-        * F.when(e == n - F.lit(1), F.lit(1.0)).otherwise(F.lit(alpha)),
-    )
-    return F.when(
-        n > 0, F.aggregate(weighted, F.lit(0.0), lambda acc, v: acc + v)
-    )
-
-
-def with_indicators_windowed(events: DataFrame) -> DataFrame:
-    """EMA(α=0.2) + Wilder RSI(14), entirely JVM-side — the windowed twin
-    of :func:`with_indicators` with NO Python workers.
-
-    Both recurrences have geometrically-decaying memory, so a truncated
-    window is exact to double precision: EMA weights vanish by lag 150,
-    Wilder weights (α=1/14) by lag 512. Each indicator is a
-    ``collect_list`` over its ordered frame folded against the weight
-    ladder with ``zip_with``/``aggregate`` — whole-stage-codegen
-    expressions, one sort per key partition shared by all three windows.
-
-    Trade-off: O(window) arithmetic per row instead of O(1) — but no
-    Python worker pool, no Arrow hop. Under FULL materialization this is
-    ~6× slower than the pandas path at sf0.1 (3.0 s vs 0.49 s noop-write;
-    an earlier 3.3×-faster reading came from a ``count()`` benchmark
-    whose plan had the folds pruned away — Window operators don't change
-    cardinality, so Catalyst deletes them under count). Use this ONLY
-    where running Python on executors is not an option; the serving path
-    for b29 is :func:`with_indicators`. Equal to the pandas ``ewm``
-    ground truth within 1e-9 (tests/test_sampling.py).
-    """
-    key = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
-    ema_w = key.rowsBetween(-(EMA_TRUNC_WINDOW - 1), 0)
-    rsi_w = key.rowsBetween(-(RSI_TRUNC_WINDOW - 1), 0)
-
-    ema = _ema_windowed_fold("value", ema_w, EMA_ALPHA)
-
-    delta = F.col("value") - F.lag("value").over(key)
-    base = events.select("user_id", "event_id", "ts", "value").withColumns(
-        {
-            "ema": ema,
-            # keep the first row's delta NULL: greatest(NULL, 0.0) is 0.0
-            # in Spark, which would inject a spurious 0-gain seed —
-            # collect_list must skip the warm-up row like pandas skips NaN
-            "_gain": F.when(delta.isNotNull(), F.greatest(delta, F.lit(0.0))),
-            "_loss": F.when(delta.isNotNull(), F.greatest(-delta, F.lit(0.0))),
-            "_warm": delta.isNotNull(),
-        }
-    )
-    alpha_r = 1.0 / RSI_PERIOD
-    gain = _wilder_windowed("_gain", rsi_w, alpha_r)
-    loss = _wilder_windowed("_loss", rsi_w, alpha_r)
-    rsi = (
-        F.when(~F.col("_warm"), F.lit(None).cast("double"))
-        .when(loss > 0, F.lit(100.0) - F.lit(100.0) / (F.lit(1.0) + gain / loss))
-        .otherwise(F.lit(100.0))
-    )
-    return base.withColumn("rsi", rsi).select(
-        "user_id", "event_id", "ts", "value", "ema", "rsi"
     )
 
 
@@ -942,9 +766,7 @@ def b29_ema_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B29: per-user EMA(α=0.2) and RSI(14) over the event stream — the
     custom technical indicators the reference's dashboard roadmap implies
     (/root/reference/README.md:23). Served by the sharded applyInPandas
-    recurrence (O(1) per row); :func:`with_indicators_windowed` is the
-    JVM-only fallback for Python-less clusters (~6× slower under full
-    materialization — see its docstring for the count()-pruning trap).
+    recurrence (O(1) per row).
 
     Oracle-backed since round 7 via the recursive-CTE replay of pandas'
     ewm loop (see ``_B29_SQL``) — bit-exact, not tolerance-compared.

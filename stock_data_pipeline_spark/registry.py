@@ -16,8 +16,13 @@ Determinism contract for every registered query:
 - ties in any rank/top-k are broken by a unique key column;
 - the builder is a pure plan constructor where it can be: a Spark job at
   build time does work before the caller asks and freezes the data it
-  read. The iterative c02 builders, which checkpoint eagerly per
-  round, are the known exceptions. Each call builds a fresh plan.
+  read. These are the known exceptions, pinned by
+  tests/test_plan_hygiene.py: b51, b53, b85 and b88 checkpoint an input
+  they read twice; the iterative c02 builders checkpoint per round;
+  c03_ann_ivf, c03_pq_topk and c03_semdedup train their index; the two
+  c04 BPE builders run their merge rounds; b05 writes its bucketed
+  tables on its first call per process and data dir. Each call builds
+  a fresh plan.
 """
 
 from __future__ import annotations

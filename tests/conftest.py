@@ -51,15 +51,22 @@ def sf_stress_dir() -> str:
 # Two-tier suite (r14, VERDICT r13 task 1). The verification driver runs the
 # default tier (`pytest tests/ -x -q` with pytest.ini's `-m "not slow"`);
 # everything below is the `slow` tier — the scale/stress/fuzz/sf1-replay
-# tests plus every individual test that measured >=10 s in the r14 full
-# profiling run (`pytest --durations=0`, 645 passed / 39:51 wall; the list
-# sums to ~25 min). Membership is maintained HERE, in one auditable place,
-# rather than as decorators scattered over 19 files; regenerate with
+# tests plus every individual test whose call took >=10 s in either of
+# the last two profiles (`-m slow --durations=0` outside SLOW_MODULES,
+# and the default tier with `--durations=0`, 4 cores; BENCHNOTES
+# "Round 25"). Membership is maintained HERE, in one
+# auditable place, rather than as decorators scattered over 19 files;
+# regenerate with
 # `python -m pytest tests/ -q -m "slow or not slow" --durations=0`.
 # Deliberately kept in the default tier despite >=10 s:
 #   test_registry_contract.py::test_driver_queries_emit_only_atomic_columns
 #   (a driver-contract gate — the exact failure class the default tier
 #   exists to catch before the driver does).
+# Also kept there, the three registry-wide sweeps
+#   test_oracle_parity.py::test_every_query_returns_rows_smoke,
+#   test_empty_inputs.py::test_every_query_survives_empty_tables and
+#   test_plan_hygiene.py::test_no_cartesian_product_in_any_registered_query
+#   (a newly registered query must meet them without opting in).
 # ---------------------------------------------------------------------------
 SLOW_MODULES = {
     "test_scale_stress.py",      # replication-twin scale invariants (353 s)
@@ -68,36 +75,19 @@ SLOW_MODULES = {
 }
 
 SLOW_TESTS = {
-    "test_oracle_parity.py::test_every_query_returns_rows_smoke",
     "test_oracle_parity.py::test_query_matches_oracle[b19_sessionize_recursive]",
     "test_properties.py::test_scd2_apply_matches_python_model",
     "test_properties.py::test_ohlcv_partials_merge_slicing_invariant",
-    "test_properties.py::test_exact_dedup_fingerprint_groups_cover_all_docs",
-    "test_properties.py::test_dec_sum_matches_duckdb_spelling_on_adversarial_values",
-    "test_properties.py::test_obv_is_prefix_sum_of_signed_flow",
     "test_properties.py::test_dec_sum_is_partitioning_invariant",
-    "test_properties.py::test_up_streaks_match_python_reference",
     "test_ann_ingest.py::test_stream_ingest_then_search_sees_new_vectors",
     "test_ann_ingest.py::test_replayed_ivf_batch_appends_nothing",
     "test_ann_ingest.py::test_skewed_batch_flags_retrain",
-    "test_empty_inputs.py::test_every_query_survives_empty_tables",
-    "test_plan_hygiene.py::test_no_cartesian_product_in_any_registered_query",
     "test_relational.py::test_no_python_udf_in_relational_plans",
-    "test_maintenance.py::test_result_cache_collision_degrades_to_recompute",
-    "test_maintenance.py::test_result_cache_torn_rewrite_never_serves_wrong_rows",
-    "test_maintenance.py::test_result_cache_serves_materialized_rows_until_refreshed",
     "test_end_to_end_corpus.py::test_llm_corpus_day_end_to_end",
     "test_tokenizer.py::test_batched_training_equals_sequential",
     "test_tokenizer.py::test_batched_training_round_budget",
     "test_similarity.py::test_ivf_retrain_on_drift_rebalances_and_swaps_atomically",
-    "test_similarity.py::test_empty_persisted_index_roundtrips_and_searches_empty",
-    "test_similarity.py::test_ivfpq_roundtrip_recall_and_pruning",
-    "test_similarity.py::test_ivf_retrain_samples_whole_corpus_not_partition_prefix",
-    "test_dedup.py::test_fuzzy_join_blocking_has_perfect_recall",
     "test_streaming.py::test_stream_zscore_ordered_survives_restart",
-    "test_streaming.py::test_dedup_ingest_across_batches_and_replay",
-    "test_streaming.py::test_near_dedup_ingest_cross_batch",
-    "test_streaming.py::test_near_dedup_ingest_streaming_wiring",
     "test_recursion_bound.py::test_uniform_fixture_unchanged_under_default_cap",
 }
 

@@ -16,6 +16,8 @@ QUERIES = [
     "b02_group_agg",
     "b04_broadcast_join",
     "b08_rank_in_group",
+    "b51_pairwise_corr",
+    "b85_point_in_time",
     "b16_null_handling",
     "c01_exact_dedup",
     "c04_top_tokens",

@@ -34,7 +34,7 @@ _QUERIES = [
     "b09_moving_window",
     "c01_exact_dedup",
     "c04_top_tokens",
-    "c09_sequence_packing_portable",
+    "c09_sequence_packing",
     # the query whose sf0.1+split64 sweep failure was adjudicated as
     # session-heap capacity (BENCHNOTES r10): pin that its RESULT is
     # layout-invariant so the adjudication stays checkable

@@ -291,7 +291,10 @@ def test_up_streaks_match_python_reference(spark, closes):
 def test_obv_is_prefix_sum_of_signed_flow(spark, closes):
     """b81: with one tick per day, every day's flow is ±1/0 and OBV is
     its prefix sum — against any generated series."""
-    from stock_data_pipeline_spark.operators.finance import _B81_SQL
+    from stock_data_pipeline_spark.operators.finance import (
+        _OHLC_BARS,
+        obv_over_bars,
+    )
 
     rows = [
         ("x", datetime(2024, 1, 1) + timedelta(days=i), float(c))
@@ -302,7 +305,9 @@ def test_obv_is_prefix_sum_of_signed_flow(spark, closes):
     try:
         got = [
             (r.daily_flow, r.obv)
-            for r in spark.sql(_B81_SQL).orderBy("bar_date").collect()
+            for r in obv_over_bars(spark.sql(_OHLC_BARS))
+            .orderBy("bar_date")
+            .collect()
         ]
     finally:
         spark.catalog.dropTempView("events")

@@ -72,13 +72,12 @@ PYTHON_EXEMPT = {
     "c05_audio_header",
     "c05_frame_sample",
     "c05_resize_thumbnail",
-    # applyInPandas O(1)-per-row recurrence by design (B20 surface;
-    # the JVM windowed twin is measured ~6× slower); its oracle is
-    # the recursive-CTE replay, not a JVM plan
+    # applyInPandas O(1)-per-row recurrence by design (B20 surface);
+    # its oracle is the recursive-CTE replay, not a JVM plan
     "b29_ema_rsi",
-    # the production FFD packer (applyInPandas, sequential by
-    # nature); its oracle is the recursive-CTE packing replay
-    "c09_sequence_packing_portable",
+    # the FFD packer (applyInPandas, sequential by nature); its
+    # oracle is the recursive-CTE packing replay
+    "c09_sequence_packing",
 }
 
 

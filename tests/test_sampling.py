@@ -14,7 +14,8 @@ from stock_data_pipeline_spark.operators.sampling import (
     with_split,
 )
 from stock_data_pipeline_spark.operators.timeseries import (
-    _indicators,
+    EMA_ALPHA,
+    RSI_PERIOD,
     with_indicators,
 )
 
@@ -79,6 +80,20 @@ def test_packing_is_reasonably_dense(spark, sf_check_dir):
     # All but the last (residual) bin per group should be well-filled on
     # average; assert the corpus-wide mean utilization clears 50%.
     assert fills.mean() >= PACK_BUDGET * 0.5
+
+
+def _indicators(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Per-key EMA + Wilder RSI on one key's ordered history: the
+    single-key ground truth for the sharded ``with_indicators``."""
+    pdf = pdf.sort_values(["ts", "event_id"]).reset_index(drop=True)
+    pdf["ema"] = pdf["value"].ewm(alpha=EMA_ALPHA, adjust=True).mean()
+    delta = pdf["value"].diff()
+    gain = delta.clip(lower=0.0).ewm(alpha=1.0 / RSI_PERIOD, adjust=False).mean()
+    loss = (-delta.clip(upper=0.0)).ewm(alpha=1.0 / RSI_PERIOD, adjust=False).mean()
+    rs = gain / loss
+    pdf["rsi"] = (100.0 - 100.0 / (1.0 + rs)).where(loss > 0, 100.0)
+    pdf.loc[delta.isna(), "rsi"] = None
+    return pdf[["user_id", "event_id", "ts", "value", "ema", "rsi"]]
 
 
 def test_ema_rsi_matches_pandas_ground_truth(spark, sf_dir):
@@ -250,45 +265,6 @@ def test_prep_pipeline_invariants(spark, sf_check_dir):
     fps = [r.fingerprint for r in rows]
     assert len(fps) == len(set(fps)), "duplicate fingerprints survived"
     assert {r.split for r in rows} <= {"train", "val", "test"}
-
-
-def test_windowed_indicators_match_pandas_ground_truth(spark, sf_dir):
-    """The JVM-only truncated-window EMA/RSI must match the pandas ewm
-    ground truth to well below any trading-decision tolerance (the
-    truncation bound is ~1e-13; assert 1e-9)."""
-    import numpy as np
-
-    from stock_data_pipeline_spark.operators.timeseries import (
-        with_indicators_windowed,
-    )
-
-    events = load(spark, sf_dir, "events")
-    got = (
-        with_indicators_windowed(events)
-        .toPandas()
-        .sort_values(["user_id", "event_id"])
-        .reset_index(drop=True)
-    )
-    raw = events.select("user_id", "event_id", "ts", "value").toPandas()
-    want = (
-        raw.groupby("user_id", group_keys=False)[raw.columns]
-        .apply(_indicators)
-        .sort_values(["user_id", "event_id"])
-        .reset_index(drop=True)
-    )
-    for col in ["ema", "rsi"]:
-        a, b = got[col].to_numpy(), want[col].to_numpy()
-        assert (np.isnan(a) == np.isnan(b)).all()
-        assert np.nanmax(np.abs(a - b)) < 1e-9
-
-    # and it must be a pure-JVM plan: no Python workers anywhere
-    plan = (
-        with_indicators_windowed(events)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "EvalPython" not in plan and "InPandas" not in plan
 
 
 def test_curriculum_order_invariants(spark, sf_dir):
@@ -465,48 +441,6 @@ def test_plan_source_mix_small_allocation_keeps_nonzero_rate(spark):
     )
     assert plan2["crawl"]["allocated"] == 0
     assert plan2["crawl"]["keep_rate_pct"] == 0
-
-
-def test_ema_windowed_alpha_derived_window_and_null_guard(spark, sf_dir):
-    """The JVM-only EMA fallback must (a) match pandas ewm for a SMALL
-    alpha — the fixed 150-row window it used to hardcode would discard
-    ~22% of the weight mass at alpha=0.01 — and (b) survive a leading
-    NULL value (empty collect_list frame -> guarded NULL, not an illegal
-    sequence(-1, 0, -1))."""
-    import datetime as dt
-
-    from stock_data_pipeline_spark.operators.timeseries import (
-        _ema_trunc_window,
-        ema_windowed,
-    )
-
-    assert _ema_trunc_window(0.2) >= 150
-    assert _ema_trunc_window(0.01) > 3000  # window grows as alpha shrinks
-
-    events = load(spark, sf_dir, "events")
-    got = {r.event_id: r.ema for r in ema_windowed(events, alpha=0.01).collect()}
-    pdf = (
-        events.select("user_id", "event_id", "ts", "value")
-        .toPandas()
-        .sort_values(["user_id", "ts", "event_id"])
-    )
-    ref = pdf.groupby("user_id")["value"].transform(
-        lambda x: x.ewm(alpha=0.01, adjust=True).mean()
-    )
-    assert max(
-        abs(got[e] - r) for e, r in zip(pdf["event_id"], ref)
-    ) < 1e-9
-
-    # leading-NULL frame: first row's EMA is NULL, later rows recover
-    nully = spark.createDataFrame(
-        [
-            (1, 10, dt.datetime(2024, 1, 1), None),
-            (1, 11, dt.datetime(2024, 1, 2), 5.0),
-        ],
-        "user_id long, event_id long, ts timestamp, value double",
-    )
-    rows = {r.event_id: r.ema for r in ema_windowed(nully).collect()}
-    assert rows[10] is None and rows[11] == pytest.approx(5.0)
 
 
 def test_dsir_select_ranks_target_like_documents_first(spark, tmp_path):
